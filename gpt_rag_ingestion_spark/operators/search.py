@@ -436,22 +436,37 @@ def _raise_badid(n, where):
         )
 
 
-def _tindex_tables(chunks, text_col, id_col, gen):
-    toks = chunks.select(
-        F.col(id_col).try_cast("long").alias("doc"),
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), "\\s+"), lambda t: t != "")
-        ).alias("token"),
-    )
-    postings = toks.groupBy("token", "doc").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
-    ).withColumn("gen", F.lit(int(gen)))
-    doclen = (
-        chunks.select(F.col(id_col).try_cast("long").alias("doc"))
-        .join(
-            toks.groupBy("doc").agg(F.count(F.lit(1)).cast("long").alias("dl")),
-            "doc", "left",
+_POSTINGS_SCHEMA = "token string, doc long, tf long, gen int"
+
+
+def _tindex_tables(chunks, text_col, id_col, gen, postings_dir):
+    """Write a batch's postings to ``postings_dir`` (staged: unlisted
+    until the caller's meta commit) and return (postings, doclen) over
+    that write.  The text is tokenized ONCE: ``dl`` is ``sum(tf)`` over
+    the postings just written — the same number as counting the tokens
+    again — left-joined onto the batch's ids so a tokenless doc keeps
+    ``dl = 0``.  Both frames stream from disk; nothing is cached."""
+    spark = chunks.sparkSession
+    doc = F.col(id_col).try_cast("long").alias("doc")
+    (
+        chunks.select(
+            doc,
+            F.explode(
+                F.filter(
+                    F.split(F.lower(F.col(text_col)), "\\s+"), lambda t: t != ""
+                )
+            ).alias("token"),
         )
+        .groupBy("token", "doc")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+        .withColumn("gen", F.lit(int(gen)))
+        .write.mode("overwrite")
+        .parquet(postings_dir)
+    )
+    postings = spark.read.schema(_POSTINGS_SCHEMA).parquet(postings_dir)
+    doclen = (
+        chunks.select(doc)
+        .join(postings.groupBy("doc").agg(F.sum("tf").alias("dl")), "doc", "left")
         .select("doc", F.coalesce("dl", F.lit(0).cast("long")).alias("dl"))
         .withColumn("gen", F.lit(int(gen)))
     )
@@ -567,9 +582,7 @@ def _tindex_read_sub(spark, index_path, sub, names):
     paths = [f"{index_path}/{sub}/batch={n}" for n in names]
     if not paths:
         schema = (
-            "token string, doc long, tf long, gen int"
-            if sub == "postings"
-            else "doc long, dl long, gen int"
+            _POSTINGS_SCHEMA if sub == "postings" else "doc long, dl long, gen int"
         )
         return spark.createDataFrame([], schema)
     return spark.read.parquet(*paths)
@@ -624,9 +637,8 @@ def text_index_build(
         jvm_fs_delete(spark, f"{index_path}/{sub}")
     jvm_fs_delete(spark, f"{index_path}/claims")
     jvm_fs_delete(spark, f"{index_path}/meta")
-    postings, doclen = _tindex_tables(chunks, text_col, id_col, gen=0)
-    postings.write.mode("overwrite").parquet(
-        f"{index_path}/postings/batch=build__g0"
+    _p, doclen = _tindex_tables(
+        chunks, text_col, id_col, 0, f"{index_path}/postings/batch=build__g0"
     )
     doclen = doclen.persist()
     try:
@@ -690,21 +702,20 @@ def text_index_append(
     meta = _tindex_read_meta(spark, index_path)
     gen = int(meta["gen"]) + 1
     name = f"{batch_label}__g{gen}"
-    postings, doclen = _tindex_tables(batch, text_col, id_col, gen)
+    # postings dir first (UNLISTED until the commit — readers resolve
+    # the manifest, so staged dirs are invisible), then deltas from the
+    # COMMITTED live state, the doclen dir, the claim, and the meta
+    # rename commits everything at once.  A crash anywhere before the
+    # commit leaves unlisted debris that writer recovery collects; a
+    # replay AFTER the commit supersedes the batch's own docs (delta
+    # 0) — idempotent either way.
+    _p, doclen = _tindex_tables(
+        batch, text_col, id_col, gen, f"{index_path}/postings/batch={name}"
+    )
     doclen = doclen.persist()
     try:
-        # deltas from the COMMITTED live state, dirs written next
-        # (UNLISTED until the commit — readers resolve the manifest,
-        # so staged dirs are invisible), claim, then the meta rename
-        # commits everything at once.  A crash anywhere before the
-        # commit leaves unlisted debris that writer recovery collects;
-        # a replay AFTER the commit supersedes the batch's own docs
-        # (delta 0) — idempotent either way.
         n_super, n_delta, l_delta = _tindex_delta(
             spark, index_path, doclen, meta
-        )
-        postings.write.mode("overwrite").parquet(
-            f"{index_path}/postings/batch={name}"
         )
         doclen.write.mode("overwrite").parquet(
             f"{index_path}/doclen/batch={name}"
@@ -816,7 +827,9 @@ def text_index_apply(
     meta = _tindex_read_meta(spark, index_path)
     gen = int(meta["gen"]) + 1
     name = f"{batch_label}__g{gen}"
-    postings, doclen = _tindex_tables(batch, text_col, id_col, gen)
+    _p, doclen = _tindex_tables(
+        batch, text_col, id_col, gen, f"{index_path}/postings/batch={name}"
+    )
     # tombstones for delete keys NOT re-uploaded this tick (two rows
     # for one doc at the same generation would break latest-gen-wins)
     tomb = (
@@ -837,9 +850,6 @@ def text_index_apply(
         # crash/replay reasoning — unchanged here, still meta-last)
         n_super, n_delta, l_delta = _tindex_delta(
             spark, index_path, doclen, meta
-        )
-        postings.write.mode("overwrite").parquet(
-            f"{index_path}/postings/batch={name}"
         )
         doclen.write.mode("overwrite").parquet(
             f"{index_path}/doclen/batch={name}"

@@ -160,15 +160,19 @@ def run_ingest_job(
         return spark.read.parquet(table_path)
 
     _t_wall = _time.monotonic()
-    # 1. index-state watermarks from the existing chunks table (A1/S9)
-    try:
-        chunks_table = _read_chunks_table()
-        watermarks = index_watermarks(
-            chunks_table, key="parent_id", ts="metadata_storage_last_modified"
-        )
-        have_table = True
-    except Exception:
-        have_table = False
+    # 1. index-state watermarks from the existing chunks table (A1/S9).
+    # Whether a table exists is decided by the sink's own commit marker,
+    # never by a failed read: an error reading an existing table raises
+    # instead of becoming a full re-ingest.  The span covers the table's
+    # metadata reads; the freshness scan itself runs inside the run
+    # summary's collect (step 5)
+    with _sp("scan_freshness", run=run_id):
+        have_table = _table_exists(spark, table_path, sink)
+        if have_table:
+            chunks_table = _read_chunks_table()
+            watermarks = index_watermarks(
+                chunks_table, key="parent_id", ts="metadata_storage_last_modified"
+            )
 
     from gpt_rag_ingestion_spark.functions.keys import sanitize_key
 
@@ -218,9 +222,9 @@ def run_ingest_job(
             candidates.withColumnRenamed("parent_id", "file_key"), blocked
         ).withColumnRenamed("file_key", "parent_id")
 
+    # materialized by the run summary's collect (step 5), which also
+    # yields the candidate count: no standalone count() query
     candidates = candidates.cache()
-    with _sp("scan_freshness", run=run_id):
-        n_candidates = candidates.count()
 
     # 4. chunk + embed (narrow map); per-doc split seconds measured
     # inside the UDF when ops logging is on
@@ -282,6 +286,10 @@ def run_ingest_job(
     summary_schema = summary.schema
     with _sp("chunk_embed", run=run_id):
         summary_rows = summary.collect()
+    # per_file has exactly one row per candidate (a left join onto a
+    # per-key aggregate), so sourceFiles IS the candidate count; an
+    # empty candidate set yields no summary row at all
+    n_candidates = summary_rows[0]["sourceFiles"] if summary_rows else 0
 
     # 5b. per-file ops rows (timings + costEstimate populated) —
     # written to the ops table pre-merge for the same cache-invalidation
@@ -414,7 +422,36 @@ def run_ingest_job(
             upload_sec=upload_sec,
             total_sec=round(_time.monotonic() - _t_wall, 3),
         )
-    return spark.createDataFrame(summary_rows, schema=summary_schema)
+    return _summary_frame(spark, summary_rows, summary_schema)
+
+
+def _table_exists(spark, table_path: str, sink: str) -> bool:
+    """Does the chunks table exist, by the sink's own commit marker:
+    the snapshot table's pointer (``_current``, or ``_current__tmp``
+    mid-commit), the swap sink's live directory (after healing an
+    interrupted swap, as its merge would)."""
+    from gpt_rag_ingestion_spark.operators.upsert import _fs_exists, _recover
+
+    if sink == "snapshot":
+        return _fs_exists(spark, f"{table_path}/_current") or _fs_exists(
+            spark, f"{table_path}/_current__tmp"
+        )
+    _recover(spark, table_path)
+    return _fs_exists(spark, table_path)
+
+
+def _summary_frame(spark, rows, schema) -> DataFrame:
+    """The collected run summary as a JVM-local frame, built from one
+    Arrow batch on the driver.  ``createDataFrame`` over a list of Rows
+    parallelizes a Python RDD, so the caller's ``collect()`` would
+    start Python workers for a one-row result."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [r.asDict() for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 _ROLLUP_SCHEMA = "parent_id string, n_chunks bigint, chars bigint"
@@ -429,23 +466,25 @@ def _stage_rollup(spark, rollup_path, old_table, incoming):
     one-time recompute over the existing table (bootstrap).  Returns
     the staging path; caller swaps it in after the chunks merge."""
     from gpt_rag_ingestion_spark.operators.incremental import maintain_rollup
-    from gpt_rag_ingestion_spark.operators.upsert import _recover
+    from gpt_rag_ingestion_spark.operators.upsert import _fs_exists, _recover
 
     _recover(spark, rollup_path)
     rows_in = incoming.select(
         "parent_id", F.length("content").cast("long").alias("chars")
     )
-    try:
-        old_rollup = spark.read.parquet(rollup_path)
-    except Exception:
-        if old_table is not None:
-            # bootstrap: one recompute, incremental ever after
-            old_rollup = old_table.groupBy("parent_id").agg(
-                F.count(F.lit(1)).alias("n_chunks"),
-                F.sum(F.length("content").cast("long")).alias("chars"),
-            )
-        else:
-            old_rollup = spark.createDataFrame([], _ROLLUP_SCHEMA)
+    # existence by the directory (after healing), never by a failed
+    # read: an unreadable rollup raises instead of being rebuilt (the
+    # pinned schema reads a rollup written empty as empty)
+    if _fs_exists(spark, rollup_path):
+        old_rollup = spark.read.schema(_ROLLUP_SCHEMA).parquet(rollup_path)
+    elif old_table is not None:
+        # bootstrap: one recompute, incremental ever after
+        old_rollup = old_table.groupBy("parent_id").agg(
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.sum(F.length("content").cast("long")).alias("chars"),
+        )
+    else:
+        old_rollup = spark.createDataFrame([], _ROLLUP_SCHEMA)
     if old_table is not None:
         keys = incoming.select("parent_id").distinct()
         removed = old_table.join(

@@ -172,5 +172,12 @@ def get_spark(
         # per-call Python call-site capture off (static conf — see
         # _disable_dataframe_debugging for the foreign-session path)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # generated-class cache (static conf).  Spark's default of 100
+        # entries thrashes on the engine's own working set: on the
+        # perfbench corpus a base ingest compiles 93 classes with
+        # Janino and each refresh tick 76-92, so every tick evicted the
+        # previous one's code and compiled it again.  At 1000 the three
+        # ticks after a base ingest compile 41, 20 and 14 classes
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     return builder.getOrCreate()

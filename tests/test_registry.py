@@ -5,9 +5,11 @@ convention.  No SparkSession needed."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def test_registry_window_pinned_and_duplicate_free():
@@ -37,11 +39,11 @@ def test_repo_sources_compile_without_warnings():
     import glob
     import warnings
 
-    paths = ["/root/repo/__spark_entry__.py", "/root/repo/bench.py"]
+    paths = [f"{REPO}/__spark_entry__.py", f"{REPO}/bench.py"]
     paths += glob.glob(
-        "/root/repo/gpt_rag_ingestion_spark/**/*.py", recursive=True
+        f"{REPO}/gpt_rag_ingestion_spark/**/*.py", recursive=True
     )
-    paths += glob.glob("/root/repo/scripts/*.py")
+    paths += glob.glob(f"{REPO}/scripts/*.py")
     assert len(paths) > 30
     for path in paths:
         with open(path) as f:

@@ -1576,9 +1576,11 @@ def test_sketch_rerank_recall_floor_clustered(spark):
     deterministic (fixed corpus, fixed sign matrix), measured 0.674 —
     floor with margin.  The sketch is the cheap pre-filter; IVF/IVFPQ
     remain the recall-critical paths (their own floors above)."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "scripts"))
     from ann_recall_curve import clustered_embeddings
 
     from gpt_rag_ingestion_spark.operators.similarity import (

@@ -466,12 +466,12 @@ def test_query_path_never_prunes_inflight_writer_dirs(spark, tmp_path):
 
     # hand-write what text_index_append stages BEFORE its meta commit
     gen = int(X._tindex_read_meta(spark, path)["gen"]) + 1
-    postings, doclen = X._tindex_tables(
-        _corpus(spark, [(2, "stone stone stone tree")]), "text", "doc_id", gen
-    )
     pdir = f"{path}/postings/batch=b1__g{gen}"
     ddir = f"{path}/doclen/batch=b1__g{gen}"
-    postings.write.mode("overwrite").parquet(pdir)
+    _p, doclen = X._tindex_tables(
+        _corpus(spark, [(2, "stone stone stone tree")]), "text", "doc_id", gen,
+        pdir,
+    )
     doclen.write.mode("overwrite").parquet(ddir)
 
     got = sorted(
