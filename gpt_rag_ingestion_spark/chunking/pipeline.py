@@ -45,10 +45,11 @@ from gpt_rag_ingestion_spark.chunking.splitter import (
     CHUNK_NUM_TOKENS,
     MIN_CHUNK_SIZE,
     TOKEN_OVERLAP,
+    compile_separators,
     split_text_recursive,
 )
 from gpt_rag_ingestion_spark.functions.keys import chunk_key, sanitize_key
-from gpt_rag_ingestion_spark.embeddings import embed_batch_np, hash_embedding_udf
+from gpt_rag_ingestion_spark.embeddings import embed_batch_np
 
 _CHUNK_STRUCT = ArrayType(
     StructType(
@@ -70,8 +71,12 @@ def make_split_one(
 ):
     """The ONE implementation of split + 32,766-byte truncation (F6)
     shared by every chunk kernel in this module — the byte-cap contract
-    must not fork between the ARRAY<STRUCT> and columnar paths."""
+    must not fork between the ARRAY<STRUCT> and columnar paths.  Runs
+    on the driver: a separator set the splitter refuses raises
+    ``ValueError`` here, at plan build, not inside a Python worker."""
     from gpt_rag_ingestion_spark.functions.text import MAX_CONTENT_BYTES
+
+    compile_separators(separators)
 
     def _split_one(s: str, spans=None) -> list[dict]:
         chunks = split_text_recursive(
@@ -143,44 +148,6 @@ def make_chunk_udf(
     return _chunk
 
 
-def make_timed_chunk_udf(
-    max_tokens: int = CHUNK_NUM_TOKENS,
-    overlap: int = TOKEN_OVERLAP,
-    min_tokens: int = MIN_CHUNK_SIZE,
-    separators: list | None = None,
-):
-    """Chunk UDF that also reports the per-document split seconds —
-    feeds the ops log's per-file ``timings.chunkEmbedSec``
-    (reference blob_storage_indexer.py:617-628 times chunking per file;
-    here the measurement happens inside the UDF, so it is a real
-    per-document number even though the stage is fused)."""
-    import time
-
-    from gpt_rag_ingestion_spark.session import ship_active
-
-    ship_active()
-
-    _split_one = make_split_one(max_tokens, overlap, min_tokens, separators)
-
-    timed_struct = StructType(
-        [
-            StructField("chunks", _CHUNK_STRUCT),
-            StructField("chunk_sec", DoubleType()),
-        ]
-    )
-
-    @pandas_udf(timed_struct)
-    def _chunk_timed(texts: pd.Series) -> pd.DataFrame:
-        out_chunks, out_secs = [], []
-        for s in texts:
-            t0 = time.monotonic()
-            out_chunks.append(_split_one(s))
-            out_secs.append(round(time.monotonic() - t0, 6))
-        return pd.DataFrame({"chunks": out_chunks, "chunk_sec": out_secs})
-
-    return _chunk_timed
-
-
 def chunk_documents(
     docs: DataFrame,
     text_col: str = "text",
@@ -203,12 +170,17 @@ def chunk_documents(
     ride along unchanged (document-level metadata).  ``spread=False``
     skips the small-input repartition probe — pass it when the caller
     already spread the corpus (e.g. chunk_corpus), since the probe's
-    plan->RDD conversion costs a query compilation per call."""
+    plan->RDD conversion costs a query compilation per call.
+    ``timing_col`` adds a DOUBLE column holding each chunk's document
+    split seconds, measured per document inside the kernel — it feeds
+    the ops log's per-file ``timings.chunkEmbedSec`` (reference
+    blob_storage_indexer.py:617-628 times chunking per file)."""
     from gpt_rag_ingestion_spark.session import (
         ensure_importable,
         spread_small_input,
     )
 
+    split_one = make_split_one(max_tokens, overlap, min_tokens, separators)
     ensure_importable(docs)
     # a small source (single parquet file) arrives as 1-2 partitions and
     # would serialize the whole UDF pipeline onto one core — spread it
@@ -224,43 +196,18 @@ def chunk_documents(
     if source_col:
         carry = [source_col] + carry
     carry = list(dict.fromkeys(carry))
-    if timing_col:
-        timed_udf = make_timed_chunk_udf(max_tokens, overlap, min_tokens, separators)
-        docs = docs.withColumn("_tc", timed_udf(F.col(text_col))).withColumn(
-            timing_col, F.col("_tc.chunk_sec")
-        )
-        chunks_expr = F.col("_tc.chunks")
-        carry = carry + [timing_col]
-        parent = sanitize_key(F.col(doc_key_col).cast("string"))
-        embed = hash_embedding_udf(embedding_dim)
-        return (
-            docs.withColumn("_chunks", chunks_expr)
-            .select(
-                parent.alias("parent_id"),
-                *[F.col(c) for c in carry],
-                F.explode("_chunks").alias("_c"),
-            )
-            .select(
-                "parent_id",
-                *carry,
-                F.col("_c.chunk_id").alias("chunk_id"),
-                F.col("_c.offset").alias("offset"),
-                F.col("_c.length").alias("length"),
-                F.col("_c.content").alias("content"),
-            )
-            .withColumn("id", chunk_key(F.col("parent_id"), F.col("chunk_id")))
-            .withColumn("contentVector", embed(F.col("content")))
-        )
-    # Fast path: split + truncate + embed in ONE mapInPandas stage with
-    # COLUMNAR output.  The ARRAY<STRUCT> + explode shape pays a
-    # per-chunk Python-dict -> Arrow-struct conversion that costs ~4x
-    # the split itself; emitting flat pandas columns (np.repeat for the
+    # split + truncate + embed in ONE mapInPandas stage with COLUMNAR
+    # output.  The ARRAY<STRUCT> + explode shape pays a per-chunk
+    # Python-dict -> Arrow-struct conversion that costs ~4x the split
+    # itself; emitting flat pandas columns (np.repeat for the
     # per-document carry values) keeps the Arrow crossing vectorized,
     # and the deterministic keys stay JVM-side column expressions.
     chunks = _chunk_embed_map_in_pandas(
-        docs, text_col, doc_key_col, carry,
-        max_tokens, overlap, min_tokens, separators, embedding_dim,
+        docs, text_col, doc_key_col, carry, split_one, embedding_dim,
+        timing_col,
     )
+    if timing_col:
+        carry = carry + [timing_col]
     return (
         chunks.select(
             sanitize_key(F.col(doc_key_col).cast("string")).alias("parent_id"),
@@ -284,16 +231,17 @@ def _chunk_embed_map_in_pandas(
     text_col: str,
     doc_key_col: str,
     carry: list,
-    max_tokens: int,
-    overlap: int,
-    min_tokens: int,
-    separators,
+    split_one,
     embedding_dim: int,
+    timing_col: str | None = None,
 ):
     """mapInPandas chunk+embed kernel: one Python stage, columnar in and
     out.  Output rows = one per chunk, carrying the document key and
-    ``carry`` columns (np.repeat), plus chunk_id/offset/length/content/
+    ``carry`` columns (np.repeat), the document's split seconds as
+    ``timing_col`` when set, plus chunk_id/offset/length/content/
     contentVector."""
+    import time
+
     import numpy as np
 
     from gpt_rag_ingestion_spark.session import ship_active
@@ -305,9 +253,12 @@ def _chunk_embed_map_in_pandas(
     # would produce a duplicate-field schema or silently overwrite a
     # column in the output dict
     passthrough = list(dict.fromkeys([doc_key_col] + list(carry)))
+    timed = [timing_col] if timing_col else []
+    names = passthrough + timed
     bad = [
-        c for c in passthrough
+        c for c in names
         if c in ("chunk_id", "offset", "length", "content", "contentVector")
+        or names.count(c) > 1
     ]
     if bad:
         raise ValueError(
@@ -318,6 +269,7 @@ def _chunk_embed_map_in_pandas(
     by_name = {f.name: f for f in docs.schema.fields}
     out_schema = StructType(
         [by_name[c] for c in passthrough]
+        + [StructField(c, DoubleType()) for c in timed]
         + [
             StructField("chunk_id", IntegerType()),
             StructField("offset", LongType()),
@@ -326,19 +278,22 @@ def _chunk_embed_map_in_pandas(
             StructField("contentVector", ArrayType(FloatType())),
         ]
     )
-    _split_one = make_split_one(max_tokens, overlap, min_tokens, separators)
 
     def gen(batches):
         from gpt_rag_ingestion_spark.chunking.splitter import token_spans_batch
 
         for pdf in batches:
             spans = token_spans_batch(pdf[text_col])
-            per_doc = [
-                _split_one(s, spn) for s, spn in zip(pdf[text_col], spans)
-            ]
+            per_doc, secs = [], []
+            for s, spn in zip(pdf[text_col], spans):
+                t0 = time.monotonic()
+                per_doc.append(split_one(s, spn))
+                secs.append(round(time.monotonic() - t0, 6))
+            if timing_col:
+                pdf = pdf.assign(**{timing_col: secs})
             out, flat = flatten_doc_lists(
                 pdf,
-                passthrough,
+                names,
                 per_doc,
                 [
                     ("chunk_id", np.int32),

@@ -16,7 +16,9 @@ Two implementations with different scale/semantics trade-offs:
    plain Python function inside an Arrow-batched pandas UDF in
    pipeline.chunk_documents; per-document sequential semantics (chunk
    numbering, offsets) stay inside the per-row call, per SURVEY.md §7
-   "hard parts".
+   "hard parts".  Each document is tokenized once, ASCII or not
+   (``token_spans_batch``), and every recursion level derives its
+   token counts from that one span array.
 """
 
 from __future__ import annotations
@@ -77,23 +79,23 @@ _FORMAT_SEPARATORS = {
 _TOKEN_RE = re.compile(r"\w+|[^\w\s]")
 _WORD_RE = re.compile(r"\w")
 
-# --- vectorized ASCII tokenizer (guide §4.2) -------------------------------
-# ``_TOKEN_RE`` restricted to ASCII is a per-byte classification: tokens
-# are \w+ runs plus single non-word-non-space chars.  For ASCII text the
-# byte classes coincide with the unicode regex classes, so token spans
-# can be computed with numpy table lookups instead of one C regex call
-# per part per recursion level (the chunk kernels' dominant cost —
-# ~46% of per-doc time went to re-counting tokens of every candidate
-# piece).  Non-ASCII text falls back to the regex path unchanged.
+# --- token spans -----------------------------------------------------------
+# The splitter counts tokens from ONE array of ``_TOKEN_RE`` token spans
+# per document.  Restricted to ASCII the regex is a per-byte
+# classification (tokens are \w+ runs plus single non-word-non-space
+# chars), so ASCII spans come from numpy table lookups over a whole
+# Arrow batch at once; any other text gets its spans from one
+# ``_TOKEN_RE.finditer``.
 import numpy as _np
+from itertools import chain as _chain
 
+# the byte classes are exactly the regex's \w and \s over ASCII (str
+# patterns: \s includes the \x1c-\x1f separators)
 _IS_WORD_BYTE = _np.zeros(256, dtype=bool)
-for _c in range(128):
-    if chr(_c).isalnum() or _c == ord("_"):
-        _IS_WORD_BYTE[_c] = True
 _IS_SPACE_BYTE = _np.zeros(256, dtype=bool)
-for _c in " \t\n\r\f\v":
-    _IS_SPACE_BYTE[ord(_c)] = True
+for _c in range(128):
+    _IS_WORD_BYTE[_c] = chr(_c).isalnum() or _c == ord("_")
+    _IS_SPACE_BYTE[_c] = chr(_c).isspace()
 del _c
 
 
@@ -115,52 +117,59 @@ def _token_spans_ascii(s: str):
     return starts, ends
 
 
-def token_spans_batch(texts) -> list:
-    """Per-document token spans for a whole Arrow batch in ONE numpy
-    pass: documents joined with a single space (no token can cross a
-    space, and a space adds no token), tokenized once, and split back
-    by document char ranges.  Amortizes the numpy per-call overhead
-    that makes per-document vectorization a wash at small doc sizes.
-    Returns one ``(starts, ends)`` pair per text, or ``None`` for
-    non-ASCII texts (legacy regex path).  ``None``/empty texts get
-    empty span arrays (callers pass ``s or ""`` to the splitter)."""
-    norm = [t if t else "" for t in texts]
-    joined = " ".join(norm)
-    if not joined.isascii():
-        return [
-            _token_spans_ascii(t) if t.isascii() else None for t in norm
-        ]
-    g_starts, g_ends = _token_spans_ascii(joined)
-    bounds = _np.empty(2 * len(norm), dtype=_np.int64)
+def _token_spans_regex(s: str):
+    """(starts, ends) int64 arrays of ``_TOKEN_RE.finditer`` over any
+    string."""
+    flat = _np.fromiter(
+        _chain.from_iterable(m.span() for m in _TOKEN_RE.finditer(s)),
+        dtype=_np.int64,
+    )
+    return flat[0::2].copy(), flat[1::2].copy()
+
+
+def _token_spans_ascii_batch(texts: list) -> list:
+    """``_token_spans_ascii`` of every text in ONE numpy pass: the texts
+    joined with a single space (no token can cross a space, and a space
+    adds no token), tokenized once, and split back by text char ranges.
+    Amortizes the numpy per-call overhead that makes per-document
+    vectorization a wash at small doc sizes."""
+    g_starts, g_ends = _token_spans_ascii(" ".join(texts))
+    bounds = _np.empty(2 * len(texts), dtype=_np.int64)
     pos = 0
-    for k, t in enumerate(norm):
+    for k, t in enumerate(texts):
         bounds[2 * k] = pos
         bounds[2 * k + 1] = pos + len(t)
         pos += len(t) + 1
     idx = _np.searchsorted(g_starts, bounds)
     out = []
-    for k in range(len(norm)):
+    for k in range(len(texts)):
         i, j = idx[2 * k], idx[2 * k + 1]
         off = bounds[2 * k]
         out.append((g_starts[i:j] - off, g_ends[i:j] - off))
     return out
 
 
+def token_spans_batch(texts) -> list:
+    """Per-document ``(starts, ends)`` token-span arrays for a whole
+    Arrow batch, equal to the spans of ``_TOKEN_RE.finditer``: the ASCII
+    documents share one numpy pass, every other document is tokenized
+    by one ``finditer``.  ``None``/empty texts get empty span arrays
+    (callers pass ``s or ""`` to the splitter)."""
+    norm = [t if t else "" for t in texts]
+    is_ascii = [t.isascii() for t in norm]
+    ascii_spans = iter(
+        _token_spans_ascii_batch([t for t, a in zip(norm, is_ascii) if a])
+    )
+    return [
+        next(ascii_spans) if a else _token_spans_regex(t)
+        for t, a in zip(norm, is_ascii)
+    ]
+
+
 def separators_for_extension(ext: str) -> list:
     """C4 dispatch: extension -> separator set (default recursive set
     for unknown extensions)."""
     return _FORMAT_SEPARATORS.get((ext or "").lower(), _SEPARATORS)
-
-
-def _split_once(s: str, sep) -> tuple[list[str], str]:
-    """One split level.  Plain separators drop the separator from the
-    parts (re-inserted on merge); ("sep", "start") keeps the separator
-    glued to the following part (structural markers like headers)."""
-    if isinstance(sep, tuple):
-        pattern, _mode = sep
-        parts = re.split(f"(?={re.escape(pattern)})", s)
-        return [p for p in parts if p != ""], ""
-    return s.split(sep), sep
 
 
 def _ntokens(s: str) -> int:
@@ -179,7 +188,7 @@ def _counts_additive(sep, joiner: str) -> bool:
     text is a word char."""
     if isinstance(sep, tuple):
         pattern = sep[0]
-        return not _WORD_RE.match(pattern[0])
+        return bool(pattern) and not _WORD_RE.match(pattern[0])
     if not joiner:
         return False
     return not (
@@ -192,17 +201,23 @@ from functools import lru_cache
 
 @lru_cache(maxsize=64)
 def _compiled_seps(seps_key: tuple):
-    """Per-separator-set plan for the span fast path, or ``None`` when
-    any level fails ``_counts_additive`` (the precondition for deriving
-    counts from the one global token-span array).  Each entry:
+    """Per-separator-set plan of the splitter.  Each entry:
     ``(split_fn, joiner_len, n_join)`` where ``split_fn(s)`` returns the
-    level's parts (empty-filtered for lookahead separators, exactly like
-    ``_split_once``).  All shipped separator sets qualify."""
+    level's parts.  A plain separator drops itself from the parts (its
+    text sits between consecutive parts); a ("sep", "start") lookahead
+    separator keeps itself glued to the following part, and its empty
+    parts are dropped.  Raises ``ValueError`` when a level fails
+    ``_counts_additive`` — the precondition for deriving every count
+    from the document's one token-span array.  All shipped separator
+    sets qualify."""
     plan = []
     for sep in seps_key:
         if isinstance(sep, tuple):
             if not _counts_additive(sep, ""):
-                return None
+                raise ValueError(
+                    f"separator {sep!r}: a lookahead pattern must be "
+                    "non-empty and may not start with a word character"
+                )
             pat = re.compile(f"(?={re.escape(sep[0])})")
 
             def split_fn(s, _p=pat):
@@ -211,23 +226,28 @@ def _compiled_seps(seps_key: tuple):
             plan.append((split_fn, 0, 0))
         else:
             if not _counts_additive(sep, sep):
-                return None
+                raise ValueError(
+                    f"separator {sep!r}: must be non-empty and may not "
+                    "start or end with a word character"
+                )
             plan.append(
                 (lambda s, _sep=sep: s.split(_sep), len(sep), _ntokens(sep))
             )
     return plan
 
 
-def _all_additive(seps: list) -> bool:
-    """True when every level of ``seps`` satisfies ``_counts_additive``
-    — the precondition for the span-based fast path (token counts of
-    any contiguous substring cut at these separators equal the global
-    token-span counts).  All shipped separator sets qualify."""
-    for sep in seps:
-        joiner = "" if isinstance(sep, tuple) else sep
-        if not _counts_additive(sep, joiner):
-            return False
-    return True
+def compile_separators(separators: list | None = None) -> list:
+    """The splitter plan of ``separators`` (``None`` = the default set);
+    ``ValueError`` for a set the splitter cannot run (see
+    ``_compiled_seps``).  Chunk-kernel builders call it on the driver,
+    so a bad set fails at plan build, not inside a Python worker."""
+    seps = _SEPARATORS if separators is None else separators
+    try:
+        return _compiled_seps(tuple(seps))
+    except TypeError:
+        raise ValueError(
+            f"separators must be strings or (pattern, 'start') tuples: {seps!r}"
+        ) from None
 
 
 def split_text_recursive(
@@ -245,143 +265,19 @@ def split_text_recursive(
     Returns dicts with chunk_id / content / offset / length (chars),
     mirroring the reference chunk contract (base_chunker.py:218-234).
 
-    ``_spans``: optional precomputed ``(starts, ends)`` token-span
-    arrays of ``text`` (from ``token_spans_batch``) — engages the
-    single-tokenization fast path, which is bit-identical to the
-    legacy path (pinned by test) but never re-tokenizes candidate
-    pieces: every piece at every recursion level is a contiguous
-    substring of ``text``, so part counts, overlap tails and min-size
-    checks all derive from the one span array."""
+    The text is tokenized once: every piece at every recursion level is
+    a contiguous substring of ``text``, so part counts, overlap tails
+    and min-size checks all derive from one token-span array —
+    ``_spans``, the precomputed ``(starts, ends)`` of ``text`` from
+    ``token_spans_batch``, or computed here when omitted.  Pieces are
+    tracked as (abs_start, abs_end, tok_lo, tok_hi); their strings are
+    sliced from ``text`` only when finalized, so the greedy merge never
+    concatenates or re-tokenizes.  Raises ``ValueError`` for a
+    separator set ``compile_separators`` rejects."""
+    plan = compile_separators(separators)
     if not text:
         return []
-    seps_list = separators if separators is not None else _SEPARATORS
-    if _spans is not None:
-        try:
-            plan = _compiled_seps(tuple(seps_list))
-        except TypeError:  # unhashable custom separator entry
-            plan = None
-        if plan is not None:
-            return _split_text_recursive_spans(
-                text, _spans, max_tokens, overlap_tokens, min_tokens, plan
-            )
-
-    def split_rec(s: str, seps: list, n_s: int | None = None) -> list[str]:
-        # token counts are carried ADDITIVELY through the greedy merge
-        # (one tokenization pass per recursion level) instead of
-        # re-tokenizing every growing candidate — O(k) not O(k^2) per
-        # piece; bit-identical to the recomputing form because counts
-        # are only added when no token can span a concatenation
-        # boundary (see _counts_additive).
-        if n_s is None:
-            n_s = _ntokens(s)
-        if n_s <= max_tokens:
-            return [s]
-        if not seps:
-            # fall back to hard token windows
-            toks = list(_TOKEN_RE.finditer(s))
-            out, i = [], 0
-            while i < len(toks):
-                j = min(i + max_tokens, len(toks))
-                out.append(s[toks[i].start() : toks[j - 1].end()])
-                if j == len(toks):
-                    break
-                i = j - overlap_tokens if j - overlap_tokens > i else j
-            return out
-        sep, rest = seps[0], seps[1:]
-        parts, joiner = _split_once(s, sep)
-        if len(parts) <= 1:
-            return split_rec(s, rest, n_s)
-        # greedy merge of parts into token-budgeted pieces
-        additive = _counts_additive(sep, joiner)
-        counts = [_ntokens(p) for p in parts]
-        n_join = _ntokens(joiner) if joiner else 0
-        pieces: list[str] = []
-        piece_counts: list[int] = []
-        cur = ""
-        cur_n = 0
-        for p, pn in zip(parts, counts):
-            if cur:
-                cand_n = (
-                    cur_n + n_join + pn
-                    if additive
-                    else _ntokens(cur + joiner + p)
-                )
-                if cand_n > max_tokens:
-                    pieces.append(cur)
-                    piece_counts.append(cur_n)
-                    cur, cur_n = p, pn
-                else:
-                    cur, cur_n = cur + joiner + p, cand_n
-            else:
-                cur, cur_n = p, pn
-        if cur:
-            pieces.append(cur)
-            piece_counts.append(cur_n)
-        out: list[str] = []
-        for piece, pc in zip(pieces, piece_counts):
-            out.extend(split_rec(piece, rest, pc) if pc > max_tokens else [piece])
-        return out
-
-    pieces = split_rec(text, seps_list)
-
-    # attach overlap tails and compute offsets against the original text.
-    # Contract: ``offset`` is the position of the chunk's NEW content
-    # (the piece); ``content`` additionally carries the previous piece's
-    # overlap tail, so text[offset:offset+length] != content when
-    # overlap > 0 — length is len(content), offset is where the fresh
-    # text begins (matches the reference's running-offset semantics, W3).
-    chunks: list[dict] = []
-    cursor = 0
-    prev_tail = ""
-    for piece in pieces:
-        if not piece.strip():
-            continue
-        found = text.find(piece, cursor)
-        if found < 0:
-            # hard-window fallback pieces overlap, so a piece can start
-            # BEFORE the previous cursor — search from the top
-            found = text.find(piece)
-        offset = found if found >= 0 else cursor
-        cursor = offset + len(piece)
-        content = (prev_tail + piece) if prev_tail else piece
-        if _ntokens(content) < min_tokens:
-            # min-chunk-size filter (reference langchain_chunker.py:82-92)
-            prev_tail = _tail_tokens(piece, overlap_tokens)
-            continue
-        chunks.append(
-            {
-                "chunk_id": len(chunks),
-                "content": content,
-                "offset": offset,
-                "length": len(content),
-            }
-        )
-        prev_tail = _tail_tokens(piece, overlap_tokens)
-    if not chunks and text.strip() and _ntokens(text) >= min_tokens:
-        chunks.append({"chunk_id": 0, "content": text, "offset": 0, "length": len(text)})
-    return chunks
-
-
-def _split_text_recursive_spans(
-    text: str,
-    spans,
-    max_tokens: int,
-    overlap_tokens: int,
-    min_tokens: int,
-    plan: list,
-) -> list[dict]:
-    """Span-based fast path of ``split_text_recursive`` (see its
-    docstring).  Pieces are tracked as (abs_start, abs_end, tok_lo,
-    tok_hi) against the one precomputed token-span array; their strings
-    are sliced from ``text`` only when finalized, so the greedy merge
-    never concatenates or re-tokenizes.  Bit-identical to the legacy
-    path: identical greedy-merge branch structure (including the
-    empty-part quirks — a merged piece's string always equals
-    ``text[a:b]`` because plain joiners are the separator text and
-    lookahead parts are contiguous, so truthiness of the accumulated
-    string is ``b > a``), identical ``text.find``-based offsets,
-    identical tail semantics."""
-    starts, ends = spans
+    starts, ends = _spans if _spans is not None else token_spans_batch([text])[0]
     n_total = len(starts)
 
     def split_fast(a: int, b: int, lo: int, hi: int, depth: int) -> list:
@@ -419,8 +315,11 @@ def _split_text_recursive_spans(
         bounds[1::2] = offs + lens
         bl = bounds.tolist()
         il = _np.searchsorted(starts, bounds).tolist()
-        # greedy merge — same branches as the legacy loop, with counts
-        # from spans and the merged string implied by its char range
+        # greedy merge of parts into token-budgeted pieces: a part joins
+        # the current piece (with the separator between them) while the
+        # sum stays within budget.  Plain joiners are the separator text
+        # and lookahead parts are contiguous, so the merged piece is
+        # always text[cur_a:cur_b]
         pieces: list = []
         cur_a = cur_b = cur_lo = cur_hi = 0
         cur_n = 0
@@ -429,7 +328,7 @@ def _split_text_recursive_spans(
             pa, pb = bl[k2], bl[k2 + 1]
             plo, phi = il[k2], il[k2 + 1]
             pn = phi - plo
-            if cur_b > cur_a:  # legacy ``if cur:`` on the piece string
+            if cur_b > cur_a:  # the current piece is non-empty
                 cand_n = cur_n + n_join + pn
                 if cand_n > max_tokens:
                     pieces.append((cur_a, cur_b, cur_lo, cur_hi))
@@ -450,8 +349,12 @@ def _split_text_recursive_spans(
 
     pieces = split_fast(0, len(text), 0, n_total, 0)
 
-    # outer loop: identical offsets (text.find from the running cursor),
-    # min-size check and overlap tails from the span array
+    # attach overlap tails and compute offsets against the original text.
+    # Contract: ``offset`` is the position of the chunk's NEW content
+    # (the piece); ``content`` additionally carries the previous piece's
+    # overlap tail, so text[offset:offset+length] != content when
+    # overlap > 0 — length is len(content), offset is where the fresh
+    # text begins (matches the reference's running-offset semantics, W3).
     chunks: list[dict] = []
     cursor = 0
     prev_tail = ""
@@ -462,6 +365,8 @@ def _split_text_recursive_spans(
             continue
         found = text.find(piece, cursor)
         if found < 0:
+            # hard-window pieces overlap, so a piece can start BEFORE
+            # the previous cursor — search from the top
             found = text.find(piece)
         offset = found if found >= 0 else cursor
         cursor = offset + len(piece)
@@ -477,8 +382,9 @@ def _split_text_recursive_spans(
         else:
             n_content = hi - lo
         if n_content < min_tokens:
+            # min-chunk-size filter (reference langchain_chunker.py:82-92)
             prev_tail, prev_tail_n = _tail_from_spans(
-                text, starts, a, b, lo, hi, overlap_tokens
+                text, starts, b, lo, hi, overlap_tokens
             )
             continue
         chunks.append(
@@ -490,7 +396,7 @@ def _split_text_recursive_spans(
             }
         )
         prev_tail, prev_tail_n = _tail_from_spans(
-            text, starts, a, b, lo, hi, overlap_tokens
+            text, starts, b, lo, hi, overlap_tokens
         )
     if not chunks and text.strip() and n_total >= min_tokens:
         chunks.append(
@@ -499,23 +405,14 @@ def _split_text_recursive_spans(
     return chunks
 
 
-def _tail_from_spans(text, starts, a, b, lo, hi, n):
-    """(tail string, its token count) — span-based twin of
-    ``_tail_tokens(text[a:b], n)``: from the start of the piece's
-    ``n``-th-from-last token through the piece's end (trailing
-    non-token chars included, exactly like the legacy form)."""
+def _tail_from_spans(text, starts, b, lo, hi, n):
+    """(tail string, its token count) of the piece ending at char ``b``
+    with tokens [lo, hi): from the start of its ``n``-th-from-last token
+    through the piece's end (trailing non-token chars included)."""
     if hi <= lo or n <= 0:
         return "", 0
     k = max(lo, hi - n)
     return text[int(starts[k]):b], hi - k
-
-
-def _tail_tokens(s: str, n: int) -> str:
-    toks = list(_TOKEN_RE.finditer(s))
-    if not toks or n <= 0:
-        return ""
-    start = toks[max(0, len(toks) - n)].start()
-    return s[start:]
 
 
 def chunk_fixed(

@@ -83,7 +83,7 @@ def run_ingest_job(
     OPS_LOG_SCHEMA are appended there with POPULATED timings and
     costEstimate structs (reference blob_storage_indexer.py:598-678):
     ``timings.chunkEmbedSec`` is the real per-document split time
-    measured inside the chunk UDF; ``indexUploadSec``/``totalSec``/
+    measured inside the chunk kernel; ``indexUploadSec``/``totalSec``/
     ``overheadSec`` are job-phase wall times recorded on a run-level
     row (file_key NULL), since in Spark the upload/merge is one job
     phase rather than a per-file call.  ``costEstimate`` applies the
@@ -227,7 +227,7 @@ def run_ingest_job(
     candidates = candidates.cache()
 
     # 4. chunk + embed (narrow map); per-doc split seconds measured
-    # inside the UDF when ops logging is on
+    # inside the chunk kernel when ops logging is on
     chunks = chunk_documents(
         candidates,
         text_col=text_col,

@@ -37,6 +37,7 @@ from gpt_rag_ingestion_spark.operators.ranking import per_key_capped_rank
 from gpt_rag_ingestion_spark.operators.shards import write_training_shards
 from gpt_rag_ingestion_spark.operators.text_analysis import bpe_ish_token_count
 from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
+from gpt_rag_ingestion_spark.plans.ingest_job import _table_exists
 
 
 def _read_corpus(spark, corpus_path: str, corpus_sink: str):
@@ -184,11 +185,14 @@ def run_web_corpus_job(
             threshold=near_dup_threshold,
         )
     else:
-        try:
+        # the corpus exists iff its sink's commit marker does; any
+        # other read failure raises rather than admitting every
+        # candidate as new against an empty base
+        if _table_exists(spark, corpus_path, corpus_sink):
             base = _read_corpus(spark, corpus_path, corpus_sink).select(
                 id_col, text_col
             )
-        except Exception:
+        else:
             base = candidates.limit(0)
         decisions = incremental_dedup(
             base, candidates, text_col=text_col, id_col=id_col,

@@ -98,21 +98,28 @@ def test_ingest_job_blocklist_path(spark, tmp_path):
 def test_ingest_job_populates_ops_structs(spark, tmp_path):
     """A4/A5 in the composed job (reference blob_storage_indexer.py:
     598-678): per-file ops rows carry POPULATED timings/costEstimate
-    structs; a run-level row carries the job-phase wall timings."""
+    structs; a run-level row carries the job-phase wall timings.  The
+    timed kernel commits exactly the chunks an untimed run commits, on
+    a listing mixing ASCII, non-ASCII, zero-chunk and NULL-text docs."""
     table = str(tmp_path / "chunks")
     ops = str(tmp_path / "ops")
     t0 = _ts("2024-01-01T00:00:00")
     docs = _docs(
-        spark, [("d1", "alpha " * 40, t0), ("d2", "beta " * 40, t0)]
+        spark,
+        [
+            ("d1", "alpha " * 40, t0),
+            ("d2", "beta " * 40, t0),
+            ("d3", "Ça été déjà vu. 東京は首都です。 Привет мир! " * 8, t0),
+            ("d4", "x", t0),  # below min_tokens: no chunks
+            ("d5", None, t0),
+        ],
     )
-    run_ingest_job(
-        spark, docs, table, "run1", max_tokens=30, overlap=4, min_tokens=2,
-        embedding_dim=8, ops_table_path=ops,
-    )
+    kw = dict(max_tokens=30, overlap=4, min_tokens=2, embedding_dim=8)
+    run_ingest_job(spark, docs, table, "run1", ops_table_path=ops, **kw)
     ops_rows = spark.read.parquet(ops).collect()
     per_file = [r for r in ops_rows if r["file_key"] is not None]
     run_rows = [r for r in ops_rows if r["file_key"] is None]
-    assert {r["file_key"] for r in per_file} == {"d1", "d2"}
+    assert {r["file_key"] for r in per_file} == {"d1", "d2", "d3"}
     for r in per_file:
         assert r["timings"] is not None
         assert r["timings"]["chunkEmbedSec"] is not None
@@ -130,6 +137,22 @@ def test_ingest_job_populates_ops_structs(spark, tmp_path):
     assert rt["totalSec"] >= rt["indexUploadSec"]
     # the ops-only timing column never leaks into the chunks table
     assert "_chunk_sec" not in spark.read.parquet(table).columns
+
+    # the same listing without the ops log commits the same chunks
+    untimed = str(tmp_path / "untimed")
+    run_ingest_job(spark, docs, untimed, "run1", **kw)
+
+    def committed(path):
+        return sorted(
+            (r["id"], r["content"], list(r["contentVector"]))
+            for r in spark.read.parquet(path)
+            .select("id", "content", "contentVector")
+            .collect()
+        )
+
+    got = committed(table)
+    assert got == committed(untimed)
+    assert {i.split("-c")[0] for i, _, _ in got} == {"d1", "d2", "d3"}
 
 
 def test_guid_validation(spark):

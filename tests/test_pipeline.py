@@ -37,6 +37,17 @@ def test_chunk_documents_ids_unique_and_formatted(spark):
     assert abs(sum(x * x for x in v) - 1.0) < 1e-3
 
 
+def test_chunk_documents_rejects_non_additive_separators_before_any_job(spark):
+    # the docs come from a file scan, so even a plan-time probe of them
+    # would run a Spark job
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match="word character"):
+        chunk_documents(docs, separators=["ab", " "])
+    assert set(tracker.getJobIdsForGroup(None)) <= before
+
+
 def test_entry_contract(spark):
     import __spark_entry__ as m
 

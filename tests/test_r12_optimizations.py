@@ -4,7 +4,7 @@ Each optimization that changed an operator's internals gets a focused
 test proving the result is unchanged:
 
 - split_text_recursive's additive token counting vs a recomputing
-  reference (incl. the non-additive word-char-separator fallback),
+  reference (a non-additive word-char separator set is rejected),
 - ngram_jaccard_pairs' inline |A|/|B| carry vs explicit size joins,
 - simhash's indicator-sum votes vs the +/-1 vote construction,
 - chunk_analyzed_documents' fused ``pre`` hook vs pre-transforming,
@@ -17,83 +17,10 @@ import re
 
 import pytest
 from pyspark.sql import functions as F
+from splitter_reference import reference_split
 
 
 # ---------------------------------------------------------------- splitter
-
-
-def _old_split_text_recursive(text, max_tokens, overlap_tokens, min_tokens,
-                              separators=None):
-    """The pre-r12 reference implementation (re-tokenizes every merge
-    candidate) — kept here as the equivalence oracle."""
-    from gpt_rag_ingestion_spark.chunking import splitter as sp
-
-    _TOKEN_RE = sp._TOKEN_RE
-
-    def _ntokens(s):
-        return len(_TOKEN_RE.findall(s))
-
-    if not text:
-        return []
-
-    def split_rec(s, seps):
-        if _ntokens(s) <= max_tokens:
-            return [s]
-        if not seps:
-            toks = list(_TOKEN_RE.finditer(s))
-            out, i = [], 0
-            while i < len(toks):
-                j = min(i + max_tokens, len(toks))
-                out.append(s[toks[i].start():toks[j - 1].end()])
-                if j == len(toks):
-                    break
-                i = j - overlap_tokens if j - overlap_tokens > i else j
-            return out
-        sep, rest = seps[0], seps[1:]
-        parts, joiner = sp._split_once(s, sep)
-        if len(parts) <= 1:
-            return split_rec(s, rest)
-        pieces, cur = [], ""
-        for p in parts:
-            cand = cur + joiner + p if cur else p
-            if cur and _ntokens(cand) > max_tokens:
-                pieces.append(cur)
-                cur = p
-            else:
-                cur = cand
-        if cur:
-            pieces.append(cur)
-        out = []
-        for piece in pieces:
-            out.extend(
-                split_rec(piece, rest) if _ntokens(piece) > max_tokens else [piece]
-            )
-        return out
-
-    pieces = split_rec(text, separators if separators is not None else sp._SEPARATORS)
-    chunks, cursor, prev_tail = [], 0, ""
-    for piece in pieces:
-        if not piece.strip():
-            continue
-        found = text.find(piece, cursor)
-        if found < 0:
-            found = text.find(piece)
-        offset = found if found >= 0 else cursor
-        cursor = offset + len(piece)
-        content = (prev_tail + piece) if prev_tail else piece
-        if _ntokens(content) < min_tokens:
-            prev_tail = sp._tail_tokens(piece, overlap_tokens)
-            continue
-        chunks.append(
-            {"chunk_id": len(chunks), "content": content, "offset": offset,
-             "length": len(content)}
-        )
-        prev_tail = sp._tail_tokens(piece, overlap_tokens)
-    if not chunks and text.strip() and _ntokens(text) >= min_tokens:
-        chunks.append(
-            {"chunk_id": 0, "content": text, "offset": 0, "length": len(text)}
-        )
-    return chunks
 
 
 _SPLIT_CASES = [
@@ -108,7 +35,7 @@ _SPLIT_CASES = [
     ("word " * 300, 25, 7, 3, None),              # hard-window fallback
     ("# h1\ntext under h1\n## h2\nmore text\n```\ncode block\n```\n"
      "tail " * 20, 15, 4, 1, "md"),               # lookahead separators
-    ("xxabyyabzz " * 30, 8, 2, 1, ["ab", " "]),   # word-char joiner (non-additive)
+    ("xxabyyabzz " * 30, 8, 2, 1, ["ab", " "]),   # word-char joiner: refused
     ("abc..def..ghi " * 25, 6, 2, 1, [". ", " "]),
 ]
 
@@ -121,11 +48,20 @@ def test_split_text_recursive_matches_recomputing_reference():
 
     for text, mt, ov, mn, seps in _SPLIT_CASES:
         seps = MARKDOWN_SEPARATORS if seps == "md" else seps
+        if seps == ["ab", " "]:
+            # a word-char joiner lets a token span the cut, so counts
+            # are not additive: the splitter refuses the set
+            with pytest.raises(ValueError, match="word character"):
+                split_text_recursive(
+                    text, max_tokens=mt, overlap_tokens=ov, min_tokens=mn,
+                    separators=seps,
+                )
+            continue
         new = split_text_recursive(
             text, max_tokens=mt, overlap_tokens=ov, min_tokens=mn,
             separators=seps,
         )
-        old = _old_split_text_recursive(text, mt, ov, mn, separators=seps)
+        old = reference_split(text, mt, ov, mn, separators=seps)
         assert new == old, (text[:40], mt, ov, mn)
 
 

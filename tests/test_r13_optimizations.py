@@ -1,13 +1,16 @@
 """Equivalence pins for the r13 optimizations.
 
-The r13 chunk-kernel change (splitter span fast path) must be
-bit-identical to the legacy path: the golden-corpus suite pins the
-composed output, these tests pin the new machinery directly against
-the legacy construction on adversarial inputs.
+The r13 chunk-kernel change (one token-span array per document) must
+be bit-identical to the recursive splitter's contract: the
+golden-corpus suite pins the composed output, these tests pin the
+machinery directly against the test oracle
+(``splitter_reference.reference_split``) on adversarial inputs, ASCII
+and not.
 """
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -18,6 +21,8 @@ from gpt_rag_ingestion_spark.chunking.doc_analysis import (
     chunk_analyzed_markdown,
     number_pagebreaks,
 )
+from conftest import SF0001
+from splitter_reference import reference_split
 
 _TOKEN_RE = re.compile(r"\w+|[^\w\s]")
 
@@ -44,6 +49,32 @@ EDGE_TEXTS = [
     "\n\n\n\n",
     "abc" * 1500,
     "Header <!-- PageBreak --> middle. text <!-- PageBreak --> tail words",
+    # every ASCII char, incl. the \x1c-\x1f separators (\s for str patterns)
+    "".join(map(chr, range(128))) * 3,
+    "a\x1cb\x1dc\x1ed\x1fe f\x0bg. " * 40,
+    # non-ASCII: accented Latin, CJK, Cyrillic, Greek
+    "Ça été déjà vu. Über naïve café! Señor año. " * 20,
+    "東京は日本の首都です。大阪も大きい。 漢字 かな 한국어. " * 20,
+    "Привет мир. Это тест! Ещё одна строка? " * 25,
+    "Καλημέρα κόσμε. αβγ δεζ ηθι. " * 25,
+    "cafe\u0301 e\u0301e\u0301 re\u0301sume\u0301. \u0301x " * 30,  # combining
+    "a\u00a0b\u00a0c. d\u00a0\u00a0e \u00a0 f " * 30,  # NBSP is \s
+    "\u0663\u0664 x\u0663y 12\u0663. \u0663 " * 30,  # Arabic-Indic digit
+    "hi \U0001F600 there\U0001F600! \U0001F600\U0001F600 " * 30,  # emoji
+    "é_ _é _é_ ü__x. __ñ " * 30,  # next to "_"
+    "a\x85b\u2028c\u3000d. " * 30,  # non-ASCII whitespace
+    "ñ",
+    "日本",
+    "\u00a0",
+]
+# non-ASCII text on both sides of every shipped separator
+EDGE_TEXTS += [
+    f"ñé{sep}中文{sep}Жж{sep}é" * 30
+    for sep in dict.fromkeys(
+        (s[0] if isinstance(s, tuple) else s)
+        for s in sp._SEPARATORS + sp.MARKDOWN_SEPARATORS
+        + sp.PYTHON_SEPARATORS + sp.SENTENCE_SEPARATORS
+    )
 ]
 
 SEPSETS = [
@@ -56,49 +87,102 @@ PARAMS = [(40, 4, 2), (60, 4, 1), (64, 8, 4), (10, 3, 1), (5, 0, 1), (8, 8, 2)]
 
 
 def test_token_spans_batch_matches_finditer():
-    spans = sp.token_spans_batch(EDGE_TEXTS + [None, "über café", "mixé. x"])
-    for text, spn in zip(EDGE_TEXTS + ["", "über café", "mixé. x"], spans):
-        ref = [(m.start(), m.end()) for m in _TOKEN_RE.finditer(text)]
-        if not text.isascii():
-            assert spn is None  # non-ASCII rows take the legacy path
-            continue
-        assert list(zip(spn[0].tolist(), spn[1].tolist())) == ref
+    texts = EDGE_TEXTS + [None, "über café", "mixé. x"]
+    # mixed batches, all-ASCII and all-non-ASCII batches
+    for batch in (
+        texts,
+        [t for t in texts if not t or t.isascii()],
+        [t for t in texts if t and not t.isascii()],
+    ):
+        spans = sp.token_spans_batch(batch)
+        assert len(spans) == len(batch)
+        for text, spn in zip(batch, spans):
+            ref = [(m.start(), m.end()) for m in _TOKEN_RE.finditer(text or "")]
+            assert list(zip(spn[0].tolist(), spn[1].tolist())) == ref
 
 
 def test_span_fast_path_matches_legacy_splitter():
+    """Batched spans and spans computed per call both give the
+    oracle's chunks."""
     spans = sp.token_spans_batch(EDGE_TEXTS)
     n = 0
     for sepset in SEPSETS:
         for mt, ov, mn in PARAMS:
             for text, spn in zip(EDGE_TEXTS, spans):
-                legacy = sp.split_text_recursive(
-                    text, max_tokens=mt, overlap_tokens=ov, min_tokens=mn,
-                    separators=sepset,
-                )
-                fast = sp.split_text_recursive(
+                want = reference_split(text, mt, ov, mn, separators=sepset)
+                batched = sp.split_text_recursive(
                     text, max_tokens=mt, overlap_tokens=ov, min_tokens=mn,
                     separators=sepset, _spans=spn,
                 )
-                assert fast == legacy, (text[:50], mt, ov, mn)
+                assert batched == want, (text[:50], mt, ov, mn)
+                alone = sp.split_text_recursive(
+                    text, max_tokens=mt, overlap_tokens=ov, min_tokens=mn,
+                    separators=sepset,
+                )
+                assert alone == want, (text[:50], mt, ov, mn)
                 n += 1
     assert n == len(SEPSETS) * len(PARAMS) * len(EDGE_TEXTS)
 
 
 def test_span_fast_path_rejects_non_additive_separators():
-    # a word-char separator breaks count additivity -> the fast path
-    # must defer to the legacy implementation (same results either way
-    # because split_text_recursive falls back internally)
+    # a word char at a cut lets one token span it, so counts are not
+    # additive; an empty or unhashable entry is no separator: the
+    # splitter refuses the set, with or without precomputed spans
     text = "xxabyy zzabww. " * 30
     (spn,) = sp.token_spans_batch([text])
-    legacy = sp.split_text_recursive(
-        text, max_tokens=6, overlap_tokens=1, min_tokens=1, separators=["ab", " "]
-    )
-    fast = sp.split_text_recursive(
-        text, max_tokens=6, overlap_tokens=1, min_tokens=1,
-        separators=["ab", " "], _spans=spn,
-    )
-    assert sp._compiled_seps(("ab", " ")) is None
-    assert fast == legacy
+    for seps in (["ab", " "], [" ", "x"], [("x", "start"), " "], ["", " "],
+                 [("", "start")], [[" "]]):
+        for kw in ({}, {"_spans": spn}):
+            with pytest.raises(ValueError):
+                sp.split_text_recursive(
+                    text, max_tokens=6, overlap_tokens=1, min_tokens=1,
+                    separators=seps, **kw,
+                )
+        with pytest.raises(ValueError):
+            sp.compile_separators(seps)
+
+
+SF01 = os.path.join(os.path.dirname(SF0001), "sf0.1")
+# stand-ins for every 7th word: accented Latin, CJK, Cyrillic, Greek,
+# some next to a sentence separator
+_NON_ASCII_WORDS = [
+    "café", "déjà.", "naïve", "東京", "日本語。", "Привет", "мир!",
+    "κόσμε", "αβγ?", "Señor",
+]
+
+
+def _non_ascii_variant(texts):
+    """Deterministic non-ASCII variant of a corpus: every 7th word of
+    each document is swapped for a non-ASCII one."""
+    out = []
+    for i, text in enumerate(texts):
+        words = text.split(" ")
+        for k in range(6, len(words), 7):
+            words[k] = _NON_ASCII_WORDS[(i + k) % len(_NON_ASCII_WORDS)]
+        out.append(" ".join(words))
+    return out
+
+
+@pytest.mark.skipif(not os.path.isdir(SF01), reason="sf0.1 test data absent")
+def test_sf01_non_ascii_variant_matches_reference():
+    import pyarrow.parquet as pq
+
+    texts = pq.read_table(
+        f"{SF01}/documents.parquet", columns=["text"]
+    ).column("text").to_pylist()[::10]
+    docs = _non_ascii_variant(texts)
+    assert len(docs) >= 500 and not any(d.isascii() for d in docs)
+    spans = sp.token_spans_batch(docs)
+    # pipeline, q50 and default shapes
+    for mt, ov, mn in [(64, 8, 4), (40, 4, 2), (2048, 200, 100)]:
+        for sepset in SEPSETS:
+            for text, spn in zip(docs, spans):
+                got = sp.split_text_recursive(
+                    text, max_tokens=mt, overlap_tokens=ov, min_tokens=mn,
+                    separators=sepset, _spans=spn,
+                )
+                want = reference_split(text, mt, ov, mn, separators=sepset)
+                assert got == want, (text[:50], mt, ov, mn)
 
 
 def test_chunk_numbered_matches_chunk_analyzed_markdown():

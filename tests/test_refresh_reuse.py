@@ -3,8 +3,9 @@ ticks, the job runs no redundant queries, and its shortcuts give the
 same answers as the forms they replace (the one-pass text-index
 tables, the summary-derived candidate count, the JVM-local summary
 frame).  Also: a failed read of an existing table raises instead of
-re-ingesting, and the private PySpark hook the session relies on is
-still there."""
+re-ingesting (or, in the web-corpus job, instead of admitting every
+candidate as new), and the private PySpark hook the session relies on
+is still there."""
 
 from __future__ import annotations
 
@@ -90,6 +91,40 @@ def test_unreadable_swap_table_raises(spark, tmp_path):
     with pytest.raises(Exception, match="(?i)parquet|footer|schema"):
         run_ingest_job(spark, _docs(spark, 4, changed={0}), table, "tick", **_KW)
     assert _tree_digest(table) == before
+
+
+def test_web_corpus_truncated_manifest_raises_and_leaves_corpus_alone(
+    spark, tmp_path
+):
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        snapshot_merge_upsert,
+    )
+    from gpt_rag_ingestion_spark.plans.web_corpus_job import run_web_corpus_job
+
+    corpus, shards = str(tmp_path / "corpus"), str(tmp_path / "s1")
+
+    def batch(ids):
+        return spark.createDataFrame(
+            [(i, f"https://site{i}.org/p", f"page {i} body text " * 10)
+             for i in ids],
+            "doc_id long, url string, text string",
+        )
+
+    snapshot_merge_upsert(spark, corpus, batch([1, 2]), key="doc_id")
+    cur = open(os.path.join(corpus, "_current")).read().strip()
+    manifest = os.path.join(corpus, "_manifests", f"{int(cur):08d}.json")
+    body = open(manifest).read()
+    with open(manifest, "w") as f:
+        f.write(body[: len(body) // 2])
+    before = _tree_digest(corpus)
+    with pytest.raises((ValueError, Py4JJavaError)):
+        run_web_corpus_job(
+            spark, batch([1, 3]), corpus, shards, min_chars=10,
+            corpus_sink="snapshot",
+        )
+    assert _tree_digest(corpus) == before
+    # nothing was admitted against a base that could not be read
+    assert not os.path.exists(shards)
 
 
 # -- equivalence of the job's shortcuts ----------------------------------
