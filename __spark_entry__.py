@@ -1045,7 +1045,8 @@ def q59_run_history(spark: SparkSession, sf: str) -> DataFrame:
 
 def q60_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
     """S10/S11: the merge-upsert plan (delete-parents-then-upload as one
-    anti-join + union) — the relational core merge_upsert materializes."""
+    anti-join + union) — the relational core snapshot_merge_upsert
+    commits."""
     from gpt_rag_ingestion_spark.operators.upsert import merged_view
 
     orders = _t(spark, sf, "orders").select(
@@ -5755,7 +5756,7 @@ def q216_streaming_cdf_rollup(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING job-level IVM as a gate query (r7 brief #6): three
     AvailableNow drains of a JSON landing zone through
     streaming/micro_batch.run_incremental_ingest with
-    ``sink="snapshot"`` + ``rollup_mode="cdf"`` — tick 1 bulk-ingests,
+    ``rollup_mode="cdf"`` — tick 1 bulk-ingests,
     tick 2 adds new documents (CDF inserts), tick 3 RE-SENDS a slice
     of tick 1's documents with extended text (delete-then-insert merge
     → CDF deletes + inserts, chunk counts change).  After the drains
@@ -5797,7 +5798,6 @@ def q216_streaming_cdf_rollup(spark: SparkSession, sf: str) -> DataFrame:
             schema="doc_id LONG, text STRING, source STRING",
             rollup_path=roll,
             partition_cols=["source"],
-            sink="snapshot",
             rollup_mode="cdf",
         )
     maintained = spark.read.parquet(roll).select(
@@ -5901,6 +5901,9 @@ def q218_force_reprocess_backfill(spark: SparkSession, sf: str) -> DataFrame:
     oracle (q144 pattern)."""
     import tempfile
 
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        read_snapshot_table,
+    )
     from gpt_rag_ingestion_spark.plans.ingest_job import run_ingest_job
 
     _ensure_shipped(spark)
@@ -5921,7 +5924,7 @@ def q218_force_reprocess_backfill(spark: SparkSession, sf: str) -> DataFrame:
 
     def snap_counts():
         return (
-            spark.read.parquet(table)
+            read_snapshot_table(spark, table)
             .groupBy("parent_id")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
@@ -6965,6 +6968,9 @@ def q242_ingest_expectations(spark: SparkSession, sf: str) -> DataFrame:
     oracle is one row per planted document."""
     import tempfile
 
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        read_snapshot_table,
+    )
     from gpt_rag_ingestion_spark.plans.ingest_job import run_ingest_job
 
     docs = _t(spark, sf, "documents").select(
@@ -6987,7 +6993,7 @@ def q242_ingest_expectations(spark: SparkSession, sf: str) -> DataFrame:
         quarantine_path=qdir,
     )
     merged_clean = (
-        spark.read.parquet(table)
+        read_snapshot_table(spark, table)
         .filter(F.instr(F.col("content"), "_") > 0)
         .count()
         == 0

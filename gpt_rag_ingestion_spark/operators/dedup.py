@@ -1266,13 +1266,15 @@ def _sidecar_write_meta(spark, sidecar_path, n, gen, superseded, n_live) -> None
     ).coalesce(1).write.mode("overwrite").parquet(
         f"{sidecar_path}/meta__staging"
     )
-    from gpt_rag_ingestion_spark.operators.similarity import (
-        jvm_fs_delete,
-        jvm_fs_rename,
+    from gpt_rag_ingestion_spark.operators.upsert import (
+        _fs_delete,
+        _fs_try_rename,
     )
 
-    jvm_fs_delete(spark, f"{sidecar_path}/meta")
-    jvm_fs_rename(spark, f"{sidecar_path}/meta__staging", f"{sidecar_path}/meta")
+    _fs_delete(spark, f"{sidecar_path}/meta")
+    _fs_try_rename(
+        spark, f"{sidecar_path}/meta__staging", f"{sidecar_path}/meta"
+    )
 
 
 def _sidecar_read_meta(spark, sidecar_path) -> dict:
@@ -1337,13 +1339,13 @@ def dedup_sidecar_build(
     at the same path replaces the sidecar wholesale (stale batch
     directories of a previous life are cleared first, like
     ivfpq_index_build clears its postings)."""
-    from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_delete
+    from gpt_rag_ingestion_spark.operators.upsert import _fs_delete
 
     spark = corpus.sparkSession
     for sub in _SIDECAR_SUBS:
-        jvm_fs_delete(spark, f"{sidecar_path}/{sub}")
-        jvm_fs_delete(spark, f"{sidecar_path}/{sub}__old")
-        jvm_fs_delete(spark, f"{sidecar_path}/{sub}__staging")
+        _fs_delete(spark, f"{sidecar_path}/{sub}")
+        _fs_delete(spark, f"{sidecar_path}/{sub}__old")
+        _fs_delete(spark, f"{sidecar_path}/{sub}__staging")
     n_docs = _sidecar_write(
         corpus, sidecar_path, "build", text_col, id_col, n, gen=0
     )
@@ -1583,10 +1585,10 @@ def dedup_sidecar_compact(spark, sidecar_path: str) -> dict:
     generations (rows of docs later re-admitted) — classification
     results are byte-identical before and after (unit-pinned).  Uses
     the shared crash-safe swap (operators/similarity)."""
-    from gpt_rag_ingestion_spark.operators.similarity import (
-        _recover_swap,
-        jvm_fs_delete,
-        jvm_fs_rename,
+    from gpt_rag_ingestion_spark.operators.similarity import _recover_swap
+    from gpt_rag_ingestion_spark.operators.upsert import (
+        _fs_delete,
+        _fs_try_rename,
     )
 
     _sidecar_recover(spark, sidecar_path)
@@ -1599,7 +1601,7 @@ def dedup_sidecar_compact(spark, sidecar_path: str) -> dict:
     for sub, df in (("digests", dig), ("shingles", sh), ("sizes", sizes)):
         live_path = f"{sidecar_path}/{sub}"
         staging = f"{live_path}__staging"
-        jvm_fs_delete(spark, staging)
+        _fs_delete(spark, staging)
         kept = df.drop("batch") if "batch" in df.columns else df
         kept.write.mode("overwrite").parquet(f"{staging}/batch=compacted")
         out[sub] = int(
@@ -1619,10 +1621,10 @@ def dedup_sidecar_compact(spark, sidecar_path: str) -> dict:
     for sub in reversed(_SIDECAR_SUBS):
         live_path = f"{sidecar_path}/{sub}"
         old = f"{live_path}__old"
-        jvm_fs_delete(spark, old)
-        jvm_fs_rename(spark, live_path, old)
-        jvm_fs_rename(spark, staged[sub], live_path)
-        jvm_fs_delete(spark, old)
+        _fs_delete(spark, old)
+        _fs_try_rename(spark, live_path, old)
+        _fs_try_rename(spark, staged[sub], live_path)
+        _fs_delete(spark, old)
         spark.catalog.refreshByPath(live_path)
     # dead generations are gone: reset the liveness counter so the next
     # classification takes the zero-work steady-state path

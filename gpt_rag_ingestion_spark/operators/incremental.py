@@ -55,7 +55,7 @@ def maintain_rollup(
 
     ``old_rollup`` has columns (key, count_col, *sum_cols); ``removed``
     and ``added`` are ROW-level relations (the outgoing versions of
-    replaced rows, and the incoming rows — exactly what merge_upsert's
+    replaced rows, and the incoming rows — exactly what merged_view's
     anti-join/union already materializes).  Keys whose count reaches 0
     are dropped, so the maintained rollup equals a fresh recompute over
     the merged table, bit for bit, for additive aggregates.

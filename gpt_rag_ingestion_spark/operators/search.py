@@ -485,9 +485,9 @@ def _tindex_write_meta(
     rename is the one commit point of every lifecycle op."""
     import json as _json
 
-    from gpt_rag_ingestion_spark.operators.similarity import (
-        jvm_fs_delete,
-        jvm_fs_rename,
+    from gpt_rag_ingestion_spark.operators.upsert import (
+        _fs_delete,
+        _fs_try_rename,
     )
     from gpt_rag_ingestion_spark.operators.snapshot_table import _write_text
 
@@ -506,8 +506,8 @@ def _tindex_write_meta(
             }
         ),
     )
-    jvm_fs_delete(spark, f"{index_path}/meta")
-    jvm_fs_rename(spark, f"{index_path}/meta__staging", f"{index_path}/meta")
+    _fs_delete(spark, f"{index_path}/meta")
+    _fs_try_rename(spark, f"{index_path}/meta__staging", f"{index_path}/meta")
 
 
 def _tindex_read_meta(spark, index_path) -> dict:
@@ -529,14 +529,14 @@ def _tindex_recover(spark, index_path) -> None:
     (gen > committed), which would otherwise block that generation
     forever.  Same slow-writer caveat as the snapshot table's
     _claim_recover."""
-    from gpt_rag_ingestion_spark.operators.similarity import (
-        jvm_fs_exists,
-        jvm_fs_rename,
+    from gpt_rag_ingestion_spark.operators.upsert import (
+        _fs_exists,
+        _fs_try_rename,
     )
 
-    if not jvm_fs_exists(spark, f"{index_path}/meta"):
-        if jvm_fs_exists(spark, f"{index_path}/meta__staging"):
-            jvm_fs_rename(
+    if not _fs_exists(spark, f"{index_path}/meta"):
+        if _fs_exists(spark, f"{index_path}/meta__staging"):
+            _fs_try_rename(
                 spark, f"{index_path}/meta__staging", f"{index_path}/meta"
             )
         else:
@@ -630,13 +630,13 @@ def text_index_build(
 ) -> dict:
     """Build the persisted index from the existing corpus (the one
     full-corpus pass; later batches touch O(batch))."""
-    from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_delete
+    from gpt_rag_ingestion_spark.operators.upsert import _fs_delete
 
     spark = chunks.sparkSession
     for sub in _TEXT_INDEX_SUBS:
-        jvm_fs_delete(spark, f"{index_path}/{sub}")
-    jvm_fs_delete(spark, f"{index_path}/claims")
-    jvm_fs_delete(spark, f"{index_path}/meta")
+        _fs_delete(spark, f"{index_path}/{sub}")
+    _fs_delete(spark, f"{index_path}/claims")
+    _fs_delete(spark, f"{index_path}/meta")
     _p, doclen = _tindex_tables(
         chunks, text_col, id_col, 0, f"{index_path}/postings/batch=build__g0"
     )
@@ -739,14 +739,14 @@ def _tindex_commit(
     """Claim the generation, then commit the new manifest.  On a lost
     claim the writer deletes its own staged dirs (they are unlisted —
     harmless to readers — but tidy) and raises."""
-    from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_delete
+    from gpt_rag_ingestion_spark.operators.upsert import _fs_delete
 
     try:
         _tindex_claim(spark, index_path, gen)
     except TextIndexWriteConflict:
         for sub in _TEXT_INDEX_SUBS:
             for n in add.get(sub, []):
-                jvm_fs_delete(spark, f"{index_path}/{sub}/batch={n}")
+                _fs_delete(spark, f"{index_path}/{sub}/batch={n}")
         raise
     batches = {
         sub: (
@@ -936,7 +936,7 @@ def text_index_compact(spark, index_path: str) -> dict:
     swap-ordering hazard class is gone structurally).  Compaction
     claims a generation like every other writer, so it also cannot
     race an append."""
-    from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_delete
+    from gpt_rag_ingestion_spark.operators.upsert import _fs_delete
 
     _tindex_recover(spark, index_path)
     meta = _tindex_read_meta(spark, index_path)
@@ -964,7 +964,7 @@ def text_index_compact(spark, index_path: str) -> dict:
     # collect them now rather than leaving them to the next writer
     for sub, names in old_names.items():
         for n in names:
-            jvm_fs_delete(spark, f"{index_path}/{sub}/batch={n}")
+            _fs_delete(spark, f"{index_path}/{sub}/batch={n}")
     return out
 
 

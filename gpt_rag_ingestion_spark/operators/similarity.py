@@ -25,6 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from gpt_rag_ingestion_spark.embeddings import embed_text_deterministic
+from gpt_rag_ingestion_spark.operators.upsert import (
+    _fs_delete,
+    _fs_exists,
+    _fs_try_rename,
+)
 
 
 def _dot(a, b):
@@ -987,9 +992,9 @@ def ivf_index_build(
     )
     # wipe any previous generation BEFORE the new centroids land: old
     # postings/stats/baseline are keyed to the old centroid set
-    jvm_fs_delete(spark, f"{index_path}/postings")
-    jvm_fs_delete(spark, f"{index_path}/stats")
-    jvm_fs_delete(spark, f"{index_path}/baseline")
+    _fs_delete(spark, f"{index_path}/postings")
+    _fs_delete(spark, f"{index_path}/stats")
+    _fs_delete(spark, f"{index_path}/baseline")
     cent_rows = [
         (int(j), [float(x) for x in C[j]]) for j in range(len(C))
     ]
@@ -1002,27 +1007,6 @@ def ivf_index_build(
         "batch string, mean_assign_sim double",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/baseline")
     return n
-
-
-def jvm_fs_delete(spark, path: str) -> None:
-    """Delete a path through the Hadoop FileSystem API — works on any
-    supported scheme (local, hdfs://, abfss://, s3a://), unlike
-    driver-local os/shutil."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
-    if fs.exists(p):
-        fs.delete(p, True)
-
-
-def jvm_fs_exists(spark, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API (scheme-aware —
-    a driver-local os.path.exists is always False for remote stores)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(hconf).exists(p)
 
 
 def _ivf_load_centroids(spark, index_path: str):
@@ -1161,7 +1145,7 @@ def ivf_index_query(
         int(r["cell"]) for r in qd.select("cell").distinct().collect()
     ]
     postings_path = f"{index_path}/postings"
-    if not jvm_fs_exists(spark, postings_path) and jvm_fs_exists(
+    if not _fs_exists(spark, postings_path) and _fs_exists(
         spark, f"{index_path}/postings__old"
     ):
         # mid-swap: read the previous generation, mutate nothing
@@ -1183,13 +1167,13 @@ def ivf_needs_refit(spark, index_path: str, tolerance: float = 0.05) -> bool:
     centroid write and the build batch leaves stats/baseline absent
     entirely — reports True (rebuild) instead of crashing the
     monitor."""
-    if not jvm_fs_exists(spark, f"{index_path}/baseline"):
+    if not _fs_exists(spark, f"{index_path}/baseline"):
         return True
     base_row = spark.read.parquet(f"{index_path}/baseline").first()
     if base_row is None:
         return True
     base, base_label = base_row["mean_assign_sim"], base_row["batch"]
-    if not jvm_fs_exists(spark, f"{index_path}/stats"):
+    if not _fs_exists(spark, f"{index_path}/stats"):
         return True
     stats = spark.read.parquet(f"{index_path}/stats").collect()
     appended = [
@@ -1200,15 +1184,6 @@ def ivf_needs_refit(spark, index_path: str, tolerance: float = 0.05) -> bool:
     if not appended:
         return False
     return min(appended) < base - tolerance
-
-
-def jvm_fs_rename(spark, src: str, dst: str) -> bool:
-    """Atomic-per-directory rename through the Hadoop FileSystem API."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    ps, pd_ = jvm.org.apache.hadoop.fs.Path(src), jvm.org.apache.hadoop.fs.Path(dst)
-    fs = ps.getFileSystem(hconf)
-    return bool(fs.rename(ps, pd_))
 
 
 def _ivf_recover(spark, index_path: str) -> None:
@@ -1225,11 +1200,11 @@ def _ivf_recover(spark, index_path: str) -> None:
     ``postings__old`` (see ivf_index_query)."""
     postings = f"{index_path}/postings"
     old = f"{index_path}/postings__old"
-    if jvm_fs_exists(spark, old):
-        if jvm_fs_exists(spark, postings):
-            jvm_fs_delete(spark, old)
+    if _fs_exists(spark, old):
+        if _fs_exists(spark, postings):
+            _fs_delete(spark, old)
         else:
-            jvm_fs_rename(spark, old, postings)
+            _fs_try_rename(spark, old, postings)
 
 
 def ivf_index_compact(spark, index_path: str, label: str = "compacted") -> dict:
@@ -1253,14 +1228,14 @@ def ivf_index_compact(spark, index_path: str, label: str = "compacted") -> dict:
     old = f"{index_path}/postings__old"
     existing = spark.read.parquet(postings).select("corpus_id", "cv", "cell")
     n_before = int(existing.count())
-    jvm_fs_delete(spark, staging)
+    _fs_delete(spark, staging)
     existing.write.partitionBy("cell").mode("overwrite").parquet(
         f"{staging}/batch={label}"
     )
-    jvm_fs_delete(spark, old)
-    jvm_fs_rename(spark, postings, old)
-    jvm_fs_rename(spark, staging, postings)
-    jvm_fs_delete(spark, old)
+    _fs_delete(spark, old)
+    _fs_try_rename(spark, postings, old)
+    _fs_try_rename(spark, staging, postings)
+    _fs_delete(spark, old)
     spark.catalog.refreshByPath(postings)
     return {"n_vectors": n_before, "label": label}
 
@@ -1433,7 +1408,7 @@ def ivfpq_index_build(
         ],
         "subspace int, code int, b array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/codebooks")
-    jvm_fs_delete(spark, f"{index_path}/postings")
+    _fs_delete(spark, f"{index_path}/postings")
     b_model = spark.sparkContext.broadcast((C, books))
     enc = _ivfpq_encode(corpus, b_model, id_col, vec_col).persist()
     try:
@@ -1531,7 +1506,7 @@ def ivfpq_index_query(
     ).localCheckpoint()
     probed = [int(r["cell"]) for r in qd.select("cell").distinct().collect()]
     postings_path = f"{index_path}/postings"
-    if not jvm_fs_exists(spark, postings_path) and jvm_fs_exists(
+    if not _fs_exists(spark, postings_path) and _fs_exists(
         spark, f"{index_path}/postings__old"
     ):
         postings_path = f"{index_path}/postings__old"
@@ -1606,11 +1581,11 @@ def _recover_swap(spark, live_path: str) -> None:
     """Generic writer-side swap recovery for a ``<dir>``/``<dir>__old``
     pair (the _ivf_recover contract for any batched directory)."""
     old = f"{live_path}__old"
-    if jvm_fs_exists(spark, old):
-        if jvm_fs_exists(spark, live_path):
-            jvm_fs_delete(spark, old)
+    if _fs_exists(spark, old):
+        if _fs_exists(spark, live_path):
+            _fs_delete(spark, old)
         else:
-            jvm_fs_rename(spark, old, live_path)
+            _fs_try_rename(spark, old, live_path)
 
 
 def compact_batched_dir(
@@ -1627,15 +1602,15 @@ def compact_batched_dir(
     df = spark.read.parquet(dir_path).drop("batch")
     n = int(df.count())
     staging, old = f"{dir_path}__staging", f"{dir_path}__old"
-    jvm_fs_delete(spark, staging)
+    _fs_delete(spark, staging)
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(partition_by)
     w.parquet(f"{staging}/batch={label}")
-    jvm_fs_delete(spark, old)
-    jvm_fs_rename(spark, dir_path, old)
-    jvm_fs_rename(spark, staging, dir_path)
-    jvm_fs_delete(spark, old)
+    _fs_delete(spark, old)
+    _fs_try_rename(spark, dir_path, old)
+    _fs_try_rename(spark, staging, dir_path)
+    _fs_delete(spark, old)
     spark.catalog.refreshByPath(dir_path)
     return n
 
@@ -1646,7 +1621,7 @@ def read_batched_dir(spark, dir_path: str):
     (the ivf_index_query reader contract; like it, the fallback narrows
     the race window rather than closing it — retry on FileNotFound, or
     use a snapshot-isolated table format)."""
-    if not jvm_fs_exists(spark, dir_path) and jvm_fs_exists(
+    if not _fs_exists(spark, dir_path) and _fs_exists(
         spark, f"{dir_path}__old"
     ):
         dir_path = f"{dir_path}__old"

@@ -1,11 +1,12 @@
 """Snapshot table: manifest-pointer commits over plain parquet.
 
-The directory-swap sink (`operators/upsert.py`) documents two
-non-guarantees (SCALE.md §11): a reader between per-partition swaps
-sees a TORN generation, and a crash mid-sequence needs writer-side
-recovery.  This module closes both with the mechanism every lakehouse
-format uses — data files are IMMUTABLE and a commit is one atomic
-pointer update — re-expressed minimally over plain parquet:
+The one format of the engine's chunks and corpus tables (every job in
+``plans/`` and ``streaming/`` commits through it).  Renaming partition
+directories in place would let a reader between two renames see a
+TORN table and leave a crash mid-sequence to writer-side recovery;
+this module rules both out with the mechanism every lakehouse format
+uses — data files are IMMUTABLE and a commit is one atomic pointer
+update — re-expressed minimally over plain parquet:
 
     <table>/gen-00000001-<tok>/<p=v dirs...>   immutable generations
                                                (<tok> = per-attempt token:
@@ -30,10 +31,10 @@ list, so:
   simply unreferenced garbage for vacuum.  The only recovery rule is
   roll-forward of a half-renamed pointer (`_commit_recover`).
 - **O(increment) writes**: untouched partitions keep their old
-  generation's files — same pruned-write property as the swap sink.
+  generation's files.
 
-Contract vs. the swap sink: readers are never torn, writer crashes
-need no healing of live data, and CONCURRENT WRITERS are arbitrated:
+Readers are never torn, writer crashes need no healing of live data,
+and CONCURRENT WRITERS are arbitrated:
 each commit (a) writes its data under a generation directory whose
 name carries a per-attempt token — two writers racing to gen N can
 never clobber each other's files — and (b) claims the generation by
@@ -633,7 +634,7 @@ def read_snapshot_table(
     ``basePath``, and Catalyst partition-prunes within each scan.
     Generations may differ in schema (an increment that added a
     column): the union aligns by name with missing columns as NULL —
-    the same evolution contract as the swap sink's merge.
+    the evolution contract of ``merged_view``.
 
     ``at_gen`` is TIME TRAVEL (`AS OF VERSION`); ``at_ts_ms`` is
     `AS OF TIMESTAMP` (resolved to a generation via manifest mtimes,
@@ -1230,12 +1231,13 @@ def _snapshot_merge_upsert_once(
     hand that SAME generation in: the merge's ledger/identity/existing
     reads and expected_cur all use it, so a rival landing between the
     caller's pin and this commit surfaces as ``SnapshotWriteConflict``
-    instead of silently merging rows computed against a stale base.  Same keyed delete-then-insert semantics as
-    ``upsert.merge_upsert`` (equality property-tested), same
-    O(affected-partitions) write set, but the commit point is one
-    atomic rename and concurrent readers are never torn.
+    instead of silently merging rows computed against a stale base.
+    Keyed delete-then-insert semantics of ``upsert.merged_view``
+    (equality property-tested) with an O(affected-partitions) write
+    set; the commit point is one atomic rename and concurrent readers
+    are never torn.
 
-    ``schema_evolution``: ``"merge"`` (default, the swap sink's
+    ``schema_evolution``: ``"merge"`` (default, ``merged_view``'s
     contract) aligns by name — incoming may add columns, old rows read
     them back as NULL; ``"strict"`` is Delta's schema ENFORCEMENT:
     incoming columns must be a subset of the table's with identical
@@ -2172,12 +2174,18 @@ def snapshot_optimize(
             )
             # bin-pack, not just cap: coalesce each table partition to
             # one task (the file-count FLOOR is task count), then let
-            # maxRecordsPerFile split back up to the target.  The
-            # z-order path keeps its range partitioning — its task
+            # maxRecordsPerFile split back up to the target; an
+            # unpartitioned table gets one task per target-sized file.
+            # The z-order path keeps its range partitioning — its task
             # layout IS the clustering.
             if partition_cols and not zorder_cols:
                 existing = existing.repartition(
                     *[F.col(c) for c in partition_cols]
+                )
+            elif not zorder_cols:
+                target_bytes = int(target_file_mb) * 1024 * 1024
+                existing = existing.repartition(
+                    max(1, -(-total_bytes // target_bytes))
                 )
     writer = existing.write.mode("overwrite")
     if target_file_mb and total_rows > 0 and total_bytes > 0:
@@ -2902,12 +2910,12 @@ def _maybe_write_stats(
     spark, table_path: str, gname: str, new_dir: str,
     schema=None,
 ) -> None:
-    """Collect per-file stats for a just-written generation (one
-    column-pruned aggregation over the increment) and persist the
-    sidecar.  Called by every writer BETWEEN data write and commit, so
-    a sidecar exists iff its generation's files are fully on disk; an
-    uncommitted generation's sidecar is garbage vacuum removes with
-    the directory.
+    """Collect per-file stats and bloom bitmaps for a just-written
+    generation (one column-pruned aggregation over the increment) and
+    persist the sidecar.  Called by every writer BETWEEN data write and
+    commit, so a sidecar exists iff its generation's files are fully on
+    disk; an uncommitted generation's sidecar is garbage vacuum removes
+    with the directory.
 
     ``schema`` (the written frame's logical StructType) pins
     partition-column types for the read-back — without it, stats
@@ -2957,6 +2965,7 @@ def _maybe_write_stats(
     rel = F.substring_index(
         F.col("_metadata.file_path"), delim, -1
     ).alias("__file")
+    m, k = int(conf.get("bloom_bits", 4096)), int(conf.get("bloom_hashes", 3))
     aggs = [F.count(F.lit(1)).alias("__rows")]
     for c in cols:
         aggs += [
@@ -2964,35 +2973,23 @@ def _maybe_write_stats(
             F.max(c).alias(f"__max__{c}"),
             F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls__{c}"),
         ]
-    per_file = df.groupBy(rel).agg(*aggs).collect()
-    # Blooms in a second column-pruned pass: explode the k positions
-    # per row, then collect_set — map-side combine dedups before the
-    # shuffle and the per-file state is bounded by the bitmap size m,
-    # never by the row count (a collect_list of per-row arrays would
-    # materialize O(rows*k) before dedup).
-    m, k = int(conf.get("bloom_bits", 4096)), int(conf.get("bloom_hashes", 3))
-    blooms: dict[str, dict[str, int]] = {c: {} for c in bcols}
+    # Bloom positions in the same pass: one collect_set per hash
+    # function (NULL values yield NULL positions, which collect_set
+    # skips), ORed into one bitmap on the driver — map-side combine
+    # dedups before the shuffle, so the per-file state is bounded by
+    # the bitmap size m, never by the row count.
     for c in bcols:
-        pos = df.filter(F.col(c).isNotNull()).select(
-            rel,
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.xxhash64(F.col(c), F.lit(i)), F.lit(m))
-                        for i in range(k)
-                    ]
+        aggs += [
+            F.collect_set(
+                F.when(
+                    F.col(c).isNotNull(),
+                    F.pmod(F.xxhash64(F.col(c), F.lit(i)), F.lit(m)),
                 )
-            ).alias("__p"),
-        )
-        for r in pos.groupBy("__file").agg(
-            F.collect_set("__p").alias("__ps")
-        ).collect():
-            bits = 0
-            for b in r["__ps"]:
-                bits |= 1 << int(b)
-            blooms[c][r["__file"]] = bits
+            ).alias(f"__bloom__{c}__{i}")
+            for i in range(k)
+        ]
     files: dict[str, dict] = {}
-    for r in per_file:
+    for r in df.groupBy(rel).agg(*aggs).collect():
         ent: dict = {"rows": r["__rows"], "cols": {}}
         for c in cols:
             ent["cols"][c] = {
@@ -3001,9 +2998,11 @@ def _maybe_write_stats(
                 "nulls": r[f"__nulls__{c}"],
             }
         for c in bcols:
-            ent.setdefault("bloom", {})[c] = format(
-                blooms[c].get(r["__file"], 0), "x"
-            )
+            bits = 0
+            for i in range(k):
+                for b in r[f"__bloom__{c}__{i}"]:
+                    bits |= 1 << int(b)
+            ent.setdefault("bloom", {})[c] = format(bits, "x")
         files[r["__file"]] = ent
     _fs_mkdirs(spark, f"{table_path}/{_STATS_DIR}")
     _write_text(

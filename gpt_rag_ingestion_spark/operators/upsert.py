@@ -1,37 +1,32 @@
-"""Idempotent sink: delete-then-insert merge (SURVEY.md S10/S11, §2.10).
+"""Delete-then-insert merge semantics and the shared filesystem helpers.
 
-Reference semantics: per document, delete every existing chunk for the
-parent, then batch-upsert the new chunk docs — deterministic keys make
-the whole pipeline idempotent (reference
-jobs/blob_storage_indexer.py:614-615, 1242-1334).
+Reference semantics (SURVEY.md S10/S11, §2.10): per document, delete
+every existing chunk for the parent, then batch-upsert the new chunk
+docs — deterministic keys make the whole pipeline idempotent
+(reference jobs/blob_storage_indexer.py:614-615, 1242-1334).
 
-On a cluster with Delta/Iceberg this is ``MERGE INTO`` keyed on
-``parent_id`` (delete+insert) — one line.  This repo ships a plain-
-Parquet implementation with the same semantics:
+``merged_view`` is that relation as a pure plan: existing rows whose
+key does not appear in the increment, plus every incoming row (the
+plan ``MERGE INTO`` lowers to).  Every chunks and corpus table commits
+it through the manifest-pointer snapshot table
+(``operators/snapshot_table.py``); this module keeps what that table
+and the remaining directory-swapped artifacts share:
 
-- unpartitioned: rewrite = (existing ANTI-JOIN incoming-parents) UNION
-  incoming — the plan MERGE lowers to;
-- partitioned (``partition_cols`` set): **partition-pruned overwrite**
-  (``replaceWhere``-style).  Only partitions that contain incoming rows
-  or existing rows of incoming keys are rebuilt and swapped in; every
-  other partition's files are never touched.  At 100 TB with the table
-  partitioned by (source, ingest_date), an hourly increment rewrites
-  O(increment) data instead of O(table).
-
-Crash safety: each swap renames live -> ``__old``, staged -> live, then
-deletes ``__old``.  A crash between the two renames leaves ``__old``
-recoverable; the next ``merge_upsert``/``delete_keys`` call restores it
-automatically (``_recover``).
+- Spark's partition-path escaping, to address a partition directory
+  from its column values;
+- the Hadoop FileSystem helpers (``_fs_*``), scheme-aware on local,
+  hdfs:// and abfss:// alike;
+- the thread-safe partition-type-inference toggle;
+- the rename-rename-delete directory swap and its recovery, still used
+  by the dashboard rollups (``ingest_job._stage_rollup``,
+  ``incremental.maintain_snapshot_rollup``) and the streaming sketch
+  table (``micro_batch.run_incremental_sketch``).
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 # Characters Spark's ExternalCatalogUtils.escapePathName escapes when it
 # builds `col=value` partition directory names.
@@ -62,10 +57,10 @@ def _partition_rel_path(partition_cols: list[str], values) -> str:
 
 
 def _hfs(spark: SparkSession, path: str):
-    """(FileSystem, Path) through the Hadoop API — the sink's swaps
-    and recovery must work on any scheme whose rename is atomic
-    (local, hdfs://, abfss://); see SCALE.md 'Sink transactionality'
-    for the contract and the S3 caveat."""
+    """(FileSystem, Path) through the Hadoop API — commits, swaps and
+    recovery must work on any scheme whose rename is atomic (local,
+    hdfs://, abfss://), unlike driver-local os/shutil; see SCALE.md
+    'Sink transactionality' for the contract and the S3 caveat."""
     jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)
@@ -83,92 +78,22 @@ def _fs_delete(spark, path: str) -> None:
         fs.delete(p, True)
 
 
-def _fs_rename(spark, src: str, dst: str) -> None:
+def _fs_try_rename(spark, src: str, dst: str) -> bool:
+    """Hadoop rename (atomic per directory); False when the FileSystem
+    refuses it (missing source, existing destination)."""
     fs, ps = _hfs(spark, src)
     _fs2, pd_ = _hfs(spark, dst)
-    if not fs.rename(ps, pd_):
+    return bool(fs.rename(ps, pd_))
+
+
+def _fs_rename(spark, src: str, dst: str) -> None:
+    if not _fs_try_rename(spark, src, dst):
         raise OSError(f"rename failed: {src} -> {dst}")
 
 
 def _fs_mkdirs(spark, path: str) -> None:
     fs, p = _hfs(spark, path)
     fs.mkdirs(p)
-
-
-def _heal_partition_old_dirs(spark, table_path: str) -> None:
-    """Finish torn PER-PARTITION swaps: a crash inside
-    ``_swap_dir`` on one partition directory leaves
-    ``<table>/p=v__old`` with ``<table>/p=v`` missing (or both, if the
-    crash hit after the staged rename).  The root-level ``_recover``
-    never saw these (r4 gap) — walk the partition tree and apply the
-    same restore-or-garbage-collect rule to every ``__old`` dir."""
-    fs, root = _hfs(spark, table_path)
-    if not fs.exists(root):
-        return
-    stack = [root]
-    while stack:
-        d = stack.pop()
-        for st in fs.listStatus(d):
-            if not st.isDirectory():
-                continue
-            p = st.getPath()
-            name = p.getName()
-            if name.endswith("__old"):
-                live = p.getParent().suffix("/" + name[: -len("__old")])
-                if fs.exists(live):
-                    fs.delete(p, True)
-                else:
-                    fs.rename(p, live)
-            elif not name.endswith("__staging"):
-                stack.append(p)
-
-
-#: Sidecar pinning the LOGICAL partition-column types.  Read-back of a
-#: hive-partitioned parquet table otherwise re-infers those types from
-#: the directory NAMES — a string column whose current values all look
-#: numeric (`part=0`, plus `__HIVE_DEFAULT_PARTITION__` for ''/NULL)
-#: silently reads back BIGINT, which (a) crashes the merge union with
-#: ANSI CAST_INVALID_INPUT on the next non-numeric increment and
-#: (b) flips the output column's type between ingests.  The leading
-#: underscore keeps it invisible to Spark's file listing.
-_PARTITION_TYPES_SIDECAR = "_partition_types.json"
-
-
-def _sidecar_path(table_path: str) -> str:
-    return table_path.rstrip("/") + "/" + _PARTITION_TYPES_SIDECAR
-
-
-def _write_partition_types(
-    spark: SparkSession, table_path: str, schema: StructType,
-    partition_cols: list[str],
-) -> None:
-    """Persist the logical types of the partition columns (as a
-    StructType JSON) at the table root.  Called AFTER every swap — the
-    root-level ``_swap_in`` replaces the whole directory, so a sidecar
-    written before the swap would vanish with the old generation."""
-    fields = [schema[c] for c in partition_cols if c in schema.names]
-    if not fields:
-        return
-    fs, p = _hfs(spark, _sidecar_path(table_path))
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(StructType(fields).json().encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_partition_types(spark: SparkSession, table_path: str) -> StructType | None:
-    path = _sidecar_path(table_path)
-    if not _fs_exists(spark, path):
-        return None
-    jvm = spark.sparkContext._jvm
-    fs, p = _hfs(spark, path)
-    stm = fs.open(p)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stm, "UTF-8")
-    finally:
-        stm.close()
-    return StructType.fromJson(json.loads(text))
 
 
 #: Re-entrant, THREAD-SAFE toggle for partition-column type inference.
@@ -206,40 +131,16 @@ class _no_partition_inference:
         return False
 
 
-def _read_table(
-    spark: SparkSession, table_path: str, pin: StructType | None
-) -> DataFrame:
-    """Read the table back with partition-column types PINNED, not
-    inferred.  With ``pin`` set, partition-column type inference is
-    disabled for the read (directory values come back as their raw
-    unescaped strings — '00' stays '00', never a lossy int round-trip)
-    and each pinned column is cast to its stored logical type.  With
-    ``pin`` None (legacy table without a sidecar, or unpartitioned),
-    this is a plain read.  (Partition discovery — where the conf is
-    consulted — happens EAGERLY at DataFrame creation, so restoring
-    the conf right after the read call is safe.)"""
-    if pin is None:
-        return spark.read.parquet(table_path)
-    with _no_partition_inference(spark):
-        df = spark.read.parquet(table_path)
-    for f in pin.fields:
-        if f.name in df.columns and df.schema[f.name].dataType != f.dataType:
-            df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
-    return df
-
-
 def _recover(spark: SparkSession, table_path: str) -> None:
-    """Heal an interrupted swap: if the live table vanished mid-swap,
-    restore the ``__old`` generation; if both exist, the swap completed
-    and ``__old`` is leftover garbage.  Then heal any torn
-    per-partition swap the same way (partitioned-merge crash window)."""
+    """Heal an interrupted ``_swap_in``: if the live directory vanished
+    mid-swap, restore the ``__old`` generation; if both exist, the swap
+    completed and ``__old`` is leftover garbage."""
     old = table_path.rstrip("/") + "__old"
     if _fs_exists(spark, old):
         if _fs_exists(spark, table_path):
             _fs_delete(spark, old)
         else:
             _fs_rename(spark, old, table_path)
-    _heal_partition_old_dirs(spark, table_path)
 
 
 def merged_view(
@@ -247,204 +148,25 @@ def merged_view(
 ) -> DataFrame:
     """The relational core of S11+S10 (delete-parent-then-upload):
     existing rows whose ``key`` does NOT appear in ``incoming``, plus
-    every incoming row.  Pure plan — ``merge_upsert`` materializes it;
-    exposed separately so the merge semantics are oracle-checkable."""
+    every incoming row.  Pure plan — the snapshot table's merge commits
+    it (``snapshot_merge_upsert``); exposed separately so the merge
+    semantics are oracle-checkable."""
     keys = incoming.select(key).distinct()
     kept = existing.join(F.broadcast(keys), on=key, how="left_anti")
     return kept.unionByName(incoming, allowMissingColumns=True)
 
 
-def merge_upsert(
-    spark: SparkSession,
-    table_path: str,
-    incoming: DataFrame,
-    key: str = "parent_id",
-    partition_cols: list[str] | None = None,
-) -> None:
-    """Replace all rows whose ``key`` appears in ``incoming`` with the
-    incoming rows; keep everything else.  Equivalent to the reference's
-    delete-parent-then-upload (S11+S10) and to Delta MERGE."""
-    _recover(spark, table_path)
-    # Pin partition-column types on read-back: stored sidecar first,
-    # else the incoming frame's logical types (legacy tables written
-    # before the sidecar existed).  Without the pin, Spark re-infers
-    # the types from directory names and numeric-looking string values
-    # crash the union below (ANSI cast) or flip the output type.
-    pin = None
-    if partition_cols:
-        pin = _read_partition_types(spark, table_path)
-        if pin is None:
-            pin = StructType(
-                [incoming.schema[c] for c in partition_cols
-                 if c in incoming.columns]
-            )
-    try:
-        existing = _read_table(spark, table_path, pin)
-        have_existing = True
-    except Exception:
-        have_existing = False
-
-    tmp = table_path.rstrip("/") + "__staging"
-
-    if not have_existing:
-        writer = incoming.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(tmp)
-        _swap_in(spark, tmp, table_path)
-        if partition_cols:
-            _write_partition_types(
-                spark, table_path, incoming.schema, partition_cols
-            )
-        return
-
-    keys = incoming.select(key).distinct()
-
-    if not partition_cols:
-        out = merged_view(existing, incoming, key)
-        # local parquet cannot overwrite a path being read: stage then swap
-        out.write.mode("overwrite").parquet(tmp)
-        _swap_in(spark, tmp, table_path)
-        return
-
-    # ---- partition-pruned path ----
-    # Affected partitions = partitions incoming rows land in UNION
-    # partitions that hold existing rows of the incoming keys (a key may
-    # have moved partitions since its last ingest).  Only partition
-    # VALUES are collected — a bounded list, never data rows.
-    inc_parts = incoming.select(*partition_cols).distinct()
-    exist_parts = (
-        existing.join(F.broadcast(keys), on=key, how="left_semi")
-        .select(*partition_cols)
-        .distinct()
-    )
-    affected = [
-        tuple(r[c] for c in partition_cols)
-        for r in inc_parts.unionByName(exist_parts).distinct().collect()
-    ]
-    if not affected:
-        return  # empty increment: nothing to do
-
-    # Replacement data for affected partitions only — the scan of
-    # `existing` is partition-pruned by the predicate below (an OR of
-    # per-partition equality conjunctions, the shape Catalyst prunes).
-    import functools
-
-    def _match(values):
-        terms = [
-            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-            for c, v in zip(partition_cols, values)
-        ]
-        return functools.reduce(lambda a, b: a & b, terms)
-
-    pred = functools.reduce(lambda a, b: a | b, [_match(v) for v in affected])
-    kept = existing.filter(pred).join(F.broadcast(keys), on=key, how="left_anti")
-    out = kept.unionByName(incoming, allowMissingColumns=True)
-    out.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-
-    # Swap ONLY the affected partition directories; untouched partitions'
-    # files are never rewritten (the property the 100 TB design needs).
-    # Dedup by RESOLVED path: '' and NULL partition values share one
-    # Hive-default directory, and swapping the same dir twice would
-    # find the staging gone and delete the live data.
-    rels = sorted({_partition_rel_path(partition_cols, v) for v in affected})
-    for rel in rels:
-        staged_dir = f"{tmp}/{rel}"
-        live_dir = f"{table_path.rstrip('/')}/{rel}"
-        if _fs_exists(spark, staged_dir):
-            _fs_mkdirs(spark, live_dir.rsplit("/", 1)[0])
-            _swap_dir(spark, staged_dir, live_dir)
-        elif _fs_exists(spark, live_dir):
-            # partition became empty after the merge (all its rows were
-            # re-ingested keys that moved elsewhere): drop the stale dir
-            _fs_delete(spark, live_dir)
-    _fs_delete(spark, tmp)
-    _write_partition_types(spark, table_path, out.schema, partition_cols)
-    spark.catalog.refreshByPath(table_path)
-
-
-def delete_keys(
-    spark: SparkSession,
-    table_path: str,
-    keys: DataFrame,
-    key: str = "parent_id",
-    partition_cols: list[str] | None = None,
-) -> None:
-    """S11 standalone: delete rows by key-set (purger sink).
-
-    With ``partition_cols`` set, only partitions that actually hold
-    doomed keys are rewritten (the same replaceWhere-shaped pruning as
-    ``merge_upsert``) — a purge of K vanished parents rewrites
-    O(partitions touched), never O(table)."""
-    import functools
-
-    _recover(spark, table_path)
-    pin = _read_partition_types(spark, table_path) if partition_cols else None
-    existing = _read_table(spark, table_path, pin)
-    key_set = keys.select(key).distinct()
-    tmp = table_path.rstrip("/") + "__staging"
-
-    if not partition_cols:
-        kept = existing.join(F.broadcast(key_set), on=key, how="left_anti")
-        kept.write.mode("overwrite").parquet(tmp)
-        _swap_in(spark, tmp, table_path)
-        return
-
-    affected = [
-        tuple(r[c] for c in partition_cols)
-        for r in existing.join(F.broadcast(key_set), on=key, how="left_semi")
-        .select(*partition_cols)
-        .distinct()
-        .collect()
-    ]
-    if not affected:
-        return  # no partition holds a doomed key: nothing to rewrite
-
-    def _match(values):
-        terms = [
-            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-            for c, v in zip(partition_cols, values)
-        ]
-        return functools.reduce(lambda a, b: a & b, terms)
-
-    pred = functools.reduce(lambda a, b: a | b, [_match(v) for v in affected])
-    kept = existing.filter(pred).join(
-        F.broadcast(key_set), on=key, how="left_anti"
-    )
-    kept.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-    rels = sorted({_partition_rel_path(partition_cols, v) for v in affected})
-    for rel in rels:  # dedup: ''/NULL share the Hive default dir
-        staged_dir = f"{tmp}/{rel}"
-        live_dir = f"{table_path.rstrip('/')}/{rel}"
-        if _fs_exists(spark, staged_dir):
-            _fs_mkdirs(spark, live_dir.rsplit("/", 1)[0])
-            _swap_dir(spark, staged_dir, live_dir)
-        elif _fs_exists(spark, live_dir):
-            # every row of this partition was deleted: drop the dir
-            _fs_delete(spark, live_dir)
-    _fs_delete(spark, tmp)
-    _write_partition_types(spark, table_path, kept.schema, partition_cols)
-    spark.catalog.refreshByPath(table_path)
-
-
-def _swap_dir(spark: SparkSession, staged: str, live: str) -> None:
-    """Crash-safe directory swap (no Spark cache concerns — callers
-    refresh the table root afterwards)."""
-    old = live.rstrip("/") + "__old"
-    _fs_delete(spark, old)
-    if _fs_exists(spark, live):
-        _fs_rename(spark, live, old)
-    _fs_rename(spark, staged, live)
-    _fs_delete(spark, old)
-
-
 def _swap_in(spark: SparkSession, staged: str, table_path: str) -> None:
-    """Rename-rename-delete swap: the committed table is never destroyed
-    before its replacement is in place (a crash mid-swap leaves either
-    the old table or a recoverable ``__old`` directory, which the next
-    call's ``_recover`` restores — never nothing).  On a real deployment
-    Delta/Iceberg transactions replace this."""
-    _swap_dir(spark, staged, table_path)
+    """Rename-rename-delete swap: the committed directory is never
+    destroyed before its replacement is in place (a crash mid-swap
+    leaves either the old directory or a recoverable ``__old`` one,
+    which the next call's ``_recover`` restores — never nothing)."""
+    old = table_path.rstrip("/") + "__old"
+    _fs_delete(spark, old)
+    if _fs_exists(spark, table_path):
+        _fs_rename(spark, table_path, old)
+    _fs_rename(spark, staged, table_path)
+    _fs_delete(spark, old)
     # drop the session's cached file listing for the old generation
     spark.catalog.refreshByPath(table_path)
 
@@ -468,119 +190,3 @@ def _list_parquet_files(spark, table_path: str) -> list[tuple[str, int]]:
         if st.getPath().getName().endswith(".parquet"):
             out.append((st.getPath().toString(), int(st.getLen())))
     return out
-
-
-def table_parquet_files(table_path: str, spark: SparkSession | None = None) -> int:
-    """Leaf parquet file count — the fragmentation signal
-    ``maybe_compact_table`` reads.  Metadata listing only.  Uses the
-    active session's Hadoop FileSystem (remote-storage-correct);
-    falls back to os.walk only when no session exists AND the path is
-    scheme-less (driver-local)."""
-    spark = spark or SparkSession.getActiveSession()
-    if spark is not None:
-        return len(_list_parquet_files(spark, table_path))
-    if "://" in table_path:
-        raise ValueError(
-            f"no active SparkSession to list remote path {table_path!r}"
-        )
-    return sum(
-        1
-        for _root, _d, names in os.walk(table_path)
-        for n in names
-        if n.endswith(".parquet")
-    )
-
-
-def compact_table(
-    spark: SparkSession,
-    table_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_cols: list[str] | None = None,
-) -> tuple[int, int]:
-    """Small-file compaction (the OPTIMIZE of every lakehouse): an
-    incremental merge-per-hour leaves a long tail of tiny files that
-    tax every subsequent scan (one task + one footer fetch each).
-    Rewrite the table into ceil(total_bytes / target) right-sized
-    files with the same crash-safe swap the merge path uses.
-
-    ``partition_cols`` MUST be passed for a hive-partitioned table:
-    the rewrite then preserves the directory layout the
-    partition-pruned merge path depends on (without it a partitioned
-    table would silently flatten to an unpartitioned one), and rows
-    are spread over a per-partition SALT sized from estimated bytes —
-    a 20 GB hot partition still rewrites as ~bytes/target files in
-    parallel tasks instead of one straggler writing one giant file.
-
-    Driver data: file sizes (Hadoop FS listing — metadata, bounded by
-    file count, remote-storage-correct) and one per-partition-value
-    row count (a bounded aggregate).  Returns (files_before, files_after).  On
-    Delta/Iceberg this is OPTIMIZE / rewrite_data_files; here it is
-    the explicit read → repartition → swap."""
-    import math
-
-    _recover(spark, table_path)
-    listed = _list_parquet_files(spark, table_path)
-    files_before = len(listed)
-    total = sum(sz for _p, sz in listed)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    pin = _read_partition_types(spark, table_path) if partition_cols else None
-    existing = _read_table(spark, table_path, pin)
-    tmp = table_path.rstrip("/") + "__staging"
-    if partition_cols:
-        # per-partition salt count ~ that partition's bytes / target
-        # (bytes estimated from row share of the walked total); a
-        # partition value then lands in salt_n tasks -> salt_n
-        # right-sized files, not one
-        pcounts = existing.groupBy(*partition_cols).agg(
-            F.count(F.lit(1)).alias("_n_rows")
-        )
-        total_rows = existing.count()
-        bpr = (total / total_rows) if total_rows else 0.0
-        salt_map = pcounts.select(
-            *partition_cols,
-            F.greatest(
-                F.lit(1),
-                F.ceil(F.col("_n_rows") * F.lit(bpr) / F.lit(target_file_bytes)),
-            ).cast("long").alias("_salt_n"),
-        )
-        (
-            existing.join(F.broadcast(salt_map), list(partition_cols))
-            .withColumn(
-                "_salt",
-                F.pmod(F.monotonically_increasing_id(), F.col("_salt_n")),
-            )
-            .repartition(n_out, *partition_cols, "_salt")
-            .drop("_salt", "_salt_n")
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(tmp)
-        )
-    else:
-        existing.repartition(n_out).write.mode("overwrite").parquet(tmp)
-    _swap_in(spark, tmp, table_path)
-    if partition_cols:
-        # the root swap replaced the whole directory, sidecar included
-        _write_partition_types(spark, table_path, existing.schema, partition_cols)
-    return files_before, table_parquet_files(table_path, spark)
-
-
-def maybe_compact_table(
-    spark: SparkSession,
-    table_path: str,
-    max_files: int = 256,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_cols: list[str] | None = None,
-) -> dict:
-    """Compaction TRIGGER for a merge-maintained table, cheap enough
-    for every foreachBatch tick (one metadata walk): rewrite when the
-    leaf parquet file count exceeds ``max_files``.  The third member
-    of the engine's trigger family (dedup sidecar counters, ANN index
-    fragment counts) — merges keep landing per batch, the long tail of
-    tiny files gets folded only when it matters."""
-    files = table_parquet_files(table_path, spark)
-    if files > max_files:
-        before, after = compact_table(
-            spark, table_path, target_file_bytes, partition_cols
-        )
-        return {"compacted": True, "files_before": before, "files_after": after}
-    return {"compacted": False, "files": files}

@@ -33,7 +33,17 @@ from gpt_rag_ingestion_spark.operators.freshness import (
     index_watermarks,
 )
 from gpt_rag_ingestion_spark.operators.ops_log import apply_blocklist, run_summary
-from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
+from gpt_rag_ingestion_spark.operators.snapshot_table import (
+    read_snapshot_table,
+    snapshot_enable_stats,
+    snapshot_maybe_analyze,
+    snapshot_merge_upsert,
+)
+from gpt_rag_ingestion_spark.operators.upsert import (
+    _fs_exists,
+    _recover,
+    _swap_in,
+)
 
 
 def run_ingest_job(
@@ -54,7 +64,7 @@ def run_ingest_job(
     partition_cols: list[str] | None = None,
     recorder=None,
     text_index_path: str | None = None,
-    sink: str = "swap",
+    sink: str = "snapshot",
     stats_cols: list[str] | None = None,
     bloom_key: str | None = None,
     analyze_max_stale: int = 8,
@@ -102,8 +112,8 @@ def run_ingest_job(
     table).  Bootstrap on a pre-existing corpus builds from the
     post-merge table, like the web-corpus job's sidecar.
 
-    ``partition_cols`` partitions the chunks table and routes the merge
-    through the partition-pruned overwrite (operators/upsert.py) — at
+    ``partition_cols`` partitions the chunks table; a merge writes only
+    the partitions the increment touches into its new generation — at
     100 TB an hourly increment then rewrites O(increment) partitions
     instead of O(table).  Recommended: ``["ingest_date"]`` (derived
     here as ``to_date(ts_col)`` when absent from the source) or
@@ -119,15 +129,15 @@ def run_ingest_job(
     a paper trail); counters and the search-index tick see only
     admitted chunks.
 
-    ``sink`` selects the chunks-table format: ``"swap"`` (default) is
-    the directory-swap sink (``operators/upsert.merge_upsert``);
-    ``"snapshot"`` routes the merge through the manifest-pointer
-    lakehouse table (``operators/snapshot_table``) — identical MERGE
-    semantics, but commits are one atomic rename, readers are never
-    torn, and the steady-state run maintains the table's statistics
-    tiers as part of the job (r6 judge brief #7):
+    The chunks table is a manifest-pointer snapshot table
+    (``operators/snapshot_table``; read it with ``read_snapshot_table``):
+    every merge is one atomic commit, readers are never torn, and the
+    steady-state run maintains the table's statistics tiers as part of
+    the job.  ``sink`` accepts only ``"snapshot"``; a table written by
+    the former directory-swap sink is adopted in place with
+    ``snapshot_convert_from_parquet``.
 
-    - ``stats_cols`` (snapshot sink only): enable WRITE-TIME per-file
+    - ``stats_cols``: enable WRITE-TIME per-file
       min/max/null sidecars for these columns (plus xxhash64 blooms
       for ``bloom_key``) at table creation — every later merge's
       ``_maybe_write_stats`` then runs automatically inside the
@@ -147,29 +157,24 @@ def run_ingest_job(
         # telemetry/telemetry.py); no-op when tracing is off
         return recorder.span(name, **attrs) if recorder is not None else nullcontext()
 
-    if sink not in ("swap", "snapshot"):
-        raise ValueError(f"sink must be 'swap' or 'snapshot', got {sink!r}")
-
-    def _read_chunks_table():
-        if sink == "snapshot":
-            from gpt_rag_ingestion_spark.operators.snapshot_table import (
-                read_snapshot_table,
-            )
-
-            return read_snapshot_table(spark, table_path)
-        return spark.read.parquet(table_path)
+    if sink != "snapshot":
+        raise ValueError(
+            f"sink must be 'snapshot', got {sink!r}; adopt a table written "
+            "by the former directory-swap sink with "
+            "snapshot_table.snapshot_convert_from_parquet"
+        )
 
     _t_wall = _time.monotonic()
     # 1. index-state watermarks from the existing chunks table (A1/S9).
-    # Whether a table exists is decided by the sink's own commit marker,
+    # Whether a table exists is decided by its commit marker,
     # never by a failed read: an error reading an existing table raises
     # instead of becoming a full re-ingest.  The span covers the table's
     # metadata reads; the freshness scan itself runs inside the run
     # summary's collect (step 5)
     with _sp("scan_freshness", run=run_id):
-        have_table = _table_exists(spark, table_path, sink)
+        have_table = _table_exists(spark, table_path)
         if have_table:
-            chunks_table = _read_chunks_table()
+            chunks_table = read_snapshot_table(spark, table_path)
             watermarks = index_watermarks(
                 chunks_table, key="parent_id", ts="metadata_storage_last_modified"
             )
@@ -314,11 +319,7 @@ def run_ingest_job(
             text_index_apply,
             text_index_maybe_compact,
         )
-        from gpt_rag_ingestion_spark.operators.similarity import (
-            jvm_fs_exists,
-        )
-
-        if jvm_fs_exists(spark, f"{text_index_path}/meta"):
+        if _fs_exists(spark, f"{text_index_path}/meta"):
             with _sp("search_index", run=run_id):
                 old_ids = (
                     chunks_table.join(
@@ -358,42 +359,28 @@ def run_ingest_job(
     _t_upload = _time.monotonic()
     if n_candidates > 0:
         with _sp("merge", run=run_id):
-            if sink == "snapshot":
-                from gpt_rag_ingestion_spark.operators.snapshot_table import (
-                    snapshot_enable_stats,
-                    snapshot_maybe_analyze,
-                    snapshot_merge_upsert,
+            if not have_table and stats_cols:
+                # before the FIRST commit, so generation 1 already
+                # writes its sidecars (enabling late leaves old
+                # generations unpruned, as in the real formats)
+                snapshot_enable_stats(
+                    spark, table_path, stats_cols,
+                    bloom_cols=[bloom_key] if bloom_key else None,
                 )
-
-                if not have_table and stats_cols:
-                    # before the FIRST commit, so generation 1 already
-                    # writes its sidecars (enabling late leaves old
-                    # generations unpruned, as in the real formats)
-                    snapshot_enable_stats(
+            snapshot_merge_upsert(
+                spark, table_path, chunks.drop("_chunk_sec"),
+                key="parent_id", partition_cols=partition_cols,
+                max_conflict_rebases=max_conflict_rebases,
+            )
+            if stats_cols:
+                with _sp("analyze", run=run_id):
+                    snapshot_maybe_analyze(
                         spark, table_path, stats_cols,
-                        bloom_cols=[bloom_key] if bloom_key else None,
+                        max_stale_generations=analyze_max_stale,
                     )
-                snapshot_merge_upsert(
-                    spark, table_path, chunks.drop("_chunk_sec"),
-                    key="parent_id", partition_cols=partition_cols,
-                    max_conflict_rebases=max_conflict_rebases,
-                )
-                if stats_cols:
-                    with _sp("analyze", run=run_id):
-                        snapshot_maybe_analyze(
-                            spark, table_path, stats_cols,
-                            max_stale_generations=analyze_max_stale,
-                        )
-            else:
-                merge_upsert(
-                    spark, table_path, chunks.drop("_chunk_sec"),
-                    key="parent_id", partition_cols=partition_cols,
-                )
     upload_sec = round(_time.monotonic() - _t_upload, 3)
 
     if rollup_staging is not None:
-        from gpt_rag_ingestion_spark.operators.upsert import _swap_in
-
         _swap_in(spark, rollup_staging, rollup_path)
 
     if tindex_bootstrap:
@@ -403,7 +390,7 @@ def run_ingest_job(
 
         with _sp("search_index", run=run_id):
             text_index_build(
-                _read_chunks_table().select(
+                read_snapshot_table(spark, table_path).select(
                     F.xxhash64(F.col("id")).alias("chunk_doc"),
                     F.col("content").alias("text"),
                 ),
@@ -425,19 +412,12 @@ def run_ingest_job(
     return _summary_frame(spark, summary_rows, summary_schema)
 
 
-def _table_exists(spark, table_path: str, sink: str) -> bool:
-    """Does the chunks table exist, by the sink's own commit marker:
-    the snapshot table's pointer (``_current``, or ``_current__tmp``
-    mid-commit), the swap sink's live directory (after healing an
-    interrupted swap, as its merge would)."""
-    from gpt_rag_ingestion_spark.operators.upsert import _fs_exists, _recover
-
-    if sink == "snapshot":
-        return _fs_exists(spark, f"{table_path}/_current") or _fs_exists(
-            spark, f"{table_path}/_current__tmp"
-        )
-    _recover(spark, table_path)
-    return _fs_exists(spark, table_path)
+def _table_exists(spark, table_path: str) -> bool:
+    """Does the snapshot table exist, by its commit marker: the
+    pointer ``_current``, or ``_current__tmp`` mid-commit."""
+    return _fs_exists(spark, f"{table_path}/_current") or _fs_exists(
+        spark, f"{table_path}/_current__tmp"
+    )
 
 
 def _summary_frame(spark, rows, schema) -> DataFrame:
@@ -466,7 +446,6 @@ def _stage_rollup(spark, rollup_path, old_table, incoming):
     one-time recompute over the existing table (bootstrap).  Returns
     the staging path; caller swaps it in after the chunks merge."""
     from gpt_rag_ingestion_spark.operators.incremental import maintain_rollup
-    from gpt_rag_ingestion_spark.operators.upsert import _fs_exists, _recover
 
     _recover(spark, rollup_path)
     rows_in = incoming.select(

@@ -1,10 +1,10 @@
 """Unified maintenance pass — the engine's OPTIMIZE scheduler.
 
 Every persisted artifact in the engine carries its own cheap
-compaction TRIGGER (a counter or listing read per tick): the merge
-table's leaf-file count, the dedup sidecar's superseded counter, the
-ANN indexes' fragment counts, the text index's superseded counter,
-the snapshot table's referenced-generation count.  Streaming loops
+compaction TRIGGER (a counter or listing read per tick): the snapshot
+table's referenced-generation count (chunks and corpus tables alike),
+the dedup sidecar's superseded counter, the ANN indexes' fragment
+counts, the text index's superseded counter.  Streaming loops
 already arm their own triggers per batch; this job is the BATCH
 entry point — run it on a schedule (the reference runs its scheduled
 maintenance through function timers) and every artifact that crossed
@@ -21,8 +21,6 @@ from pyspark.sql import SparkSession
 
 def run_maintenance_job(
     spark: SparkSession,
-    corpus_path: str | None = None,
-    corpus_partition_cols: list[str] | None = None,
     snapshot_path: str | None = None,
     snapshot_partition_cols: list[str] | None = None,
     snapshot_stats_cols: list[str] | None = None,
@@ -51,15 +49,6 @@ def run_maintenance_job(
         except Exception as e:  # one artifact must not sink the sweep
             out[name] = {"error": f"{type(e).__name__}: {e}"}
 
-    if corpus_path is not None:
-        from gpt_rag_ingestion_spark.operators.upsert import (
-            maybe_compact_table,
-        )
-
-        _run(
-            "corpus", maybe_compact_table, spark, corpus_path,
-            partition_cols=corpus_partition_cols,
-        )
     if snapshot_path is not None:
         from gpt_rag_ingestion_spark.operators.snapshot_table import (
             snapshot_maybe_optimize,

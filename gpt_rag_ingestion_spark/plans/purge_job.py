@@ -4,9 +4,9 @@ nl2sql_purger.py, multimodal_images_purger.py).
 
 All reference purgers share one shape: scan index → parse identity →
 anti-join against the live source → batched delete → post-delete
-consistency re-check.  Here: one left_anti join + delete_keys + a
-count() assertion (the re-check loop collapses because the delete is
-transactional at the table-swap level)."""
+consistency re-check.  Here: one left_anti join + snapshot_delete_keys
++ a count() assertion (the re-check loop collapses because the delete
+is one atomic snapshot-table commit)."""
 
 from __future__ import annotations
 
@@ -14,7 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpt_rag_ingestion_spark.operators.purge import purge_targets
-from gpt_rag_ingestion_spark.operators.upsert import delete_keys
+from gpt_rag_ingestion_spark.operators.snapshot_table import (
+    read_snapshot_table,
+    snapshot_delete_keys,
+)
 
 
 def run_purge_job(
@@ -26,13 +29,15 @@ def run_purge_job(
     text_index_path: str | None = None,
     text_index_id_col: str | None = None,
 ) -> dict:
-    """Delete chunks whose ``key`` no longer exists in ``live_source``.
-    Returns the purger counters (A6): parents before/after, docs
-    scanned/deleted — plus the consistency re-check result.
+    """Delete chunks whose ``key`` no longer exists in ``live_source``
+    from the snapshot table at ``table_path`` (the table
+    ``run_ingest_job`` writes).  Returns the purger counters (A6):
+    parents before/after, docs scanned/deleted — plus the consistency
+    re-check result.
 
     ``partition_cols``: when the chunks table is partitioned, the
     delete rewrites only partitions holding doomed keys (see
-    ``delete_keys``) — O(touched partitions), not O(table).
+    ``snapshot_delete_keys``) — O(touched partitions), not O(table).
 
     ``text_index_path``: the reference purger ALSO deletes the
     vanished parents from the search index (blob_storage_indexer.py's
@@ -56,14 +61,14 @@ def run_purge_job(
       resolved to doc ids by semi-joining the chunks table on ``key``
       and hashing that column, so every chunk of a purged parent is
       tombstoned."""
-    index = spark.read.parquet(table_path)
+    index = read_snapshot_table(spark, table_path)
     docs_before = index.count()
     parents_before = index.select(key).distinct().count()
 
     # Fully relational: the target key-set never leaves the cluster —
     # counters come from semi-join counts and the DataFrame goes straight
-    # into delete_keys (no driver collect()/isin literal list, which
-    # would not survive millions of vanished parents).
+    # into snapshot_delete_keys (no driver collect()/isin literal list,
+    # which would not survive millions of vanished parents).
     targets = purge_targets(index.select(key).distinct(), live_source, key).cache()
     n_target_parents = targets.count()
 
@@ -73,10 +78,6 @@ def run_purge_job(
         # no broadcast hint: the orphan set is usually tiny but CAN be
         # huge (bulk source deletion) — let AQE pick the strategy
         docs_deleted = index.join(targets, on=key, how="left_semi").count()
-        # search-index leg FIRST: delete_keys' table rewrite refreshes
-        # the path `targets` was derived from, which can evict the
-        # cached target set and recompute it against the post-delete
-        # table (empty) — tombstone while the lineage is still valid
         if text_index_path is not None:
             from gpt_rag_ingestion_spark.operators.search import (
                 text_index_delete,
@@ -99,13 +100,13 @@ def run_purge_job(
             )
             index_tombstoned = out["tombstoned"]
             text_index_maybe_compact(spark, text_index_path)
-        delete_keys(
+        snapshot_delete_keys(
             spark, table_path, targets, key=key, partition_cols=partition_cols
         )
     targets.unpersist()
 
     # post-delete consistency re-check (reference :1761-1833)
-    after = spark.read.parquet(table_path)
+    after = read_snapshot_table(spark, table_path)
     remaining_orphans = purge_targets(
         after.select(key).distinct(), live_source, key
     ).count()

@@ -7,7 +7,7 @@ assets under samples/fabric/ — the corpus its notebooks/connectors
 ingest.  This job runs those actual files through the full offline
 pipeline: binaryFile scan (S1) → chunker-factory dispatch (C8) →
 per-family chunkers (C1/C3/C4/C5/C6) → deterministic keys (F1-F3) →
-hash embeddings (U1) → idempotent merge sink (S10/S11).
+hash embeddings (U1) → idempotent snapshot-table merge (S10/S11).
 
 Only the formats the offline engine can parse WITHOUT optional
 dependencies participate (md/vtt/xlsx/json — reference
@@ -42,10 +42,13 @@ def ingest_sample_corpus(
     embedding_dim: int = 16,
 ) -> DataFrame:
     """Ingest the reference sample corpus into a merge-maintained
-    chunks table and return the table DataFrame.  ``sample_dir`` is
-    the reference repo's ``samples/`` directory."""
+    chunks snapshot table and return the table DataFrame.
+    ``sample_dir`` is the reference repo's ``samples/`` directory."""
     from gpt_rag_ingestion_spark.chunking.corpus import chunk_corpus
-    from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        read_snapshot_table,
+        snapshot_merge_upsert,
+    )
     from gpt_rag_ingestion_spark.sources.binary_docs import (
         read_binary_documents,
     )
@@ -68,8 +71,8 @@ def ingest_sample_corpus(
         min_tokens=min_tokens,
         embedding_dim=embedding_dim,
     )
-    merge_upsert(spark, table_path, chunks, key="parent_id")
-    return spark.read.parquet(table_path)
+    snapshot_merge_upsert(spark, table_path, chunks, key="parent_id")
+    return read_snapshot_table(spark, table_path)
 
 
 def canonical_chunk_rows(table: DataFrame) -> list[dict]:

@@ -16,8 +16,8 @@ Composition of existing operators, one job:
                                          Jaccard vs the BASE corpus;
                                          batch text never joins base
                                          text, keys only
-      → admit 'new' rows              — merge_upsert into the corpus
-                                         (idempotent, partition-
+      → admit 'new' rows              — snapshot_merge_upsert into the
+                                         corpus (idempotent, partition-
                                          prunable) + JSONL/parquet
                                          training shards + manifest
 
@@ -35,20 +35,15 @@ from gpt_rag_ingestion_spark.functions.urls import canonical_url, url_domain
 from gpt_rag_ingestion_spark.operators.dedup import incremental_dedup
 from gpt_rag_ingestion_spark.operators.ranking import per_key_capped_rank
 from gpt_rag_ingestion_spark.operators.shards import write_training_shards
+from gpt_rag_ingestion_spark.operators.snapshot_table import (
+    _stats_conf,
+    read_snapshot_table,
+    snapshot_enable_stats,
+    snapshot_merge_upsert,
+)
 from gpt_rag_ingestion_spark.operators.text_analysis import bpe_ish_token_count
-from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
+from gpt_rag_ingestion_spark.operators.upsert import _fs_exists
 from gpt_rag_ingestion_spark.plans.ingest_job import _table_exists
-
-
-def _read_corpus(spark, corpus_path: str, corpus_sink: str):
-    """Corpus table read under the selected commit protocol."""
-    if corpus_sink == "snapshot":
-        from gpt_rag_ingestion_spark.operators.snapshot_table import (
-            read_snapshot_table,
-        )
-
-        return read_snapshot_table(spark, corpus_path)
-    return spark.read.parquet(corpus_path)
 
 
 def run_web_corpus_job(
@@ -71,7 +66,6 @@ def run_web_corpus_job(
     batch_label: str = "batch",
     sidecar_auto_compact: bool = True,
     prior_domain_counts: DataFrame | None = None,
-    corpus_sink: str = "swap",
     text_index_path: str | None = None,
     corpus_stats_cols: list[str] | None = None,
     corpus_bloom_key: bool = False,
@@ -80,17 +74,20 @@ def run_web_corpus_job(
     relation — (id, domain, disposition, dup_of) for every input row,
     disposition ∈ {blocked_domain, low_quality, over_cap,
     exact_dup_base, exact_dup_batch, near_dup_base, admitted}.
-    Side effects: admitted rows merged into ``corpus_path`` and
-    written as training shards under ``shards_dir``.
+    Side effects: admitted rows merged into the snapshot table at
+    ``corpus_path`` (operators/snapshot_table.py: every batch commit is
+    one atomic pointer rename, and concurrent readers of the growing
+    corpus are never torn — SCALE.md §11) and written as training
+    shards under ``shards_dir``.
 
-    ``partition_cols`` partitions the corpus table and routes the merge
-    through the partition-pruned overwrite (operators/upsert.py) so a
-    batch rewrites O(batch partitions), never O(corpus).  Partitioning
-    by raw ``domain`` is legal but explodes partition count at web
-    scale (millions of dirs); the supported derived column
-    ``domain_bucket`` = ``pmod(xxhash64(domain), domain_buckets)``
-    keeps the partition count fixed while a batch still prunes to the
-    buckets its domains hash into.
+    ``partition_cols`` partitions the corpus table; a merge writes only
+    the partitions the batch touches, so a batch rewrites O(batch
+    partitions), never O(corpus).  Partitioning by raw ``domain`` is
+    legal but explodes partition count at web scale (millions of
+    dirs); the supported derived column ``domain_bucket`` =
+    ``pmod(xxhash64(domain), domain_buckets)`` keeps the partition
+    count fixed while a batch still prunes to the buckets its domains
+    hash into.
 
     ``sidecar_path`` switches dedup to the persisted key-only sidecar
     (operators/dedup.py: digest index + hashed-shingle postings +
@@ -120,20 +117,13 @@ def run_web_corpus_job(
     Retrieval then serves from ``text_index_query`` with no corpus
     pass.
 
-    ``corpus_sink`` selects the corpus table's commit protocol:
-    ``"swap"`` = directory-swap merge (operators/upsert.py),
-    ``"snapshot"`` = manifest-pointer commits
-    (operators/snapshot_table.py) — identical MERGE semantics, but
-    every batch commit is one atomic pointer rename and concurrent
-    readers of the growing corpus are never torn (SCALE.md §11).
-
-    ``corpus_stats_cols`` / ``corpus_bloom_key`` (snapshot sink only)
-    enable write-time file statistics on the corpus table before the
-    first merge: each commit then records per-file min/max for the
-    named columns (and an ``id_col`` bloom when ``corpus_bloom_key``),
-    so downstream curation reads range-prune (snapshot_read_where) and
-    document lookups bloom-prune (snapshot_read_point) from commit
-    metadata alone — see SCALE.md §11 'Data skipping'."""
+    ``corpus_stats_cols`` / ``corpus_bloom_key`` enable write-time file
+    statistics on the corpus table before the first merge: each commit
+    then records per-file min/max for the named columns (and an
+    ``id_col`` bloom when ``corpus_bloom_key``), so downstream curation
+    reads range-prune (snapshot_read_where) and document lookups
+    bloom-prune (snapshot_read_point) from commit metadata alone — see
+    SCALE.md §11 'Data skipping'."""
     d = batch.select(
         F.col(id_col),
         F.col(text_col),
@@ -172,9 +162,7 @@ def run_web_corpus_job(
     candidates = staged.filter(F.col("_fd").isNull()).select(id_col, text_col)
     use_sidecar = False
     if sidecar_path is not None:
-        from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_exists
-
-        use_sidecar = jvm_fs_exists(spark, f"{sidecar_path}/meta")
+        use_sidecar = _fs_exists(spark, f"{sidecar_path}/meta")
     if use_sidecar:
         from gpt_rag_ingestion_spark.operators.dedup import (
             incremental_dedup_sidecar,
@@ -185,11 +173,11 @@ def run_web_corpus_job(
             threshold=near_dup_threshold,
         )
     else:
-        # the corpus exists iff its sink's commit marker does; any
-        # other read failure raises rather than admitting every
-        # candidate as new against an empty base
-        if _table_exists(spark, corpus_path, corpus_sink):
-            base = _read_corpus(spark, corpus_path, corpus_sink).select(
+        # the corpus exists iff its commit marker does; any other
+        # read failure raises rather than admitting every candidate as
+        # new against an empty base
+        if _table_exists(spark, corpus_path):
+            base = read_snapshot_table(spark, corpus_path).select(
                 id_col, text_col
             )
         else:
@@ -260,35 +248,23 @@ def run_web_corpus_job(
             bucket_expr=(F.col(id_col) / 4096).cast("long"),
             fmt=shard_fmt,
         )
-        if corpus_sink == "snapshot":
-            from gpt_rag_ingestion_spark.operators.snapshot_table import (
-                _stats_conf,
-                snapshot_enable_stats,
-                snapshot_merge_upsert,
+        if (corpus_stats_cols or corpus_bloom_key) and not _stats_conf(
+            spark, corpus_path
+        ):
+            # first admitting batch turns on write-time file stats for
+            # the corpus table: every later commit carries per-file
+            # min/max (+ id-column blooms) so readers can range-prune
+            # (e.g. n_tokens curation scans) and point-look-up
+            # documents without corpus passes
+            snapshot_enable_stats(
+                spark, corpus_path,
+                cols=corpus_stats_cols or [],
+                bloom_cols=[id_col] if corpus_bloom_key else [],
             )
-
-            if (corpus_stats_cols or corpus_bloom_key) and not _stats_conf(
-                spark, corpus_path
-            ):
-                # first admitting batch turns on write-time file stats
-                # for the corpus table: every later commit carries
-                # per-file min/max (+ id-column blooms) so readers can
-                # range-prune (e.g. n_tokens curation scans) and
-                # point-look-up documents without corpus passes
-                snapshot_enable_stats(
-                    spark, corpus_path,
-                    cols=corpus_stats_cols or [],
-                    bloom_cols=[id_col] if corpus_bloom_key else [],
-                )
-            snapshot_merge_upsert(
-                spark, corpus_path, to_merge, key=id_col,
-                partition_cols=partition_cols,
-            )
-        else:
-            merge_upsert(
-                spark, corpus_path, to_merge, key=id_col,
-                partition_cols=partition_cols,
-            )
+        snapshot_merge_upsert(
+            spark, corpus_path, to_merge, key=id_col,
+            partition_cols=partition_cols,
+        )
         if sidecar_path is not None:
             from gpt_rag_ingestion_spark.operators.dedup import (
                 dedup_sidecar_append,
@@ -311,7 +287,7 @@ def run_web_corpus_job(
                 # enabled on a pre-existing corpus must index what is
                 # already there, not just this batch's admissions
                 dedup_sidecar_build(
-                    _read_corpus(spark, corpus_path, corpus_sink).select(
+                    read_snapshot_table(spark, corpus_path).select(
                         id_col, text_col
                     ),
                     sidecar_path, text_col=text_col, id_col=id_col,
@@ -322,11 +298,7 @@ def run_web_corpus_job(
                 text_index_build,
                 text_index_maybe_compact,
             )
-            from gpt_rag_ingestion_spark.operators.similarity import (
-                jvm_fs_exists,
-            )
-
-            if jvm_fs_exists(spark, f"{text_index_path}/meta"):
+            if _fs_exists(spark, f"{text_index_path}/meta"):
                 # replay-idempotent per batch_label (the reference
                 # indexer's upsert of the same docs into its search
                 # index); the counter trigger folds superseded rows
@@ -338,7 +310,7 @@ def run_web_corpus_job(
             else:
                 # bootstrap from the POST-MERGE corpus, like the sidecar
                 text_index_build(
-                    _read_corpus(spark, corpus_path, corpus_sink).select(
+                    read_snapshot_table(spark, corpus_path).select(
                         id_col, text_col
                     ),
                     text_index_path, text_col=text_col, id_col=id_col,

@@ -23,7 +23,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpt_rag_ingestion_spark.chunking.pipeline import chunk_documents
-from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
+from gpt_rag_ingestion_spark.operators.snapshot_table import (
+    _stats_conf,
+    read_snapshot_table,
+    snapshot_enable_stats,
+    snapshot_maybe_optimize,
+    snapshot_merge_upsert,
+)
+from gpt_rag_ingestion_spark.operators.upsert import (
+    _fs_exists,
+    _recover,
+    _swap_in,
+)
 
 
 def run_incremental_ingest(
@@ -37,13 +48,14 @@ def run_incremental_ingest(
     min_tokens: int = 4,
     rollup_path: str | None = None,
     partition_cols: list[str] | None = None,
-    sink: str = "swap",
     max_generations: int | None = None,
     stats_cols: list[str] | None = None,
     rollup_mode: str = "stage",
     max_conflict_rebases: int = 0,
 ) -> None:
-    """One AvailableNow drain of the landing zone into the chunks table.
+    """One AvailableNow drain of the landing zone into the chunks table,
+    a snapshot table (operators/snapshot_table.py): each micro-batch
+    commits atomically and readers of the growing table are never torn.
 
     ``partition_cols`` (columns of the landing schema, e.g.
     ``["source"]``) partitions the chunks table and routes every
@@ -62,16 +74,13 @@ def run_incremental_ingest(
     rollup stays O(increment)-fresh across the stream's whole
     lifetime without any table rescan.
 
-    ``sink="snapshot"`` commits each micro-batch through the
-    manifest-pointer table (operators/snapshot_table.py) instead of
-    the directory swap: readers of the growing chunks table are never
-    torn, and ``max_generations`` arms the per-tick generation-fold
-    trigger (snapshot_maybe_optimize).  ``stats_cols`` enables
-    write-time file statistics on the FIRST batch so every commit
-    carries data-skipping sidecars (SCALE.md §11).
+    ``max_generations`` arms the per-tick generation-fold trigger
+    (snapshot_maybe_optimize).  ``stats_cols`` enables write-time file
+    statistics on the FIRST batch so every commit carries data-skipping
+    sidecars (SCALE.md §11).
 
-    ``rollup_mode`` (snapshot sink only): ``"stage"`` (default) keeps
-    the swap-staged delta maintenance; ``"cdf"`` maintains the rollup
+    ``rollup_mode``: ``"stage"`` (default) keeps the swap-staged delta
+    maintenance; ``"cdf"`` maintains the rollup
     FROM THE TABLE'S OWN CHANGE FEED after each commit
     (``incremental.maintain_snapshot_rollup``) — the applied
     generation rides inside the rollup's directory swap, so a crashed
@@ -79,16 +88,13 @@ def run_incremental_ingest(
     can SHARE one rollup without double-counting (both consume the
     same feed cursor).
 
-    ``max_conflict_rebases`` (snapshot sink): passed through to the
-    merge so several landing-zone streams can feed ONE table when
-    their partition sets are disjoint (snapshot_table's
-    _commit_rebasing)."""
+    ``max_conflict_rebases``: passed through to the merge so several
+    landing-zone streams can feed ONE table when their partition sets
+    are disjoint (snapshot_table's _commit_rebasing)."""
     if rollup_mode not in ("stage", "cdf"):
         raise ValueError(
             f"rollup_mode must be 'stage' or 'cdf', got {rollup_mode!r}"
         )
-    if rollup_mode == "cdf" and sink != "snapshot":
-        raise ValueError("rollup_mode='cdf' needs sink='snapshot'")
     stream = (
         spark.readStream.schema(schema)
         .format("json")
@@ -117,53 +123,37 @@ def run_incremental_ingest(
         )
         staging = None
         if rollup_path is not None and rollup_mode == "stage":
-            from gpt_rag_ingestion_spark.plans.ingest_job import _stage_rollup
+            from gpt_rag_ingestion_spark.plans.ingest_job import (
+                _stage_rollup,
+                _table_exists,
+            )
 
-            try:
-                if sink == "snapshot":
-                    from gpt_rag_ingestion_spark.operators.snapshot_table import (
-                        read_snapshot_table,
-                    )
-
-                    old_table = read_snapshot_table(spark, table_path)
-                else:
-                    old_table = spark.read.parquet(table_path)
-            except Exception:
-                old_table = None
+            # existence by the commit marker; a read error on an
+            # existing table raises instead of rebuilding the rollup
+            old_table = (
+                read_snapshot_table(spark, table_path)
+                if _table_exists(spark, table_path)
+                else None
+            )
             # foreachBatch sources are one-shot plans — pin the batch
             # so both the rollup delta and the merge see the same rows
             chunks = chunks.localCheckpoint()
             staging = _stage_rollup(
                 spark, rollup_path, old_table=old_table, incoming=chunks
             )
-        if sink == "snapshot":
-            from gpt_rag_ingestion_spark.operators.snapshot_table import (
-                _stats_conf,
-                snapshot_enable_stats,
-                snapshot_maybe_optimize,
-                snapshot_merge_upsert,
-            )
-
-            if stats_cols and not _stats_conf(spark, table_path):
-                snapshot_enable_stats(spark, table_path, cols=stats_cols)
-            snapshot_merge_upsert(
-                spark, table_path, chunks, key="parent_id",
-                partition_cols=partition_cols,
-                max_conflict_rebases=max_conflict_rebases,
-            )
-            if max_generations is not None:
-                snapshot_maybe_optimize(
-                    spark, table_path, max_generations=max_generations,
-                    partition_cols=partition_cols,
-                )
-        else:
-            merge_upsert(
-                spark, table_path, chunks, key="parent_id",
+        if stats_cols and not _stats_conf(spark, table_path):
+            snapshot_enable_stats(spark, table_path, cols=stats_cols)
+        snapshot_merge_upsert(
+            spark, table_path, chunks, key="parent_id",
+            partition_cols=partition_cols,
+            max_conflict_rebases=max_conflict_rebases,
+        )
+        if max_generations is not None:
+            snapshot_maybe_optimize(
+                spark, table_path, max_generations=max_generations,
                 partition_cols=partition_cols,
             )
         if staging is not None:
-            from gpt_rag_ingestion_spark.operators.upsert import _swap_in
-
             _swap_in(spark, staging, rollup_path)
         if rollup_path is not None and rollup_mode == "cdf":
             from gpt_rag_ingestion_spark.operators.incremental import (
@@ -235,16 +225,12 @@ def run_streaming_web_corpus(
     in run_web_corpus_job is per-batch: every micro-batch may admit up
     to cap_per_domain rows per domain again.
 
-    ``corpus_max_files`` arms the corpus table's OPTIMIZE trigger
-    (operators/upsert.maybe_compact_table): per-batch merges leave a
-    long tail of small parquet files; once the leaf file count exceeds
-    the threshold the table is rewritten into right-sized files under
-    the crash-safe swap, preserving any ``partition_cols`` layout.
-    Rows are untouched — only the file layout changes.  With
-    ``corpus_sink="snapshot"`` in ``job_kwargs`` the corpus commits
-    through the manifest-pointer sink instead, and the same knob
-    bounds the REFERENCED GENERATION count
-    (snapshot_table.snapshot_maybe_optimize: fold + vacuum)."""
+    ``corpus_max_files`` arms the corpus table's OPTIMIZE trigger: each
+    per-batch merge commits one more generation, and once the
+    REFERENCED GENERATION count exceeds the threshold the table is
+    folded and vacuumed (snapshot_table.snapshot_maybe_optimize),
+    preserving any ``partition_cols`` layout.  Rows are untouched —
+    only the file layout changes."""
     from gpt_rag_ingestion_spark.plans.web_corpus_job import run_web_corpus_job
 
     stream = spark.readStream.schema(schema).format(fmt).load(landing_dir)
@@ -254,11 +240,7 @@ def run_streaming_web_corpus(
             return
         prior_counts = None
         if domain_counts_path is not None:
-            from gpt_rag_ingestion_spark.operators.similarity import (
-                jvm_fs_exists,
-            )
-
-            if jvm_fs_exists(spark, domain_counts_path):
+            if _fs_exists(spark, domain_counts_path):
                 prior_counts = (
                     spark.read.parquet(domain_counts_path)
                     # replay safety: this batch's own counts from a
@@ -296,26 +278,12 @@ def run_streaming_web_corpus(
                 .parquet(f"{domain_counts_path}/batch={batch_id}")
             )
         if corpus_max_files is not None:
-            if job_kwargs.get("corpus_sink") == "snapshot":
-                # snapshot mode: fragmentation = referenced generation
-                # count (one manifest read), folded by optimize+vacuum
-                from gpt_rag_ingestion_spark.operators.snapshot_table import (
-                    snapshot_maybe_optimize,
-                )
-
-                snapshot_maybe_optimize(
-                    spark, corpus_path, max_generations=corpus_max_files,
-                    partition_cols=job_kwargs.get("partition_cols"),
-                )
-            else:
-                from gpt_rag_ingestion_spark.operators.upsert import (
-                    maybe_compact_table,
-                )
-
-                maybe_compact_table(
-                    spark, corpus_path, max_files=corpus_max_files,
-                    partition_cols=job_kwargs.get("partition_cols"),
-                )
+            # fragmentation = referenced generation count (one manifest
+            # read), folded by optimize+vacuum
+            snapshot_maybe_optimize(
+                spark, corpus_path, max_generations=corpus_max_files,
+                partition_cols=job_kwargs.get("partition_cols"),
+            )
 
     (
         stream.writeStream.foreachBatch(process_batch)
@@ -436,9 +404,6 @@ def run_incremental_sketch(
     This is the 100 TB pattern for every mergeable summary here
     (histogram, KMV, count-min): shard-local sketch + cell merge,
     state bounded by bins x groups regardless of stream length."""
-    import os
-    import shutil
-
     span = float(hi) - float(lo)
     stream = spark.readStream.schema(schema).format("json").load(landing_dir)
 
@@ -458,26 +423,22 @@ def run_incremental_sketch(
             .groupBy("event_type", "bin")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        try:
-            current = spark.read.parquet(sketch_table)
+        # existence by the directory (after healing a torn swap); a
+        # read error on an existing sketch raises instead of
+        # restarting the counts from this one batch
+        _recover(spark, sketch_table)
+        if _fs_exists(spark, sketch_table):
             merged = (
-                current.unionByName(delta)
+                spark.read.parquet(sketch_table)
+                .unionByName(delta)
                 .groupBy("event_type", "bin")
                 .agg(F.sum("c").cast("long").alias("c"))
             )
-        except Exception:
+        else:
             merged = delta.withColumn("c", F.col("c").cast("long"))
         tmp = sketch_table.rstrip("/") + "__staging"
         merged.write.mode("overwrite").parquet(tmp)
-        old = sketch_table.rstrip("/") + "__old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(sketch_table):
-            os.rename(sketch_table, old)
-        os.rename(tmp, sketch_table)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        spark.catalog.refreshByPath(sketch_table)
+        _swap_in(spark, tmp, sketch_table)
 
     (
         stream.writeStream.foreachBatch(process_batch)
@@ -697,7 +658,6 @@ def run_incremental_ivf(
         ivf_index_append,
         ivf_index_build,
         ivf_index_maybe_compact,
-        jvm_fs_exists,
     )
 
     stream = spark.readStream.schema(schema).format("json").load(landing_dir)
@@ -707,7 +667,7 @@ def run_incremental_ivf(
             return
         # scheme-aware existence check — a driver-local os.path.exists
         # is always False for hdfs://abfss://s3a:// index paths
-        if not jvm_fs_exists(spark, f"{index_path}/centroids"):
+        if not _fs_exists(spark, f"{index_path}/centroids"):
             # the build batch is labeled by ITS batch id: a foreachBatch
             # retry of this batch (centroids now existing) takes the
             # append path with the same label and overwrites the same

@@ -448,7 +448,6 @@ def _ingest_job_snapshot_pruned(spark, _sf_dir):
 
     kw = dict(
         max_tokens=16, overlap=2, min_tokens=2, embedding_dim=8,
-        sink="snapshot",
         stats_cols=["metadata_storage_last_modified"],
         bloom_key="parent_id",
     )

@@ -211,6 +211,47 @@ def test_bloom_point_lookup(spark, tmp_path):
     )
 
 
+def test_bloom_sidecar_bits_and_all_null_file(spark, tmp_path):
+    """The one-pass sidecar's bloom bitmap of every file equals the OR
+    of the per-row k positions, and a file whose bloom column is all
+    NULL gets an empty bitmap (so every point lookup skips it) while
+    its min/max/null stats are still recorded."""
+    import glob
+    import json
+
+    tbl = str(tmp_path / "t")
+    S.snapshot_enable_stats(spark, tbl, cols=["v"], bloom_cols=["k"])
+    df = spark.range(300).select(
+        F.when(F.col("id") >= 100, F.col("id")).alias("k"),
+        (F.col("id") * 2).alias("v"),
+        (F.col("id") >= 100).cast("int").alias("grp"),
+    )
+    # grp is a partition column: the all-NULL-k rows get their own file
+    S.snapshot_merge_upsert(
+        spark, tbl, df.coalesce(1), key="v", partition_cols=["grp"]
+    )
+    (side,) = glob.glob(f"{tbl}/_stats/*.json")
+    meta = json.load(open(side))
+    m, k = meta["bloom_bits"], meta["bloom_hashes"]
+    files = meta["files"]
+    by_grp = {int(f.split("grp=")[1].split("/")[0]): e for f, e in files.items()}
+    assert by_grp[0]["bloom"]["k"] == "0"
+    assert by_grp[0]["rows"] == 100 and by_grp[0]["cols"]["v"]["nulls"] == 0
+    want = 0
+    for r in spark.range(100, 300).select(
+        F.explode(F.array(*[
+            F.pmod(F.xxhash64(F.col("id"), F.lit(i)), F.lit(m))
+            for i in range(k)
+        ])).alias("p")
+    ).distinct().collect():
+        want |= 1 << int(r["p"])
+    assert int(by_grp[1]["bloom"]["k"], 16) == want
+    rep: dict = {}
+    got = S.snapshot_read_point(spark, tbl, "k", [150], report=rep)
+    assert _rows(got.select("k", "v")) == [(150, 300)]
+    assert rep["files_skipped"] >= 1, rep  # the all-NULL-k file
+
+
 def test_point_lookup_falls_back_to_minmax_without_bloom(spark, tmp_path):
     tbl = str(tmp_path / "t")
     S.snapshot_enable_stats(spark, tbl, cols=["parent_id"])  # no bloom col
@@ -251,7 +292,7 @@ def test_unsupported_stats_type_fails_fast(spark, tmp_path):
 @pytest.mark.slow
 def test_web_corpus_snapshot_sink_with_stats(spark, tmp_path):
     """Composition: the streaming web-corpus loop with
-    corpus_sink='snapshot' + corpus_stats_cols/_bloom_key enables
+    corpus_stats_cols/_bloom_key enables
     write-time stats on the FIRST admitting batch; every later commit
     (including the generation-fold trigger's optimize) carries
     sidecars, so curation range reads and doc-id lookups prune."""
@@ -279,7 +320,7 @@ def test_web_corpus_snapshot_sink_with_stats(spark, tmp_path):
         run_streaming_web_corpus(
             spark, str(landing), f"{root}/corpus", f"{root}/shards",
             f"{root}/audit", f"{root}/ckpt", min_chars=10,
-            corpus_max_files=2, corpus_sink="snapshot",
+            corpus_max_files=2,
             corpus_stats_cols=["n_tokens"], corpus_bloom_key=True,
         )
     full = S.read_snapshot_table(spark, f"{root}/corpus")
@@ -400,7 +441,7 @@ def test_metadata_count(spark, tmp_path):
 
 
 def test_streaming_ingest_snapshot_sink(spark, tmp_path):
-    """run_incremental_ingest with sink='snapshot': micro-batch merges
+    """run_incremental_ingest on the snapshot table: micro-batch merges
     commit through the manifest pointer, the generation trigger folds,
     stats sidecars ride every commit, and replays stay idempotent."""
     import json
@@ -426,7 +467,7 @@ def test_streaming_ingest_snapshot_sink(spark, tmp_path):
         )
         run_incremental_ingest(
             spark, str(landing), f"{root}/chunks", f"{root}/ckpt",
-            partition_cols=["source"], sink="snapshot",
+            partition_cols=["source"],
             max_generations=2, stats_cols=["length"],
         )
     tbl = S.read_snapshot_table(spark, f"{root}/chunks")

@@ -746,8 +746,10 @@ def test_ivf_index_compact_and_recover(spark, tmp_path):
         ivf_index_build,
         ivf_index_compact,
         ivf_index_query,
-        jvm_fs_exists,
-        jvm_fs_rename,
+    )
+    from gpt_rag_ingestion_spark.operators.upsert import (
+        _fs_exists,
+        _fs_try_rename,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -782,29 +784,29 @@ def test_ivf_index_compact_and_recover(spark, tmp_path):
     # filesystem (a racing compactor may be mid-swap; a reader that
     # renamed __old back would collide with its staging->postings
     # rename and nest a double-generation layout).
-    jvm_fs_rename(spark, f"{idx}/postings", f"{idx}/postings__old")
-    assert not jvm_fs_exists(spark, f"{idx}/postings")
+    _fs_try_rename(spark, f"{idx}/postings", f"{idx}/postings__old")
+    assert not _fs_exists(spark, f"{idx}/postings")
     during = {
         (r["query_id"], r["corpus_id"], r["rank"])
         for r in ivf_index_query(spark, idx, q, n_probe=2, k=5).collect()
     }
     assert during == before
-    assert not jvm_fs_exists(spark, f"{idx}/postings")      # reader mutated nothing
-    assert jvm_fs_exists(spark, f"{idx}/postings__old")
+    assert not _fs_exists(spark, f"{idx}/postings")      # reader mutated nothing
+    assert _fs_exists(spark, f"{idx}/postings__old")
 
     # the next WRITER (single-writer assumption) finishes the recovery
     ivf_index_append(
         emb.filter("vec_id < 0"), idx, batch_label="noop"
     )
-    assert jvm_fs_exists(spark, f"{idx}/postings")
-    assert not jvm_fs_exists(spark, f"{idx}/postings__old")
+    assert _fs_exists(spark, f"{idx}/postings")
+    assert not _fs_exists(spark, f"{idx}/postings__old")
     recovered = {
         (r["query_id"], r["corpus_id"], r["rank"])
         for r in ivf_index_query(spark, idx, q, n_probe=2, k=5).collect()
     }
     assert recovered == before
-    assert jvm_fs_exists(spark, f"{idx}/postings")
-    assert not jvm_fs_exists(spark, f"{idx}/postings__old")
+    assert _fs_exists(spark, f"{idx}/postings")
+    assert not _fs_exists(spark, f"{idx}/postings__old")
 
 
 @pytest.mark.slow
@@ -817,9 +819,11 @@ def test_ivfpq_index_lifecycle(spark, tmp_path):
         ivfpq_index_append,
         ivfpq_index_build,
         ivfpq_index_query,
-        jvm_fs_exists,
-        jvm_fs_rename,
         quantized_dot_topk,
+    )
+    from gpt_rag_ingestion_spark.operators.upsert import (
+        _fs_exists,
+        _fs_try_rename,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -884,16 +888,16 @@ def test_ivfpq_index_lifecycle(spark, tmp_path):
         (r["query_id"], r["corpus_id"])
         for r in ivfpq_index_query(spark, idx, q, n_probe=4, k=5).collect()
     }
-    jvm_fs_rename(spark, f"{idx}/postings", f"{idx}/postings__old")
+    _fs_try_rename(spark, f"{idx}/postings", f"{idx}/postings__old")
     during = {
         (r["query_id"], r["corpus_id"])
         for r in ivfpq_index_query(spark, idx, q, n_probe=4, k=5).collect()
     }
     assert during == before
-    assert not jvm_fs_exists(spark, f"{idx}/postings")
+    assert not _fs_exists(spark, f"{idx}/postings")
     # the next writer heals the swap
     ivfpq_index_append(emb.filter("vec_id < 0"), idx, batch_label="noop")
-    assert jvm_fs_exists(spark, f"{idx}/postings")
+    assert _fs_exists(spark, f"{idx}/postings")
 
 
 def test_dedup_sidecar_lifecycle(spark, tmp_path):
@@ -1305,7 +1309,7 @@ def test_sidecar_compact_crash_between_swaps_stays_correct(
     The retried compact then converges."""
     import pytest
 
-    from gpt_rag_ingestion_spark.operators import similarity as sim
+    from gpt_rag_ingestion_spark.operators import upsert as U
     from gpt_rag_ingestion_spark.operators.dedup import (
         _sidecar_read_meta,
         dedup_sidecar_append,
@@ -1334,7 +1338,7 @@ def test_sidecar_compact_crash_between_swaps_stays_correct(
         tuple(r) for r in incremental_dedup(current, probe).collect()
     )
 
-    real_rename = sim.jvm_fs_rename
+    real_rename = U._fs_try_rename
     state = {"swaps": 0}
 
     def crashing(spark_, src, dst):
@@ -1344,10 +1348,10 @@ def test_sidecar_compact_crash_between_swaps_stays_correct(
                 raise RuntimeError("injected crash between sub-table swaps")
         return real_rename(spark_, src, dst)
 
-    monkeypatch.setattr(sim, "jvm_fs_rename", crashing)
+    monkeypatch.setattr(U, "_fs_try_rename", crashing)
     with pytest.raises(RuntimeError, match="injected crash"):
         dedup_sidecar_compact(spark, side)
-    monkeypatch.setattr(sim, "jvm_fs_rename", real_rename)
+    monkeypatch.setattr(U, "_fs_try_rename", real_rename)
 
     # meta was never reset: liveness is still computed, and the intact
     # digest authority keeps the half-folded sidecar correct

@@ -18,6 +18,7 @@ from gpt_rag_ingestion_spark.functions.markdown import (
     number_figures,
     restore_tables,
 )
+from gpt_rag_ingestion_spark.operators.snapshot_table import read_snapshot_table
 from gpt_rag_ingestion_spark.plans.ingest_job import run_ingest_job
 from gpt_rag_ingestion_spark.sources.binary_docs import (
     read_binary_documents,
@@ -49,7 +50,7 @@ def test_ingest_job_incremental_end_to_end(spark, tmp_path):
         embedding_dim=8,
     ).collect()[0]
     assert s1["sourceFiles"] == 2
-    n1 = spark.read.parquet(table).count()
+    n1 = read_snapshot_table(spark, table).count()
     assert n1 > 0
 
     # identical re-run: freshness filter keeps nothing
@@ -58,7 +59,7 @@ def test_ingest_job_incremental_end_to_end(spark, tmp_path):
         embedding_dim=8,
     ).collect()
     assert s2 == [] or s2[0]["sourceFiles"] == 0
-    assert spark.read.parquet(table).count() == n1
+    assert read_snapshot_table(spark, table).count() == n1
 
     # d1 modified (newer by > 1s): only d1 reprocessed, d2 rows untouched
     t2 = _ts("2024-01-02T00:00:00")
@@ -68,7 +69,7 @@ def test_ingest_job_incremental_end_to_end(spark, tmp_path):
         embedding_dim=8,
     ).collect()[0]
     assert s3["sourceFiles"] == 1
-    final = spark.read.parquet(table)
+    final = read_snapshot_table(spark, table)
     d1_contents = " ".join(
         r["content"] for r in final.filter(F.col("parent_id") == "d1").collect()
     )
@@ -90,7 +91,7 @@ def test_ingest_job_blocklist_path(spark, tmp_path):
     ).collect()[0]
     assert s["sourceFiles"] == 1
     parents = {
-        r["parent_id"] for r in spark.read.parquet(table).select("parent_id").collect()
+        r["parent_id"] for r in read_snapshot_table(spark, table).select("parent_id").collect()
     }
     assert parents == {"good"}
 
@@ -136,7 +137,7 @@ def test_ingest_job_populates_ops_structs(spark, tmp_path):
     assert rt["indexUploadSec"] is not None and rt["totalSec"] is not None
     assert rt["totalSec"] >= rt["indexUploadSec"]
     # the ops-only timing column never leaks into the chunks table
-    assert "_chunk_sec" not in spark.read.parquet(table).columns
+    assert "_chunk_sec" not in read_snapshot_table(spark, table).columns
 
     # the same listing without the ops log commits the same chunks
     untimed = str(tmp_path / "untimed")
@@ -145,7 +146,7 @@ def test_ingest_job_populates_ops_structs(spark, tmp_path):
     def committed(path):
         return sorted(
             (r["id"], r["content"], list(r["contentVector"]))
-            for r in spark.read.parquet(path)
+            for r in read_snapshot_table(spark, path)
             .select("id", "content", "contentVector")
             .collect()
         )
@@ -317,7 +318,7 @@ def test_ingest_job_incremental_rollup_maintenance(spark, tmp_path):
     t2 = _ts("2024-01-03T00:00:00")
 
     def recompute():
-        t = spark.read.parquet(table)
+        t = read_snapshot_table(spark, table)
         return sorted(
             map(
                 tuple,
@@ -401,7 +402,7 @@ def test_web_corpus_job_two_batches(spark, tmp_path):
     assert a1[3] == ("blocked_domain", None)
     assert a1[4] == ("low_quality", None)
     assert a1[5] == ("exact_dup_batch", 1)
-    tbl = spark.read.parquet(corpus)
+    tbl = read_snapshot_table(spark, corpus)
     assert sorted(r["doc_id"] for r in tbl.collect()) == [1, 2]
 
     # batch 2: exact repeat of 1, near-dup of 2, and one new page
@@ -424,7 +425,7 @@ def test_web_corpus_job_two_batches(spark, tmp_path):
     assert a2[11] == ("exact_dup_base", 1)
     assert a2[12] == ("near_dup_base", 2)
     assert a2[13] == ("admitted", None)
-    tbl2 = spark.read.parquet(corpus)
+    tbl2 = read_snapshot_table(spark, corpus)
     assert sorted(r["doc_id"] for r in tbl2.collect()) == [1, 2, 13]
     # shards from batch 2 hold ONLY the admitted doc
     s2 = spark.read.parquet(shards2)
@@ -517,7 +518,7 @@ def test_web_corpus_sidecar_bootstrap_indexes_existing_corpus(spark, tmp_path):
     ).collect()
     assert audit[0]["disposition"] == "exact_dup_base"
     assert audit[0]["dup_of"] == 100
-    assert spark.read.parquet(corpus).count() == 2
+    assert read_snapshot_table(spark, corpus).count() == 2
 
 
 def test_ingest_job_snapshot_sink_stats_and_analyze(spark, tmp_path):
@@ -534,7 +535,6 @@ def test_ingest_job_snapshot_sink_stats_and_analyze(spark, tmp_path):
     t1 = _ts("2026-02-01T00:00:00")
     kw = dict(
         max_tokens=16, overlap=2, min_tokens=2, embedding_dim=8,
-        sink="snapshot",
         stats_cols=["metadata_storage_last_modified"],
         bloom_key="parent_id",
         analyze_max_stale=1,
@@ -638,7 +638,7 @@ def test_ingest_job_force_reprocess_backfill(spark, tmp_path):
         spark, batch, table, "r1", max_tokens=64, overlap=4, min_tokens=2,
         embedding_dim=8,
     )
-    n_coarse = spark.read.parquet(table).count()
+    n_coarse = read_snapshot_table(spark, table).count()
 
     # same listing, same timestamps: a normal run is a no-op
     s = run_ingest_job(
@@ -646,7 +646,7 @@ def test_ingest_job_force_reprocess_backfill(spark, tmp_path):
         embedding_dim=8,
     ).collect()
     assert s == [] or s[0]["sourceFiles"] == 0
-    assert spark.read.parquet(table).count() == n_coarse
+    assert read_snapshot_table(spark, table).count() == n_coarse
 
     # backfill with finer chunking: everything reprocesses
     s = run_ingest_job(
@@ -654,14 +654,14 @@ def test_ingest_job_force_reprocess_backfill(spark, tmp_path):
         embedding_dim=8, force_reprocess=True,
     ).collect()[0]
     assert s["sourceFiles"] == 2
-    n_fine = spark.read.parquet(table).count()
+    n_fine = read_snapshot_table(spark, table).count()
     assert n_fine > n_coarse  # finer chunks -> more rows
     # idempotent: replaying the backfill changes nothing
     run_ingest_job(
         spark, batch, table, "r4", max_tokens=16, overlap=4, min_tokens=2,
         embedding_dim=8, force_reprocess=True,
     )
-    assert spark.read.parquet(table).count() == n_fine
+    assert read_snapshot_table(spark, table).count() == n_fine
 
 
 def test_ingest_jobs_race_disjoint_partitions(spark, tmp_path):
@@ -690,7 +690,6 @@ def test_ingest_jobs_race_disjoint_partitions(spark, tmp_path):
     run_ingest_job(
         spark, seed, table, "r0", max_tokens=32, overlap=4,
         min_tokens=2, embedding_dim=8, partition_cols=["src"],
-        sink="snapshot",
     )
     start = threading.Barrier(2)
     errs: list[BaseException] = []
@@ -701,7 +700,7 @@ def test_ingest_jobs_race_disjoint_partitions(spark, tmp_path):
             run_ingest_job(
                 spark, batch, table, rid, max_tokens=32, overlap=4,
                 min_tokens=2, embedding_dim=8, partition_cols=["src"],
-                sink="snapshot", max_conflict_rebases=6,
+                max_conflict_rebases=6,
             )
         except BaseException as e:
             errs.append(e)
@@ -739,7 +738,7 @@ def test_ingest_job_expectations_quarantine(spark, tmp_path):
         expectations={"content_min_len": "length(content) >= 10"},
         quarantine_path=qdir,
     )
-    merged = spark.read.parquet(table)
+    merged = read_snapshot_table(spark, table)
     assert merged.filter(F.col("parent_id") == "bad1").count() == 0
     assert merged.filter(F.col("parent_id") == "good1").count() > 0
     q = spark.read.parquet(qdir)
@@ -765,7 +764,7 @@ def test_ingest_snapshot_sink_with_identity(spark, tmp_path):
     run_ingest_job(
         spark, _docs(spark, [("d1", "alpha " * 40, t0), ("d2", "beta " * 40, t0)]),
         table, "run1", max_tokens=30, overlap=4, min_tokens=2,
-        embedding_dim=8, sink="snapshot",
+        embedding_dim=8,
     )
     first = {
         r["id"]: r["chunk_sid"]
@@ -777,7 +776,7 @@ def test_ingest_snapshot_sink_with_identity(spark, tmp_path):
     run_ingest_job(
         spark, _docs(spark, [("d1", "alpha " * 40, t0), ("d2", "gamma " * 40, t2)]),
         table, "run2", max_tokens=30, overlap=4, min_tokens=2,
-        embedding_dim=8, sink="snapshot",
+        embedding_dim=8,
     )
     second = {
         r["id"]: r["chunk_sid"]
@@ -792,3 +791,100 @@ def test_ingest_snapshot_sink_with_identity(spark, tmp_path):
     hwm1 = max(first.values())
     d2_ids = [s for c, s in second.items() if c.startswith("d2")]
     assert d2_ids and min(d2_ids) > hwm1, (hwm1, sorted(d2_ids))
+
+
+# -- every job commits through the snapshot table -------------------------
+
+
+def test_ingest_job_rejects_swap_sink_before_any_job(spark, tmp_path):
+    # the docs come from a file scan, so even a plan-time probe of
+    # them would run a Spark job
+    _docs(spark, [("d1", "alpha " * 40, _ts("2024-01-01T00:00:00"))]).write.parquet(
+        str(tmp_path / "docs")
+    )
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match="snapshot_convert_from_parquet"):
+        run_ingest_job(spark, docs, str(tmp_path / "t"), "r1", sink="swap")
+    assert set(tracker.getJobIdsForGroup(None)) <= before
+    assert not (tmp_path / "t").exists()
+
+
+def test_purge_job_on_ingested_snapshot_table(spark, tmp_path):
+    """run_purge_job on the table run_ingest_job built, with the job's
+    chunk-keyed text index: every chunk of a purged parent is
+    tombstoned, the table is the pre-purge rows minus those parents,
+    and a point read of a purged parent finds nothing."""
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        snapshot_read_point,
+    )
+    from gpt_rag_ingestion_spark.plans.purge_job import run_purge_job
+
+    table, idx = str(tmp_path / "chunks"), str(tmp_path / "tindex")
+    t0 = _ts("2026-01-01T00:00:00")
+    run_ingest_job(
+        spark,
+        _docs(spark, [("a", "cat dog cat " * 30, t0),
+                      ("b", "fish stone " * 40, t0),
+                      ("c", "tree bird tree " * 25, t0)]),
+        table, "r1", max_tokens=16, overlap=2, min_tokens=2,
+        embedding_dim=8, text_index_path=idx,
+        stats_cols=["parent_id"], bloom_key="parent_id",
+    )
+    cols = ["id", "parent_id", "content"]
+    pre = sorted(
+        tuple(r) for r in read_snapshot_table(spark, table).select(*cols).collect()
+    )
+    n_a = sum(1 for r in pre if r[1] == "a")
+    assert n_a > 1
+
+    out = run_purge_job(
+        spark, table, spark.createDataFrame([("b",), ("c",)], "parent_id string"),
+        text_index_path=idx, text_index_id_col="id",
+    )
+    assert out["parentsPurged"] == 1 and out["docsDeleted"] == n_a
+    assert out["searchIndexTombstoned"] == n_a
+    post = sorted(
+        tuple(r) for r in read_snapshot_table(spark, table).select(*cols).collect()
+    )
+    assert post == [r for r in pre if r[1] != "a"]
+    assert snapshot_read_point(spark, table, "parent_id", ["a"]).count() == 0
+    assert snapshot_read_point(spark, table, "parent_id", ["b"]).count() > 0
+
+
+def test_web_corpus_job_commits_snapshot_table(spark, tmp_path):
+    """The corpus is a snapshot table: each admitting batch is one
+    commit, and the second batch dedups against the first's rows."""
+    import os
+
+    from gpt_rag_ingestion_spark.operators.snapshot_table import _current_gen
+    from gpt_rag_ingestion_spark.plans.web_corpus_job import run_web_corpus_job
+
+    corpus = str(tmp_path / "corpus")
+    schema = "doc_id LONG, url STRING, text STRING"
+    run_web_corpus_job(
+        spark,
+        spark.createDataFrame(
+            [(1, "https://a.example/x", "first page body " * 20)], schema
+        ),
+        corpus, str(tmp_path / "s0"), min_chars=10,
+    )
+    assert os.path.exists(f"{corpus}/_current")
+    assert _current_gen(spark, corpus) == 1
+    audit = run_web_corpus_job(
+        spark,
+        spark.createDataFrame(
+            [(2, "https://b.example/y", "first page body " * 20),
+             (3, "https://c.example/z", "another page body " * 20)],
+            schema,
+        ),
+        corpus, str(tmp_path / "s1"), min_chars=10,
+    )
+    assert sorted(
+        (r["doc_id"], r["disposition"]) for r in audit.collect()
+    ) == [(2, "exact_dup_base"), (3, "admitted")]
+    assert _current_gen(spark, corpus) == 2
+    assert sorted(
+        r["doc_id"] for r in read_snapshot_table(spark, corpus).collect()
+    ) == [1, 3]

@@ -19,21 +19,11 @@ def test_maintenance_sweep_runs_every_trigger(spark, tmp_path):
     )
     from gpt_rag_ingestion_spark.operators import search as X
     from gpt_rag_ingestion_spark.operators import snapshot_table as S
-    from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta w{i} gamma delta common words here") for i in range(12)],
         "doc_id long, text string",
     )
-
-    # corpus table (fragmented by two merges)
-    corpus = str(tmp_path / "corpus")
-    for i in range(2):
-        merge_upsert(
-            spark, corpus,
-            docs.filter(F.col("doc_id") % 2 == i).repartition(4),
-            key="doc_id",
-        )
 
     # snapshot table with superseded generations
     snap = str(tmp_path / "snap")
@@ -52,28 +42,24 @@ def test_maintenance_sweep_runs_every_trigger(spark, tmp_path):
 
     out = run_maintenance_job(
         spark,
-        corpus_path=corpus,
         snapshot_path=snap,
         sidecar_path=side,
         text_index_path=tindex,
         knobs={
-            "corpus": {"max_files": 2},
             "sidecar": {"dead_ratio": 0.1},
             "text_index": {"dead_ratio": 0.1},
             "snapshot": {"max_generations": 1},
         },
     )
-    assert out["corpus"]["compacted"] is True
     assert out["snapshot"]["optimized"] is True
     assert out["sidecar"]["compacted"] is True
     assert out["text_index"]["compacted"] is True
 
     # second sweep: everything back in steady state, nothing re-fires
     out2 = run_maintenance_job(
-        spark, corpus_path=corpus, snapshot_path=snap,
+        spark, snapshot_path=snap,
         sidecar_path=side, text_index_path=tindex,
-        knobs={"corpus": {"max_files": 2},
-               "snapshot": {"max_generations": 1}},
+        knobs={"snapshot": {"max_generations": 1}},
     )
     assert all(
         not v.get("compacted", False) and not v.get("optimized", False)
@@ -83,10 +69,10 @@ def test_maintenance_sweep_runs_every_trigger(spark, tmp_path):
     # a broken artifact reports an error without sinking the sweep
     out3 = run_maintenance_job(
         spark, sidecar_path=str(tmp_path / "missing"),
-        corpus_path=corpus, knobs={"corpus": {"max_files": 2}},
+        snapshot_path=snap, knobs={"snapshot": {"max_generations": 1}},
     )
     assert "error" in out3["sidecar"]
-    assert "compacted" in out3["corpus"]
+    assert "optimized" in out3["snapshot"]
 
 
 def test_cdf_rollup_maintenance_equals_recompute(spark, tmp_path):

@@ -11,7 +11,10 @@ from gpt_rag_ingestion_spark.operators.freshness import (
     index_watermarks,
 )
 from gpt_rag_ingestion_spark.operators.purge import purge_orphan_images, purge_targets
-from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
+from gpt_rag_ingestion_spark.operators.snapshot_table import (
+    read_snapshot_table,
+    snapshot_merge_upsert,
+)
 
 
 def _ts(s):
@@ -79,17 +82,17 @@ def test_merge_upsert_idempotent(spark, tmp_path):
         [("p1", 0, "v1"), ("p1", 1, "v1"), ("p2", 0, "v1")],
         ["parent_id", "chunk_id", "payload"],
     )
-    merge_upsert(spark, path, b1)
-    assert spark.read.parquet(path).count() == 3
+    snapshot_merge_upsert(spark, path, b1)
+    assert read_snapshot_table(spark, path).count() == 3
 
     # re-run identical batch -> same table
-    merge_upsert(spark, path, b1)
-    assert spark.read.parquet(path).count() == 3
+    snapshot_merge_upsert(spark, path, b1)
+    assert read_snapshot_table(spark, path).count() == 3
 
     # p1 re-ingested with fewer chunks -> old p1 rows fully replaced
     b2 = spark.createDataFrame([("p1", 0, "v2")], ["parent_id", "chunk_id", "payload"])
-    merge_upsert(spark, path, b2)
-    rows = spark.read.parquet(path).collect()
+    snapshot_merge_upsert(spark, path, b2)
+    rows = read_snapshot_table(spark, path).collect()
     assert len(rows) == 2
     p1 = [r for r in rows if r["parent_id"] == "p1"]
     assert len(p1) == 1 and p1[0]["payload"] == "v2"
@@ -127,7 +130,7 @@ def test_merge_upsert_partition_pruned(spark, tmp_path):
         ],
         ["parent_id", "chunk_id", "payload", "source"],
     )
-    merge_upsert(spark, path, b1, partition_cols=["source"])
+    snapshot_merge_upsert(spark, path, b1, partition_cols=["source"])
     before = _partition_file_state(path)
     assert any("source=blob" in k for k in before)
 
@@ -136,13 +139,19 @@ def test_merge_upsert_partition_pruned(spark, tmp_path):
         [("p1", 0, "v2", "blob"), ("p5", 0, "v1", "blob")],
         ["parent_id", "chunk_id", "payload", "source"],
     )
-    merge_upsert(spark, path, b2, partition_cols=["source"])
+    snapshot_merge_upsert(spark, path, b2, partition_cols=["source"])
     after = _partition_file_state(path)
 
+    # generations are immutable: every file survives byte-identical,
+    # and the new generation holds only the blob partition
     for rel, sig in before.items():
-        if "source=blob" not in rel:
-            assert after[rel] == sig, f"untouched partition rewritten: {rel}"
-    rows = {(r["parent_id"], r["payload"]) for r in spark.read.parquet(path).collect()}
+        assert after[rel] == sig, f"committed file rewritten: {rel}"
+    new = [rel for rel in after if rel not in before]
+    assert new and all("source=blob" in rel for rel in new)
+    rows = {
+        (r["parent_id"], r["payload"])
+        for r in read_snapshot_table(spark, path).collect()
+    }
     assert rows == {
         ("p1", "v2"), ("p2", "v1"), ("p3", "v1"), ("p4", "v1"), ("p5", "v1"),
     }
@@ -151,30 +160,35 @@ def test_merge_upsert_partition_pruned(spark, tmp_path):
     b3 = spark.createDataFrame(
         [("p3", 0, "v2", "blob")], ["parent_id", "chunk_id", "payload", "source"]
     )
-    merge_upsert(spark, path, b3, partition_cols=["source"])
+    snapshot_merge_upsert(spark, path, b3, partition_cols=["source"])
     rows = {
         (r["parent_id"], r["payload"], r["source"])
-        for r in spark.read.parquet(path).collect()
+        for r in read_snapshot_table(spark, path).collect()
     }
     assert ("p3", "v2", "blob") in rows
     assert not any(r[0] == "p3" and r[2] == "sharepoint-list" for r in rows)
 
 
 def test_merge_upsert_recovers_interrupted_swap(spark, tmp_path):
-    """A crash between the two swap renames leaves only ``__old``; the
-    next merge call must restore it instead of starting from empty."""
+    """A crash inside the pointer swap leaves only ``_current__tmp``;
+    the next merge call must roll it forward instead of starting from
+    empty."""
     import os
 
     path = str(tmp_path / "chunks")
     b1 = spark.createDataFrame(
         [("p1", 0, "v1"), ("p2", 0, "v1")], ["parent_id", "chunk_id", "payload"]
     )
-    merge_upsert(spark, path, b1)
-    # simulate the crash window: live renamed away, staging never landed
-    os.rename(path, path + "__old")
+    snapshot_merge_upsert(spark, path, b1)
+    # simulate the crash window: the live pointer gone, the new one
+    # written but never renamed into place
+    os.rename(f"{path}/_current", f"{path}/_current__tmp")
     b2 = spark.createDataFrame([("p2", 0, "v2")], ["parent_id", "chunk_id", "payload"])
-    merge_upsert(spark, path, b2)
-    rows = {(r["parent_id"], r["payload"]) for r in spark.read.parquet(path).collect()}
+    snapshot_merge_upsert(spark, path, b2)
+    rows = {
+        (r["parent_id"], r["payload"])
+        for r in read_snapshot_table(spark, path).collect()
+    }
     assert rows == {("p1", "v1"), ("p2", "v2")}
 
 

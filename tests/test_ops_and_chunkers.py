@@ -39,6 +39,7 @@ from gpt_rag_ingestion_spark.operators.ops_log import (
     run_summary,
     stale_runs,
 )
+from gpt_rag_ingestion_spark.operators.snapshot_table import read_snapshot_table
 from gpt_rag_ingestion_spark.streaming.micro_batch import (
     run_incremental_ingest,
     windowed_event_counts,
@@ -336,16 +337,16 @@ def test_incremental_ingest_availablenow(spark, tmp_path):
         )
     )
     run_incremental_ingest(spark, str(landing), table, ckpt)
-    n1 = spark.read.parquet(table).count()
+    n1 = read_snapshot_table(spark, table).count()
     assert n1 > 0
     parents1 = {
-        r["parent_id"] for r in spark.read.parquet(table).select("parent_id").collect()
+        r["parent_id"] for r in read_snapshot_table(spark, table).select("parent_id").collect()
     }
     assert parents1 == {"doc-0", "doc-1", "doc-2"}
 
     # second drain with no new files: checkpoint prevents re-processing
     run_incremental_ingest(spark, str(landing), table, ckpt)
-    assert spark.read.parquet(table).count() == n1
+    assert read_snapshot_table(spark, table).count() == n1
 
     # new file arrives -> only it is processed; merge keeps old parents
     (landing / "b2.json").write_text(
@@ -353,7 +354,7 @@ def test_incremental_ingest_availablenow(spark, tmp_path):
     )
     run_incremental_ingest(spark, str(landing), table, ckpt)
     parents2 = {
-        r["parent_id"] for r in spark.read.parquet(table).select("parent_id").collect()
+        r["parent_id"] for r in read_snapshot_table(spark, table).select("parent_id").collect()
     }
     assert parents2 == parents1 | {"doc-9"}
 

@@ -1,8 +1,8 @@
 """Partition-pruned merges through the COMPOSED jobs (round-3 close of
 the last O(table)-rewrite path): run_ingest_job / run_web_corpus_job
-must land in operators/upsert.py's partition-pruned branch when given
-``partition_cols``, produce byte-identical relational content to the
-unpartitioned run, and leave untouched partitions' files unrewritten.
+given ``partition_cols`` must produce byte-identical relational
+content to the unpartitioned run, and a snapshot-table commit must
+keep untouched partitions on their old generation's files.
 Reference semantic: per-parent delete+upsert
 (jobs/blob_storage_indexer.py:614-669)."""
 
@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import snapshot_table as S
 from gpt_rag_ingestion_spark.plans.ingest_job import run_ingest_job
 from gpt_rag_ingestion_spark.plans.web_corpus_job import run_web_corpus_job
 
@@ -39,6 +40,13 @@ def _files(root):
                 st = os.stat(p)
                 out[os.path.relpath(p, root)] = (st.st_size, st.st_mtime_ns)
     return out
+
+
+def _partition_refs(spark, table):
+    """{partition rel path: generation dir} of the committed manifest."""
+    return S._read_manifest(
+        spark, table, S._current_gen(spark, table)
+    )["partitions"]
 
 
 def _canon(df, cols):
@@ -68,13 +76,14 @@ def test_ingest_job_partitioned_matches_unpartitioned(spark, tmp_path):
                        partition_cols=pc, **_KW)
 
     cols = ["parent_id", "chunk_id", "offset", "length", "content", "id"]
-    a = _canon(spark.read.parquet(plain), cols)
-    b = _canon(spark.read.parquet(parted), cols)
+    a = _canon(S.read_snapshot_table(spark, plain), cols)
+    b = _canon(S.read_snapshot_table(spark, parted), cols)
     assert a == b and len(a) > 0
     # the partition column is real and carries the derived date
     dates = {
         r["ingest_date"].isoformat()
-        for r in spark.read.parquet(parted).select("ingest_date").distinct().collect()
+        for r in S.read_snapshot_table(spark, parted)
+        .select("ingest_date").distinct().collect()
     }
     assert dates == {"2024-01-01", "2024-01-03"}
 
@@ -89,7 +98,8 @@ def test_ingest_job_partitioned_prunes_untouched_partitions(spark, tmp_path):
               ("d3", "delta " * 40, t_b)]
     run_ingest_job(spark, _docs(spark, batch1), table, "r1",
                    partition_cols=["ingest_date"], **_KW)
-    before = _files(os.path.join(table, "ingest_date=2024-01-01"))
+    refs_before = _partition_refs(spark, table)
+    before = _files(table)
     assert before
 
     # only d3 is fresh: partition 2024-01-01 (d1+d2) must be untouched
@@ -97,13 +107,21 @@ def test_ingest_job_partitioned_prunes_untouched_partitions(spark, tmp_path):
               ("d3", "gamma " * 40, t_c)]
     run_ingest_job(spark, _docs(spark, batch2), table, "r2",
                    partition_cols=["ingest_date"], **_KW)
-    after = _files(os.path.join(table, "ingest_date=2024-01-01"))
-    assert after == before  # same files, same sizes, same mtimes
+    refs_after = _partition_refs(spark, table)
+    # the untouched partition still reads its first generation's files
+    assert (
+        refs_after["ingest_date=2024-01-01"]
+        == refs_before["ingest_date=2024-01-01"]
+    )
+    after = _files(table)
+    # no committed file rewritten: same files, same sizes, same mtimes
+    assert {k: after[k] for k in before} == before
     # d3 moved partitions: old partition dropped, new one holds gamma
-    assert not os.path.exists(os.path.join(table, "ingest_date=2024-01-02"))
+    assert "ingest_date=2024-01-02" not in refs_after
+    assert "ingest_date=2024-01-03" in refs_after
     d3 = " ".join(
         r["content"]
-        for r in spark.read.parquet(table)
+        for r in S.read_snapshot_table(spark, table)
         .filter(F.col("parent_id") == "d3").collect()
     )
     assert "gamma" in d3 and "delta" not in d3
@@ -152,7 +170,7 @@ def test_web_corpus_job_partitioned_matches_unpartitioned(spark, tmp_path):
                     ).collect()
                 )
             )
-        tbl = spark.read.parquet(corpus)
+        tbl = S.read_snapshot_table(spark, corpus)
         results[name] = (
             audits,
             sorted(
@@ -171,10 +189,9 @@ def test_web_corpus_job_partitioned_matches_unpartitioned(spark, tmp_path):
 
 def test_merge_two_level_partitioning(spark, tmp_path):
     """(source, ingest_date)-style two-level partitioned merge: nested
-    partition dirs swap independently, NULLs land in the Hive default
+    partitions commit independently, NULLs land in the Hive default
     dir at either level, and content stays byte-identical to the
     unpartitioned rewrite."""
-    from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
 
     schema = "parent_id string, src string, day string, v int"
     rows1 = [("k1", "a", "d1", 1), ("k2", "a", "d2", 2),
@@ -185,21 +202,18 @@ def test_merge_two_level_partitioning(spark, tmp_path):
 
     plain, parted = str(tmp_path / "plain"), str(tmp_path / "parted")
     for table, pc in ((plain, None), (parted, ["src", "day"])):
-        merge_upsert(spark, table, spark.createDataFrame(rows1, schema),
-                     partition_cols=pc)
-        merge_upsert(spark, table, spark.createDataFrame(rows2, schema),
-                     partition_cols=pc)
+        S.snapshot_merge_upsert(spark, table,
+                                spark.createDataFrame(rows1, schema),
+                                partition_cols=pc)
+        S.snapshot_merge_upsert(spark, table,
+                                spark.createDataFrame(rows2, schema),
+                                partition_cols=pc)
     canon = lambda p: sorted(  # noqa: E731
         (r["parent_id"], r["src"], r["day"], r["v"])
-        for r in spark.read.parquet(p).collect()
+        for r in S.read_snapshot_table(spark, p).collect()
     )
     assert canon(parted) == canon(plain)
-    import os
-
-    dirs = {
-        os.path.relpath(r, parted)
-        for r, d, f in os.walk(parted) if not d and f
-    }
+    dirs = set(_partition_refs(spark, parted))
     assert "src=a/day=d3" in dirs
     assert "src=__HIVE_DEFAULT_PARTITION__/day=d1" in dirs
     assert "src=b/day=__HIVE_DEFAULT_PARTITION__" in dirs

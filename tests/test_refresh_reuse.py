@@ -63,7 +63,7 @@ def _tree_digest(root):
 
 def test_truncated_manifest_raises_and_leaves_table_alone(spark, tmp_path):
     table, index = str(tmp_path / "t"), str(tmp_path / "i")
-    kw = dict(sink="snapshot", text_index_path=index, **_KW)
+    kw = dict(text_index_path=index, **_KW)
     run_ingest_job(spark, _docs(spark, 6), table, "base", **kw)
     cur = open(os.path.join(table, "_current")).read().strip()
     manifest = os.path.join(table, "_manifests", f"{int(cur):08d}.json")
@@ -80,17 +80,54 @@ def test_truncated_manifest_raises_and_leaves_table_alone(spark, tmp_path):
     assert (_tree_digest(table), _tree_digest(index)) == before
 
 
-def test_unreadable_swap_table_raises(spark, tmp_path):
+def _corrupt_footers(root):
+    """Overwrite the trailing magic of every parquet file under
+    ``root``: the footer no longer parses."""
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            if f.endswith(".parquet"):
+                with open(os.path.join(d, f), "r+b") as fh:
+                    fh.seek(-4, os.SEEK_END)
+                    fh.write(b"XXXX")
+
+
+def test_unreadable_chunks_table_raises(spark, tmp_path):
     table = str(tmp_path / "t")
     run_ingest_job(spark, _docs(spark, 4), table, "base", **_KW)
-    for f in os.listdir(table):
-        if f.endswith(".parquet"):
-            with open(os.path.join(table, f), "wb") as fh:
-                fh.write(b"not parquet")
+    _corrupt_footers(table)
     before = _tree_digest(table)
     with pytest.raises(Exception, match="(?i)parquet|footer|schema"):
         run_ingest_job(spark, _docs(spark, 4, changed={0}), table, "tick", **_KW)
     assert _tree_digest(table) == before
+
+
+def test_unreadable_swap_table_raises(spark, tmp_path):
+    """The streaming sketch table (committed by a directory swap): a
+    corrupt parquet footer fails the micro-batch instead of restarting
+    the counts from that one batch, and the sketch stays as it was."""
+    from gpt_rag_ingestion_spark.streaming.micro_batch import (
+        run_incremental_sketch,
+    )
+
+    landing, sketch = tmp_path / "landing", str(tmp_path / "sketch")
+    landing.mkdir()
+
+    def land(name, lo, hi):
+        (landing / name).write_text("\n".join(
+            json.dumps({"event_id": i, "event_type": "t", "value": i})
+            for i in range(lo, hi)
+        ))
+
+    land("b1.json", 0, 50)
+    run_incremental_sketch(spark, str(landing), sketch, str(tmp_path / "ck"))
+    _corrupt_footers(sketch)
+    before = _tree_digest(sketch)
+    land("b2.json", 50, 80)
+    with pytest.raises(Exception, match="(?i)parquet|footer|magic"):
+        run_incremental_sketch(
+            spark, str(landing), sketch, str(tmp_path / "ck")
+        )
+    assert _tree_digest(sketch) == before
 
 
 def test_web_corpus_truncated_manifest_raises_and_leaves_corpus_alone(
@@ -120,7 +157,6 @@ def test_web_corpus_truncated_manifest_raises_and_leaves_corpus_alone(
     with pytest.raises((ValueError, Py4JJavaError)):
         run_web_corpus_job(
             spark, batch([1, 3]), corpus, shards, min_chars=10,
-            corpus_sink="snapshot",
         )
     assert _tree_digest(corpus) == before
     # nothing was admitted against a base that could not be read
@@ -200,7 +236,7 @@ def test_candidate_count_is_summary_source_files(spark, tmp_path, blocked):
     )
 
     table = str(tmp_path / "t")
-    run_ingest_job(spark, _docs(spark, 8), table, "base", sink="snapshot", **_KW)
+    run_ingest_job(spark, _docs(spark, 8), table, "base", **_KW)
     tick = _docs(spark, 8, changed={1, 2, 5}, extra=2)
     listing = tick.withColumn("parent_id", sanitize_key(F.col("doc_key")))
     block = (
@@ -219,13 +255,13 @@ def test_candidate_count_is_summary_source_files(spark, tmp_path, blocked):
     want = cands.count()
     assert want == (3 if blocked else 5)
     (row,) = run_ingest_job(
-        spark, tick, table, "tick", sink="snapshot", blocked=block, **_KW
+        spark, tick, table, "tick", blocked=block, **_KW
     ).collect()
     assert row["sourceFiles"] == want
 
     cur = open(os.path.join(table, "_current")).read()
     again = run_ingest_job(
-        spark, tick, table, "again", sink="snapshot", blocked=block, **_KW
+        spark, tick, table, "again", blocked=block, **_KW
     )
     assert again.collect() == []
     assert open(os.path.join(table, "_current")).read() == cur
@@ -301,7 +337,7 @@ def listing(tick):
         rows, "doc_key string, text string, last_modified string"
     ).withColumn("last_modified", F.col("last_modified").cast("timestamp"))
 
-kw = dict(sink="snapshot", text_index_path=f"{work}/index",
+kw = dict(text_index_path=f"{work}/index",
           stats_cols=["parent_id"], bloom_key="parent_id",
           max_tokens=64, overlap=8, min_tokens=16)
 deltas = []

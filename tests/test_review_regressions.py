@@ -17,6 +17,7 @@ from gpt_rag_ingestion_spark.chunking.multimodal_chunker import (
 from gpt_rag_ingestion_spark.operators.multimodal import frame_sample_plan
 from gpt_rag_ingestion_spark.operators.similarity import quantized_dot_top1
 from gpt_rag_ingestion_spark.operators.skew import salted_join
+from gpt_rag_ingestion_spark.operators.snapshot_table import read_snapshot_table
 from gpt_rag_ingestion_spark.plans.ingest_job import run_ingest_job
 
 
@@ -62,7 +63,7 @@ def test_ingest_job_sanitized_keys_stable(spark, tmp_path):
     s1 = run_ingest_job(spark, docs, table, "r1", **kw).collect()[0]
     assert s1["sourceFiles"] == 1
     # timestamps carried through (the join hit despite sanitization)
-    tbl = spark.read.parquet(table)
+    tbl = read_snapshot_table(spark, table)
     assert tbl.filter(F.col("metadata_storage_last_modified").isNull()).count() == 0
     s2 = run_ingest_job(spark, docs, table, "r2", **kw).collect()
     assert s2 == [] or s2[0]["sourceFiles"] == 0  # no eternal re-ingest

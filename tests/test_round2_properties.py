@@ -159,8 +159,8 @@ def test_incremental_dedup_exact_classes_property(spark, texts):
 # machines unless pinned here.  ['', '0'] materializes directories
 # part=0 + part=__HIVE_DEFAULT_PARTITION__, which partition-column
 # type inference used to retype BIGINT -> ANSI CAST_INVALID_INPUT on
-# the merge union (upsert.py read-back, fixed by the _partition_types
-# sidecar + inference-off read).
+# the merge union (fixed by pinning the stored schema on read-back
+# with inference off).
 @example(pvals=["", "0"], shift=1)
 # all-numeric strings: exercises the silent STRING->BIGINT type flip
 # (no crash, but the output column's dtype changed across ingests)
@@ -180,8 +180,8 @@ def test_partitioned_merge_escaping_property(
     reads back as NULL — canonicalize '' to NULL on both sides."""
     import pyspark.sql.functions as _F
 
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _read_partition_types, _read_table, merge_upsert,
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        read_snapshot_table, snapshot_merge_upsert,
     )
 
     n = len(pvals)
@@ -195,66 +195,71 @@ def test_partitioned_merge_escaping_property(
     plain, parted = str(base / "plain"), str(base / "parted")
     schema = "parent_id string, part string, v int"
     for table, pc in ((plain, None), (parted, ["part"])):
-        merge_upsert(spark, table, spark.createDataFrame(rows1, schema),
-                     partition_cols=pc)
-        merge_upsert(spark, table, spark.createDataFrame(rows2, schema),
-                     partition_cols=pc)
-    # read through the module's pinned read path — that IS the table's
-    # read API (a raw spark.read.parquet would re-infer '00' as 0)
+        snapshot_merge_upsert(spark, table,
+                              spark.createDataFrame(rows1, schema),
+                              partition_cols=pc)
+        snapshot_merge_upsert(spark, table,
+                              spark.createDataFrame(rows2, schema),
+                              partition_cols=pc)
+    # read through the table's pinned read path (a raw
+    # spark.read.parquet would re-infer '00' as 0)
     canon = lambda p: sorted(  # noqa: E731
         (r["parent_id"], r["part"] or None, r["v"])
-        for r in _read_table(spark, p, _read_partition_types(spark, p))
+        for r in read_snapshot_table(spark, p)
         .select("parent_id", _F.col("part").cast("string"), "v").collect()
     )
     assert canon(parted) == canon(plain)
 
 
 def test_partition_type_pinned_across_ingests(spark, tmp_path):
-    """Regression for the r8 judge's S10 finding: the partitioned
-    sink's read-back must pin the partition column's LOGICAL type, not
-    re-infer it from directory names.  Ingesting all-numeric string
+    """Regression for the r8 judge's S10 finding: a partitioned
+    table's read-back must pin the partition column's LOGICAL type,
+    not re-infer it from directory names.  Ingesting all-numeric string
     values ('0','1') then a non-numeric one ('x') used to crash with
     ANSI CAST_INVALID_INPUT; and the stored dtype used to silently
-    flip STRING -> BIGINT between ingests."""
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _read_partition_types, _read_table, delete_keys, merge_upsert,
+    flip STRING -> BIGINT between ingests.  The rewriting delete reads
+    the table back the same way."""
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        read_snapshot_table, snapshot_delete_keys, snapshot_merge_upsert,
     )
 
     table = str(tmp_path / "t")
     schema = "parent_id string, part string, v int"
 
-    merge_upsert(spark, table,
-                 spark.createDataFrame([("a", "0", 1), ("b", "1", 2)], schema),
-                 partition_cols=["part"])
-    pin = _read_partition_types(spark, table)
-    assert pin is not None and pin["part"].dataType.simpleString() == "string"
-    got = _read_table(spark, table, pin)
-    assert dict(got.dtypes)["part"] == "string"
+    snapshot_merge_upsert(
+        spark, table,
+        spark.createDataFrame([("a", "0", 1), ("b", "1", 2)], schema),
+        partition_cols=["part"],
+    )
+    assert dict(read_snapshot_table(spark, table).dtypes)["part"] == "string"
 
     # second ingest: a NON-numeric partition value must not crash the
     # union against the (numeric-looking) existing directories
-    merge_upsert(spark, table,
-                 spark.createDataFrame([("c", "x", 3), ("a", "00", 4)], schema),
-                 partition_cols=["part"])
-    pin = _read_partition_types(spark, table)
-    got = _read_table(spark, table, pin)
+    snapshot_merge_upsert(
+        spark, table,
+        spark.createDataFrame([("c", "x", 3), ("a", "00", 4)], schema),
+        partition_cols=["part"],
+    )
+    got = read_snapshot_table(spark, table)
     assert dict(got.dtypes)["part"] == "string"
     # zero-padded value survives verbatim (int round-trip would lose it)
     assert sorted(
         (r["parent_id"], r["part"], r["v"]) for r in got.collect()
     ) == [("a", "00", 4), ("b", "1", 2), ("c", "x", 3)]
 
-    # delete path shares the pinned read-back
-    delete_keys(spark, table,
-                spark.createDataFrame([("b",)], "parent_id string"),
-                partition_cols=["part"])
-    got = _read_table(spark, table, _read_partition_types(spark, table))
+    # the rewriting delete shares the pinned read-back
+    snapshot_delete_keys(
+        spark, table,
+        spark.createDataFrame([("b",)], "parent_id string"),
+        partition_cols=["part"],
+    )
+    got = read_snapshot_table(spark, table)
     assert dict(got.dtypes)["part"] == "string"
     assert sorted(r["parent_id"] for r in got.collect()) == ["a", "c"]
 
 
 def test_snapshot_partition_type_pinned(spark, tmp_path):
-    """The snapshot table shares the upsert sink's hazard class
+    """The snapshot table's side of the partition-type hazard class
     (r8 verdict S10): its manifest now STORES the logical schema and
     ``read_snapshot_table`` pins partition-column types to it — a
     string partition column whose first values look numeric must not
@@ -354,17 +359,18 @@ def test_snapshot_schema_carried_by_metadata_ops(spark, tmp_path):
 def test_partition_type_pinned_integer_buckets(spark, tmp_path):
     """The inverse direction: a genuinely-INTEGER partition column
     (the gate queries' bucket pattern) keeps its integer dtype through
-    the sidecar-pinned read-back — the fix must not string-ify it."""
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _read_partition_types, _read_table, merge_upsert,
+    the schema-pinned read-back — the fix must not string-ify it."""
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        read_snapshot_table, snapshot_merge_upsert,
     )
 
     table = str(tmp_path / "t")
     schema = "parent_id string, bucket int, v int"
     for batch in ([("a", 0, 1), ("b", 1, 2)], [("a", 2, 3)]):
-        merge_upsert(spark, table, spark.createDataFrame(batch, schema),
-                     partition_cols=["bucket"])
-    got = _read_table(spark, table, _read_partition_types(spark, table))
+        snapshot_merge_upsert(spark, table,
+                              spark.createDataFrame(batch, schema),
+                              partition_cols=["bucket"])
+    got = read_snapshot_table(spark, table)
     assert dict(got.dtypes)["bucket"] == "int"
     assert sorted((r["parent_id"], r["bucket"], r["v"]) for r in got.collect()
                   ) == [("a", 2, 3), ("b", 1, 2)]
@@ -408,24 +414,24 @@ def test_partition_inference_toggle_thread_safe(spark, tmp_path):
     unrelated partitioned tests in the r9 full-suite run."""
     import threading
 
+    from gpt_rag_ingestion_spark.operators import snapshot_table as S
     from gpt_rag_ingestion_spark.operators import upsert as U
 
     key = U._INFER_KEY
     baseline = spark.conf.get(key, "true")
     table = str(tmp_path / "t")
-    U.merge_upsert(
+    S.snapshot_merge_upsert(
         spark, table,
         spark.createDataFrame([("a", "0", 1), ("b", "1", 2)],
                               "parent_id string, part string, v int"),
         partition_cols=["part"],
     )
-    pin = U._read_partition_types(spark, table)
     errs: list[BaseException] = []
 
     def reader():
         try:
             for _ in range(15):
-                assert dict(U._read_table(spark, table, pin).dtypes)[
+                assert dict(S.read_snapshot_table(spark, table).dtypes)[
                     "part"] == "string"
         except BaseException as e:
             errs.append(e)

@@ -2,8 +2,8 @@
 test that ingests the reference's OWN sample files — real markdown
 manual, real WEBVTT transcripts, the real xlsx workbook, the real
 NL2SQL fabric JSONs — through the full pipeline (binaryFile scan →
-factory dispatch → per-family chunkers → keys → embeddings → merge
-sink) and compares every chunk against a committed golden
+factory dispatch → per-family chunkers → keys → embeddings →
+snapshot-table merge) and compares every chunk against a committed golden
 (tests/golden/sample_corpus_golden.json, regenerated by
 scripts/gen_sample_golden.py after intended behavior changes)."""
 
@@ -30,9 +30,12 @@ def test_sample_corpus_matches_golden(spark, tmp_path):
         ingest_sample_corpus,
     )
 
-    table = ingest_sample_corpus(
-        spark, SAMPLE_DIR, str(tmp_path / "chunks")
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        read_snapshot_table,
     )
+
+    path = str(tmp_path / "chunks")
+    table = ingest_sample_corpus(spark, SAMPLE_DIR, path)
     got = canonical_chunk_rows(table)
     with open(GOLDEN) as f:
         want = json.load(f)
@@ -45,6 +48,9 @@ def test_sample_corpus_matches_golden(spark, tmp_path):
     # full-fidelity comparison, chunk by chunk (ids, titles, pages,
     # offsets, content hashes, embedding hashes)
     assert got == want
+    # the job commits a snapshot table and returns its committed rows
+    assert os.path.exists(os.path.join(path, "_current"))
+    assert canonical_chunk_rows(read_snapshot_table(spark, path)) == got
 
 
 @pytest.mark.skipif(

@@ -801,136 +801,155 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
 
 
 def test_compact_table_reduces_files_keeps_data(spark, tmp_path):
-    from gpt_rag_ingestion_spark.operators.upsert import compact_table
+    """The snapshot table's OPTIMIZE with a target file size folds a
+    fragmented generation into right-sized files, rows unchanged."""
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        read_snapshot_table,
+        snapshot_merge_upsert,
+        snapshot_optimize,
+    )
+    from gpt_rag_ingestion_spark.operators.upsert import _list_parquet_files
 
     table = str(tmp_path / "chunks")
-    spark.range(0, 10_000).select(
-        F.col("id"), (F.col("id") % 13).alias("v")
-    ).repartition(40).write.parquet(table)
-
-    before_sum = spark.read.parquet(table).agg(F.sum("v")).collect()[0][0]
-    files_before, files_after = compact_table(
-        spark, table, target_file_bytes=10 * 1024 * 1024
+    snapshot_merge_upsert(
+        spark, table,
+        spark.range(0, 10_000).select(
+            F.col("id"), (F.col("id") % 13).alias("v")
+        ).repartition(40),
+        key="id",
     )
+
+    def live_files():
+        return len(_list_parquet_files(spark, table))
+
+    before_sum = read_snapshot_table(spark, table).agg(F.sum("v")).collect()[0][0]
+    files_before = live_files()
+    snapshot_optimize(spark, table, target_file_mb=10)
+    files_after = live_files() - files_before
     assert files_before == 40
     assert files_after <= 2
-    after = spark.read.parquet(table)
+    after = read_snapshot_table(spark, table)
     assert after.count() == 10_000
     assert after.agg(F.sum("v")).collect()[0][0] == before_sum
 
 
 def test_maybe_compact_table_trigger_preserves_partitions(spark, tmp_path):
-    """The table OPTIMIZE trigger (round-4): fires from a leaf-file
+    """The table OPTIMIZE trigger: fires from the referenced-generation
     count only when fragmentation crosses the threshold, and a
-    hive-partitioned table keeps its directory layout (so the
+    partitioned table keeps its partition layout (so the
     partition-pruned merge path still works afterwards)."""
-    import os
-
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        maybe_compact_table,
-        merge_upsert,
-        table_parquet_files,
-    )
+    from gpt_rag_ingestion_spark.operators import snapshot_table as S
 
     table = str(tmp_path / "corpus")
-    for i in range(4):  # 4 merges -> many small files across 2 buckets
+    for i in range(4):  # 4 merges, each into its own bucket -> 4 generations
         inc = spark.range(i * 100, (i + 1) * 100).select(
             F.col("id").alias("parent_id"),
-            (F.col("id") % 2).alias("bucket"),
+            F.lit(i).cast("long").alias("bucket"),
             (F.col("id") * 3).alias("v"),
         ).repartition(4)
-        merge_upsert(spark, table, inc, key="parent_id",
-                     partition_cols=["bucket"])
-    frag = table_parquet_files(table)
-    assert frag > 8
+        S.snapshot_merge_upsert(spark, table, inc, key="parent_id",
+                                partition_cols=["bucket"])
     before = sorted(
         (r["parent_id"], r["bucket"], r["v"])
-        for r in spark.read.parquet(table).collect()
+        for r in S.read_snapshot_table(spark, table).collect()
     )
-    # under threshold: listing only, no rewrite
-    out = maybe_compact_table(spark, table, max_files=1000,
-                              partition_cols=["bucket"])
-    assert out == {"compacted": False, "files": frag}
-    # over threshold: rewrite, hive dirs intact, rows identical
-    out = maybe_compact_table(spark, table, max_files=8,
-                              partition_cols=["bucket"])
-    assert out["compacted"] is True and out["files_after"] < frag
-    assert sorted(
-        d for d in os.listdir(table) if d.startswith("bucket=")
-    ) == ["bucket=0", "bucket=1"]
+    # under threshold: one manifest read, no rewrite
+    out = S.snapshot_maybe_optimize(spark, table, max_generations=1000,
+                                    partition_cols=["bucket"])
+    assert out["optimized"] is False and out["generations"] == 4
+    # over threshold: rewrite, partitions intact, rows identical
+    out = S.snapshot_maybe_optimize(spark, table, max_generations=2,
+                                    partition_cols=["bucket"])
+    assert out["optimized"] is True and out["generations_before"] == 4
+    refs = S._read_manifest(
+        spark, table, S._current_gen(spark, table)
+    )["partitions"]
+    assert sorted(refs) == [f"bucket={i}" for i in range(4)]
+    assert len(set(refs.values())) == 1
     after = sorted(
         (r["parent_id"], r["bucket"], r["v"])
-        for r in spark.read.parquet(table).collect()
+        for r in S.read_snapshot_table(spark, table).collect()
     )
     assert after == before
     # and the partition-pruned merge still works on the compacted table
-    merge_upsert(
+    S.snapshot_merge_upsert(
         spark, table,
         spark.createDataFrame([(0, 0, 999)], "parent_id long, bucket long, v long"),
         key="parent_id", partition_cols=["bucket"],
     )
-    assert spark.read.parquet(table).filter("parent_id = 0").first()["v"] == 999
+    assert S.read_snapshot_table(spark, table).filter(
+        "parent_id = 0"
+    ).first()["v"] == 999
 
 
 def test_compact_table_salts_hot_partition(spark, tmp_path):
     """Review finding (r4): the partitioned rewrite must not collapse a
-    hot partition into ONE straggler-written giant file — per-partition
-    salts sized from estimated bytes split it into ~bytes/target
-    right-sized files, while a small partition stays at one file."""
+    hot partition into ONE straggler-written giant file — the target
+    file size splits it into ~bytes/target right-sized files, while a
+    small partition stays at one file."""
     import glob
+    import os
 
-    from gpt_rag_ingestion_spark.operators.upsert import compact_table
+    from gpt_rag_ingestion_spark.operators import snapshot_table as S
 
     table = str(tmp_path / "t")
-    # bucket 0: ~100k rows of text; bucket 1: 100 rows
+    # bucket 0: ~100k rows of incompressible text; bucket 1: 100 rows
     df = spark.range(100_100).selectExpr(
         "id AS parent_id",
         "CASE WHEN id < 100000 THEN 0 ELSE 1 END AS bucket",
-        "repeat('x', 200) AS payload",
+        "sha2(CAST(id AS STRING), 256) AS payload",
     )
-    df.repartition(20).write.partitionBy("bucket").parquet(table)
-    rows_before = spark.read.parquet(table).count()
+    S.snapshot_merge_upsert(spark, table, df.repartition(20),
+                            partition_cols=["bucket"])
+    rows_before = S.read_snapshot_table(spark, table).count()
+    first = S._read_manifest(spark, table, 1)["partitions"]["bucket=0"]
 
     # target sized so bucket 0 wants ~4 files
     hot_bytes = sum(
-        __import__("os").path.getsize(p)
-        for p in glob.glob(f"{table}/bucket=0/*.parquet")
+        os.path.getsize(p)
+        for p in glob.glob(f"{table}/{first}/bucket=0/*.parquet")
     )
-    compact_table(
-        spark, table, target_file_bytes=max(hot_bytes // 4, 1),
-        partition_cols=["bucket"],
+    S.snapshot_optimize(
+        spark, table, partition_cols=["bucket"],
+        target_file_mb=max(hot_bytes // (4 * 1024 * 1024), 1),
     )
-    hot_files = glob.glob(f"{table}/bucket=0/*.parquet")
-    cold_files = glob.glob(f"{table}/bucket=1/*.parquet")
+    gen = S._read_manifest(
+        spark, table, S._current_gen(spark, table)
+    )["partitions"]["bucket=0"]
+    hot_files = glob.glob(f"{table}/{gen}/bucket=0/*.parquet")
+    cold_files = glob.glob(f"{table}/{gen}/bucket=1/*.parquet")
     assert len(hot_files) >= 2, "hot partition must split across files"
     assert len(cold_files) == 1, "small partition must coalesce to one"
-    assert spark.read.parquet(table).count() == rows_before
+    assert S.read_snapshot_table(spark, table).count() == rows_before
 
 
 def test_merge_upsert_schema_evolution(spark, tmp_path):
-    from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        read_snapshot_table,
+        snapshot_merge_upsert,
+    )
 
     table = str(tmp_path / "t")
     base = spark.createDataFrame(
         [("p1", "old1"), ("p2", "old2")], ["parent_id", "content"]
     )
-    merge_upsert(spark, table, base)
+    snapshot_merge_upsert(spark, table, base)
 
     # increment carries a NEW column (e.g. a new enrichment field)
     inc = spark.createDataFrame(
         [("p2", "new2", "en"), ("p3", "new3", "fr")],
         ["parent_id", "content", "lang"],
     )
-    merge_upsert(spark, table, inc)
-    rows = {r["parent_id"]: r for r in spark.read.parquet(table).collect()}
+    snapshot_merge_upsert(spark, table, inc)
+    rows = {r["parent_id"]: r for r in read_snapshot_table(spark, table).collect()}
     assert set(rows) == {"p1", "p2", "p3"}
     assert rows["p1"]["content"] == "old1" and rows["p1"]["lang"] is None
     assert rows["p2"]["lang"] == "en"
 
     # and an increment MISSING a column still merges (nulls fill in)
     inc2 = spark.createDataFrame([("p4",)], ["parent_id"])
-    merge_upsert(spark, table, inc2)
-    rows = {r["parent_id"]: r for r in spark.read.parquet(table).collect()}
+    snapshot_merge_upsert(spark, table, inc2)
+    rows = {r["parent_id"]: r for r in read_snapshot_table(spark, table).collect()}
     assert rows["p4"]["content"] is None and rows["p4"]["lang"] is None
     assert rows["p2"]["content"] == "new2"
 
@@ -958,35 +977,34 @@ def test_distributed_row_number_bucket_path(spark):
 
 
 def test_delete_keys_partition_pruned(spark, tmp_path):
-    import glob
-    import os
-
-    from gpt_rag_ingestion_spark.operators.upsert import delete_keys
+    from gpt_rag_ingestion_spark.operators import snapshot_table as S
 
     table = str(tmp_path / "t")
     df = spark.createDataFrame(
         [(f"p{i}", f"s{i % 3}", i) for i in range(30)],
         ["parent_id", "source", "v"],
     )
-    df.write.partitionBy("source").parquet(table)
+    S.snapshot_merge_upsert(spark, table, df, partition_cols=["source"])
 
-    # snapshot untouched partitions' file mtimes
-    def files_of(part):
-        return sorted(glob.glob(f"{table}/source={part}/*.parquet"))
+    def refs():
+        return S._read_manifest(
+            spark, table, S._current_gen(spark, table)
+        )["partitions"]
 
-    before = {p: [(f, os.path.getmtime(f)) for f in files_of(p)] for p in ("s0", "s1", "s2")}
+    before = refs()
 
     # delete keys living only in partition s1 (i % 3 == 1)
     doomed = spark.createDataFrame([("p1",), ("p4",)], ["parent_id"])
-    delete_keys(spark, table, doomed, partition_cols=["source"])
+    S.snapshot_delete_keys(spark, table, doomed, partition_cols=["source"])
 
-    back = spark.read.parquet(table)
+    back = S.read_snapshot_table(spark, table)
     assert back.count() == 28
     assert back.filter(F.col("parent_id").isin("p1", "p4")).count() == 0
-    # untouched partitions keep byte-identical files (same paths+mtimes)
-    for p in ("s0", "s2"):
-        assert [(f, os.path.getmtime(f)) for f in files_of(p)] == before[p]
-    assert [(f, os.path.getmtime(f)) for f in files_of("s1")] != before["s1"]
+    # untouched partitions keep their generation's files; only s1 moved
+    after = refs()
+    for p in ("source=s0", "source=s2"):
+        assert after[p] == before[p]
+    assert after["source=s1"] != before["source=s1"]
 
 
 def test_histogram_quantiles_error_bound_and_merge(spark):
@@ -1108,46 +1126,52 @@ def test_manifest_proves_merge_idempotence(spark, tmp_path):
         table_digest,
         write_manifest,
     )
-    from gpt_rag_ingestion_spark.operators.upsert import merge_upsert
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        read_snapshot_table,
+        snapshot_merge_upsert,
+    )
 
     table = str(tmp_path / "t")
+    # the manifest digests a plain parquet export of the merged table
+    export = str(tmp_path / "export")
+
+    def manifest(run_id):
+        read_snapshot_table(spark, table).write.mode("overwrite").parquet(
+            export
+        )
+        return write_manifest(spark, export, run_id=run_id)
+
     base = spark.createDataFrame(
         [("p1", "a"), ("p2", "b")], ["parent_id", "content"]
     )
     inc = spark.createDataFrame([("p2", "b2")], ["parent_id", "content"])
 
-    merge_upsert(spark, table, base)
-    merge_upsert(spark, table, inc)
-    e1 = write_manifest(spark, table, run_id="r1")
+    snapshot_merge_upsert(spark, table, base)
+    snapshot_merge_upsert(spark, table, inc)
+    e1 = manifest("r1")
 
     # re-merging the SAME increment must not change the content digest
     # (the delete-then-upload idempotence contract, now provable)
-    merge_upsert(spark, table, inc)
-    e2 = write_manifest(spark, table, run_id="r2")
+    snapshot_merge_upsert(spark, table, inc)
+    e2 = manifest("r2")
     assert e2["digest"] == e1["digest"] and e2["n_rows"] == e1["n_rows"]
 
     # a different increment must change it
-    merge_upsert(
+    snapshot_merge_upsert(
         spark,
         table,
         spark.createDataFrame([("p3", "c")], ["parent_id", "content"]),
     )
-    e3 = write_manifest(spark, table, run_id="r3")
+    e3 = manifest("r3")
     assert e3["digest"] != e2["digest"] and e3["n_rows"] == 3
 
-    assert [m["run_id"] for m in read_manifest(table)] == ["r1", "r2", "r3"]
+    assert [m["run_id"] for m in read_manifest(export)] == ["r1", "r2", "r3"]
 
     # digest is order/partitioning independent
-    df = spark.read.parquet(table)
+    df = read_snapshot_table(spark, table)
     assert (
         table_digest(df.repartition(7))["digest"]
         == table_digest(df.coalesce(1))["digest"]
-    )
-
-    # and column-order canonical: explicit cols in any order agree
-    assert (
-        table_digest(df, ["content", "parent_id"])
-        == table_digest(df, ["parent_id", "content"])
     )
 
 

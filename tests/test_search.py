@@ -13,6 +13,7 @@ from gpt_rag_ingestion_spark.operators.search import (
     build_text_index,
     rrf_fuse,
 )
+from gpt_rag_ingestion_spark.operators.snapshot_table import read_snapshot_table
 
 
 def _queries(spark, rows):
@@ -244,7 +245,7 @@ def test_web_corpus_job_maintains_text_index(spark, tmp_path):
             min_chars=10, batch_label=f"b{b}",
             text_index_path=f"{root}/tindex",
         )
-    corpus = spark.read.parquet(f"{root}/corpus")
+    corpus = read_snapshot_table(spark, f"{root}/corpus")
     n = corpus.count()
     assert n == 12
     q = _queries(spark, [("q", ["cat", "dog"])])
@@ -458,7 +459,7 @@ def test_query_path_never_prunes_inflight_writer_dirs(spark, tmp_path):
     leave the writer's directories untouched, so the writer's later
     meta commit references intact data."""
     from gpt_rag_ingestion_spark.operators import search as X
-    from gpt_rag_ingestion_spark.operators.similarity import jvm_fs_exists
+    from gpt_rag_ingestion_spark.operators.upsert import _fs_exists
 
     path = str(tmp_path / "tindex")
     X.text_index_build(_corpus(spark, BASE_ROWS), path)
@@ -481,7 +482,7 @@ def test_query_path_never_prunes_inflight_writer_dirs(spark, tmp_path):
         ).collect()
     )
     assert got == want  # committed snapshot only (gen filter)
-    assert jvm_fs_exists(spark, pdir) and jvm_fs_exists(spark, ddir)
+    assert _fs_exists(spark, pdir) and _fs_exists(spark, ddir)
 
     # the writer retries its append (writer-side recovery prunes the
     # staged dirs and replays) — converges to the post-append state
@@ -730,13 +731,16 @@ def test_purge_job_tombstones_text_index(spark, tmp_path):
     queries stop matching purged docs — and a replay tombstones
     nothing new."""
     from gpt_rag_ingestion_spark.operators import search as X
+    from gpt_rag_ingestion_spark.operators.snapshot_table import (
+        snapshot_merge_upsert,
+    )
     from gpt_rag_ingestion_spark.plans.purge_job import run_purge_job
 
     chunks = _corpus(spark, BASE_ROWS).withColumnRenamed(
         "doc_id", "parent_id"
     )
     table = str(tmp_path / "chunks")
-    chunks.write.mode("overwrite").parquet(table)
+    snapshot_merge_upsert(spark, table, chunks, key="parent_id")
     idx = str(tmp_path / "tindex")
     X.text_index_build(
         _corpus(spark, BASE_ROWS), idx, text_col="text", id_col="doc_id"
@@ -800,7 +804,7 @@ def test_ingest_job_maintains_chunk_text_index(spark, tmp_path):
     def expected():
         return {
             r["chunk_doc"]: None
-            for r in spark.read.parquet(table)
+            for r in read_snapshot_table(spark, table)
             .select(F.xxhash64(F.col("id")).alias("chunk_doc"))
             .collect()
         }
@@ -837,7 +841,7 @@ def test_ingest_job_maintains_chunk_text_index(spark, tmp_path):
     )
 
     fresh = build_text_index(
-        spark.read.parquet(table).select(
+        read_snapshot_table(spark, table).select(
             F.xxhash64(F.col("id")).alias("chunk_doc"),
             F.col("content").alias("text"),
         ),
@@ -850,7 +854,7 @@ def test_ingest_job_maintains_chunk_text_index(spark, tmp_path):
     q1_docs = {r[2] for r in got if r[0] == "q1"}
     a_chunks = {
         r["chunk_doc"]
-        for r in spark.read.parquet(table)
+        for r in read_snapshot_table(spark, table)
         .filter(F.col("parent_id") == "a")
         .select(F.xxhash64(F.col("id")).alias("chunk_doc"))
         .collect()
@@ -975,7 +979,7 @@ def test_purge_job_tombstones_chunk_surrogate_index(spark, tmp_path):
         spark, listing, table, "r1", max_tokens=16, overlap=2,
         min_tokens=2, text_index_path=idx,
     )
-    n_a = spark.read.parquet(table).filter("parent_id = 'a'").count()
+    n_a = read_snapshot_table(spark, table).filter("parent_id = 'a'").count()
     assert n_a > 1  # multi-chunk parent: surrogate mapping matters
 
     # parent 'a' vanishes from the live source
@@ -996,7 +1000,7 @@ def test_purge_job_tombstones_chunk_surrogate_index(spark, tmp_path):
         tuple(r) for r in X.text_index_query(spark, idx, q, k=10).collect()
     )
     fresh = X.build_text_index(
-        spark.read.parquet(table).select(
+        read_snapshot_table(spark, table).select(
             F.xxhash64(F.col("id")).alias("chunk_doc"),
             F.col("content").alias("text"),
         ),

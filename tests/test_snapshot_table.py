@@ -1,8 +1,8 @@
-"""Manifest-pointer snapshot sink (SCALE.md §11's 'adopt a
-manifest-pointer commit' alternative, r4 judge brief #7): MERGE/DELETE
-semantics equal to the swap sink, atomic single-rename commits, true
-reader snapshot isolation, roll-forward-only crash recovery, vacuum
-that never touches referenced data."""
+"""Manifest-pointer snapshot table (SCALE.md §11, r4 judge brief #7):
+MERGE/DELETE semantics equal to the ``merged_view`` relation, atomic
+single-rename commits, true reader snapshot isolation,
+roll-forward-only crash recovery, vacuum that never touches
+referenced data."""
 
 from __future__ import annotations
 
@@ -29,22 +29,28 @@ def _rows(df):
 
 @pytest.mark.parametrize("partitioned", [False, True])
 def test_snapshot_merge_equals_swap_sink(spark, tmp_path, partitioned):
+    """Merges and deletes equal the relation the directory-swap sink
+    used to commit: ``merged_view`` of the collected rows for a merge,
+    the existing rows minus the doomed keys for a delete."""
     pc = ["bucket"] if partitioned else None
     snap = str(tmp_path / "snap")
-    swap = str(tmp_path / "swap")
+    want = _rows(_inc(spark, 0, 0))
     for lo, hi, mul in ((0, 100, 7), (50, 150, 9), (20, 60, 11)):
         inc = _inc(spark, lo, hi, mul)
         S.snapshot_merge_upsert(spark, snap, inc, partition_cols=pc)
-        U.merge_upsert(spark, swap, inc, partition_cols=pc)
-    got = S.read_snapshot_table(spark, snap)
-    assert _rows(got) == _rows(spark.read.parquet(swap))
+        want = _rows(
+            U.merged_view(
+                spark.createDataFrame(want, "parent_id long, bucket long, v long"),
+                inc,
+            )
+        )
+    assert _rows(S.read_snapshot_table(spark, snap)) == want
 
     doomed = spark.range(0, 40).select(F.col("id").alias("parent_id"))
     S.snapshot_delete_keys(spark, snap, doomed, partition_cols=pc)
-    U.delete_keys(spark, swap, doomed, partition_cols=pc)
-    assert _rows(S.read_snapshot_table(spark, snap)) == _rows(
-        spark.read.parquet(swap)
-    )
+    assert _rows(S.read_snapshot_table(spark, snap)) == [
+        r for r in want if r[0] >= 40
+    ]
 
 
 def test_snapshot_isolation_across_commits(spark, tmp_path):
@@ -166,8 +172,8 @@ def test_empty_increment_and_missing_table(spark, tmp_path):
 
 
 def test_streaming_web_corpus_snapshot_sink(spark, tmp_path):
-    """The web-corpus streaming loop with corpus_sink='snapshot':
-    admissions land through manifest-pointer commits, replays stay
+    """The web-corpus streaming loop on the snapshot table: admissions
+    land through manifest-pointer commits, replays stay
     idempotent, and the generation-count trigger folds the table."""
     import json
 
@@ -193,7 +199,7 @@ def test_streaming_web_corpus_snapshot_sink(spark, tmp_path):
         run_streaming_web_corpus(
             spark, str(landing), f"{root}/corpus", f"{root}/shards",
             f"{root}/audit", f"{root}/ckpt", min_chars=10,
-            corpus_max_files=2, corpus_sink="snapshot",
+            corpus_max_files=2,
         )
     tbl = S.read_snapshot_table(spark, f"{root}/corpus")
     assert tbl.count() == 12
@@ -208,7 +214,7 @@ def test_streaming_web_corpus_snapshot_sink(spark, tmp_path):
 def test_time_travel_and_schema_evolution(spark, tmp_path):
     """Lakehouse parity: ``at_gen`` reads any un-vacuumed snapshot;
     generations with different schemas union by name (missing columns
-    NULL) — the swap-sink merge's evolution contract."""
+    NULL) — ``merged_view``'s evolution contract."""
     snap = str(tmp_path / "snap")
     g1 = S.snapshot_merge_upsert(
         spark, snap, _inc(spark, 0, 50), partition_cols=["bucket"]

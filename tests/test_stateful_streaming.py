@@ -7,6 +7,7 @@ import pytest
 
 import json
 
+from gpt_rag_ingestion_spark.operators.snapshot_table import read_snapshot_table
 from gpt_rag_ingestion_spark.streaming.stateful import streaming_first_seen
 
 
@@ -318,7 +319,7 @@ def test_streaming_ingest_maintains_rollup(spark, tmp_path):
         )
 
     def recompute():
-        t = spark.read.parquet(table)
+        t = read_snapshot_table(spark, table)
         return sorted(
             map(
                 tuple,
@@ -459,7 +460,7 @@ def test_streaming_web_corpus(spark, tmp_path):
     )
     kw = dict(min_chars=10)
     run_streaming_web_corpus(spark, str(landing), corpus, shards, audit, ckpt, **kw)
-    assert spark.read.parquet(corpus).count() == 2
+    assert read_snapshot_table(spark, corpus).count() == 2
 
     # batch 2: one exact dup of the base, one fresh, one low-quality
     (landing / "b2.json").write_text(
@@ -473,7 +474,7 @@ def test_streaming_web_corpus(spark, tmp_path):
     )
     run_streaming_web_corpus(spark, str(landing), corpus, shards, audit, ckpt, **kw)
 
-    tbl = spark.read.parquet(corpus)
+    tbl = read_snapshot_table(spark, corpus)
     assert {r["doc_id"] for r in tbl.collect()} == {1, 2, 4}
     audits = spark.read.parquet(audit)
     disp = {r["doc_id"]: r["disposition"] for r in audits.collect()}
@@ -506,14 +507,14 @@ def test_web_corpus_replay_is_idempotent(spark, tmp_path):
     )
     run_web_corpus_job(spark, batch, corpus, str(tmp_path / "s0"), min_chars=10)
     before = sorted(
-        (r["doc_id"], r["text"]) for r in spark.read.parquet(corpus).collect()
+        (r["doc_id"], r["text"]) for r in read_snapshot_table(spark, corpus).collect()
     )
     audit2 = run_web_corpus_job(
         spark, batch, corpus, str(tmp_path / "s1"), min_chars=10
     )
     assert {r["disposition"] for r in audit2.collect()} == {"exact_dup_base"}
     after = sorted(
-        (r["doc_id"], r["text"]) for r in spark.read.parquet(corpus).collect()
+        (r["doc_id"], r["text"]) for r in read_snapshot_table(spark, corpus).collect()
     )
     assert after == before
 
@@ -577,12 +578,11 @@ def test_streaming_domain_cap_cumulative(spark, tmp_path):
 @pytest.mark.slow
 def test_streaming_corpus_table_optimize_trigger(spark, tmp_path):
     """``corpus_max_files`` arms the corpus-table OPTIMIZE inside the
-    stream loop: per-batch merges fragment the table, the trigger
-    folds it once the leaf-file count crosses the threshold, and rows
-    are untouched."""
+    stream loop: per-batch merges add generations, the trigger folds
+    them once the referenced-generation count crosses the threshold,
+    and rows are untouched."""
     import json
-
-    from gpt_rag_ingestion_spark.operators.upsert import table_parquet_files
+    import os
     from gpt_rag_ingestion_spark.streaming.micro_batch import (
         run_streaming_web_corpus,
     )
@@ -604,8 +604,9 @@ def test_streaming_corpus_table_optimize_trigger(spark, tmp_path):
             f"{root}/audit", f"{root}/ckpt", min_chars=10,
             corpus_max_files=2,
         )
-    assert table_parquet_files(f"{root}/corpus") <= 2
-    tbl = spark.read.parquet(f"{root}/corpus")
+    gens = [d for d in os.listdir(f"{root}/corpus") if d.startswith("gen-")]
+    assert len(gens) <= 2
+    tbl = read_snapshot_table(spark, f"{root}/corpus")
     assert tbl.count() == 12
     assert tbl.select("doc_id").distinct().count() == 12
 
@@ -752,13 +753,14 @@ def test_streaming_ingest_partitioned(spark, tmp_path):
         )
         outs[name] = sorted(
             (r["parent_id"], r["chunk_id"], r["content"], r["source"])
-            for r in spark.read.parquet(table).collect()
+            for r in read_snapshot_table(spark, table).collect()
         )
     assert outs["parted"] == outs["plain"] and len(outs["plain"]) > 0
-    import os
+    from gpt_rag_ingestion_spark.operators import snapshot_table as S
 
-    dirs = set(os.listdir(str(tmp_path / "parted" / "chunks")))
-    assert {"source=s1", "source=s2"} <= dirs
+    parted = str(tmp_path / "parted" / "chunks")
+    refs = S._read_manifest(spark, parted, S._current_gen(spark, parted))
+    assert {"source=s1", "source=s2"} <= set(refs["partitions"])
 
 
 def test_streaming_sessions_gap_and_timeout(spark, tmp_path):
@@ -1013,16 +1015,13 @@ def test_stream_stream_left_outer_join(spark, tmp_path):
 
 
 def test_streaming_cdf_rollup_mode(spark, tmp_path):
-    """rollup_mode='cdf' on the snapshot-sink streaming ingest: the
+    """rollup_mode='cdf' on the streaming ingest: the
     per-parent rollup is maintained from the table's own change feed
     each tick and equals a full recompute after every drain —
     including a re-ingest that REPLACES a parent's chunks (the case
     staged deltas and CDF must agree on)."""
     import json
 
-    from gpt_rag_ingestion_spark.operators.snapshot_table import (
-        read_snapshot_table,
-    )
     from gpt_rag_ingestion_spark.streaming.micro_batch import (
         run_incremental_ingest,
     )
@@ -1042,8 +1041,7 @@ def test_streaming_cdf_rollup_mode(spark, tmp_path):
     def drain():
         run_incremental_ingest(
             spark, str(land), f"{root}/chunks", f"{root}/ck",
-            rollup_path=f"{root}/rollup", sink="snapshot",
-            rollup_mode="cdf",
+            rollup_path=f"{root}/rollup", rollup_mode="cdf",
         )
 
     def recompute():
@@ -1076,16 +1074,6 @@ def test_streaming_cdf_rollup_mode(spark, tmp_path):
                    (3, "epsilon zeta " * 25, "wiki")])
     drain()
     assert rollup() == recompute()
-
-    # guard: cdf mode requires the snapshot sink
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="needs sink='snapshot'"):
-        run_incremental_ingest(
-            spark, str(land), f"{root}/chunks2", f"{root}/ck2",
-            rollup_path=f"{root}/rollup2", sink="swap",
-            rollup_mode="cdf",
-        )
 
 
 def test_txn_ledger_makes_merge_idempotent(spark, tmp_path):
