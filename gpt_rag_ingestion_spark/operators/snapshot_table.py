@@ -2109,9 +2109,12 @@ def snapshot_optimize(
     avg row bytes`` (from the CURRENT generation's parquet footprint
     — metadata listing + one count, no extra data pass), so a table
     of many merge slivers folds into right-sized files instead of one
-    giant file per partition.  Right-sized means splittable scans and
-    bounded task memory at 100 TB — the same reason every lakehouse
-    OPTIMIZE has this knob."""
+    giant file per partition.  A partition holding more than one
+    target file is salted over that many write tasks (one aggregate of
+    rows per partition decides the salts), so a hot partition is not
+    written by one straggler task.  Right-sized means splittable scans
+    and bounded task memory at 100 TB — the same reason every
+    lakehouse OPTIMIZE has this knob."""
     _commit_recover(spark, table_path)
     _claim_recover(spark, table_path)
     cur = _current_gen(spark, table_path)
@@ -2165,23 +2168,59 @@ def snapshot_optimize(
                 total_bytes += sum(
                     b for _p, b in _list_parquet_files(spark, root)
                 )
-        total_rows = existing.count()
+        salted = bool(partition_cols) and not zorder_cols
+        if salted:
+            # rows per table partition: one aggregate bounded by the
+            # partition count, and the total row count with it
+            pcounts = existing.groupBy(*partition_cols).agg(
+                F.count(F.lit(1)).alias("__n")
+            ).collect()
+            total_rows = sum(r["__n"] for r in pcounts)
+        else:
+            total_rows = existing.count()
         if total_rows > 0 and total_bytes > 0:
             rows_per_file = max(
                 1,
                 int(target_file_mb) * 1024 * 1024 * total_rows
                 // total_bytes,
             )
-            # bin-pack, not just cap: coalesce each table partition to
-            # one task (the file-count FLOOR is task count), then let
-            # maxRecordsPerFile split back up to the target; an
+            # bin-pack, not just cap: the file-count FLOOR is the task
+            # count, and maxRecordsPerFile caps each file at the target.
+            # A table partition is SALTED over ceil(rows/rows_per_file)
+            # write tasks, so a hot partition writes its right-sized
+            # files in parallel instead of through one straggler task,
+            # and a small partition stays one task and one file.  An
             # unpartitioned table gets one task per target-sized file.
             # The z-order path keeps its range partitioning — its task
             # layout IS the clustering.
-            if partition_cols and not zorder_cols:
-                existing = existing.repartition(
-                    *[F.col(c) for c in partition_cols]
-                )
+            if salted:
+                salts = [-(-r["__n"] // rows_per_file) for r in pcounts]
+                salt_n = None
+                for r, n in zip(pcounts, salts):
+                    if n > 1:
+                        hit = functools.reduce(
+                            lambda a, b: a & b,
+                            [F.col(c).eqNullSafe(r[c]) for c in partition_cols],
+                        )
+                        salt_n = (
+                            F.when(hit, n) if salt_n is None
+                            else salt_n.when(hit, n)
+                        )
+                pcols = [F.col(c) for c in partition_cols]
+                if salt_n is None:
+                    existing = existing.repartition(*pcols)
+                else:
+                    existing = (
+                        existing.withColumn(
+                            "__salt",
+                            F.pmod(
+                                F.monotonically_increasing_id(),
+                                salt_n.otherwise(1),
+                            ),
+                        )
+                        .repartition(sum(salts), *pcols, "__salt")
+                        .drop("__salt")
+                    )
             elif not zorder_cols:
                 target_bytes = int(target_file_mb) * 1024 * 1024
                 existing = existing.repartition(

@@ -41,6 +41,7 @@ from gpt_rag_ingestion_spark.operators.snapshot_table import (
 )
 from gpt_rag_ingestion_spark.operators.upsert import (
     _fs_exists,
+    _hfs,
     _recover,
     _swap_in,
 )
@@ -414,10 +415,29 @@ def run_ingest_job(
 
 def _table_exists(spark, table_path: str) -> bool:
     """Does the snapshot table exist, by its commit marker: the
-    pointer ``_current``, or ``_current__tmp`` mid-commit."""
-    return _fs_exists(spark, f"{table_path}/_current") or _fs_exists(
+    pointer ``_current``, or ``_current__tmp`` mid-commit.
+
+    A directory holding parquet files or ``p=v`` partition directories
+    but no marker is a table of the former directory-swap format.
+    Treating it as absent would re-ingest every document (or admit
+    every candidate as new) and commit beside the old files, so it
+    raises ``ValueError`` naming the adoption path instead."""
+    if _fs_exists(spark, f"{table_path}/_current") or _fs_exists(
         spark, f"{table_path}/_current__tmp"
-    )
+    ):
+        return True
+    fs, p = _hfs(spark, table_path)
+    if fs.exists(p) and any(
+        n.endswith(".parquet") or "=" in n
+        for n in (st.getPath().getName() for st in fs.listStatus(p))
+    ):
+        raise ValueError(
+            f"{table_path} holds a parquet table but no snapshot pointer "
+            "(the former directory-swap format); adopt it with "
+            "snapshot_table.snapshot_convert_from_parquet into a new "
+            "table path"
+        )
+    return False
 
 
 def _summary_frame(spark, rows, schema) -> DataFrame:

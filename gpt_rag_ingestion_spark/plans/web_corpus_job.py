@@ -124,6 +124,11 @@ def run_web_corpus_job(
     reads range-prune (snapshot_read_where) and document lookups
     bloom-prune (snapshot_read_point) from commit metadata alone — see
     SCALE.md §11 'Data skipping'."""
+    # the corpus exists iff its commit marker does (a directory in the
+    # former swap format raises here, before any Spark job); any other
+    # read failure raises rather than admitting every candidate as new
+    # against an empty base
+    have_corpus = _table_exists(spark, corpus_path)
     d = batch.select(
         F.col(id_col),
         F.col(text_col),
@@ -173,10 +178,7 @@ def run_web_corpus_job(
             threshold=near_dup_threshold,
         )
     else:
-        # the corpus exists iff its commit marker does; any other
-        # read failure raises rather than admitting every candidate as
-        # new against an empty base
-        if _table_exists(spark, corpus_path):
+        if have_corpus:
             base = read_snapshot_table(spark, corpus_path).select(
                 id_col, text_col
             )

@@ -95,6 +95,10 @@ def run_incremental_ingest(
         raise ValueError(
             f"rollup_mode must be 'stage' or 'cdf', got {rollup_mode!r}"
         )
+    from gpt_rag_ingestion_spark.plans.ingest_job import _table_exists
+
+    # a table in the former swap format raises before the stream starts
+    _table_exists(spark, table_path)
     stream = (
         spark.readStream.schema(schema)
         .format("json")
@@ -123,10 +127,7 @@ def run_incremental_ingest(
         )
         staging = None
         if rollup_path is not None and rollup_mode == "stage":
-            from gpt_rag_ingestion_spark.plans.ingest_job import (
-                _stage_rollup,
-                _table_exists,
-            )
+            from gpt_rag_ingestion_spark.plans.ingest_job import _stage_rollup
 
             # existence by the commit marker; a read error on an
             # existing table raises instead of rebuilding the rollup
@@ -230,7 +231,9 @@ def run_streaming_web_corpus(
     REFERENCED GENERATION count exceeds the threshold the table is
     folded and vacuumed (snapshot_table.snapshot_maybe_optimize),
     preserving any ``partition_cols`` layout.  Rows are untouched —
-    only the file layout changes."""
+    only the file layout changes.  The threshold counts generations,
+    not leaf parquet files as it did on the former directory-swap
+    sink: a value tuned for file counts fires later."""
     from gpt_rag_ingestion_spark.plans.web_corpus_job import run_web_corpus_job
 
     stream = spark.readStream.schema(schema).format(fmt).load(landing_dir)

@@ -811,6 +811,65 @@ def test_ingest_job_rejects_swap_sink_before_any_job(spark, tmp_path):
     assert not (tmp_path / "t").exists()
 
 
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_jobs_reject_swap_format_table(spark, tmp_path, partitioned):
+    """A parquet directory without the snapshot pointer at the table
+    path (the former directory-swap format) is not read as "no table":
+    the ingest job, the web-corpus job and the streaming ingest raise,
+    naming the adoption path, and the directory is left as it was."""
+    import os
+
+    from gpt_rag_ingestion_spark.plans.web_corpus_job import run_web_corpus_job
+    from gpt_rag_ingestion_spark.streaming.micro_batch import (
+        run_incremental_ingest,
+    )
+
+    def tree(root):
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), root),
+             os.path.getmtime(os.path.join(d, f)))
+            for d, _, fs in os.walk(root) for f in fs
+        )
+
+    table = str(tmp_path / "t")
+    old = spark.createDataFrame(
+        [(1, "https://a.example/x", "old page body " * 20, "s0")],
+        "doc_id LONG, url STRING, text STRING, source STRING",
+    )
+    writer = old.write
+    if partitioned:
+        writer = writer.partitionBy("source")
+    writer.parquet(table)
+    before = tree(table)
+
+    with pytest.raises(ValueError, match="snapshot_convert_from_parquet"):
+        run_ingest_job(
+            spark,
+            _docs(spark, [("d1", "alpha " * 40, _ts("2024-01-01T00:00:00"))]),
+            table, "r1",
+        )
+    with pytest.raises(ValueError, match="snapshot_convert_from_parquet"):
+        run_web_corpus_job(
+            spark,
+            spark.createDataFrame(
+                [(2, "https://b.example/y", "new page body " * 20)],
+                "doc_id LONG, url STRING, text STRING",
+            ),
+            table, str(tmp_path / "shards"), min_chars=10,
+        )
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.json").write_text(
+        '{"doc_id": 1, "text": "alpha beta gamma", "source": "s0"}\n'
+    )
+    with pytest.raises(ValueError, match="snapshot_convert_from_parquet"):
+        run_incremental_ingest(
+            spark, str(landing), table, str(tmp_path / "ckpt")
+        )
+    assert tree(table) == before
+    assert not (tmp_path / "shards").exists()
+
+
 def test_purge_job_on_ingested_snapshot_table(spark, tmp_path):
     """run_purge_job on the table run_ingest_job built, with the job's
     chunk-keyed text index: every chunk of a purged parent is

@@ -884,34 +884,35 @@ def test_maybe_compact_table_trigger_preserves_partitions(spark, tmp_path):
 
 def test_compact_table_salts_hot_partition(spark, tmp_path):
     """Review finding (r4): the partitioned rewrite must not collapse a
-    hot partition into ONE straggler-written giant file — the target
-    file size splits it into ~bytes/target right-sized files, while a
-    small partition stays at one file."""
+    hot partition into ONE straggler task — per-partition salts sized
+    from the target file size spread it over ~rows/rows_per_file write
+    tasks, each writing one right-sized file, while a small partition
+    stays at one file."""
     import glob
     import os
 
     from gpt_rag_ingestion_spark.operators import snapshot_table as S
 
     table = str(tmp_path / "t")
-    # bucket 0: ~100k rows of incompressible text; bucket 1: 100 rows
-    df = spark.range(100_100).selectExpr(
+    # bucket 0: 900k rows (~4 MB of parquet); bucket 1: 100 rows
+    df = spark.range(900_100).selectExpr(
         "id AS parent_id",
-        "CASE WHEN id < 100000 THEN 0 ELSE 1 END AS bucket",
-        "sha2(CAST(id AS STRING), 256) AS payload",
+        "CASE WHEN id < 900000 THEN 0 ELSE 1 END AS bucket",
+        "repeat('x', 200) AS payload",
     )
     S.snapshot_merge_upsert(spark, table, df.repartition(20),
                             partition_cols=["bucket"])
     rows_before = S.read_snapshot_table(spark, table).count()
     first = S._read_manifest(spark, table, 1)["partitions"]["bucket=0"]
 
-    # target sized so bucket 0 wants ~4 files
+    # a 1 MB target: bucket 0 wants ~4 files
     hot_bytes = sum(
         os.path.getsize(p)
         for p in glob.glob(f"{table}/{first}/bucket=0/*.parquet")
     )
+    assert hot_bytes > 2 * 1024 * 1024
     S.snapshot_optimize(
-        spark, table, partition_cols=["bucket"],
-        target_file_mb=max(hot_bytes // (4 * 1024 * 1024), 1),
+        spark, table, partition_cols=["bucket"], target_file_mb=1,
     )
     gen = S._read_manifest(
         spark, table, S._current_gen(spark, table)
@@ -919,6 +920,9 @@ def test_compact_table_salts_hot_partition(spark, tmp_path):
     hot_files = glob.glob(f"{table}/{gen}/bucket=0/*.parquet")
     cold_files = glob.glob(f"{table}/{gen}/bucket=1/*.parquet")
     assert len(hot_files) >= 2, "hot partition must split across files"
+    # part-<task>-<uuid>.cNNN: distinct task ids = parallel writers
+    hot_tasks = {os.path.basename(f).split("-")[1] for f in hot_files}
+    assert len(hot_tasks) >= 2, "hot partition must split across tasks"
     assert len(cold_files) == 1, "small partition must coalesce to one"
     assert S.read_snapshot_table(spark, table).count() == rows_before
 
@@ -1172,6 +1176,12 @@ def test_manifest_proves_merge_idempotence(spark, tmp_path):
     assert (
         table_digest(df.repartition(7))["digest"]
         == table_digest(df.coalesce(1))["digest"]
+    )
+
+    # and column-order canonical: explicit cols in any order agree
+    assert (
+        table_digest(df, ["content", "parent_id"])
+        == table_digest(df, ["parent_id", "content"])
     )
 
 
