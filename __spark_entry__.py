@@ -94,16 +94,27 @@ def _events_ts_unit(sf_dir: str) -> str:
 # scan PLAN only — no data, no results: every materialization of a
 # derived query still reads the parquet files fresh (Spark itself
 # caches the same file listing per session, filesourcePartitionFile-
-# CacheSize).  Keyed by (session id, applicationId, path, table) so a
-# new session — even one reusing the interpreter — re-lists; the inputs
-# under a given path are written once and never mutated mid-session
-# (same contract _EVENTS_TS_UNIT already relies on).
-_SCAN_MEMO: dict = {}
+# CacheSize).  The memo belongs to ONE session, (session id,
+# applicationId): the first _t call from a different session drops it
+# and starts afresh, so the interpreter never holds the scans of
+# sessions it has moved past (a new session — even one reusing the
+# interpreter — re-lists).  The inputs under a given path are written
+# once and never mutated mid-session (same contract _EVENTS_TS_UNIT
+# already relies on).
+_SCAN_MEMO: tuple = (None, {})  # (owning session key, {(sf_dir, table): scan})
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), spark.sparkContext.applicationId, sf_dir, name)
-    df = _SCAN_MEMO.get(key)
+    global _SCAN_MEMO
+    session = (id(spark), spark.sparkContext.applicationId)
+    owner, scans = _SCAN_MEMO
+    if owner != session:
+        # a concurrent caller of another session may swap the memo in
+        # turn; this call keeps filling its own dict, never the other's
+        scans = {}
+        _SCAN_MEMO = (session, scans)
+    key = (sf_dir, name)
+    df = scans.get(key)
     if df is not None:
         return df
     _ensure_shipped(spark)
@@ -114,7 +125,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # timestamps.
         df = spark.read.schema(_EVENTS_READ_SCHEMA).parquet(f"{sf_dir}/{name}.parquet")
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        _SCAN_MEMO[key] = df
+        scans[key] = df
         return df
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
@@ -123,7 +134,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # operators (unix_micros etc.) expect — sessions run UTC, so the
         # instant is unchanged.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _SCAN_MEMO[key] = df
+    scans[key] = df
     return df
 
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+
 
 def exact_duplicates(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -1212,9 +1214,12 @@ def neardup_pairs_auto(
 # production shape incremental_dedup's docstring promises: the base
 # corpus's text is read ONCE (at build/admission time); every later
 # batch classifies against key-only sidecar tables, so a batch costs
-# O(batch + matched keys), never O(corpus).  Same lifecycle contract as
-# the persisted ANN indexes: per-label batch directories, overwrite on
-# retry (at-least-once safe), union-on-read, single writer.
+# O(batch + matched keys), never O(corpus).  It is a batch-manifest
+# store (operators/batch_manifest, shared with the text index and the
+# IVF/IVFPQ indexes): an append writes its three sub-table batches
+# unlisted and commits them TOGETHER with the counters in one meta
+# rename, so readers never see a half-admitted batch and the counters
+# never disagree with the rows they count.
 #
 # Rows carry a GENERATION: an appended doc_id SUPERSEDES its earlier
 # rows (the merge is delete-then-insert, so a re-admitted id replaced
@@ -1232,69 +1237,31 @@ def neardup_pairs_auto(
 # the dead set (one row per RE-ADMITTED doc, bounded by
 # ``dedup_sidecar_maybe_compact``) is broadcast and the postings are
 # liveness-filtered by a broadcast join — the postings are never
-# shuffled by doc_id in either state.  The counter is maintained under
-# the same at-least-once retry contract as the writes themselves
-# (meta is written FIRST, so a crashed append leaves the counter
-# conservatively high, never low).
+# shuffled by doc_id in either state.
 #
 # Layout under <sidecar_path>/:
-#   meta                       — (n int, gen int, superseded long,
-#                                n_live long): shingle width, last
-#                                generation written (single-writer),
-#                                docs with dead generations, live docs
-#   digests/batch=<label>/     — (digest string, doc_id long, gen int)
-#   shingles/batch=<label>/    — (sh long, doc_id long, gen int)  xxhash64
-#   sizes/batch=<label>/       — (doc_id long, n_shingles long, gen int)
+#   meta                              — JSON {gen, n, superseded,
+#                                       n_live, batches}: last committed
+#                                       generation, shingle width, docs
+#                                       with dead generations, live docs
+#   digests/batch=<label>__g<gen>/    — (digest string, doc_id long, gen int)
+#   shingles/batch=<label>__g<gen>/   — (sh long, doc_id long, gen int)  xxhash64
+#   sizes/batch=<label>__g<gen>/      — (doc_id long, n_shingles long, gen int)
+#   claims/g<gen>                     — generation claims
 
-_SIDECAR_SUBS = ("digests", "shingles", "sizes")
-
-
-def _sidecar_recover(spark, sidecar_path: str) -> None:
-    """Writer-side swap recovery for every sub-table (a crashed
-    compact leaves <sub>__old; an append that ignored it would make
-    the next compact's recovery DELETE the real generation)."""
-    from gpt_rag_ingestion_spark.operators.similarity import _recover_swap
-
-    for sub in _SIDECAR_SUBS:
-        _recover_swap(spark, f"{sidecar_path}/{sub}")
+SIDECAR = bm.Store(
+    subs=("digests", "shingles", "sizes"), build="dedup_sidecar_build"
+)
+_SIDECAR_SCHEMAS = {
+    "digests": "digest string, doc_id long, gen int",
+    "shingles": "sh long, doc_id long, gen int",
+    "sizes": "doc_id long, n_shingles long, gen int",
+}
 
 
-def _sidecar_write_meta(spark, sidecar_path, n, gen, superseded, n_live) -> None:
-    spark.createDataFrame(
-        [(int(n), int(gen), int(superseded), int(n_live))],
-        "n int, gen int, superseded long, n_live long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{sidecar_path}/meta__staging"
-    )
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _fs_delete,
-        _fs_try_rename,
-    )
-
-    _fs_delete(spark, f"{sidecar_path}/meta")
-    _fs_try_rename(
-        spark, f"{sidecar_path}/meta__staging", f"{sidecar_path}/meta"
-    )
-
-
-def _sidecar_read_meta(spark, sidecar_path) -> dict:
-    """Meta row as a dict; a pre-counter layout (no ``superseded``
-    column) reads as superseded=None — unknown, so liveness is computed
-    conservatively rather than skipped."""
-    row = spark.read.parquet(f"{sidecar_path}/meta").first()
-    d = row.asDict()
-    d.setdefault("superseded", None)
-    d.setdefault("n_live", None)
-    return d
-
-
-def _sidecar_write(docs, sidecar_path, label, text_col, id_col, n, gen) -> int:
-    # the DIGEST index (the liveness authority) lands FIRST: a crash
-    # mid-write then leaves the new generation visible to liveness, so
-    # the doc's OLD shingles are filtered out and it degrades to a
-    # shingle-less doc (digest-exact classification stays correct)
-    # until the at-least-once replay heals the label — never a union
-    # of two generations' shingles
+def _sidecar_write(docs, sidecar_path, name, text_col, id_col, n, gen) -> int:
+    """Write one batch (unlisted until the caller's commit) of all three
+    sub-tables; returns its doc count."""
     dig = docs.select(
         F.md5(F.col(text_col)).alias("digest"),
         F.col(id_col).cast("long").alias("doc_id"),
@@ -1303,7 +1270,7 @@ def _sidecar_write(docs, sidecar_path, label, text_col, id_col, n, gen) -> int:
     try:
         n_docs = int(dig.count())
         dig.write.mode("overwrite").parquet(
-            f"{sidecar_path}/digests/batch={label}"
+            bm.batch_path(sidecar_path, "digests", name)
         )
     finally:
         dig.unpersist()
@@ -1314,13 +1281,13 @@ def _sidecar_write(docs, sidecar_path, label, text_col, id_col, n, gen) -> int:
     ).persist()
     try:
         sh.write.mode("overwrite").parquet(
-            f"{sidecar_path}/shingles/batch={label}"
+            bm.batch_path(sidecar_path, "shingles", name)
         )
         sizes = sh.groupBy("doc_id", "gen").agg(
             F.count(F.lit(1)).alias("n_shingles")
         ).select("doc_id", "n_shingles", "gen")
         sizes.write.mode("overwrite").parquet(
-            f"{sidecar_path}/sizes/batch={label}"
+            bm.batch_path(sidecar_path, "sizes", name)
         )
     finally:
         sh.unpersist()
@@ -1336,20 +1303,17 @@ def dedup_sidecar_build(
 ) -> dict:
     """Build the sidecar from the existing corpus — the ONE corpus-text
     pass; every later batch classification reads keys only.  A rebuild
-    at the same path replaces the sidecar wholesale (stale batch
-    directories of a previous life are cleared first, like
-    ivfpq_index_build clears its postings)."""
-    from gpt_rag_ingestion_spark.operators.upsert import _fs_delete
-
+    at the same path replaces the sidecar wholesale: its commit unlists
+    every batch of the previous life."""
     spark = corpus.sparkSession
-    for sub in _SIDECAR_SUBS:
-        _fs_delete(spark, f"{sidecar_path}/{sub}")
-        _fs_delete(spark, f"{sidecar_path}/{sub}__old")
-        _fs_delete(spark, f"{sidecar_path}/{sub}__staging")
-    n_docs = _sidecar_write(
-        corpus, sidecar_path, "build", text_col, id_col, n, gen=0
+    meta, gen, name = bm.begin_build(spark, sidecar_path, SIDECAR, "build")
+    n_docs = _sidecar_write(corpus, sidecar_path, name, text_col, id_col, n, gen)
+    bm.commit(
+        spark, sidecar_path, SIDECAR, meta, gen,
+        add={sub: [name] for sub in SIDECAR.subs},
+        remove=meta["batches"] if meta else None,
+        n=int(n), superseded=0, n_live=n_docs,
     )
-    _sidecar_write_meta(spark, sidecar_path, n, 0, superseded=0, n_live=n_docs)
     return {"n_docs": n_docs, "n": n}
 
 
@@ -1361,54 +1325,43 @@ def dedup_sidecar_append(
     id_col: str = "doc_id",
 ) -> dict:
     """Admit a batch into the sidecar: one batch-text pass writing the
-    batch's OWN directories under the next generation number (overwrite
-    per label — a replayed admission replaces itself; its re-bumped
-    generation still selects the same latest rows per doc).  A doc_id
-    that already exists in the sidecar is SUPERSEDED: its older
-    generations stop participating in classification, mirroring the
-    corpus merge's delete-then-insert.
-
-    The meta ``superseded`` counter is bumped by the number of batch
-    doc_ids already present (a broadcast semi-join against the digest
-    index — the index is only SCANNED, never shuffled) and meta is
-    written BEFORE the batch directories: a crash between the two
-    leaves the counter conservatively high (liveness still computed),
-    never low (liveness wrongly skipped), and the at-least-once replay
-    that heals the directories re-counts against the healed state."""
+    batch's own dirs under the next generation, committed with the
+    counters in one meta rename.  A replayed admission (same label)
+    unlists the label's earlier batch in that commit — it replaces
+    itself.  A doc_id that already exists in the sidecar is SUPERSEDED:
+    its older generations stop participating in classification,
+    mirroring the corpus merge's delete-then-insert.  The
+    ``superseded`` counter is bumped by the number of batch doc_ids
+    already present (a broadcast semi-join against the digest index —
+    the index is only SCANNED, never shuffled)."""
     spark = admitted.sparkSession
-    _sidecar_recover(spark, sidecar_path)
-    from gpt_rag_ingestion_spark.operators.similarity import read_batched_dir
-
-    meta = _sidecar_read_meta(spark, sidecar_path)
-    gen = int(meta["gen"]) + 1
+    meta, gen, name = bm.begin(spark, sidecar_path, SIDECAR, batch_label)
     batch_ids = admitted.select(
         F.col(id_col).cast("long").alias("doc_id")
     ).distinct()
     n_batch = int(batch_ids.count())
+    digests = bm.read_batches(
+        spark, sidecar_path, "digests", meta["batches"]["digests"],
+        _SIDECAR_SCHEMAS["digests"],
+    )
     n_super = int(
-        read_batched_dir(spark, f"{sidecar_path}/digests")
-        .join(F.broadcast(batch_ids), "doc_id", "left_semi")
+        digests.join(F.broadcast(batch_ids), "doc_id", "left_semi")
         .select("doc_id")
         .distinct()
         .count()
     )
-    if meta["superseded"] is None or meta["n_live"] is None:
-        # pre-counter layout: one-off migration — count actual state
-        dig = read_batched_dir(spark, f"{sidecar_path}/digests")
-        per_doc = dig.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_g"))
-        prior_super = int(per_doc.filter(F.col("_g") > 1).count())
-        prior_live = int(per_doc.count())
-    else:
-        prior_super = int(meta["superseded"])
-        prior_live = int(meta["n_live"])
-    _sidecar_write_meta(
-        spark, sidecar_path, int(meta["n"]), gen,
-        superseded=prior_super + n_super,
-        n_live=prior_live + n_batch - n_super,
-    )
     n_docs = _sidecar_write(
-        admitted, sidecar_path, batch_label, text_col, id_col,
-        int(meta["n"]), gen,
+        admitted, sidecar_path, name, text_col, id_col, int(meta["n"]), gen,
+    )
+    bm.commit(
+        spark, sidecar_path, SIDECAR, meta, gen,
+        add={sub: [name] for sub in SIDECAR.subs},
+        remove={
+            sub: bm.same_label(meta["batches"][sub], batch_label)
+            for sub in SIDECAR.subs
+        },
+        superseded=int(meta["superseded"]) + n_super,
+        n_live=int(meta["n_live"]) + n_batch - n_super,
     )
     return {
         "batch": batch_label, "n_docs": n_docs, "gen": gen,
@@ -1416,9 +1369,10 @@ def dedup_sidecar_append(
     }
 
 
-def _sidecar_live(spark, sidecar_path, superseded: int | None = None):
-    """(digests, shingles, sizes) restricted to each doc's LATEST
-    generation — the rows that mirror the current corpus.
+def _sidecar_live(spark, sidecar_path, meta):
+    """(digests, shingles, sizes) of the manifest's batches, restricted
+    to each doc's LATEST generation — the rows that mirror the current
+    corpus.
 
     Liveness authority is the DIGEST index: it has exactly one row per
     doc per generation (sizes does NOT — a doc with fewer than ``n``
@@ -1426,20 +1380,21 @@ def _sidecar_live(spark, sidecar_path, superseded: int | None = None):
     semi-join-drop its digest rows: an exact copy of a short base doc
     would classify 'new', and compaction would delete its index rows).
 
-    ``superseded`` (from meta) drives the cost shape:
+    ``meta["superseded"]`` drives the cost shape:
     - 0 — steady state: every doc has one generation, the raw tables
       ARE the live tables; no aggregation, no shuffle, no join.
     - > 0: the dead set (one (doc_id, max_gen) row per RE-ADMITTED doc
       — small, bounded by ``dedup_sidecar_maybe_compact``) is computed
       from the digest index and BROADCAST; each table is filtered by a
-      broadcast left join.  The postings are never shuffled by doc_id.
-    - None (unknown / pre-counter meta): same as > 0."""
-    from gpt_rag_ingestion_spark.operators.similarity import read_batched_dir
-
-    dig = read_batched_dir(spark, f"{sidecar_path}/digests")
-    sh = read_batched_dir(spark, f"{sidecar_path}/shingles")
-    sizes = read_batched_dir(spark, f"{sidecar_path}/sizes")
-    if superseded == 0:
+      broadcast left join.  The postings are never shuffled by doc_id."""
+    dig, sh, sizes = (
+        bm.read_batches(
+            spark, sidecar_path, sub, meta["batches"][sub],
+            _SIDECAR_SCHEMAS[sub],
+        )
+        for sub in SIDECAR.subs
+    )
+    if int(meta["superseded"]) == 0:
         return dig, sh, sizes
     dead = (
         dig.groupBy("doc_id")
@@ -1495,11 +1450,9 @@ def incremental_dedup_sidecar(
     shuffle-hash join — the postings exchange on ``sh`` once instead
     of failing the job on a driver/broadcast OOM."""
     spark = incr.sparkSession
-    meta = _sidecar_read_meta(spark, sidecar_path)
+    meta = bm.read_meta(spark, sidecar_path, SIDECAR)
     n = int(meta["n"])
-    b_dig, sh_b_raw, sizes = _sidecar_live(
-        spark, sidecar_path, superseded=meta["superseded"]
-    )
+    b_dig, sh_b_raw, sizes = _sidecar_live(spark, sidecar_path, meta)
 
     digest = F.md5(F.col(text_col))
     i_dig = incr.select(F.col(id_col), digest.alias("digest"))
@@ -1580,56 +1533,23 @@ def incremental_dedup_sidecar(
 
 
 def dedup_sidecar_compact(spark, sidecar_path: str) -> dict:
-    """OPTIMIZE + garbage collection for the dedup sidecar: consolidate
-    each sub-table's per-batch generations into one AND drop superseded
+    """OPTIMIZE + garbage collection for the dedup sidecar: fold each
+    sub-table's listed batches into one AND drop superseded
     generations (rows of docs later re-admitted) — classification
-    results are byte-identical before and after (unit-pinned).  Uses
-    the shared crash-safe swap (operators/similarity)."""
-    from gpt_rag_ingestion_spark.operators.similarity import _recover_swap
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _fs_delete,
-        _fs_try_rename,
-    )
-
-    _sidecar_recover(spark, sidecar_path)
-    meta = _sidecar_read_meta(spark, sidecar_path)
-    dig, sh, sizes = _sidecar_live(
-        spark, sidecar_path, superseded=meta["superseded"]
-    )
+    results are byte-identical before and after (unit-pinned).  The
+    folded batches land unlisted and one commit lists them in place of
+    every old batch, with the counters reset, so the next
+    classification takes the zero-work steady-state path."""
+    meta, gen, name = bm.begin(spark, sidecar_path, SIDECAR, "compacted")
     out = {}
-    staged = {}
-    for sub, df in (("digests", dig), ("shingles", sh), ("sizes", sizes)):
-        live_path = f"{sidecar_path}/{sub}"
-        staging = f"{live_path}__staging"
-        _fs_delete(spark, staging)
-        kept = df.drop("batch") if "batch" in df.columns else df
-        kept.write.mode("overwrite").parquet(f"{staging}/batch=compacted")
-        out[sub] = int(
-            spark.read.parquet(f"{staging}/batch=compacted").count()
-        )
-        staged[sub] = staging
-    # all staging generations ready: swap each (crash between swaps is
-    # healed per-sub-table by _sidecar_recover on the next writer).
-    # The LIVENESS AUTHORITY (digests) must swap LAST: if digests
-    # folded first and a crash left shingles/sizes unfolded, the dead
-    # set derived from the folded digests would be empty while stale
-    # shingle/size generations were still on disk — those dead rows
-    # would read as live (inflated n_inter, duplicate size rows) and
-    # the next compact would bake them in.  With digests last, a crash
-    # mid-sequence leaves the dead set intact (or the other tables
-    # already folded, where filtering is a no-op) — always correct.
-    for sub in reversed(_SIDECAR_SUBS):
-        live_path = f"{sidecar_path}/{sub}"
-        old = f"{live_path}__old"
-        _fs_delete(spark, old)
-        _fs_try_rename(spark, live_path, old)
-        _fs_try_rename(spark, staged[sub], live_path)
-        _fs_delete(spark, old)
-        spark.catalog.refreshByPath(live_path)
-    # dead generations are gone: reset the liveness counter so the next
-    # classification takes the zero-work steady-state path
-    _sidecar_write_meta(
-        spark, sidecar_path, int(meta["n"]), int(meta["gen"]),
+    for sub, df in zip(SIDECAR.subs, _sidecar_live(spark, sidecar_path, meta)):
+        path = bm.batch_path(sidecar_path, sub, name)
+        df.write.mode("overwrite").parquet(path)
+        out[sub] = int(spark.read.parquet(path).count())
+    bm.commit(
+        spark, sidecar_path, SIDECAR, meta, gen,
+        add={sub: [name] for sub in SIDECAR.subs},
+        remove=meta["batches"],
         superseded=0, n_live=out["digests"],
     )
     return out
@@ -1642,20 +1562,16 @@ def dedup_sidecar_maybe_compact(
     max_dead: int = 100_000,
 ) -> dict:
     """Compaction TRIGGER for the dedup sidecar, cheap enough to run
-    after every streamed batch (one meta-row read): compact when dead
-    generations exceed ``dead_ratio`` of the live docs OR the absolute
-    ``max_dead`` bound.  The absolute bound is what keeps the
+    after every streamed batch (one meta read, no Spark job): compact
+    when dead generations exceed ``dead_ratio`` of the live docs OR the
+    absolute ``max_dead`` bound.  The absolute bound is what keeps the
     non-steady liveness path honest — the dead set must stay
     broadcastable — and the ratio bound keeps scan waste bounded.
     Classification results are byte-identical across a triggered
     compact (compaction's own contract, unit-pinned)."""
-    meta = _sidecar_read_meta(spark, sidecar_path)
-    superseded = meta["superseded"]
-    if superseded is None:  # pre-counter layout: state unknown, fold it
-        counts = dedup_sidecar_compact(spark, sidecar_path)
-        return {"compacted": True, **counts}
-    superseded = int(superseded)
-    n_live = int(meta["n_live"] or 0)
+    meta = bm.read_meta(spark, sidecar_path, SIDECAR)
+    superseded = int(meta["superseded"])
+    n_live = int(meta["n_live"])
     if superseded > 0 and (
         superseded >= max_dead or superseded > dead_ratio * max(n_live, 1)
     ):

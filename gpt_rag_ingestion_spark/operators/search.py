@@ -51,6 +51,11 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+from gpt_rag_ingestion_spark.operators.batch_manifest import (  # noqa: F401
+    ManifestWriteConflict as TextIndexWriteConflict,
+)
+
 IDF_SCALE = 1_000_000
 RRF_SCALE = 1_000_000
 RRF_K = 60
@@ -351,30 +356,23 @@ def rrf_fuse(
 # The reference's indexer continuously UPSERTS chunk docs into AI
 # Search and its purger DELETES vanished parents — the text index is a
 # long-lived, incrementally-maintained artifact, not a per-query
-# build.  This lifecycle mirrors the engine's other persisted indexes
-# (IVF/IVFPQ postings, dedup sidecar): per-batch generation
-# directories, a liveness authority, meta counters driving a
-# steady-state fast path and a compaction trigger, and ONE commit
-# point: meta is a MANIFEST (r6).
+# build.  It is a batch-manifest store (operators/batch_manifest, the
+# one commit protocol it shares with the dedup sidecar and the
+# IVF/IVFPQ indexes): every op — build, append, delete, apply,
+# COMPACT — writes unlisted batch dirs, claims a generation and
+# commits by one meta rename, and readers read only the listed dirs
+# (snapshot isolation, no directory swaps anywhere).
 #
 # Layout under <index_path>/:
 #   meta                  — one-line JSON {gen, superseded, n_live,
 #                            l_live, batches: {postings: [names],
-#                            doclen: [names]}}.  The manifest IS the
-#                            snapshot: readers read ONLY listed batch
-#                            dirs, so every commit (append, delete,
-#                            apply, COMPACT) is one atomic meta
-#                            rename — no directory swaps anywhere,
-#                            and readers get snapshot isolation like
-#                            the snapshot-table sink.
+#                            doclen: [names]}}
 #   postings/batch=<label>__g<gen>/ — (token string, doc long,
 #                            tf long, gen int)
 #   doclen/batch=<label>__g<gen>/   — (doc long, dl long, gen int);
 #                            dl NULL is a DELETE tombstone (the
 #                            purger's leg)
-#   claims/g<gen>         — generation claims (create-exclusive):
-#                            concurrent writers racing for the same
-#                            generation are arbitrated at commit time
+#   claims/g<gen>         — generation claims (create-exclusive)
 #
 # Liveness authority: DOCLEN — exactly one row per doc per generation
 # (a tokenless doc still gets dl = 0; postings would drop it).  Every
@@ -382,40 +380,7 @@ def rrf_fuse(
 # removes the doc entirely.  meta.superseded == 0 is the steady state:
 # raw tables ARE the live tables, no liveness work at all.
 
-_TEXT_INDEX_SUBS = ("postings", "doclen")
-
-
-class TextIndexWriteConflict(RuntimeError):
-    """Another writer claimed this generation first: the committed
-    index this batch was computed against has moved (or is about to).
-    The index is intact; retry the operation."""
-
-
-def _tindex_claim(spark, index_path, gen) -> None:
-    """Generation claim by atomic create-exclusive (the snapshot
-    table's arbitration primitive applied to the text index), taken
-    at COMMIT time — after a writer's batch dirs are written, before
-    its meta rename.  Of N writers that read the same committed meta
-    (and so computed the same next gen), exactly one creates
-    ``claims/g<gen>``; the rest raise, clean up their own unlisted
-    dirs, and never touch meta.  Crashed claims (gen > committed
-    meta.gen) are pruned by writer-start recovery, with the same
-    documented residual race as the snapshot table's
-    _claim_recover."""
-    from gpt_rag_ingestion_spark.operators.snapshot_table import (
-        SnapshotWriteConflict,
-        _write_text_exclusive,
-    )
-
-    try:
-        _write_text_exclusive(
-            spark, f"{index_path}/claims/g{int(gen):08d}", str(int(gen))
-        )
-    except SnapshotWriteConflict:
-        raise TextIndexWriteConflict(
-            f"generation {gen} already claimed by a concurrent writer "
-            f"({index_path})"
-        ) from None
+TEXT_INDEX = bm.Store(subs=("postings", "doclen"), build="text_index_build")
 
 
 def _badid_agg():
@@ -437,6 +402,7 @@ def _raise_badid(n, where):
 
 
 _POSTINGS_SCHEMA = "token string, doc long, tf long, gen int"
+_DOCLEN_SCHEMA = "doc long, dl long, gen int"
 
 
 def _tindex_tables(chunks, text_col, id_col, gen, postings_dir):
@@ -473,121 +439,6 @@ def _tindex_tables(chunks, text_col, id_col, gen, postings_dir):
     return postings, doclen
 
 
-def _tindex_write_meta(
-    spark, index_path, gen, superseded, n_live, l_live, batches
-):
-    """Meta is a one-line JSON FILE written driver-side (zero Spark
-    jobs — it was a 1-row parquet write + read per lifecycle op, ~10
-    fixed jobs across build/append/delete/compact/query; r5 judge
-    brief #4).  ``batches`` is the MANIFEST: {"postings": [dir
-    names], "doclen": [dir names]} — the committed snapshot readers
-    resolve.  Crash protocol: staging file, delete, rename — the
-    rename is the one commit point of every lifecycle op."""
-    import json as _json
-
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _fs_delete,
-        _fs_try_rename,
-    )
-    from gpt_rag_ingestion_spark.operators.snapshot_table import _write_text
-
-    _write_text(
-        spark,
-        f"{index_path}/meta__staging",
-        _json.dumps(
-            {
-                "gen": int(gen),
-                "superseded": int(superseded),
-                "n_live": int(n_live),
-                "l_live": int(l_live),
-                "batches": {
-                    sub: sorted(batches[sub]) for sub in _TEXT_INDEX_SUBS
-                },
-            }
-        ),
-    )
-    _fs_delete(spark, f"{index_path}/meta")
-    _fs_try_rename(spark, f"{index_path}/meta__staging", f"{index_path}/meta")
-
-
-def _tindex_read_meta(spark, index_path) -> dict:
-    import json as _json
-
-    from gpt_rag_ingestion_spark.operators.snapshot_table import _read_text
-
-    return _json.loads(_read_text(spark, f"{index_path}/meta"))
-
-
-def _tindex_recover(spark, index_path) -> None:
-    """WRITER-start recovery (readers never mutate): roll a
-    half-committed meta forward, then garbage-collect (a) batch dirs
-    NOT in the committed manifest whose gen is <= committed — debris
-    of conflict losers and of superseded pre-compact batches (dirs
-    with gen > committed belong to an IN-FLIGHT writer and are left
-    alone; they become collectable only after some later commit moves
-    the committed gen past them), and (b) crashed generation claims
-    (gen > committed), which would otherwise block that generation
-    forever.  Same slow-writer caveat as the snapshot table's
-    _claim_recover."""
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _fs_exists,
-        _fs_try_rename,
-    )
-
-    if not _fs_exists(spark, f"{index_path}/meta"):
-        if _fs_exists(spark, f"{index_path}/meta__staging"):
-            _fs_try_rename(
-                spark, f"{index_path}/meta__staging", f"{index_path}/meta"
-            )
-        else:
-            return  # pre-build: nothing to prune
-    meta = _tindex_read_meta(spark, index_path)
-    committed = int(meta["gen"])
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    for sub in _TEXT_INDEX_SUBS:
-        listed = {f"batch={n}" for n in meta["batches"][sub]}
-        root = jvm.org.apache.hadoop.fs.Path(f"{index_path}/{sub}")
-        fs = root.getFileSystem(hconf)
-        if not fs.exists(root):
-            continue
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name in listed or "__g" not in name:
-                continue
-            try:
-                g = int(name.rsplit("__g", 1)[1])
-            except ValueError:
-                continue
-            if g <= committed:
-                fs.delete(st.getPath(), True)
-    croot = jvm.org.apache.hadoop.fs.Path(f"{index_path}/claims")
-    cfs = croot.getFileSystem(hconf)
-    if cfs.exists(croot):
-        for st in cfs.listStatus(croot):
-            name = st.getPath().getName()
-            try:
-                g = int(name.lstrip("g"))
-            except ValueError:
-                continue
-            if g > committed:
-                cfs.delete(st.getPath(), False)
-
-
-def _tindex_read_sub(spark, index_path, sub, names):
-    """Read EXACTLY the manifest-listed batch dirs of one sub-table.
-    Unlisted dirs (an in-flight writer's staging, a conflict loser's
-    debris) are invisible by construction — readers never need a gen
-    filter and never prune."""
-    paths = [f"{index_path}/{sub}/batch={n}" for n in names]
-    if not paths:
-        schema = (
-            _POSTINGS_SCHEMA if sub == "postings" else "doc long, dl long, gen int"
-        )
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(*paths)
-
-
 def _tindex_live(spark, index_path, meta):
     """(postings, doclen) resolved through the manifest and restricted
     to each doc's latest generation, tombstones dropped.
@@ -595,11 +446,13 @@ def _tindex_live(spark, index_path, meta):
     which only exist when superseded > 0 — a tombstone always
     supersedes the doc's build/append row)."""
     superseded = int(meta["superseded"])
-    postings = _tindex_read_sub(
-        spark, index_path, "postings", meta["batches"]["postings"]
+    postings = bm.read_batches(
+        spark, index_path, "postings", meta["batches"]["postings"],
+        _POSTINGS_SCHEMA,
     )
-    doclen = _tindex_read_sub(
-        spark, index_path, "doclen", meta["batches"]["doclen"]
+    doclen = bm.read_batches(
+        spark, index_path, "doclen", meta["batches"]["doclen"],
+        _DOCLEN_SCHEMA,
     )
     if superseded == 0:
         return postings, doclen.filter(F.col("dl").isNotNull())
@@ -629,21 +482,19 @@ def text_index_build(
     id_col: str = "doc_id",
 ) -> dict:
     """Build the persisted index from the existing corpus (the one
-    full-corpus pass; later batches touch O(batch))."""
-    from gpt_rag_ingestion_spark.operators.upsert import _fs_delete
-
+    full-corpus pass; later batches touch O(batch)).  A rebuild over a
+    committed index commits the new batch and unlists every old one in
+    one meta rename."""
     spark = chunks.sparkSession
-    for sub in _TEXT_INDEX_SUBS:
-        _fs_delete(spark, f"{index_path}/{sub}")
-    _fs_delete(spark, f"{index_path}/claims")
-    _fs_delete(spark, f"{index_path}/meta")
+    meta, gen, name = bm.begin_build(spark, index_path, TEXT_INDEX, "build")
     _p, doclen = _tindex_tables(
-        chunks, text_col, id_col, 0, f"{index_path}/postings/batch=build__g0"
+        chunks, text_col, id_col, gen,
+        bm.batch_path(index_path, "postings", name),
     )
     doclen = doclen.persist()
     try:
         doclen.write.mode("overwrite").parquet(
-            f"{index_path}/doclen/batch=build__g0"
+            bm.batch_path(index_path, "doclen", name)
         )
         agg = doclen.agg(
             F.count(F.lit(1)).alias("n"), F.sum("dl").alias("l"), _badid_agg()
@@ -651,9 +502,11 @@ def text_index_build(
         _raise_badid(agg["badid"], "build")
     finally:
         doclen.unpersist()
-    _tindex_write_meta(
-        spark, index_path, 0, 0, agg["n"] or 0, agg["l"] or 0,
-        {"postings": ["build__g0"], "doclen": ["build__g0"]},
+    bm.commit(
+        spark, index_path, TEXT_INDEX, meta, gen,
+        add={"postings": [name], "doclen": [name]},
+        remove=meta["batches"] if meta else None,
+        superseded=0, n_live=int(agg["n"] or 0), l_live=int(agg["l"] or 0),
     )
     return {"n_docs": int(agg["n"] or 0), "total_len": int(agg["l"] or 0)}
 
@@ -696,21 +549,14 @@ def text_index_append(
 ) -> dict:
     """Upsert a batch (the indexer's delete-parent-then-upload): docs
     already present are superseded by their new generation.  Replay-
-    idempotent per ``batch_label`` (overwrite of the batch dirs)."""
+    idempotent per ``batch_label``: a replay after the commit
+    supersedes the batch's own docs (delta 0); a crash before it
+    leaves unlisted debris that writer recovery collects."""
     spark = batch.sparkSession
-    _tindex_recover(spark, index_path)
-    meta = _tindex_read_meta(spark, index_path)
-    gen = int(meta["gen"]) + 1
-    name = f"{batch_label}__g{gen}"
-    # postings dir first (UNLISTED until the commit — readers resolve
-    # the manifest, so staged dirs are invisible), then deltas from the
-    # COMMITTED live state, the doclen dir, the claim, and the meta
-    # rename commits everything at once.  A crash anywhere before the
-    # commit leaves unlisted debris that writer recovery collects; a
-    # replay AFTER the commit supersedes the batch's own docs (delta
-    # 0) — idempotent either way.
+    meta, gen, name = bm.begin(spark, index_path, TEXT_INDEX, batch_label)
     _p, doclen = _tindex_tables(
-        batch, text_col, id_col, gen, f"{index_path}/postings/batch={name}"
+        batch, text_col, id_col, gen,
+        bm.batch_path(index_path, "postings", name),
     )
     doclen = doclen.persist()
     try:
@@ -718,47 +564,18 @@ def text_index_append(
             spark, index_path, doclen, meta
         )
         doclen.write.mode("overwrite").parquet(
-            f"{index_path}/doclen/batch={name}"
+            bm.batch_path(index_path, "doclen", name)
         )
-        _tindex_commit(
-            spark, index_path, meta, gen,
-            int(meta["superseded"]) + n_super,
-            int(meta["n_live"]) + n_delta,
-            int(meta["l_live"]) + l_delta,
+        bm.commit(
+            spark, index_path, TEXT_INDEX, meta, gen,
             add={"postings": [name], "doclen": [name]},
+            superseded=int(meta["superseded"]) + n_super,
+            n_live=int(meta["n_live"]) + n_delta,
+            l_live=int(meta["l_live"]) + l_delta,
         )
     finally:
         doclen.unpersist()
     return {"batch": batch_label, "gen": gen, "newly_superseded": n_super}
-
-
-def _tindex_commit(
-    spark, index_path, meta, gen, superseded, n_live, l_live, add,
-    replace=False,
-):
-    """Claim the generation, then commit the new manifest.  On a lost
-    claim the writer deletes its own staged dirs (they are unlisted —
-    harmless to readers — but tidy) and raises."""
-    from gpt_rag_ingestion_spark.operators.upsert import _fs_delete
-
-    try:
-        _tindex_claim(spark, index_path, gen)
-    except TextIndexWriteConflict:
-        for sub in _TEXT_INDEX_SUBS:
-            for n in add.get(sub, []):
-                _fs_delete(spark, f"{index_path}/{sub}/batch={n}")
-        raise
-    batches = {
-        sub: (
-            list(add.get(sub, []))
-            if replace
-            else list(meta["batches"][sub]) + list(add.get(sub, []))
-        )
-        for sub in _TEXT_INDEX_SUBS
-    }
-    _tindex_write_meta(
-        spark, index_path, gen, superseded, n_live, l_live, batches
-    )
 
 
 def text_index_delete(
@@ -771,10 +588,7 @@ def text_index_delete(
     """The purger's leg: tombstone every given doc id (dl NULL at a
     new generation) — its postings stop matching immediately;
     compaction garbage-collects them."""
-    _tindex_recover(spark, index_path)
-    meta = _tindex_read_meta(spark, index_path)
-    gen = int(meta["gen"]) + 1
-    name = f"{batch_label}__g{gen}"
+    meta, gen, name = bm.begin(spark, index_path, TEXT_INDEX, batch_label)
     tomb = keys.select(
         F.col(id_col).try_cast("long").alias("doc"),
         F.lit(None).cast("long").alias("dl"),
@@ -794,14 +608,14 @@ def text_index_delete(
     )
     _raise_badid(old["badid"], "delete")
     tomb.write.mode("overwrite").parquet(
-        f"{index_path}/doclen/batch={name}"
+        bm.batch_path(index_path, "doclen", name)
     )
-    _tindex_commit(
-        spark, index_path, meta, gen,
-        int(meta["superseded"]) + int(old["n"]),
-        int(meta["n_live"]) - int(old["n"]),
-        int(meta["l_live"]) - int(old["l"]),
+    bm.commit(
+        spark, index_path, TEXT_INDEX, meta, gen,
         add={"doclen": [name]},
+        superseded=int(meta["superseded"]) + int(old["n"]),
+        n_live=int(meta["n_live"]) - int(old["n"]),
+        l_live=int(meta["l_live"]) - int(old["l"]),
     )
     return {"batch": batch_label, "gen": gen, "tombstoned": int(old["n"])}
 
@@ -823,12 +637,10 @@ def text_index_apply(
     delta probe, the badid checks, and the dir writes are all folded
     so the whole tick costs one aggregate action + three writes."""
     spark = batch.sparkSession
-    _tindex_recover(spark, index_path)
-    meta = _tindex_read_meta(spark, index_path)
-    gen = int(meta["gen"]) + 1
-    name = f"{batch_label}__g{gen}"
+    meta, gen, name = bm.begin(spark, index_path, TEXT_INDEX, batch_label)
     _p, doclen = _tindex_tables(
-        batch, text_col, id_col, gen, f"{index_path}/postings/batch={name}"
+        batch, text_col, id_col, gen,
+        bm.batch_path(index_path, "postings", name),
     )
     # tombstones for delete keys NOT re-uploaded this tick (two rows
     # for one doc at the same generation would break latest-gen-wins)
@@ -846,20 +658,19 @@ def text_index_apply(
     try:
         # one probe against the committed live state covers both legs:
         # superseded = live docs touched by EITHER set; n/l deltas
-        # come from the same combined aggregate (see _tindex_delta's
-        # crash/replay reasoning — unchanged here, still meta-last)
+        # come from the same combined aggregate
         n_super, n_delta, l_delta = _tindex_delta(
             spark, index_path, doclen, meta
         )
         doclen.write.mode("overwrite").parquet(
-            f"{index_path}/doclen/batch={name}"
+            bm.batch_path(index_path, "doclen", name)
         )
-        _tindex_commit(
-            spark, index_path, meta, gen,
-            int(meta["superseded"]) + n_super,
-            int(meta["n_live"]) + n_delta,
-            int(meta["l_live"]) + l_delta,
+        bm.commit(
+            spark, index_path, TEXT_INDEX, meta, gen,
             add={"postings": [name], "doclen": [name]},
+            superseded=int(meta["superseded"]) + n_super,
+            n_live=int(meta["n_live"]) + n_delta,
+            l_live=int(meta["l_live"]) + l_delta,
         )
     finally:
         doclen.unpersist()
@@ -882,11 +693,10 @@ def text_index_query(
     query batch."""
     from pyspark.sql import Window
 
-    # READ path: no recovery/pruning here — a query racing an
-    # in-flight append must not delete the writer's pre-commit batch
-    # dirs.  The manifest read in meta IS the reader's snapshot:
-    # staged/unlisted dirs are invisible by construction.
-    meta = _tindex_read_meta(spark, index_path)
+    # READ path: the manifest read here IS the reader's snapshot;
+    # staged/unlisted dirs are invisible by construction, and nothing
+    # is renamed or pruned (a racing writer's pre-commit dirs survive)
+    meta = bm.read_meta(spark, index_path, TEXT_INDEX)
     postings, doclen = _tindex_live(spark, index_path, meta)
     n, l = int(meta["n_live"]), int(meta["l_live"])
     scale = _idf_scale(n)
@@ -927,53 +737,33 @@ def text_index_query(
 def text_index_compact(spark, index_path: str) -> dict:
     """Fold the manifest's generations into one compacted batch and
     drop superseded/tombstoned rows; query results are unchanged
-    (unit-pinned).  With the manifest there are NO directory swaps:
-    the compacted batch is written as a new (unlisted, invisible)
-    dir, the meta rename atomically REPLACES the manifest with it,
-    and the old batch dirs become unlisted debris that this writer —
-    or any later writer's recovery — garbage-collects.  A crash
-    anywhere leaves the old manifest fully intact (the r5 advisor's
-    swap-ordering hazard class is gone structurally).  Compaction
-    claims a generation like every other writer, so it also cannot
-    race an append."""
-    from gpt_rag_ingestion_spark.operators.upsert import _fs_delete
-
-    _tindex_recover(spark, index_path)
-    meta = _tindex_read_meta(spark, index_path)
-    gen = int(meta["gen"]) + 1
-    name = f"compacted__g{gen}"
+    (unit-pinned).  The compacted batch is written as a new unlisted
+    dir and one commit lists it in place of every old batch; a crash
+    anywhere leaves the old manifest intact.  Compaction claims a
+    generation like every other writer, so it cannot race an append."""
+    meta, gen, name = bm.begin(spark, index_path, TEXT_INDEX, "compacted")
     postings, doclen = _tindex_live(spark, index_path, meta)
     out = {}
     for sub, df in (("postings", postings), ("doclen", doclen)):
-        df.write.mode("overwrite").parquet(
-            f"{index_path}/{sub}/batch={name}"
-        )
+        df.write.mode("overwrite").parquet(bm.batch_path(index_path, sub, name))
         out[sub] = int(
-            spark.read.parquet(f"{index_path}/{sub}/batch={name}").count()
+            spark.read.parquet(bm.batch_path(index_path, sub, name)).count()
         )
-    old_names = {
-        sub: list(meta["batches"][sub]) for sub in _TEXT_INDEX_SUBS
-    }
-    _tindex_commit(
-        spark, index_path, meta, gen, 0, out["doclen"],
-        int(meta["l_live"]),
+    bm.commit(
+        spark, index_path, TEXT_INDEX, meta, gen,
         add={"postings": [name], "doclen": [name]},
-        replace=True,
+        remove=meta["batches"],
+        superseded=0, n_live=out["doclen"], l_live=int(meta["l_live"]),
     )
-    # committed: the pre-compact dirs are unlisted with gen <= gen —
-    # collect them now rather than leaving them to the next writer
-    for sub, names in old_names.items():
-        for n in names:
-            _fs_delete(spark, f"{index_path}/{sub}/batch={n}")
     return out
 
 
 def text_index_maybe_compact(
     spark, index_path: str, dead_ratio: float = 0.2, max_dead: int = 100_000
 ) -> dict:
-    """Counter-driven compaction trigger (one meta-row read per tick
-    — the trigger-family contract)."""
-    meta = _tindex_read_meta(spark, index_path)
+    """Counter-driven compaction trigger (one meta read per tick — the
+    trigger-family contract)."""
+    meta = bm.read_meta(spark, index_path, TEXT_INDEX)
     superseded = int(meta["superseded"])
     n_live = max(int(meta["n_live"]), 1)
     if superseded > max_dead or superseded / n_live > dead_ratio:

@@ -25,11 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from gpt_rag_ingestion_spark.embeddings import embed_text_deterministic
-from gpt_rag_ingestion_spark.operators.upsert import (
-    _fs_delete,
-    _fs_exists,
-    _fs_try_rename,
-)
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
 
 
 def _dot(a, b):
@@ -960,6 +956,24 @@ def ivfpq_ann(
 # Every other ANN entry point in this module refits per call — fine for
 # a one-shot query, wrong for a living 100 TB corpus where the index
 # outlives any single job.
+#
+# Both persisted ANN indexes (IVF here, IVFPQ below) are batch-manifest
+# stores (operators/batch_manifest): the model tables (centroids, and
+# IVFPQ's codebooks) and the cell-partitioned postings
+# (``postings/batch=<label>__g<gen>/cell=<c>/``) are listed sub-tables,
+# so a rebuild and a compaction are each ONE meta commit.  The IVF meta
+# also carries the drift signal: per-batch ``stats`` ({label:
+# {n_vectors, mean_assign_sim}}) and the build ``baseline``.
+
+IVF_INDEX = bm.Store(
+    subs=("centroids", "postings"), build="ivf_index_build",
+    retired=("stats", "baseline"),
+)
+IVFPQ_INDEX = bm.Store(
+    subs=("centroids", "codebooks", "postings"), build="ivfpq_index_build"
+)
+_IVF_POSTINGS = "corpus_id long, cv array<double>, cell int"
+_IVFPQ_POSTINGS = "corpus_id long, codes array<int>, cell int"
 
 
 def ivf_index_build(
@@ -972,59 +986,64 @@ def ivf_index_build(
     vec_col: str = "embedding",
     batch_label: str = "build",
 ) -> dict:
-    """Build a persisted IVF index: centroids (parquet, one row per
-    centroid) + postings laid out as ``postings/batch=L/cell=N/``
+    """Build a persisted IVF index: centroids (one row per centroid) +
+    postings laid out as ``postings/batch=<label>__g<gen>/cell=N/``
     parquet partitions.  The cell-partitioned layout is the point at
     scale — a probe of p cells out of C reads p/C of the data via
     partition PRUNING, no index-wide scan, no shuffle at query time
     beyond the cogroup.  A REBUILD at the same path (the
-    ``ivf_needs_refit`` remedy) replaces postings/stats/baseline
-    wholesale — stale cells assigned under the old centroids must not
-    survive.  The build batch's mean top-1 centroid similarity is
-    persisted to ``baseline`` as the drift reference.  ``batch_label``
-    names the build batch's postings/stats directories — a streaming
-    build batch passes its batch id so a foreachBatch RETRY (which
-    takes the append path, centroids now existing) overwrites the SAME
-    directory instead of duplicating the build's vectors."""
+    ``ivf_needs_refit`` remedy) commits the new centroids, postings,
+    stats and baseline and unlists every old batch in one meta rename
+    — stale cells assigned under the old centroids never survive, and
+    a crash leaves the old index whole.  The build batch's mean top-1
+    centroid similarity is the ``baseline`` drift reference.
+    ``batch_label`` names the build batch — a streaming build batch
+    passes its batch id so a foreachBatch RETRY (which takes the
+    append path, the index now existing) replaces the SAME batch
+    instead of duplicating the build's vectors."""
     spark = corpus.sparkSession
     C = fit_spherical_centroids(
         corpus, n_centroids, kmeans_iters, fit_sample, id_col, vec_col
     )
-    # wipe any previous generation BEFORE the new centroids land: old
-    # postings/stats/baseline are keyed to the old centroid set
-    _fs_delete(spark, f"{index_path}/postings")
-    _fs_delete(spark, f"{index_path}/stats")
-    _fs_delete(spark, f"{index_path}/baseline")
+    meta, gen, name = bm.begin_build(spark, index_path, IVF_INDEX, batch_label)
     cent_rows = [
         (int(j), [float(x) for x in C[j]]) for j in range(len(C))
     ]
     spark.createDataFrame(
         cent_rows, "centroid_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
-    n = _ivf_append(corpus, index_path, C, batch_label, id_col, vec_col)
-    spark.createDataFrame(
-        [(batch_label, n["mean_assign_sim"])],
-        "batch string, mean_assign_sim double",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/baseline")
-    return n
+    ).coalesce(1).write.mode("overwrite").parquet(
+        bm.batch_path(index_path, "centroids", name)
+    )
+    row = _ivf_assign_write(
+        corpus, C, bm.batch_path(index_path, "postings", name), id_col, vec_col
+    )
+    bm.commit(
+        spark, index_path, IVF_INDEX, meta, gen,
+        add={"centroids": [name], "postings": [name] if row["n_vectors"] else []},
+        remove=meta["batches"] if meta else None,
+        stats={batch_label: row} if row["n_vectors"] else {},
+        baseline={"batch": batch_label, "mean_assign_sim": row["mean_assign_sim"]},
+    )
+    return {"batch": batch_label, **row}
 
 
-def _ivf_load_centroids(spark, index_path: str):
+def _ivf_load_centroids(spark, index_path: str, meta):
     rows = (
-        spark.read.parquet(f"{index_path}/centroids")
+        bm.read_batches(
+            spark, index_path, "centroids", meta["batches"]["centroids"],
+            "centroid_id int, centroid array<double>",
+        )
         .orderBy("centroid_id")
         .collect()
     )
     return np.vstack([np.asarray(r["centroid"], dtype="float64") for r in rows])
 
 
-def _ivf_append(vectors, index_path, C, batch_label, id_col, vec_col) -> dict:
-    """Assign + write one batch.  IDEMPOTENT per batch_label: postings
-    land under ``postings/batch=<label>/`` and stats under
-    ``stats/batch=<label>/``, each written with overwrite — a retried
-    micro-batch (foreachBatch is at-least-once) replaces its own
-    directory instead of double-appending, which is what makes the
-    streaming maintainer effectively exactly-once."""
+def _ivf_assign_write(vectors, C, postings_dir, id_col, vec_col) -> dict:
+    """Assign one batch to the centroids ``C`` and write its
+    cell-partitioned postings to ``postings_dir`` (unlisted until the
+    caller's commit).  Returns {n_vectors, mean_assign_sim}; an empty
+    batch writes nothing."""
     spark = vectors.sparkSession
     b_c = spark.sparkContext.broadcast(C)
 
@@ -1054,30 +1073,16 @@ def _ivf_append(vectors, index_path, C, batch_label, id_col, vec_col) -> dict:
             F.avg("sim").alias("mean_assign_sim"),
         ).first()
         if stats["n_vectors"] == 0:
-            # an empty batch must not overwrite (= destroy) whatever a
-            # previous run wrote under this label, and avg(sim) is null
-            return {
-                "batch": batch_label,
-                "n_vectors": 0,
-                "mean_assign_sim": None,
-            }
+            return {"n_vectors": 0, "mean_assign_sim": None}
         assigned.select("corpus_id", "cv", "cell").write.partitionBy("cell").mode(
             "overwrite"
-        ).parquet(f"{index_path}/postings/batch={batch_label}")
+        ).parquet(postings_dir)
     finally:
         assigned.unpersist()
-    row = {
-        "batch": batch_label,
+    return {
         "n_vectors": int(stats["n_vectors"]),
         "mean_assign_sim": float(stats["mean_assign_sim"]),
     }
-    spark.createDataFrame(
-        [(row["n_vectors"], row["mean_assign_sim"])],
-        "n_vectors long, mean_assign_sim double",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{index_path}/stats/batch={batch_label}"
-    )
-    return row
 
 
 def ivf_index_append(
@@ -1088,17 +1093,36 @@ def ivf_index_append(
     vec_col: str = "embedding",
 ) -> dict:
     """Incremental maintenance: assign a new batch to the EXISTING
-    centroids and append its cell partitions — O(batch), never O(index),
-    no refit, readers unaffected (parquet append into cell dirs).
-    The returned/persisted ``mean_assign_sim`` tracks drift: when fresh
-    batches assign markedly worse than the build baseline, the data has
-    moved and the index wants a rebuild (``ivf_needs_refit``)."""
+    centroids and commit its cell partitions — O(batch), never
+    O(index), no refit, readers unaffected (they see the batch once
+    the manifest lists it).  IDEMPOTENT per ``batch_label``: the commit
+    unlists any earlier batch of the same label, so a retried
+    micro-batch (foreachBatch is at-least-once) replaces itself instead
+    of double-appending.  The batch's ``mean_assign_sim`` lands in the
+    meta stats and tracks drift: when fresh batches assign markedly
+    worse than the build baseline, the data has moved and the index
+    wants a rebuild (``ivf_needs_refit``)."""
     from gpt_rag_ingestion_spark.session import ensure_importable
 
     ensure_importable(vectors)
-    _ivf_recover(vectors.sparkSession, index_path)
-    C = _ivf_load_centroids(vectors.sparkSession, index_path)
-    return _ivf_append(vectors, index_path, C, batch_label, id_col, vec_col)
+    spark = vectors.sparkSession
+    meta, gen, name = bm.begin(spark, index_path, IVF_INDEX, batch_label)
+    C = _ivf_load_centroids(spark, index_path, meta)
+    row = _ivf_assign_write(
+        vectors, C, bm.batch_path(index_path, "postings", name), id_col, vec_col
+    )
+    if row["n_vectors"]:  # an empty batch must not replace its label's rows
+        bm.commit(
+            spark, index_path, IVF_INDEX, meta, gen,
+            add={"postings": [name]},
+            remove={
+                "postings": bm.same_label(
+                    meta["batches"]["postings"], batch_label
+                )
+            },
+            stats={**meta["stats"], batch_label: row},
+        )
+    return {"batch": batch_label, **row}
 
 
 def ivf_index_query(
@@ -1115,23 +1139,13 @@ def ivf_index_query(
     the cell-partitioned layout that is directory-level partition
     pruning, so a 2-of-16 probe reads ~1/8th of the postings.  Exact
     cosine + global top-k inside the probed cells (same cogrouped tail
-    as ivf_ann).
-
-    Readers NEVER mutate the index: a query that lands inside a
-    compactor's swap window (``postings`` renamed away, replacement not
-    yet in place) falls back to READING ``postings__old`` — it does not
-    rename it back, which could otherwise interleave with the
-    compactor's staging→postings rename and nest a double-generation
-    layout.  Swap recovery runs only from the writers
-    (append/compact) under the single-writer assumption.  The fallback
-    NARROWS the race window rather than closing it (the exists-check
-    and the scan are not atomic): a scan overlapping the compactor's
-    final renames can still see FileNotFound and should be retried;
-    snapshot-isolated table formats (Delta/Iceberg) close it fully."""
+    as ivf_ann).  Readers resolve the committed manifest and mutate
+    nothing."""
     from gpt_rag_ingestion_spark.session import ensure_importable
 
     ensure_importable(queries)
-    C = _ivf_load_centroids(spark, index_path)
+    meta = bm.read_meta(spark, index_path, IVF_INDEX)
+    C = _ivf_load_centroids(spark, index_path, meta)
     b_c = spark.sparkContext.broadcast(C)
     probe_udf = probe_udf_factory(b_c, min(n_probe, len(C)))
 
@@ -1144,14 +1158,11 @@ def ivf_index_query(
     probed = [
         int(r["cell"]) for r in qd.select("cell").distinct().collect()
     ]
-    postings_path = f"{index_path}/postings"
-    if not _fs_exists(spark, postings_path) and _fs_exists(
-        spark, f"{index_path}/postings__old"
-    ):
-        # mid-swap: read the previous generation, mutate nothing
-        postings_path = f"{index_path}/postings__old"
     postings = (
-        spark.read.parquet(postings_path)
+        bm.read_batches(
+            spark, index_path, "postings", meta["batches"]["postings"],
+            _IVF_POSTINGS,
+        )
         .filter(F.col("cell").isin(probed))
         .withColumn("cell", F.col("cell").cast("long"))
         .select("corpus_id", "cv", "cell")
@@ -1160,130 +1171,89 @@ def ivf_index_query(
 
 
 def ivf_needs_refit(spark, index_path: str, tolerance: float = 0.05) -> bool:
-    """Refit signal: some appended batch's mean assignment similarity
-    fell more than ``tolerance`` below the build baseline (the
-    conservative min over appends — parquet row order isn't load
-    order).  An index with no readable baseline — a crash between the
-    centroid write and the build batch leaves stats/baseline absent
-    entirely — reports True (rebuild) instead of crashing the
+    """Refit signal from the meta alone (no Spark job): some appended
+    batch's mean assignment similarity fell more than ``tolerance``
+    below the build baseline (the conservative min over appends).  An
+    index with no committed manifest or no baseline similarity (an
+    empty build) reports True (rebuild) instead of crashing the
     monitor."""
-    if not _fs_exists(spark, f"{index_path}/baseline"):
+    if not bm.exists(spark, index_path, IVF_INDEX):
         return True
-    base_row = spark.read.parquet(f"{index_path}/baseline").first()
-    if base_row is None:
+    meta = bm.read_meta(spark, index_path, IVF_INDEX)
+    base = meta["baseline"]
+    if base["mean_assign_sim"] is None:
         return True
-    base, base_label = base_row["mean_assign_sim"], base_row["batch"]
-    if not _fs_exists(spark, f"{index_path}/stats"):
-        return True
-    stats = spark.read.parquet(f"{index_path}/stats").collect()
     appended = [
-        r["mean_assign_sim"]
-        for r in stats
-        if r["batch"] != base_label and r["mean_assign_sim"] is not None
+        s["mean_assign_sim"]
+        for label, s in meta["stats"].items()
+        if label != base["batch"]
     ]
     if not appended:
         return False
-    return min(appended) < base - tolerance
+    return min(appended) < base["mean_assign_sim"] - tolerance
 
 
-def _ivf_recover(spark, index_path: str) -> None:
-    """Finish an interrupted postings swap: if ``postings`` is missing
-    and ``postings__old`` exists, the crash happened between the two
-    renames — restore the old generation.  If both exist, the swap
-    completed and ``__old`` is garbage (same contract as
-    operators/upsert).
-
-    WRITER-only (append/compact, single-writer assumption): a reader
-    running this during a live compactor's swap window would rename the
-    old generation back and collide with the compactor's
-    staging→postings rename; readers instead fall back to reading
-    ``postings__old`` (see ivf_index_query)."""
-    postings = f"{index_path}/postings"
-    old = f"{index_path}/postings__old"
-    if _fs_exists(spark, old):
-        if _fs_exists(spark, postings):
-            _fs_delete(spark, old)
-        else:
-            _fs_try_rename(spark, old, postings)
+def _compact_postings(spark, index_path, store, schema, label) -> dict:
+    """Fold the listed postings batches into ONE cell-partitioned batch
+    — the index's OPTIMIZE.  Hourly micro-batch appends write a file
+    set per (batch, cell); at 1024 cells that is ~25k files/day, and
+    every probe pays a parquet footer fetch per file.  One read → one
+    partitionBy(cell) write restores O(cells) files while queries keep
+    the same pruned layout.  The folded batch lands unlisted and one
+    commit lists it in place of the old ones; the model tables, stats
+    and drift baseline are untouched — compaction moves bytes, not
+    meaning."""
+    meta, gen, name = bm.begin(spark, index_path, store, label)
+    names = meta["batches"]["postings"]
+    path = bm.batch_path(index_path, "postings", name)
+    bm.read_batches(spark, index_path, "postings", names, schema).write.partitionBy(
+        "cell"
+    ).mode("overwrite").parquet(path)
+    n = int(spark.read.parquet(path).count())
+    bm.commit(
+        spark, index_path, store, meta, gen,
+        add={"postings": [name]}, remove={"postings": names},
+    )
+    return {"n_vectors": n, "label": label}
 
 
 def ivf_index_compact(spark, index_path: str, label: str = "compacted") -> dict:
-    """Consolidate the ``batch=...`` postings generations left by
-    streaming appends into ONE generation — the index's OPTIMIZE.
-    Hourly micro-batch appends write a file set per (batch, cell); at
-    1024 cells that is ~25k files/day, and every probe pays a parquet
-    footer fetch per file.  One read → one partitionBy(cell) write
-    restores O(cells) files while queries keep the same pruned layout.
-
-    Crash-safe swap (the upsert contract): the consolidated generation
-    stages OUTSIDE ``postings/``, then postings→postings__old,
-    staging→postings, delete __old; ``_ivf_recover`` (run by the
-    writers append/compact only — readers fall back to
-    ``postings__old`` without renaming) finishes an interrupted swap
-    from either side.  Stats history and the drift baseline are untouched —
-    compaction moves bytes, not meaning."""
-    _ivf_recover(spark, index_path)
-    postings = f"{index_path}/postings"
-    staging = f"{index_path}/postings__staging"
-    old = f"{index_path}/postings__old"
-    existing = spark.read.parquet(postings).select("corpus_id", "cv", "cell")
-    n_before = int(existing.count())
-    _fs_delete(spark, staging)
-    existing.write.partitionBy("cell").mode("overwrite").parquet(
-        f"{staging}/batch={label}"
-    )
-    _fs_delete(spark, old)
-    _fs_try_rename(spark, postings, old)
-    _fs_try_rename(spark, staging, postings)
-    _fs_delete(spark, old)
-    spark.catalog.refreshByPath(postings)
-    return {"n_vectors": n_before, "label": label}
+    """OPTIMIZE for the IVF postings (see ``_compact_postings``)."""
+    return _compact_postings(spark, index_path, IVF_INDEX, _IVF_POSTINGS, label)
 
 
-def count_batch_dirs(spark, dir_path: str) -> int:
-    """Number of ``batch=...`` generations under a batched directory —
-    the fragmentation signal the compaction triggers read.  One
-    FileSystem listStatus, no Spark job."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(dir_path)
-    fs = p.getFileSystem(hconf)
-    if not fs.exists(p):
-        return 0
-    return sum(
-        1
-        for st in fs.listStatus(p)
-        if st.isDirectory() and st.getPath().getName().startswith("batch=")
-    )
+def _maybe_compact_postings(spark, index_path, store, max_fragments, compact):
+    frags = len(bm.read_meta(spark, index_path, store)["batches"]["postings"])
+    if frags > max_fragments:
+        out = compact(spark, index_path)
+        return {"compacted": True, "fragments_before": frags, **out}
+    return {"compacted": False, "fragments": frags}
 
 
 def ivf_index_maybe_compact(
     spark, index_path: str, max_fragments: int = 16
 ) -> dict:
     """Compaction TRIGGER for the persisted IVF index, cheap enough for
-    every foreachBatch tick (one directory listing): compact when the
-    postings hold more than ``max_fragments`` batch generations.  Each
-    generation multiplies the per-probe parquet-footer fetches by one
-    file set per (batch, cell) — the trigger bounds that at
-    max_fragments x cells while streaming appends keep landing.
-    Query results are unchanged across the compact (unit-pinned)."""
-    frags = count_batch_dirs(spark, f"{index_path}/postings")
-    if frags > max_fragments:
-        out = ivf_index_compact(spark, index_path)
-        return {"compacted": True, "fragments_before": frags, **out}
-    return {"compacted": False, "fragments": frags}
+    every foreachBatch tick (one meta read, no listing, no Spark job):
+    compact when the manifest lists more than ``max_fragments``
+    postings batches.  Each batch multiplies the per-probe
+    parquet-footer fetches by one file set per (batch, cell) — the
+    trigger bounds that at max_fragments x cells while streaming
+    appends keep landing.  Query results are unchanged across the
+    compact (unit-pinned)."""
+    return _maybe_compact_postings(
+        spark, index_path, IVF_INDEX, max_fragments, ivf_index_compact
+    )
 
 
 def ivfpq_index_maybe_compact(
     spark, index_path: str, max_fragments: int = 16
 ) -> dict:
-    """IVFPQ twin of ``ivf_index_maybe_compact`` — same directory-count
+    """IVFPQ twin of ``ivf_index_maybe_compact`` — same batch-count
     trigger over the code postings."""
-    frags = count_batch_dirs(spark, f"{index_path}/postings")
-    if frags > max_fragments:
-        out = ivfpq_index_compact(spark, index_path)
-        return {"compacted": True, "fragments_before": frags, **out}
-    return {"compacted": False, "fragments": frags}
+    return _maybe_compact_postings(
+        spark, index_path, IVFPQ_INDEX, max_fragments, ivfpq_index_compact
+    )
 
 
 # ------------------------------------------------------------ IVFPQ internals
@@ -1385,11 +1355,12 @@ def ivfpq_index_build(
     vec_col: str = "embedding",
 ) -> dict:
     """Build the persisted IVFPQ index: fit the coarse quantizer +
-    residual codebooks on a bounded sample, persist them as parquet
-    model tables (centroids: (cell, c); codebooks: (subspace, code,
-    b)), and encode the corpus into cell-partitioned CODE postings —
-    the same batch=<label>/cell=<c> layout as the raw-vector IVF index,
-    so queries prune directories identically."""
+    residual codebooks on a bounded sample, persist them as model
+    sub-tables (centroids: (cell, c); codebooks: (subspace, code, b)),
+    and encode the corpus into cell-partitioned CODE postings — the
+    same batch=<label>__g<gen>/cell=<c> layout as the raw-vector IVF
+    index, so queries prune directories identically.  Model and
+    postings commit together; a rebuild unlists every old batch."""
     from gpt_rag_ingestion_spark.session import ensure_importable
 
     ensure_importable(corpus)
@@ -1397,9 +1368,12 @@ def ivfpq_index_build(
     C, books = _fit_ivfpq_model(
         corpus, n_cells, n_subspaces, pq_centroids, fit_sample, id_col, vec_col
     )
+    meta, gen, name = bm.begin_build(spark, index_path, IVFPQ_INDEX, "build")
     spark.createDataFrame(
         [(i, C[i].tolist()) for i in range(len(C))], "cell int, c array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
+    ).coalesce(1).write.mode("overwrite").parquet(
+        bm.batch_path(index_path, "centroids", name)
+    )
     spark.createDataFrame(
         [
             (s, j, books[s][j].tolist())
@@ -1407,26 +1381,37 @@ def ivfpq_index_build(
             for j in range(books.shape[1])
         ],
         "subspace int, code int, b array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/codebooks")
-    _fs_delete(spark, f"{index_path}/postings")
+    ).coalesce(1).write.mode("overwrite").parquet(
+        bm.batch_path(index_path, "codebooks", name)
+    )
     b_model = spark.sparkContext.broadcast((C, books))
     enc = _ivfpq_encode(corpus, b_model, id_col, vec_col).persist()
     try:
         n = int(enc.count())  # one materialization serves count + write
         enc.write.partitionBy("cell").mode("overwrite").parquet(
-            f"{index_path}/postings/batch=build"
+            bm.batch_path(index_path, "postings", name)
         )
     finally:
         enc.unpersist()
+    bm.commit(
+        spark, index_path, IVFPQ_INDEX, meta, gen,
+        add={sub: [name] for sub in IVFPQ_INDEX.subs},
+        remove=meta["batches"] if meta else None,
+    )
     return {"n_vectors": n, "n_cells": int(len(C))}
 
 
-def _ivfpq_load_model(spark, index_path: str):
-    cent = spark.read.parquet(f"{index_path}/centroids").collect()
+def _ivfpq_load_model(spark, index_path: str, meta):
+    def read(sub, schema):
+        return bm.read_batches(
+            spark, index_path, sub, meta["batches"][sub], schema
+        ).collect()
+
+    cent = read("centroids", "cell int, c array<double>")
     C = np.zeros((len(cent), len(cent[0]["c"])))
     for r in cent:
         C[r["cell"]] = r["c"]
-    rows = spark.read.parquet(f"{index_path}/codebooks").collect()
+    rows = read("codebooks", "subspace int, code int, b array<double>")
     n_sub = max(r["subspace"] for r in rows) + 1
     m = max(r["code"] for r in rows) + 1
     d_sub = len(rows[0]["b"])
@@ -1444,16 +1429,16 @@ def ivfpq_index_append(
     vec_col: str = "embedding",
 ) -> dict:
     """O(batch) incremental maintenance: encode against the PERSISTED
-    model (no refit) and write the batch's own postings directory —
-    overwrite per label, so an at-least-once retry replaces rather than
-    double-appends (the streaming-maintainer contract of
-    ivf_index_append)."""
+    model (no refit) and commit the batch's own postings — the commit
+    unlists any earlier batch of the same label, so an at-least-once
+    retry replaces rather than double-appends (the streaming-maintainer
+    contract of ivf_index_append)."""
     from gpt_rag_ingestion_spark.session import ensure_importable
 
     ensure_importable(vectors)
     spark = vectors.sparkSession
-    _ivf_recover(spark, index_path)
-    model = _ivfpq_load_model(spark, index_path)
+    meta, gen, name = bm.begin(spark, index_path, IVFPQ_INDEX, batch_label)
+    model = _ivfpq_load_model(spark, index_path, meta)
     b_model = spark.sparkContext.broadcast(model)
     enc = _ivfpq_encode(vectors, b_model, id_col, vec_col).persist()
     try:
@@ -1461,10 +1446,17 @@ def ivfpq_index_append(
         if n == 0:
             return {"batch": batch_label, "n_vectors": 0}
         enc.write.partitionBy("cell").mode("overwrite").parquet(
-            f"{index_path}/postings/batch={batch_label}"
+            bm.batch_path(index_path, "postings", name)
         )
     finally:
         enc.unpersist()
+    bm.commit(
+        spark, index_path, IVFPQ_INDEX, meta, gen,
+        add={"postings": [name]},
+        remove={
+            "postings": bm.same_label(meta["batches"]["postings"], batch_label)
+        },
+    )
     return {"batch": batch_label, "n_vectors": int(n)}
 
 
@@ -1486,14 +1478,13 @@ def ivfpq_index_query(
     when ``refine_with`` (the raw-vector corpus table, the system of
     record) is given — exactly re-rank the k·refine_factor shortlist.
     Without ``refine_with`` the ADC ranking itself is returned
-    (query_id, corpus_id, rank).  Readers never mutate the index (the
-    ivf_index_query contract: mid-swap they fall back to reading
-    ``postings__old``; the fallback narrows the race window, it does
-    not close it — see ivf_index_query)."""
+    (query_id, corpus_id, rank).  Readers resolve the committed
+    manifest and mutate nothing."""
     from gpt_rag_ingestion_spark.session import ensure_importable
 
     ensure_importable(queries)
-    model = _ivfpq_load_model(spark, index_path)
+    meta = bm.read_meta(spark, index_path, IVFPQ_INDEX)
+    model = _ivfpq_load_model(spark, index_path, meta)
     C, _books = model
     b_model = spark.sparkContext.broadcast(model)
     probe_udf = probe_udf_factory(
@@ -1505,13 +1496,11 @@ def ivfpq_index_query(
         F.explode(probe_udf(F.col(vec_col))).alias("cell"),
     ).localCheckpoint()
     probed = [int(r["cell"]) for r in qd.select("cell").distinct().collect()]
-    postings_path = f"{index_path}/postings"
-    if not _fs_exists(spark, postings_path) and _fs_exists(
-        spark, f"{index_path}/postings__old"
-    ):
-        postings_path = f"{index_path}/postings__old"
     enc = (
-        spark.read.parquet(postings_path)
+        bm.read_batches(
+            spark, index_path, "postings", meta["batches"]["postings"],
+            _IVFPQ_POSTINGS,
+        )
         .filter(F.col("cell").isin(probed))
         .select("corpus_id", "codes", F.col("cell").cast("long").alias("cell"))
     )
@@ -1577,65 +1566,13 @@ def _ivfpq_adc_rank(enc, qd, b_model, k):
     )
 
 
-def _recover_swap(spark, live_path: str) -> None:
-    """Generic writer-side swap recovery for a ``<dir>``/``<dir>__old``
-    pair (the _ivf_recover contract for any batched directory)."""
-    old = f"{live_path}__old"
-    if _fs_exists(spark, old):
-        if _fs_exists(spark, live_path):
-            _fs_delete(spark, old)
-        else:
-            _fs_try_rename(spark, old, live_path)
-
-
-def compact_batched_dir(
-    spark, dir_path: str, partition_by: str | None = None,
-    label: str = "compacted",
-) -> int:
-    """Consolidate a directory of ``batch=<label>`` generations into
-    ONE generation with the crash-safe rename protocol shared by the
-    persisted indexes: stage outside the live dir, live→__old,
-    staging→live, drop __old.  Writers run ``_recover_swap`` first;
-    readers fall back to ``__old`` without renaming.  Returns the row
-    count moved."""
-    _recover_swap(spark, dir_path)
-    df = spark.read.parquet(dir_path).drop("batch")
-    n = int(df.count())
-    staging, old = f"{dir_path}__staging", f"{dir_path}__old"
-    _fs_delete(spark, staging)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(f"{staging}/batch={label}")
-    _fs_delete(spark, old)
-    _fs_try_rename(spark, dir_path, old)
-    _fs_try_rename(spark, staging, dir_path)
-    _fs_delete(spark, old)
-    spark.catalog.refreshByPath(dir_path)
-    return n
-
-
-def read_batched_dir(spark, dir_path: str):
-    """Read a batched directory, falling back to the ``__old``
-    generation during a compactor's swap window — readers never rename
-    (the ivf_index_query reader contract; like it, the fallback narrows
-    the race window rather than closing it — retry on FileNotFound, or
-    use a snapshot-isolated table format)."""
-    if not _fs_exists(spark, dir_path) and _fs_exists(
-        spark, f"{dir_path}__old"
-    ):
-        dir_path = f"{dir_path}__old"
-    return spark.read.parquet(dir_path)
-
-
 def ivfpq_index_compact(spark, index_path: str, label: str = "compacted") -> dict:
-    """OPTIMIZE for the IVFPQ code postings: consolidate the per-batch
-    generations into one cell-partitioned generation (same pruned
-    layout, O(cells) files instead of O(batches x cells))."""
-    n = compact_batched_dir(
-        spark, f"{index_path}/postings", partition_by="cell", label=label
+    """OPTIMIZE for the IVFPQ code postings: fold the listed batches
+    into one cell-partitioned batch (same pruned layout, O(cells) files
+    instead of O(batches x cells); see ``_compact_postings``)."""
+    return _compact_postings(
+        spark, index_path, IVFPQ_INDEX, _IVFPQ_POSTINGS, label
     )
-    return {"n_vectors": n, "label": label}
 
 
 def filtered_knn(

@@ -316,11 +316,13 @@ def run_ingest_job(
     # run and the replayed apply supersedes its own docs)
     tindex_bootstrap = False
     if text_index_path is not None and n_candidates > 0:
+        from gpt_rag_ingestion_spark.operators import batch_manifest as bm
         from gpt_rag_ingestion_spark.operators.search import (
+            TEXT_INDEX,
             text_index_apply,
             text_index_maybe_compact,
         )
-        if _fs_exists(spark, f"{text_index_path}/meta"):
+        if bm.exists(spark, text_index_path, TEXT_INDEX):
             with _sp("search_index", run=run_id):
                 old_ids = (
                     chunks_table.join(

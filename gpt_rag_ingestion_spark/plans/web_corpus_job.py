@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpt_rag_ingestion_spark.functions.urls import canonical_url, url_domain
-from gpt_rag_ingestion_spark.operators.dedup import incremental_dedup
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+from gpt_rag_ingestion_spark.operators.dedup import SIDECAR, incremental_dedup
 from gpt_rag_ingestion_spark.operators.ranking import per_key_capped_rank
 from gpt_rag_ingestion_spark.operators.shards import write_training_shards
 from gpt_rag_ingestion_spark.operators.snapshot_table import (
@@ -42,7 +43,6 @@ from gpt_rag_ingestion_spark.operators.snapshot_table import (
     snapshot_merge_upsert,
 )
 from gpt_rag_ingestion_spark.operators.text_analysis import bpe_ish_token_count
-from gpt_rag_ingestion_spark.operators.upsert import _fs_exists
 from gpt_rag_ingestion_spark.plans.ingest_job import _table_exists
 
 
@@ -167,7 +167,7 @@ def run_web_corpus_job(
     candidates = staged.filter(F.col("_fd").isNull()).select(id_col, text_col)
     use_sidecar = False
     if sidecar_path is not None:
-        use_sidecar = _fs_exists(spark, f"{sidecar_path}/meta")
+        use_sidecar = bm.exists(spark, sidecar_path, SIDECAR)
     if use_sidecar:
         from gpt_rag_ingestion_spark.operators.dedup import (
             incremental_dedup_sidecar,
@@ -296,11 +296,12 @@ def run_web_corpus_job(
                 )
         if text_index_path is not None:
             from gpt_rag_ingestion_spark.operators.search import (
+                TEXT_INDEX,
                 text_index_append,
                 text_index_build,
                 text_index_maybe_compact,
             )
-            if _fs_exists(spark, f"{text_index_path}/meta"):
+            if bm.exists(spark, text_index_path, TEXT_INDEX):
                 # replay-idempotent per batch_label (the reference
                 # indexer's upsert of the same docs into its search
                 # index); the counter trigger folds superseded rows

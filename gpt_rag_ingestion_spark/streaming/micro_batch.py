@@ -639,25 +639,27 @@ def run_incremental_ivf(
     (operators/similarity.ivf_index_build/append): the first non-empty
     micro-batch BUILDS the index (centroid fit + cell-partitioned
     postings), every later batch APPENDS against the existing centroids
-    — O(batch) work, plain parquet appends into cell directories, no
-    refit, readers (`ivf_index_query`) never blocked.
+    — O(batch) work, one manifest commit per batch, no refit, readers
+    (`ivf_index_query`) never blocked.
 
     This is the ANN face of the same pattern as the sketch maintainer:
     the corpus stream is consumed once, queries run against the
     maintained structure, and each append's recorded assignment
     similarity feeds the `ivf_needs_refit` drift signal — a living
     index for a corpus that never stops growing.  foreachBatch is
-    at-least-once; the per-batch postings/stats directories are written
-    with overwrite keyed on batch_id (see `_ivf_append`), so a retried
-    batch replaces its own output instead of double-appending —
-    effectively exactly-once.
+    at-least-once; each batch is labeled by its batch_id and its commit
+    unlists any earlier batch of that label (see `ivf_index_append`),
+    so a retried batch replaces its own output instead of
+    double-appending — effectively exactly-once.
 
-    After each append the counter-driven compaction trigger runs
-    (``ivf_index_maybe_compact`` — one directory listing per tick):
-    once more than ``max_fragments`` batch generations accumulate, the
-    postings fold to one generation under the crash-safe swap, bounding
-    per-probe footer fetches while the stream keeps appending."""
+    After each append the compaction trigger runs
+    (``ivf_index_maybe_compact`` — one meta read per tick): once the
+    manifest lists more than ``max_fragments`` postings batches, they
+    fold to one batch in one commit, bounding per-probe footer fetches
+    while the stream keeps appending."""
+    from gpt_rag_ingestion_spark.operators import batch_manifest as bm
     from gpt_rag_ingestion_spark.operators.similarity import (
+        IVF_INDEX,
         ivf_index_append,
         ivf_index_build,
         ivf_index_maybe_compact,
@@ -670,11 +672,11 @@ def run_incremental_ivf(
             return
         # scheme-aware existence check — a driver-local os.path.exists
         # is always False for hdfs://abfss://s3a:// index paths
-        if not _fs_exists(spark, f"{index_path}/centroids"):
+        if not bm.exists(spark, index_path, IVF_INDEX):
             # the build batch is labeled by ITS batch id: a foreachBatch
-            # retry of this batch (centroids now existing) takes the
-            # append path with the same label and overwrites the same
-            # postings directory — idempotent, no build/append split
+            # retry of this batch (the index now existing) takes the
+            # append path with the same label and replaces the same
+            # postings batch — idempotent, no build/append split
             ivf_index_build(
                 batch_df, index_path, n_centroids=n_centroids,
                 batch_label=f"batch-{batch_id}",

@@ -1,7 +1,9 @@
 """Dump .explain('formatted') for every bench headline query into
-plans/r12/<query>_<suffix>.txt (judge evidence for OPTIMIZATION_r12.md).
+plans/<round>/<query>_<suffix>.txt (the plan evidence behind an
+OPTIMIZATION_<round>.md).
 
-Usage: python3 scripts/dump_plans_r12.py before|after [q1,q2,...]
+Usage: python3 scripts/dump_plans.py <round> before|after [q1,q2,...]
+  e.g. python3 scripts/dump_plans.py r13 after q05_regional_revenue
 """
 
 from __future__ import annotations
@@ -24,8 +26,10 @@ HEADLINE = [
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    rnd, suffix = sys.argv[1], sys.argv[2]
+    only = sys.argv[3].split(",") if len(sys.argv) > 3 else None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from pyspark.sql import SparkSession
@@ -34,7 +38,7 @@ def main() -> None:
 
     spark = (
         SparkSession.builder.master("local[4]")
-        .appName("dump-plans-r12")
+        .appName(f"dump-plans-{rnd}")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
@@ -43,7 +47,9 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12")
+    out_dir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
+    )
     os.makedirs(out_dir, exist_ok=True)
     qs = entry_mod.queries()
     names = [h for h in HEADLINE if only is None or h in only]

@@ -1,0 +1,349 @@
+"""One crash suite for the batch-manifest protocol
+(operators/batch_manifest) over the four stores that commit through
+it: the BM25 text index, the dedup sidecar, and the IVF and IVFPQ
+indexes.
+
+Every write op of every store is killed at each of the protocol's
+crash points:
+
+- ``before_claim``: the op's batch dirs are written, no claim taken;
+- ``after_claim``: the generation is claimed, the meta commit never
+  starts;
+- ``meta_rename``: the new manifest is staged and ``meta`` deleted,
+  the rename never happens — the staging file is then the committed
+  manifest.
+
+Each case asserts that (1) answers equal the last committed state
+(the old one for the first two points, the op's result for the
+third), (2) a reader mutates nothing on disk, and (3) replaying the op
+converges to an uncrashed twin.  Base stores and uncrashed twins are
+built once per module and copied per case.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+
+import pytest
+
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+from gpt_rag_ingestion_spark.operators import dedup as D
+from gpt_rag_ingestion_spark.operators import search as X
+from gpt_rag_ingestion_spark.operators import similarity as S
+
+EMB = "/root/testdata/sf0.001/embeddings.parquet"
+
+
+def _rows(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+# ------------------------------------------------------------ text index
+TEXT_BASE = [
+    (1, "apple banana cherry"), (2, "banana cherry date"),
+    (3, "cherry date egg"), (4, "apple egg fig"),
+    (5, "fig grape apple apple"),
+]
+
+
+def _text_setup(spark, root):
+    X.text_index_build(_rows(spark, TEXT_BASE), root)
+    X.text_index_append(
+        _rows(spark, [(2, "stone stone tree banana"), (6, "dog fish apple")]),
+        root, "b1",
+    )
+
+
+def _text_query(spark, root):
+    q = spark.createDataFrame(
+        [("q1", ["apple", "cherry"]), ("q2", ["banana", "fig"]),
+         ("q3", ["kiwi", "stone"])],
+        "query_id string, terms array<string>",
+    )
+    return sorted(tuple(r) for r in X.text_index_query(spark, root, q, k=5).collect())
+
+
+TEXT_OPS = {
+    "build": lambda spark, root: X.text_index_build(
+        _rows(spark, TEXT_BASE + [(7, "apple kiwi")]), root
+    ),
+    "apply": lambda spark, root: X.text_index_apply(
+        _rows(spark, [(3, "kiwi apple cherry")]),
+        spark.createDataFrame([(1,), (3,)], "doc_id long"), root, "t1",
+    ),
+    "delete": lambda spark, root: X.text_index_delete(
+        spark, root, spark.createDataFrame([(4,)], "doc_id long"), "p1"
+    ),
+    "compact": lambda spark, root: X.text_index_compact(spark, root),
+}
+
+# ---------------------------------------------------------- dedup sidecar
+_W = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+
+
+def _doc(i, shift=0):
+    return " ".join(_W[(i + shift + k) % len(_W)] for k in range(8)) + f" tail{i}"
+
+
+SIDE_BASE = [(i, _doc(i)) for i in range(1, 7)]
+
+
+def _side_setup(spark, root):
+    D.dedup_sidecar_build(_rows(spark, SIDE_BASE), root)
+    D.dedup_sidecar_append(
+        _rows(spark, [(1, "one two three four five six"), (7, _doc(7, 3))]),
+        root, "b1",
+    )
+
+
+def _side_query(spark, root):
+    probe = _rows(spark, [
+        (100, _doc(2)), (101, _doc(1)), (102, "one two three four five six"),
+        (103, _doc(3) + " extra"), (104, "nothing alike here at all"),
+        (105, _doc(8, 1)),
+    ])
+    return sorted(tuple(r) for r in D.incremental_dedup_sidecar(probe, root).collect())
+
+
+SIDE_OPS = {
+    "build": lambda spark, root: D.dedup_sidecar_build(
+        _rows(spark, SIDE_BASE + [(8, _doc(8, 1))]), root
+    ),
+    "append": lambda spark, root: D.dedup_sidecar_append(
+        _rows(spark, [(2, "seven eight nine ten"), (8, _doc(8, 1))]), root, "b2"
+    ),
+    "compact": lambda spark, root: D.dedup_sidecar_compact(spark, root),
+}
+
+
+# ------------------------------------------------------------ IVF / IVFPQ
+def _emb(spark, pred):
+    return spark.read.parquet(EMB).filter(pred).select("vec_id", "embedding")
+
+
+def _ivf_setup(spark, root):
+    S.ivf_index_build(_emb(spark, "vec_id < 160"), root, n_centroids=4)
+    S.ivf_index_append(_emb(spark, "vec_id >= 160 AND vec_id < 200"), root, "b1")
+
+
+def _ivf_query(spark, root):
+    q = _emb(spark, "vec_id < 6")
+    return sorted(
+        (r["query_id"], r["corpus_id"], r["rank"])
+        for r in S.ivf_index_query(spark, root, q, n_probe=4, k=3).collect()
+    )
+
+
+IVF_OPS = {
+    "build": lambda spark, root: S.ivf_index_build(
+        _emb(spark, "vec_id < 200"), root, n_centroids=4
+    ),
+    "append": lambda spark, root: S.ivf_index_append(
+        _emb(spark, "vec_id >= 200 AND vec_id < 240"), root, "b2"
+    ),
+    "compact": lambda spark, root: S.ivf_index_compact(spark, root),
+}
+
+
+def _ivfpq_setup(spark, root):
+    S.ivfpq_index_build(
+        _emb(spark, "vec_id < 160"), root, n_cells=4, pq_centroids=16
+    )
+    S.ivfpq_index_append(_emb(spark, "vec_id >= 160 AND vec_id < 200"), root, "b1")
+
+
+def _ivfpq_query(spark, root):
+    q = _emb(spark, "vec_id < 6")
+    return sorted(
+        (r["query_id"], r["corpus_id"], r["rank"])
+        for r in S.ivfpq_index_query(spark, root, q, n_probe=4, k=3).collect()
+    )
+
+
+IVFPQ_OPS = {
+    "build": lambda spark, root: S.ivfpq_index_build(
+        _emb(spark, "vec_id < 200"), root, n_cells=4, pq_centroids=16
+    ),
+    "append": lambda spark, root: S.ivfpq_index_append(
+        _emb(spark, "vec_id >= 200 AND vec_id < 240"), root, "b2"
+    ),
+    "compact": lambda spark, root: S.ivfpq_index_compact(spark, root),
+}
+
+STORES = {
+    "text_index": (_text_setup, _text_query, TEXT_OPS),
+    "sidecar": (_side_setup, _side_query, SIDE_OPS),
+    "ivf": (_ivf_setup, _ivf_query, IVF_OPS),
+    "ivfpq": (_ivfpq_setup, _ivfpq_query, IVFPQ_OPS),
+}
+
+CRASH_POINTS = ("before_claim", "after_claim", "meta_rename")
+
+# The default lane runs the text index's apply at the two crash points
+# with different outcomes (old state kept, staged state committed);
+# every other case runs in the slow lane (about 15 s each).
+_FAST = {("text_index", "apply", "after_claim"),
+         ("text_index", "apply", "meta_rename")}
+CASES = [
+    pytest.param(
+        store, op, point,
+        marks=() if (store, op, point) in _FAST else pytest.mark.slow,
+        id=f"{store}-{op}-{point}",
+    )
+    for store, (_s, _q, ops) in STORES.items()
+    for op in ops
+    for point in CRASH_POINTS
+]
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _raise(*_a, **_kw):
+    raise _Crash("injected crash")
+
+
+def _tree(root):
+    """Every file under ``root`` with its size: a reader's footprint."""
+    out = []
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            out.append((os.path.relpath(p, root), os.path.getsize(p)))
+    return sorted(out)
+
+
+@pytest.fixture(scope="module")
+def base_stores(spark, tmp_path_factory):
+    """One base store per family, and per (store, op) the answers of an
+    uncrashed twin after the op — built lazily, shared by every case."""
+    work = tmp_path_factory.mktemp("manifest-crash")
+    built, twins = {}, {}
+
+    def base(store):
+        if store not in built:
+            root = str(work / f"base-{store}")
+            STORES[store][0](spark, root)
+            built[store] = (root, STORES[store][1](spark, root))
+        return built[store]
+
+    def twin(store, op):
+        if (store, op) not in twins:
+            root = str(work / f"twin-{store}-{op}")
+            shutil.copytree(base(store)[0], root)
+            STORES[store][2][op](spark, root)
+            twins[(store, op)] = STORES[store][1](spark, root)
+        return twins[(store, op)]
+
+    return base, twin
+
+
+@pytest.mark.parametrize("store,op,point", CASES)
+def test_crash_leaves_committed_state_and_replay_converges(
+    spark, tmp_path, monkeypatch, base_stores, store, op, point
+):
+    base, twin = base_stores
+    _setup, query, ops = STORES[store]
+    base_root, before = base(store)
+    after = twin(store, op)
+    layout = {"text_index": X.TEXT_INDEX, "sidecar": D.SIDECAR,
+              "ivf": S.IVF_INDEX, "ivfpq": S.IVFPQ_INDEX}[store]
+
+    root = str(tmp_path / store)
+    shutil.copytree(base_root, root)
+    target = {"before_claim": "claim", "after_claim": "write_meta",
+              "meta_rename": "_fs_try_rename"}[point]
+    with monkeypatch.context() as m:
+        m.setattr(bm, target, _raise)
+        with pytest.raises(_Crash):
+            ops[op](spark, root)
+    if point == "meta_rename":
+        assert not os.path.exists(f"{root}/meta")
+        assert os.path.exists(f"{root}/meta__staging")
+
+    # answers equal the last committed state; the reader (and the
+    # existence check) leave every file as it was
+    footprint = _tree(root)
+    assert bm.exists(spark, root, layout)
+    assert query(spark, root) == (after if point == "meta_rename" else before)
+    assert _tree(root) == footprint
+
+    # the replay converges to the uncrashed twin, with no debris left
+    ops[op](spark, root)
+    assert query(spark, root) == after
+    assert not os.path.exists(f"{root}/meta__staging")
+    meta = bm.read_meta(spark, root, layout)
+    for sub in layout.subs:
+        on_disk = sorted(
+            n[len("batch="):] for n in os.listdir(f"{root}/{sub}")
+            if n.startswith("batch=")
+        )
+        assert on_disk == meta["batches"][sub], sub
+
+
+def _touch(root, *rels):
+    for rel in rels:
+        p = os.path.join(root, rel)
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        with open(p, "wb") as fh:
+            fh.write(b"PAR1")
+
+
+OLD_LAYOUTS = {
+    # the sidecar's parquet meta directory and per-label batch dirs
+    "sidecar": (
+        D.SIDECAR,
+        ("meta/part-00000.parquet", "digests/batch=build/part-00000.parquet"),
+        lambda spark, root: D.incremental_dedup_sidecar(
+            _rows(spark, [(1, "a b c d")]), root
+        ),
+        lambda spark, root: D.dedup_sidecar_build(_rows(spark, SIDE_BASE), root),
+    ),
+    # IVF: bare centroids/postings/stats/baseline, no JSON manifest
+    "ivf": (
+        S.IVF_INDEX,
+        ("centroids/part-00000.parquet",
+         "postings/batch=build/cell=0/part-00000.parquet",
+         "stats/batch=build/part-00000.parquet", "baseline/part-00000.parquet"),
+        lambda spark, root: S.ivf_index_query(spark, root, _emb(spark, "vec_id < 2")),
+        lambda spark, root: S.ivf_index_build(
+            _emb(spark, "vec_id < 40"), root, n_centroids=2
+        ),
+    ),
+    "ivfpq": (
+        S.IVFPQ_INDEX,
+        ("centroids/part-00000.parquet", "codebooks/part-00000.parquet",
+         "postings/batch=build/cell=0/part-00000.parquet"),
+        lambda spark, root: S.ivfpq_index_append(_emb(spark, "vec_id < 2"), root),
+        lambda spark, root: S.ivfpq_index_build(
+            _emb(spark, "vec_id < 40"), root, n_cells=2, pq_centroids=8
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("store", sorted(OLD_LAYOUTS))
+def test_old_layout_is_refused_until_rebuilt(spark, tmp_path, store):
+    """A store in its pre-manifest layout is refused — by the jobs'
+    existence check and by every reader and writer — with a ValueError
+    naming the build to re-run, and nothing on disk changes.  Only
+    that build replaces it."""
+    layout, files, use, build = OLD_LAYOUTS[store]
+    root = str(tmp_path / store)
+    _touch(root, *files)
+    before = _tree(root)
+    with pytest.raises(ValueError, match=layout.build):
+        bm.exists(spark, root, layout)
+    with pytest.raises(ValueError, match=layout.build):
+        use(spark, root)
+    assert _tree(root) == before
+
+    build(spark, root)
+    assert bm.exists(spark, root, layout)
+    meta = bm.read_meta(spark, root, layout)
+    assert sorted(n for n in os.listdir(root) if not n.startswith(".")) == sorted(
+        ["claims", "meta", *layout.subs]
+    )
+    assert all(len(meta["batches"][sub]) == 1 for sub in layout.subs)

@@ -677,7 +677,9 @@ def test_neardup_auto_routes_both_ways(spark):
 # ------------------------------------------------- persisted IVF index
 
 def test_ivf_index_lifecycle(spark, tmp_path):
+    from gpt_rag_ingestion_spark.operators import batch_manifest as bm
     from gpt_rag_ingestion_spark.operators.similarity import (
+        IVF_INDEX,
         ivf_index_append,
         ivf_index_build,
         ivf_index_query,
@@ -735,21 +737,18 @@ def test_ivf_index_lifecycle(spark, tmp_path):
     built2 = ivf_index_build(emb, idx, n_centroids=8)
     assert built2["n_vectors"] == emb.count()
     assert spark.read.parquet(f"{idx}/postings").count() == emb.count()
-    stats = spark.read.parquet(f"{idx}/stats").collect()
-    assert [r["batch"] for r in stats] == ["build"]
+    meta = bm.read_meta(spark, idx, IVF_INDEX)
+    assert list(meta["stats"]) == ["build"]
+    assert meta["baseline"]["batch"] == "build"
 
 
 @pytest.mark.slow
-def test_ivf_index_compact_and_recover(spark, tmp_path):
+def test_ivf_index_compact(spark, tmp_path):
     from gpt_rag_ingestion_spark.operators.similarity import (
         ivf_index_append,
         ivf_index_build,
         ivf_index_compact,
         ivf_index_query,
-    )
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _fs_exists,
-        _fs_try_rename,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -772,58 +771,25 @@ def test_ivf_index_compact_and_recover(spark, tmp_path):
     import os
 
     batches = os.listdir(f"{idx}/postings")
-    assert batches == ["batch=compacted"]
+    assert batches == ["batch=compacted__g3"]
     after = {
         (r["query_id"], r["corpus_id"], r["rank"])
         for r in ivf_index_query(spark, idx, q, n_probe=2, k=5).collect()
     }
     assert after == before
 
-    # crash/swap window: postings renamed away, __old left behind.
-    # A READER answers from the old generation WITHOUT touching the
-    # filesystem (a racing compactor may be mid-swap; a reader that
-    # renamed __old back would collide with its staging->postings
-    # rename and nest a double-generation layout).
-    _fs_try_rename(spark, f"{idx}/postings", f"{idx}/postings__old")
-    assert not _fs_exists(spark, f"{idx}/postings")
-    during = {
-        (r["query_id"], r["corpus_id"], r["rank"])
-        for r in ivf_index_query(spark, idx, q, n_probe=2, k=5).collect()
-    }
-    assert during == before
-    assert not _fs_exists(spark, f"{idx}/postings")      # reader mutated nothing
-    assert _fs_exists(spark, f"{idx}/postings__old")
-
-    # the next WRITER (single-writer assumption) finishes the recovery
-    ivf_index_append(
-        emb.filter("vec_id < 0"), idx, batch_label="noop"
-    )
-    assert _fs_exists(spark, f"{idx}/postings")
-    assert not _fs_exists(spark, f"{idx}/postings__old")
-    recovered = {
-        (r["query_id"], r["corpus_id"], r["rank"])
-        for r in ivf_index_query(spark, idx, q, n_probe=2, k=5).collect()
-    }
-    assert recovered == before
-    assert _fs_exists(spark, f"{idx}/postings")
-    assert not _fs_exists(spark, f"{idx}/postings__old")
-
 
 @pytest.mark.slow
 def test_ivfpq_index_lifecycle(spark, tmp_path):
     """Persisted IVFPQ: codes-only postings (the 16-32x smaller index),
     refit-free append, pruned+refined query matching the per-call
-    operator, retry idempotence, reader fallback during a swap window."""
+    operator, retry idempotence."""
     from gpt_rag_ingestion_spark.operators.similarity import (
         ivfpq_ann,
         ivfpq_index_append,
         ivfpq_index_build,
         ivfpq_index_query,
         quantized_dot_topk,
-    )
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _fs_exists,
-        _fs_try_rename,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -882,22 +848,6 @@ def test_ivfpq_index_lifecycle(spark, tmp_path):
     assert (
         spark.read.parquet(f"{idx}/postings").count() == emb.count() + 10
     )
-
-    # reader fallback mid-swap: no filesystem mutation by the reader
-    before = {
-        (r["query_id"], r["corpus_id"])
-        for r in ivfpq_index_query(spark, idx, q, n_probe=4, k=5).collect()
-    }
-    _fs_try_rename(spark, f"{idx}/postings", f"{idx}/postings__old")
-    during = {
-        (r["query_id"], r["corpus_id"])
-        for r in ivfpq_index_query(spark, idx, q, n_probe=4, k=5).collect()
-    }
-    assert during == before
-    assert not _fs_exists(spark, f"{idx}/postings")
-    # the next writer heals the swap
-    ivfpq_index_append(emb.filter("vec_id < 0"), idx, batch_label="noop")
-    assert _fs_exists(spark, f"{idx}/postings")
 
 
 def test_dedup_sidecar_lifecycle(spark, tmp_path):
@@ -995,7 +945,7 @@ def test_ivfpq_index_compact(spark, tmp_path):
     assert out["n_vectors"] == emb.count()
     import os
 
-    assert os.listdir(f"{idx}/postings") == ["batch=compacted"]
+    assert os.listdir(f"{idx}/postings") == ["batch=compacted__g3"]
     after = {
         (r["query_id"], r["corpus_id"], r["rank"])
         for r in ivfpq_index_query(spark, idx, q, n_probe=4, k=5).collect()
@@ -1033,7 +983,7 @@ def test_ivf_index_maybe_compact_trigger(spark, tmp_path):
     }
     out = ivf_index_maybe_compact(spark, idx, max_fragments=2)
     assert out["compacted"] is True and out["fragments_before"] == 3
-    assert os.listdir(f"{idx}/postings") == ["batch=compacted"]
+    assert os.listdir(f"{idx}/postings") == ["batch=compacted__g3"]
     after = {
         (r["query_id"], r["corpus_id"], r["rank"])
         for r in ivf_index_query(spark, idx, q, n_probe=4, k=5).collect()
@@ -1074,7 +1024,7 @@ def test_dedup_sidecar_compact(spark, tmp_path):
     import os
 
     for sub in ("digests", "shingles", "sizes"):
-        assert os.listdir(f"{side}/{sub}") == ["batch=compacted"]
+        assert os.listdir(f"{side}/{sub}") == ["batch=compacted__g2"]
     after = sorted(
         tuple(r) for r in incremental_dedup_sidecar(probe, side).collect()
     )
@@ -1208,8 +1158,9 @@ def test_sidecar_steady_state_no_corpus_shuffle(spark, tmp_path):
     re-admission (superseded > 0) the postings are still never shuffled
     by sh or doc_id; the only corpus-keyed exchange is the doc-level
     dead-set aggregation over the digest index."""
+    from gpt_rag_ingestion_spark.operators import batch_manifest as bm
     from gpt_rag_ingestion_spark.operators.dedup import (
-        _sidecar_read_meta,
+        SIDECAR,
         dedup_sidecar_append,
         dedup_sidecar_build,
         incremental_dedup_sidecar,
@@ -1219,7 +1170,7 @@ def test_sidecar_steady_state_no_corpus_shuffle(spark, tmp_path):
     base = docs.filter("doc_id % 3 != 0").select("doc_id", "text")
     side = str(tmp_path / "sidecar")
     dedup_sidecar_build(base, side)
-    assert _sidecar_read_meta(spark, side)["superseded"] == 0
+    assert bm.read_meta(spark, side, SIDECAR)["superseded"] == 0
 
     probe = docs.limit(30).selectExpr("doc_id + 900000 AS doc_id", "text")
     plan = incremental_dedup_sidecar(probe, side)._jdf.queryExecution().explainString(
@@ -1236,7 +1187,7 @@ def test_sidecar_steady_state_no_corpus_shuffle(spark, tmp_path):
     one = base.limit(1).selectExpr("doc_id", "'replaced text body' AS text")
     out = dedup_sidecar_append(one, side, "b1")
     assert out["newly_superseded"] == 1
-    assert _sidecar_read_meta(spark, side)["superseded"] == 1
+    assert bm.read_meta(spark, side, SIDECAR)["superseded"] == 1
     plan2 = incremental_dedup_sidecar(probe, side)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -1249,8 +1200,9 @@ def test_sidecar_maybe_compact_trigger(spark, tmp_path):
     """The compaction trigger fires from meta counters alone (one-row
     read per check) and classification is hash-stable across the
     triggered compact."""
+    from gpt_rag_ingestion_spark.operators import batch_manifest as bm
     from gpt_rag_ingestion_spark.operators.dedup import (
-        _sidecar_read_meta,
+        SIDECAR,
         dedup_sidecar_append,
         dedup_sidecar_build,
         dedup_sidecar_maybe_compact,
@@ -1284,7 +1236,7 @@ def test_sidecar_maybe_compact_trigger(spark, tmp_path):
     )
     out = dedup_sidecar_maybe_compact(spark, side)
     assert out["compacted"] is True
-    meta = _sidecar_read_meta(spark, side)
+    meta = bm.read_meta(spark, side, SIDECAR)
     assert meta["superseded"] == 0 and meta["n_live"] == 8
     after = sorted(
         tuple(r) for r in incremental_dedup_sidecar(probe, side).collect()
@@ -1292,86 +1244,6 @@ def test_sidecar_maybe_compact_trigger(spark, tmp_path):
     assert after == before
     # and the counters are back in steady state: no re-fire
     assert dedup_sidecar_maybe_compact(spark, side)["compacted"] is False
-
-
-@pytest.mark.slow
-def test_sidecar_compact_crash_between_swaps_stays_correct(
-    spark, tmp_path, monkeypatch
-):
-    """Advisor finding (r4): the compact swap sequence must fold the
-    LIVENESS AUTHORITY (digests) last.  Injected crash after the first
-    sub-table swap completes: the non-authority table is folded while
-    digests still holds both generations, so the dead set derived from
-    digests stays intact and classification still matches the text
-    path (filtering an already-folded table is a no-op).  Had digests
-    folded first, the dead set would read empty while stale
-    shingle/size rows were still live — the bug this pins against.
-    The retried compact then converges."""
-    import pytest
-
-    from gpt_rag_ingestion_spark.operators import upsert as U
-    from gpt_rag_ingestion_spark.operators.dedup import (
-        _sidecar_read_meta,
-        dedup_sidecar_append,
-        dedup_sidecar_build,
-        dedup_sidecar_compact,
-        incremental_dedup,
-        incremental_dedup_sidecar,
-    )
-
-    X = "alpha beta gamma delta epsilon zeta eta theta " * 4
-    Y = "one two three four five six seven eight nine ten " * 4
-    side = str(tmp_path / "sidecar")
-    dedup_sidecar_build(
-        spark.createDataFrame([(5, X)], "doc_id long, text string"), side
-    )
-    # doc 5 re-admitted with new text Y -> generation 1 supersedes 0
-    dedup_sidecar_append(
-        spark.createDataFrame([(5, Y)], "doc_id long, text string"),
-        side, "b1",
-    )
-    current = spark.createDataFrame([(5, Y)], "doc_id long, text string")
-    probe = spark.createDataFrame(
-        [(200, X), (201, Y)], "doc_id long, text string"
-    )
-    want = sorted(
-        tuple(r) for r in incremental_dedup(current, probe).collect()
-    )
-
-    real_rename = U._fs_try_rename
-    state = {"swaps": 0}
-
-    def crashing(spark_, src, dst):
-        if str(dst).endswith("__old"):  # the live -> __old leg of a swap
-            state["swaps"] += 1
-            if state["swaps"] == 2:
-                raise RuntimeError("injected crash between sub-table swaps")
-        return real_rename(spark_, src, dst)
-
-    monkeypatch.setattr(U, "_fs_try_rename", crashing)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        dedup_sidecar_compact(spark, side)
-    monkeypatch.setattr(U, "_fs_try_rename", real_rename)
-
-    # meta was never reset: liveness is still computed, and the intact
-    # digest authority keeps the half-folded sidecar correct
-    assert _sidecar_read_meta(spark, side)["superseded"] == 1
-    got = sorted(
-        tuple(r) for r in incremental_dedup_sidecar(probe, side).collect()
-    )
-    assert got == want
-    assert dict((r[0], r[1]) for r in got) == {
-        200: "new", 201: "exact_dup_base"
-    }
-
-    # retried compact converges and classification is unchanged
-    counts = dedup_sidecar_compact(spark, side)
-    assert counts["digests"] == 1
-    assert _sidecar_read_meta(spark, side)["superseded"] == 0
-    got2 = sorted(
-        tuple(r) for r in incremental_dedup_sidecar(probe, side).collect()
-    )
-    assert got2 == want
 
 
 def test_sidecar_postings_broadcast_gate_fallback(spark, tmp_path):

@@ -26,6 +26,25 @@ def test_scan_memo_returns_same_plan_handle(spark):
     assert a.count() == fresh.count()
 
 
+def test_scan_memo_holds_only_the_current_session(spark):
+    """The memo keeps one session's scans: a call from another session
+    drops them (the interpreter never pins a session it moved past),
+    and each session gets frames bound to itself."""
+    a = entry_mod._t(spark, SF, "documents")
+    entry_mod._t(spark, SF, "orders")
+    other = spark.newSession()
+    b = entry_mod._t(other, SF, "documents")
+    assert b.sparkSession is other and b is not a
+    owner, scans = entry_mod._SCAN_MEMO
+    assert owner == (id(other), other.sparkContext.applicationId)
+    assert list(scans) == [(SF, "documents")]
+    # back on the first session: a fresh scan, and the memo is its own
+    c = entry_mod._t(spark, SF, "documents")
+    assert c.sparkSession is spark and c is not a
+    assert entry_mod._SCAN_MEMO[0][0] == id(spark)
+    assert entry_mod._t(spark, SF, "documents") is c
+
+
 def test_dataframe_debugging_disabled_after_ship(spark):
     import pyspark.errors.utils as eu
 

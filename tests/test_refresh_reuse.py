@@ -80,6 +80,67 @@ def test_truncated_manifest_raises_and_leaves_table_alone(spark, tmp_path):
     assert (_tree_digest(table), _tree_digest(index)) == before
 
 
+class _Crash(RuntimeError):
+    pass
+
+
+def test_half_committed_text_index_is_applied_not_rebuilt(
+    spark, tmp_path, monkeypatch
+):
+    """A text-index commit cut between its meta delete and its rename
+    leaves only ``meta__staging``.  That staging file IS the committed
+    index: a query in the window answers from it without touching the
+    directory, and the next run applies at gen + 1 with the earlier
+    batches still listed — it does not rebuild the index from the
+    table."""
+    from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+    from gpt_rag_ingestion_spark.operators import search as X
+
+    table, index = str(tmp_path / "t"), str(tmp_path / "i")
+    kw = dict(text_index_path=index, **_KW)
+    run_ingest_job(spark, _docs(spark, 6), table, "base", **kw)
+
+    def crash(*_a, **_kw):
+        raise _Crash("injected crash at the meta rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(bm, "_fs_try_rename", crash)
+        with pytest.raises(_Crash):
+            run_ingest_job(
+                spark, _docs(spark, 6, changed={1}), table, "t1", **kw
+            )
+    assert not os.path.exists(os.path.join(index, "meta"))
+    with open(os.path.join(index, "meta__staging")) as fh:
+        staged = json.load(fh)
+
+    before = _tree_digest(index)
+    q = spark.createDataFrame(
+        [("q", ["w7", "w14x"])], "query_id string, terms array<string>"
+    )
+    assert X.text_index_query(spark, index, q, k=3).count() > 0
+    assert _tree_digest(index) == before
+
+    def no_build(*_a, **_kw):
+        raise AssertionError("text_index_build must not run")
+
+    applied = []
+    real_apply = X.text_index_apply
+
+    def apply_and_record(*a, **k):
+        out = real_apply(*a, **k)
+        applied.append(bm.read_meta(spark, index, X.TEXT_INDEX))
+        return out
+
+    monkeypatch.setattr(X, "text_index_build", no_build)
+    monkeypatch.setattr(X, "text_index_apply", apply_and_record)
+    run_ingest_job(
+        spark, _docs(spark, 6, changed={1, 2}), table, "t2", **kw
+    )
+    (meta,) = applied  # the state the apply committed (before any compact)
+    assert meta["gen"] == staged["gen"] + 1
+    assert set(staged["batches"]["postings"]) < set(meta["batches"]["postings"])
+
+
 def _corrupt_footers(root):
     """Overwrite the trailing magic of every parquet file under
     ``root``: the footer no longer parses."""

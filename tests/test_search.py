@@ -8,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
 from gpt_rag_ingestion_spark.operators.search import (
     bm25_topk,
     build_text_index,
@@ -191,15 +192,15 @@ def test_persisted_text_index_append_crash_replay(
     X.text_index_build(_corpus(spark, BASE_ROWS), twin)
     batch = _corpus(spark, [(2, "stone stone stone tree")])
 
-    real = X._tindex_write_meta
+    real = bm.write_meta
 
     def crash(*a, **kw):
         raise RuntimeError("injected crash before meta commit")
 
-    monkeypatch.setattr(X, "_tindex_write_meta", crash)
+    monkeypatch.setattr(bm, "write_meta", crash)
     with _pytest.raises(RuntimeError, match="injected"):
         X.text_index_append(batch, path, "b1")
-    monkeypatch.setattr(X, "_tindex_write_meta", real)
+    monkeypatch.setattr(bm, "write_meta", real)
 
     # pre-crash state visible (orphan pruned on entry)
     got = sorted(
@@ -417,15 +418,15 @@ def test_compact_crash_leaves_manifest_intact(
     after = {r[0]: r for r in BASE_ROWS} | {r[0]: r for r in changed}
     want = _want(spark, list(after.values()))
 
-    real = X._tindex_write_meta
+    real = bm.write_meta
 
     def crash(*a, **kw):
         raise RuntimeError("injected crash at compact commit")
 
-    monkeypatch.setattr(X, "_tindex_write_meta", crash)
+    monkeypatch.setattr(bm, "write_meta", crash)
     with _pytest.raises(RuntimeError, match="injected"):
         X.text_index_compact(spark, path)
-    monkeypatch.setattr(X, "_tindex_write_meta", real)
+    monkeypatch.setattr(bm, "write_meta", real)
 
     # the old manifest still stands: queries equal the pre-crash
     # answers, superseded counters unchanged
@@ -436,11 +437,11 @@ def test_compact_crash_leaves_manifest_intact(
         ).collect()
     )
     assert got == want
-    assert int(X._tindex_read_meta(spark, path)["superseded"]) > 0
+    assert int(bm.read_meta(spark, path, X.TEXT_INDEX)["superseded"]) > 0
 
     # re-running compact converges to the steady state
     X.text_index_compact(spark, path)
-    meta = X._tindex_read_meta(spark, path)
+    meta = bm.read_meta(spark, path, X.TEXT_INDEX)
     assert int(meta["superseded"]) == 0
     got = sorted(
         tuple(r)
@@ -466,7 +467,7 @@ def test_query_path_never_prunes_inflight_writer_dirs(spark, tmp_path):
     want = _want(spark, BASE_ROWS)
 
     # hand-write what text_index_append stages BEFORE its meta commit
-    gen = int(X._tindex_read_meta(spark, path)["gen"]) + 1
+    gen = int(bm.read_meta(spark, path, X.TEXT_INDEX)["gen"]) + 1
     pdir = f"{path}/postings/batch=b1__g{gen}"
     ddir = f"{path}/doclen/batch=b1__g{gen}"
     _p, doclen = X._tindex_tables(
@@ -557,7 +558,7 @@ def test_text_index_apply_batches_upsert_and_delete(spark, tmp_path):
     b = sorted(tuple(r) for r in X.text_index_query(spark, twin, q, k=5).collect())
     assert a == b
     ma, mb = (
-        X._tindex_read_meta(spark, path), X._tindex_read_meta(spark, twin)
+        bm.read_meta(spark, p, X.TEXT_INDEX) for p in (path, twin)
     )
     assert (ma["n_live"], ma["l_live"]) == (mb["n_live"], mb["l_live"])
     # compaction converges both to the same steady state
@@ -686,14 +687,14 @@ def test_text_index_two_writer_claim_conflict(spark, tmp_path, monkeypatch):
     # (after A's recovery — a pre-existing claim would correctly be
     # pruned as crashed — but before A's commit): hook A's delta
     # probe, the step between its meta read and its dir writes
-    gen = int(X._tindex_read_meta(spark, path)["gen"]) + 1
+    gen = int(bm.read_meta(spark, path, X.TEXT_INDEX)["gen"]) + 1
     real_delta = X._tindex_delta
     state = {"fired": False}
 
     def delta_with_racer(spark_, idx_path, batch_doclen, meta):
         if not state["fired"]:
             state["fired"] = True
-            X._tindex_claim(spark_, idx_path, gen)  # writer B wins
+            bm.claim(spark_, idx_path, gen)  # writer B wins
         return real_delta(spark_, idx_path, batch_doclen, meta)
 
     monkeypatch.setattr(X, "_tindex_delta", delta_with_racer)
@@ -809,7 +810,7 @@ def test_ingest_job_maintains_chunk_text_index(spark, tmp_path):
             .collect()
         }
 
-    meta = X._tindex_read_meta(spark, idx)
+    meta = bm.read_meta(spark, idx, X.TEXT_INDEX)
     assert int(meta["n_live"]) == len(expected())
 
     # run 2: doc a re-ingested with NEW text (newer ts), doc c added
@@ -822,7 +823,7 @@ def test_ingest_job_maintains_chunk_text_index(spark, tmp_path):
         table, "r2", max_tokens=16, overlap=2, min_tokens=2,
         text_index_path=idx,
     )
-    meta = X._tindex_read_meta(spark, idx)
+    meta = bm.read_meta(spark, idx, X.TEXT_INDEX)
     assert int(meta["n_live"]) == len(expected())
 
     # the index answers exactly what a fresh build over the merged

@@ -382,12 +382,12 @@ def test_incremental_ivf_stream_maintains_index(spark, tmp_path):
     assert all(top[i] == i - 5000 for i in top)
     # the build batch is labeled by its batch id (retry idempotence);
     # the baseline records which label is the drift reference
-    batches = {
-        r["batch"] for r in spark.read.parquet(f"{idx}/stats").collect()
-    }
-    assert batches == {"batch-0", "batch-1"}
-    base = spark.read.parquet(f"{idx}/baseline").first()
-    assert base["batch"] == "batch-0"
+    from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+    from gpt_rag_ingestion_spark.operators.similarity import IVF_INDEX
+
+    meta = bm.read_meta(spark, idx, IVF_INDEX)
+    assert set(meta["stats"]) == {"batch-0", "batch-1"}
+    assert meta["baseline"]["batch"] == "batch-0"
     from gpt_rag_ingestion_spark.operators.similarity import ivf_needs_refit
 
     assert ivf_needs_refit(spark, idx, tolerance=0.05) is False
@@ -421,7 +421,8 @@ def test_incremental_ivf_stream_triggered_compaction(spark, tmp_path):
             max_fragments=1,
         )
     # every drain beyond the first exceeded 1 fragment -> compacted
-    assert os.listdir(f"{idx}/postings") == ["batch=compacted"]
+    (only,) = os.listdir(f"{idx}/postings")
+    assert only.startswith("batch=compacted__g")
     assert spark.read.parquet(f"{idx}/postings").count() == 200
     q = emb.filter("vec_id < 10")
     res = ivf_index_query(spark, idx, q, n_probe=4, k=2)
@@ -621,7 +622,8 @@ def test_streaming_sidecar_triggered_compaction(spark, tmp_path):
     import json
     import os
 
-    from gpt_rag_ingestion_spark.operators.dedup import _sidecar_read_meta
+    from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+    from gpt_rag_ingestion_spark.operators.dedup import SIDECAR
     from gpt_rag_ingestion_spark.streaming.micro_batch import (
         run_streaming_web_corpus,
     )
@@ -655,9 +657,9 @@ def test_streaming_sidecar_triggered_compaction(spark, tmp_path):
         if i == 1:
             # the batch-1 append superseded doc 1 and the wired
             # trigger compacted: counters reset, dirs folded
-            meta = _sidecar_read_meta(spark, side)
+            meta = bm.read_meta(spark, side, SIDECAR)
             assert meta["superseded"] == 0 and meta["n_live"] == 2
-            assert os.listdir(f"{side}/digests") == ["batch=compacted"]
+            assert os.listdir(f"{side}/digests") == ["batch=compacted__g2"]
     disp = {
         r["doc_id"]: r["disposition"]
         for r in spark.read.parquet(f"{root}/audit").collect()
@@ -715,7 +717,9 @@ def test_streaming_web_corpus_with_sidecar(spark, tmp_path):
     assert disp[3] == "exact_dup_base"
     # sidecar holds the build bootstrap + batch-1 appends
     side = str(tmp_path / "sided" / "sidecar")
-    assert sorted(os.listdir(f"{side}/digests")) == ["batch=1", "batch=build"]
+    assert sorted(os.listdir(f"{side}/digests")) == [
+        "batch=1__g1", "batch=build__g0",
+    ]
 
 
 def test_streaming_ingest_partitioned(spark, tmp_path):
