@@ -5168,13 +5168,15 @@ def q200_cdf_rollup_live(spark: SparkSession, sf: str) -> DataFrame:
     snapshot events table is maintained across THREE commits — bulk
     insert, value-doubling update of one user band, delete of another
     — purely from the change feed after bootstrap (the applied
-    generation rides inside the rollup's own directory swap).  The
-    oracle recomputes the final state's closed form; hash equality
+    generation commits with the rollup in one batch-manifest rename).
+    The oracle recomputes the final state's closed form; hash equality
     proves the IVM identity through insert, update pre/post images,
     and delete."""
     import tempfile
 
+    from gpt_rag_ingestion_spark.operators import batch_manifest as bm
     from gpt_rag_ingestion_spark.operators.incremental import (
+        ROLLUP,
         maintain_snapshot_rollup,
     )
     from gpt_rag_ingestion_spark.operators.snapshot_table import (
@@ -5215,7 +5217,7 @@ def q200_cdf_rollup_live(spark: SparkSession, sf: str) -> DataFrame:
         key="event_id", partition_cols=["bucket"],
     )
     tick()  # deletes
-    return spark.read.parquet(roll)
+    return bm.read_store(spark, roll, ROLLUP)
 
 
 def q201_revenue_rollup_cube(spark: SparkSession, sf: str) -> DataFrame:
@@ -5771,7 +5773,7 @@ def q216_streaming_cdf_rollup(spark: SparkSession, sf: str) -> DataFrame:
     tick 2 adds new documents (CDF inserts), tick 3 RE-SENDS a slice
     of tick 1's documents with extended text (delete-then-insert merge
     → CDF deletes + inserts, chunk counts change).  After the drains
-    the per-document rollup parquet — maintained purely from the
+    the per-document rollup — maintained purely from the
     chunks table's change feed, never rescanned — is FULL-OUTER
     compared against a fresh recompute over the final table; any
     divergence in chunk count or char sum flips ``rollup_ok`` and
@@ -5781,6 +5783,8 @@ def q216_streaming_cdf_rollup(spark: SparkSession, sf: str) -> DataFrame:
     held fresh at O(changed partitions) per micro-batch."""
     import tempfile
 
+    from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+    from gpt_rag_ingestion_spark.operators.incremental import ROLLUP
     from gpt_rag_ingestion_spark.operators.snapshot_table import (
         read_snapshot_table,
     )
@@ -5811,7 +5815,7 @@ def q216_streaming_cdf_rollup(spark: SparkSession, sf: str) -> DataFrame:
             partition_cols=["source"],
             rollup_mode="cdf",
         )
-    maintained = spark.read.parquet(roll).select(
+    maintained = bm.read_store(spark, roll, ROLLUP).select(
         "parent_id", "n_chunks", "chars"
     )
     recompute = read_snapshot_table(spark, snap).groupBy("parent_id").agg(

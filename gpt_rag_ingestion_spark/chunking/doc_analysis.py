@@ -300,22 +300,6 @@ def pdf_bytes_to_markdown(data: bytes) -> str:
     return f"\n{PAGEBREAK_RAW}\n".join(texts)
 
 
-def pdf_markdown_udf():
-    """Arrow-batched UDF wrapper of ``pdf_bytes_to_markdown`` for the
-    corpus pipeline's doc-analysis slice.  Import-checked lazily so
-    plans that never touch PDF rows work without pypdf."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _u(payload: pd.Series) -> pd.Series:
-        return payload.map(
-            lambda b: pdf_bytes_to_markdown(bytes(b)) if b is not None else None
-        )
-
-    return _u
-
-
 def _split_parts(docs, md_col, pages, n_parts, max_pages_per_part):
     part_mds = F.transform(
         F.sequence(F.lit(0), n_parts - 1),

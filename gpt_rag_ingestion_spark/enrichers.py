@@ -15,10 +15,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
-
 MAX_CAPTION_WORDS = 200  # reference multimodal_chunker.py:530-534
 
 
@@ -101,15 +97,3 @@ def call_with_backoff(
             sleep(delay)
             waited += delay
     raise RuntimeError("unreachable")
-
-
-def summary_udf(max_words: int = 40):
-    from gpt_rag_ingestion_spark.session import ship_active
-
-    ship_active()
-
-    @pandas_udf(StringType())
-    def _sum(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda s: summarize_deterministic(s or "", max_words))
-
-    return _sum

@@ -1,9 +1,11 @@
 """The batch manifest: one commit protocol for the engine's appendable
-indexes.
+indexes and derived tables.
 
 The persisted BM25 text index (operators/search), the dedup sidecar
-(operators/dedup) and the IVF/IVFPQ ANN indexes (operators/similarity)
-are each a set of SUB-TABLES whose rows arrive in batches.  The
+(operators/dedup), the IVF/IVFPQ ANN indexes (operators/similarity),
+the dashboard rollup and the streaming sketch table (one listed batch
+holds the whole table) are each a set of SUB-TABLES whose rows arrive
+in batches.  The
 reference keeps each index as one logical store and upserts into it
 as one transaction (delete a parent's chunks, upload the new ones —
 jobs/blob_storage_indexer.py:1242-1334); this module gives every such
@@ -41,16 +43,19 @@ steps:
    label).
 
 There are no directory swaps: a crash anywhere leaves either the old
-manifest or the new one, each naming intact batch dirs.  A store
-written under an older layout (a parquet ``meta`` directory, or
-sub-tables without any manifest) is refused with a ``ValueError``
-naming the build function to re-run; only that build clears it.
+manifest or the new one, each naming intact batch dirs.  This and the
+snapshot table are the engine's two commit protocols.  A store written under an older
+layout (a parquet ``meta`` directory, sub-tables without any manifest,
+or parquet files at the root, where the former directory swap wrote
+them) is refused with a ``ValueError`` naming the build function to
+re-run; only that build clears it.
 """
 
 from __future__ import annotations
 
 import json
 import re
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -100,9 +105,15 @@ def _refuse(root: str, store: Store):
 
 
 def _old_layout(spark, root: str, store: Store) -> bool:
-    """A sub-table child that is not a manifest batch dir marks the
-    pre-manifest layout.  The debris of a crashed FIRST build
-    (``batch=<label>__g<n>`` dirs, no meta) does not."""
+    """Parquet files at the root, or a sub-table child that is not a
+    manifest batch dir, mark the pre-manifest layout.  The debris of a
+    crashed FIRST build (``batch=<label>__g<n>`` dirs, no meta) does
+    not."""
+    fs, p = _hfs(spark, root)
+    if fs.exists(p) and any(
+        st.getPath().getName().endswith(".parquet") for st in fs.listStatus(p)
+    ):
+        return True
     for sub in store.subs:
         fs, p = _hfs(spark, f"{root}/{sub}")
         if not fs.exists(p):
@@ -205,15 +216,20 @@ def begin_build(spark, root: str, store: Store, label: str):
     """``begin`` for a (re)build.  Over a committed store the rebuild
     commits at its gen + 1 and unlists every old batch in one rename.
     A fresh store — absent, the debris of a first build that never
-    committed, or an old layout — is cleared first and the manifest
-    returned is None (generation 0)."""
+    committed, or an old layout — is cleared first (its sub-tables and
+    every file at its root) and the manifest returned is None
+    (generation 0)."""
     try:
         committed = _committed_file(spark, root, store) is not None
     except ValueError:  # old layout: the build is what replaces it
         committed = False
     if committed:
         return begin(spark, root, store, label)
-    for d in (*store.subs, *store.retired, "claims", "meta", "meta__staging"):
+    fs, p = _hfs(spark, root)
+    for st in fs.listStatus(p) if fs.exists(p) else ():
+        if st.isFile():
+            fs.delete(st.getPath(), False)
+    for d in (*store.subs, *store.retired, "claims", "meta"):
         _fs_delete(spark, f"{root}/{d}")
     return None, 0, f"{label}__g0"
 
@@ -286,6 +302,33 @@ def commit(
     return new
 
 
+def write_whole(spark, root: str, store: Store, meta, df: DataFrame, label: str):
+    """Write ``df`` as the next, still unlisted, batch of a store whose
+    one listed batch is the whole table; returns the (manifest, gen,
+    name) ``commit_whole`` takes.  ``meta`` is ``begin_build``'s
+    manifest.  A random token in the name keeps two writers of one
+    generation out of each other's batch dir."""
+    (sub,) = store.subs
+    gen = int(meta["gen"]) + 1 if meta else 0
+    name = f"{label}-{uuid.uuid4().hex[:8]}__g{gen}"
+    df.write.mode("overwrite").parquet(batch_path(root, sub, name))
+    return meta, gen, name
+
+
+def commit_whole(spark, root: str, store: Store, staged, **fields) -> dict:
+    """Commit a ``write_whole`` batch in place of every listed one,
+    then collect the unlisted batches of its generation (a crashed
+    writer's: its replay wrote under a new token)."""
+    (sub,) = store.subs
+    meta, gen, name = staged
+    new = commit(
+        spark, root, store, meta, gen, add={sub: [name]},
+        remove={sub: meta["batches"][sub] if meta else []}, **fields,
+    )
+    recover(spark, root, store)
+    return new
+
+
 def read_batches(spark, root: str, sub: str, names, schema: str) -> DataFrame:
     """EXACTLY the listed batch dirs of one sub-table, data columns only.
     ``basePath`` is the sub-table root, so batches holding ``cell=``
@@ -300,3 +343,11 @@ def read_batches(spark, root: str, sub: str, names, schema: str) -> DataFrame:
         .parquet(*[f"{base}/batch={n}" for n in names])
         .drop("batch")
     )
+
+
+def read_store(spark, root: str, store: Store, meta: dict | None = None) -> DataFrame:
+    """The rows of a one-sub-table store (the rollup, the sketch): the
+    listed batch of ``meta``, by default the committed manifest."""
+    (sub,) = store.subs
+    meta = meta or read_meta(spark, root, store)
+    return read_batches(spark, root, sub, meta["batches"][sub], None)

@@ -50,10 +50,6 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
 def colocated_join(
     spark: SparkSession,
     left_table: str,

@@ -349,10 +349,6 @@ def minhash_lsh_candidates(
 
     def band_hash(b: int):
         cols = [F.col(f"mh_{i}") for i in range(b * r, (b + 1) * r)]
-        if hash_fn == "sha256uh" and r == 2:
-            # minima are < P, so base-P positional packing is a
-            # collision-free integer band key ((P-1)*P + P-1 < 2^63)
-            return cols[0] * F.lit(UH_PRIME) + cols[1]
         if hash_fn in ("md5", "sha256", "sha256uh"):
             # the concatenated minima ARE the band key — no extra hash
             # round needed for an equality join
@@ -361,9 +357,10 @@ def minhash_lsh_candidates(
 
     # one pass: explode (band, band_hash) structs — computing signatures
     # once, not once per band (a per-band union would recompute the whole
-    # shingle aggregation `bands` times).  The sha256uh r=2 fast path
-    # builds the whole array in ONE SQL parse (proven sameSemantics vs
-    # the struct/lit Column form); other modes keep the Column form.
+    # shingle aggregation `bands` times).  sha256uh with r=2 builds the
+    # whole array in ONE SQL parse; its band key is base-P positional
+    # packing, collision-free because minima are < P ((P-1)*P + P-1 <
+    # 2^63).  Other modes keep the Column form.
     if hash_fn == "sha256uh" and r == 2:
         band_structs = F.expr(
             "array("

@@ -20,12 +20,20 @@ The identity is engine-independent integer arithmetic, so the whole
 maintenance step is oracle-checkable: the DuckDB oracle recomputes the
 rollup from the merged table and must hash-match the incrementally
 maintained one.
+
+A persisted rollup is a batch-manifest store (``ROLLUP``): one listed
+batch holds the whole rollup, and the meta field ``applied_gen`` the
+snapshot-table generation it reflects; both commit in one rename.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+
+ROLLUP = bm.Store(subs=("rows",), build="maintain_snapshot_rollup")
 
 
 def rollup_delta(
@@ -160,37 +168,28 @@ def maintain_snapshot_rollup(
     update_postimages of ``snapshot_changes(include_preimages=True)``.
 
     EXACTLY-ONCE without a separate cursor ack: the generation the
-    rollup reflects is stamped into ``_applied_gen`` INSIDE the staged
-    rollup directory, so the directory swap atomically moves data and
-    cursor together — a crash before the swap leaves the old pair, a
-    crash after it the new pair; re-running is always safe.  If the
-    applied generation's manifest has been vacuumed away (consumer
-    fell behind retention), the sweep re-bootstraps with one full
-    recompute instead of failing."""
+    rollup reflects is the manifest field ``applied_gen``, committed in
+    the same meta rename as the rollup's batch — a crash before the
+    rename leaves the old pair, a crash after it the new pair;
+    re-running is always safe.  The ingest jobs' staged rollups keep
+    the same cursor, so a sweep over a rollup they keep level is a
+    no-op.  If the applied generation's manifest has been vacuumed
+    away (consumer fell behind retention), the sweep re-bootstraps with
+    one full recompute instead of failing."""
     from gpt_rag_ingestion_spark.operators.snapshot_table import (
         _current_gen,
-        _read_text,
-        _write_text,
         read_snapshot_table,
         snapshot_changes,
     )
-    from gpt_rag_ingestion_spark.operators.upsert import (
-        _fs_exists,
-        _recover,
-        _swap_in,
-    )
 
     sums = sum_exprs or {"chars": "length(content)"}
-    _recover(spark, rollup_path)
+    # None for a fresh rollup; a pre-manifest one is derived data and
+    # is cleared here, to be rebuilt by the bootstrap
+    meta = bm.begin_build(spark, rollup_path, ROLLUP, "rollup")[0]
     cur = _current_gen(spark, snapshot_path)
     if cur is None:
         return {"updated": False, "reason": "empty snapshot"}
-    gen_file = f"{rollup_path}/_applied_gen"
-    applied = (
-        int(_read_text(spark, gen_file).strip())
-        if _fs_exists(spark, gen_file)
-        else None
-    )
+    applied = meta["applied_gen"] if meta else None
     if applied == cur:
         return {"updated": False, "applied_gen": cur, "mode": "noop"}
 
@@ -231,15 +230,16 @@ def maintain_snapshot_rollup(
                 F.col("_change_type").isin("insert", "update_postimage")
             )
         )
-        old = spark.read.parquet(rollup_path)
+        old = bm.read_store(spark, rollup_path, ROLLUP, meta)
         new = maintain_rollup(
             old, removed, added, key=key,
             sum_cols=list(sums), count_col=count_col,
         )
-    staging = f"{rollup_path}__staging"
-    new.write.mode("overwrite").parquet(staging)
-    _write_text(spark, f"{staging}/_applied_gen", str(cur))
-    _swap_in(spark, staging, rollup_path)
+    bm.commit_whole(
+        spark, rollup_path, ROLLUP,
+        bm.write_whole(spark, rollup_path, ROLLUP, meta, new, "rollup"),
+        applied_gen=cur,
+    )
     return {
         "updated": True, "mode": mode,
         "from_gen": applied, "applied_gen": cur,

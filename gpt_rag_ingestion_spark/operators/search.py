@@ -1103,23 +1103,6 @@ def multifield_bm25_topk(
     return _topk_by_score(total, k, query_id_col)
 
 
-def resolve_chunk_hits(
-    hits: DataFrame,
-    chunks: DataFrame,
-    id_col: str = "id",
-    doc_col: str = "doc",
-) -> DataFrame:
-    """Resolve surrogate-keyed search hits back to chunk rows: the
-    ingest job indexes chunks under ``xxhash64(id)`` (string chunk
-    keys can't be posting keys), so a hit's ``doc`` joins the chunks
-    table through the same hash.  Broadcast the (tiny) hit set; the
-    chunks scan is semi-pruned before the equi-join."""
-    keyed = chunks.withColumn(doc_col, F.xxhash64(F.col(id_col)))
-    return keyed.join(
-        F.broadcast(hits), on=doc_col, how="inner"
-    )
-
-
 def suggest_corrections(
     index: dict,
     terms: DataFrame,

@@ -9,18 +9,16 @@ docs — deterministic keys make the whole pipeline idempotent
 key does not appear in the increment, plus every incoming row (the
 plan ``MERGE INTO`` lowers to).  Every chunks and corpus table commits
 it through the manifest-pointer snapshot table
-(``operators/snapshot_table.py``); this module keeps what that table
-and the remaining directory-swapped artifacts share:
+(``operators/snapshot_table.py``); every index and derived table
+commits through the batch manifest (``operators/batch_manifest.py``).
+Those are the engine's two commit protocols.  This module keeps what
+they share:
 
 - Spark's partition-path escaping, to address a partition directory
   from its column values;
 - the Hadoop FileSystem helpers (``_fs_*``), scheme-aware on local,
   hdfs:// and abfss:// alike;
-- the thread-safe partition-type-inference toggle;
-- the rename-rename-delete directory swap and its recovery, still used
-  by the dashboard rollups (``ingest_job._stage_rollup``,
-  ``incremental.maintain_snapshot_rollup``) and the streaming sketch
-  table (``micro_batch.run_incremental_sketch``).
+- the thread-safe partition-type-inference toggle.
 """
 
 from __future__ import annotations
@@ -57,7 +55,7 @@ def _partition_rel_path(partition_cols: list[str], values) -> str:
 
 
 def _hfs(spark: SparkSession, path: str):
-    """(FileSystem, Path) through the Hadoop API — commits, swaps and
+    """(FileSystem, Path) through the Hadoop API — commits and
     recovery must work on any scheme whose rename is atomic (local,
     hdfs://, abfss://), unlike driver-local os/shutil; see SCALE.md
     'Sink transactionality' for the contract and the S3 caveat."""
@@ -131,18 +129,6 @@ class _no_partition_inference:
         return False
 
 
-def _recover(spark: SparkSession, table_path: str) -> None:
-    """Heal an interrupted ``_swap_in``: if the live directory vanished
-    mid-swap, restore the ``__old`` generation; if both exist, the swap
-    completed and ``__old`` is leftover garbage."""
-    old = table_path.rstrip("/") + "__old"
-    if _fs_exists(spark, old):
-        if _fs_exists(spark, table_path):
-            _fs_delete(spark, old)
-        else:
-            _fs_rename(spark, old, table_path)
-
-
 def merged_view(
     existing: DataFrame, incoming: DataFrame, key: str = "parent_id"
 ) -> DataFrame:
@@ -154,21 +140,6 @@ def merged_view(
     keys = incoming.select(key).distinct()
     kept = existing.join(F.broadcast(keys), on=key, how="left_anti")
     return kept.unionByName(incoming, allowMissingColumns=True)
-
-
-def _swap_in(spark: SparkSession, staged: str, table_path: str) -> None:
-    """Rename-rename-delete swap: the committed directory is never
-    destroyed before its replacement is in place (a crash mid-swap
-    leaves either the old directory or a recoverable ``__old`` one,
-    which the next call's ``_recover`` restores — never nothing)."""
-    old = table_path.rstrip("/") + "__old"
-    _fs_delete(spark, old)
-    if _fs_exists(spark, table_path):
-        _fs_rename(spark, table_path, old)
-    _fs_rename(spark, staged, table_path)
-    _fs_delete(spark, old)
-    # drop the session's cached file listing for the old generation
-    spark.catalog.refreshByPath(table_path)
 
 
 def _list_parquet_files(spark, table_path: str) -> list[tuple[str, int]]:

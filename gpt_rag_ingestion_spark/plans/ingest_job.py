@@ -28,22 +28,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpt_rag_ingestion_spark.chunking.pipeline import chunk_documents
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
 from gpt_rag_ingestion_spark.operators.freshness import (
     freshness_candidates,
     index_watermarks,
 )
+from gpt_rag_ingestion_spark.operators.incremental import ROLLUP, maintain_rollup
 from gpt_rag_ingestion_spark.operators.ops_log import apply_blocklist, run_summary
 from gpt_rag_ingestion_spark.operators.snapshot_table import (
+    _current_gen,
     read_snapshot_table,
     snapshot_enable_stats,
     snapshot_maybe_analyze,
     snapshot_merge_upsert,
 )
 from gpt_rag_ingestion_spark.operators.upsert import (
+    _fs_delete,
     _fs_exists,
     _hfs,
-    _recover,
-    _swap_in,
+    merged_view,
 )
 
 
@@ -85,10 +88,10 @@ def run_ingest_job(
     the merge — old + agg(incoming) - agg(replaced) via
     ``operators.incremental.maintain_rollup`` — so the admin "file
     list" view never rescans the chunks table (the reference re-pages
-    its whole index per run, S9).  The rollup staging write happens
-    before the chunks merge and the swap after it; a crash between the
-    two leaves a recoverable ``__staging`` directory (Delta/Iceberg
-    would make the pair atomic).
+    its whole index per run, S9).  Its batch is written before the
+    chunks merge and committed after it with the generation it
+    reflects (``applied_gen``); every run recomputes a rollup that is
+    behind its table (a crash or a rival commit between the two).
 
     When ``ops_table_path`` is set, per-file ops rows conforming to
     OPS_LOG_SCHEMA are appended there with POPULATED timings and
@@ -174,6 +177,9 @@ def run_ingest_job(
     # summary's collect (step 5)
     with _sp("scan_freshness", run=run_id):
         have_table = _table_exists(spark, table_path)
+        # read before the table: a rival commit in between can only
+        # fail the rollup's commit check
+        pre_gen = _current_gen(spark, table_path) if have_table and rollup_path else None
         if have_table:
             chunks_table = read_snapshot_table(spark, table_path)
             watermarks = index_watermarks(
@@ -316,7 +322,6 @@ def run_ingest_job(
     # run and the replayed apply supersedes its own docs)
     tindex_bootstrap = False
     if text_index_path is not None and n_candidates > 0:
-        from gpt_rag_ingestion_spark.operators import batch_manifest as bm
         from gpt_rag_ingestion_spark.operators.search import (
             TEXT_INDEX,
             text_index_apply,
@@ -348,13 +353,13 @@ def run_ingest_job(
             tindex_bootstrap = True  # built post-merge, below
 
     # 5c. incremental dashboard-rollup maintenance (IVM): staged from
-    # the PRE-merge table + the increment, swapped in after the merge
-    rollup_staging = None
-    if rollup_path is not None and n_candidates > 0:
-        rollup_staging = _stage_rollup(
-            spark, rollup_path,
+    # the PRE-merge table + the increment, committed after the merge
+    rollup_staged = None
+    if rollup_path is not None:
+        rollup_staged = _stage_rollup(
+            spark, rollup_path, pre_gen,
             old_table=chunks_table if have_table else None,
-            incoming=chunks,
+            incoming=chunks if n_candidates > 0 else None,
         )
 
     # 6. idempotent merge (S10/S11 delete-then-insert); the timing
@@ -370,7 +375,7 @@ def run_ingest_job(
                     spark, table_path, stats_cols,
                     bloom_cols=[bloom_key] if bloom_key else None,
                 )
-            snapshot_merge_upsert(
+            post_gen = snapshot_merge_upsert(
                 spark, table_path, chunks.drop("_chunk_sec"),
                 key="parent_id", partition_cols=partition_cols,
                 max_conflict_rebases=max_conflict_rebases,
@@ -383,8 +388,8 @@ def run_ingest_job(
                     )
     upload_sec = round(_time.monotonic() - _t_upload, 3)
 
-    if rollup_staging is not None:
-        _swap_in(spark, rollup_staging, rollup_path)
+    if rollup_staged is not None:
+        _commit_staged_rollup(spark, rollup_path, rollup_staged, pre_gen, post_gen)
 
     if tindex_bootstrap:
         from gpt_rag_ingestion_spark.operators.search import (
@@ -456,50 +461,59 @@ def _summary_frame(spark, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema=schema)
 
 
-_ROLLUP_SCHEMA = "parent_id string, n_chunks bigint, chars bigint"
-
-
-def _stage_rollup(spark, rollup_path, old_table, incoming):
-    """Stage the incrementally-maintained per-parent rollup.
+def _stage_rollup(spark, rollup_path, pre_gen, old_table, incoming):
+    """Stage the incrementally-maintained per-parent rollup of the
+    chunks table at generation ``pre_gen`` (None: no table yet).
 
     removed = current chunk rows of parents present in the increment
     (exactly what the merge's anti-join will replace); added = the
-    increment.  Reads the old rollup if present, else falls back to a
-    one-time recompute over the existing table (bootstrap).  Returns
-    the staging path; caller swaps it in after the chunks merge."""
-    from gpt_rag_ingestion_spark.operators.incremental import maintain_rollup
-
-    _recover(spark, rollup_path)
-    rows_in = incoming.select(
-        "parent_id", F.length("content").cast("long").alias("chars")
-    )
-    # existence by the directory (after healing), never by a failed
-    # read: an unreadable rollup raises instead of being rebuilt (the
-    # pinned schema reads a rollup written empty as empty)
-    if _fs_exists(spark, rollup_path):
-        old_rollup = spark.read.schema(_ROLLUP_SCHEMA).parquet(rollup_path)
-    elif old_table is not None:
-        # bootstrap: one recompute, incremental ever after
-        old_rollup = old_table.groupBy("parent_id").agg(
+    increment.  A rollup that is absent or behind ``pre_gen`` is
+    replaced by one recompute over the merged rows (bootstrap),
+    committed here when no increment (``incoming`` None) follows.
+    Returns the staged batch for ``_commit_staged_rollup``, or None."""
+    # existence by the manifest, never by a failed read: an unreadable
+    # rollup raises instead of being rebuilt (a pre-manifest one is
+    # cleared, to be rebuilt by the bootstrap)
+    meta = bm.begin_build(spark, rollup_path, ROLLUP, "rollup")[0]
+    if meta is not None and meta["applied_gen"] == pre_gen:
+        if incoming is None:
+            return None
+        keys = incoming.select("parent_id").distinct()
+        removed = old_table.join(F.broadcast(keys), on="parent_id", how="left_semi")
+        new_rollup = maintain_rollup(
+            bm.read_store(spark, rollup_path, ROLLUP, meta),
+            *[
+                rows.select("parent_id", F.length("content").cast("long").alias("chars"))
+                for rows in (removed, incoming)
+            ],
+            key="parent_id", sum_cols=["chars"], count_col="n_chunks",
+        )
+    else:
+        if old_table is None or incoming is None:
+            rows = incoming if old_table is None else old_table
+        else:
+            rows = merged_view(old_table, incoming)
+        if rows is None:
+            return None
+        new_rollup = rows.groupBy("parent_id").agg(
             F.count(F.lit(1)).alias("n_chunks"),
             F.sum(F.length("content").cast("long")).alias("chars"),
         )
+    staged = bm.write_whole(spark, rollup_path, ROLLUP, meta, new_rollup, "rollup")
+    if incoming is not None:
+        return staged
+    bm.commit_whole(spark, rollup_path, ROLLUP, staged, applied_gen=pre_gen)
+    return None
+
+
+def _commit_staged_rollup(spark, rollup_path, staged, pre_gen, post_gen):
+    """Commit the staged rollup as of ``post_gen`` if the merge landed
+    right after ``pre_gen``; else (a rival commit interleaved, or the
+    merge wrote nothing) drop it: the next run bootstraps."""
+    if post_gen is not None and post_gen == (pre_gen or 0) + 1:
+        bm.commit_whole(spark, rollup_path, ROLLUP, staged, applied_gen=post_gen)
     else:
-        old_rollup = spark.createDataFrame([], _ROLLUP_SCHEMA)
-    if old_table is not None:
-        keys = incoming.select("parent_id").distinct()
-        removed = old_table.join(
-            F.broadcast(keys), on="parent_id", how="left_semi"
-        ).select("parent_id", F.length("content").cast("long").alias("chars"))
-    else:
-        removed = spark.createDataFrame([], "parent_id string, chars bigint")
-    new_rollup = maintain_rollup(
-        old_rollup, removed, rows_in,
-        key="parent_id", sum_cols=["chars"], count_col="n_chunks",
-    )
-    staging = rollup_path.rstrip("/") + "__staging"
-    new_rollup.write.mode("overwrite").parquet(staging)
-    return staging
+        _fs_delete(spark, bm.batch_path(rollup_path, "rows", staged[2]))
 
 
 def _write_per_file_ops(spark, chunks, run_id, ops_table_path):

@@ -57,7 +57,7 @@ def run_maintenance_job(
         if snapshot_rollup_path is not None:
             # CDF-driven IVM of the admin rollup (r6 judge brief #8):
             # O(changed partitions) per sweep after bootstrap, the
-            # applied generation rides inside the rollup's own swap.
+            # applied generation commits with the rollup's batch.
             # MUST run BEFORE the optimize trigger: its vacuum GCs the
             # manifests the change read needs — consuming first keeps
             # every sweep incremental instead of re-bootstrapping.

@@ -23,18 +23,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpt_rag_ingestion_spark.chunking.pipeline import chunk_documents
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
 from gpt_rag_ingestion_spark.operators.snapshot_table import (
+    _current_gen,
     _stats_conf,
     read_snapshot_table,
     snapshot_enable_stats,
     snapshot_maybe_optimize,
     snapshot_merge_upsert,
 )
-from gpt_rag_ingestion_spark.operators.upsert import (
-    _fs_exists,
-    _recover,
-    _swap_in,
-)
+from gpt_rag_ingestion_spark.operators.upsert import _fs_exists
+
+#: The streaming sketch table; ``stream``/``batch_id`` name its last merge.
+SKETCH = bm.Store(subs=("cells",), build="run_incremental_sketch")
 
 
 def run_incremental_ingest(
@@ -79,14 +80,13 @@ def run_incremental_ingest(
     statistics on the FIRST batch so every commit carries data-skipping
     sidecars (SCALE.md §11).
 
-    ``rollup_mode``: ``"stage"`` (default) keeps the swap-staged delta
-    maintenance; ``"cdf"`` maintains the rollup
-    FROM THE TABLE'S OWN CHANGE FEED after each commit
-    (``incremental.maintain_snapshot_rollup``) — the applied
-    generation rides inside the rollup's directory swap, so a crashed
-    tick replays cleanly and the stream and any batch maintenance job
-    can SHARE one rollup without double-counting (both consume the
-    same feed cursor).
+    ``rollup_mode``: ``"stage"`` (default) keeps the batch job's staged
+    delta maintenance; ``"cdf"`` maintains the rollup FROM THE TABLE'S
+    OWN CHANGE FEED after each commit
+    (``incremental.maintain_snapshot_rollup``).  Both commit the
+    applied generation with the rollup, so a crashed tick replays
+    cleanly and the stream and any batch maintenance job can SHARE one
+    rollup without double-counting (both keep the same cursor).
 
     ``max_conflict_rebases``: passed through to the merge so several
     landing-zone streams can feed ONE table when their partition sets
@@ -125,37 +125,43 @@ def run_incremental_ingest(
             overlap=overlap,
             min_tokens=min_tokens,
         )
-        staging = None
+        staged = None
         if rollup_path is not None and rollup_mode == "stage":
             from gpt_rag_ingestion_spark.plans.ingest_job import _stage_rollup
 
             # existence by the commit marker; a read error on an
             # existing table raises instead of rebuilding the rollup
-            old_table = (
-                read_snapshot_table(spark, table_path)
-                if _table_exists(spark, table_path)
-                else None
-            )
+            have = _table_exists(spark, table_path)
+            pre_gen = _current_gen(spark, table_path) if have else None
+            old_table = read_snapshot_table(spark, table_path) if have else None
             # foreachBatch sources are one-shot plans — pin the batch
             # so both the rollup delta and the merge see the same rows
             chunks = chunks.localCheckpoint()
-            staging = _stage_rollup(
-                spark, rollup_path, old_table=old_table, incoming=chunks
+            staged = _stage_rollup(
+                spark, rollup_path, pre_gen, old_table=old_table,
+                incoming=chunks,
             )
         if stats_cols and not _stats_conf(spark, table_path):
             snapshot_enable_stats(spark, table_path, cols=stats_cols)
-        snapshot_merge_upsert(
+        post_gen = snapshot_merge_upsert(
             spark, table_path, chunks, key="parent_id",
             partition_cols=partition_cols,
             max_conflict_rebases=max_conflict_rebases,
         )
-        if max_generations is not None:
-            snapshot_maybe_optimize(
-                spark, table_path, max_generations=max_generations,
-                partition_cols=partition_cols,
+        if max_generations is not None and snapshot_maybe_optimize(
+            spark, table_path, max_generations=max_generations,
+            partition_cols=partition_cols,
+        )["optimized"]:
+            # a fold rewrites files, not rows: the staged rollup reflects
+            # its generation too, unless a rival commit came in between
+            folded = _current_gen(spark, table_path)
+            post_gen = folded if folded == post_gen + 1 else None
+        if staged is not None:
+            from gpt_rag_ingestion_spark.plans.ingest_job import (
+                _commit_staged_rollup,
             )
-        if staging is not None:
-            _swap_in(spark, staging, rollup_path)
+
+            _commit_staged_rollup(spark, rollup_path, staged, pre_gen, post_gen)
         if rollup_path is not None and rollup_mode == "cdf":
             from gpt_rag_ingestion_spark.operators.incremental import (
                 maintain_snapshot_rollup,
@@ -406,8 +412,16 @@ def run_incremental_sketch(
 
     This is the 100 TB pattern for every mergeable summary here
     (histogram, KMV, count-min): shard-local sketch + cell merge,
-    state bounded by bins x groups regardless of stream length."""
+    state bounded by bins x groups regardless of stream length.
+
+    The sketch commits with its (stream, batch id) in one rename, so a
+    batch replayed after that commit is a no-op.  A sketch in the
+    former swap layout raises ``ValueError`` and stays as it was: the
+    checkpoint has consumed its input, so a rebuild would lose it."""
     span = float(hi) - float(lo)
+    stream_id = _checkpoint_app_id(checkpoint_dir)
+    # a sketch in the former layout raises before any input is consumed
+    bm.exists(spark, sketch_table, SKETCH)
     stream = spark.readStream.schema(schema).format("json").load(landing_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -426,22 +440,25 @@ def run_incremental_sketch(
             .groupBy("event_type", "bin")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        # existence by the directory (after healing a torn swap); a
-        # read error on an existing sketch raises instead of
-        # restarting the counts from this one batch
-        _recover(spark, sketch_table)
-        if _fs_exists(spark, sketch_table):
+        # existence by the manifest; a read error on an existing
+        # sketch raises instead of restarting the counts from this one
+        # batch
+        meta = bm.begin_build(spark, sketch_table, SKETCH, "sketch")[0]
+        merged = delta
+        if meta is not None:
+            if (meta.get("stream"), meta.get("batch_id")) == (stream_id, batch_id):
+                return  # a replay of the batch this manifest holds
             merged = (
-                spark.read.parquet(sketch_table)
+                bm.read_store(spark, sketch_table, SKETCH, meta)
                 .unionByName(delta)
                 .groupBy("event_type", "bin")
                 .agg(F.sum("c").cast("long").alias("c"))
             )
-        else:
-            merged = delta.withColumn("c", F.col("c").cast("long"))
-        tmp = sketch_table.rstrip("/") + "__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap_in(spark, tmp, sketch_table)
+        bm.commit_whole(
+            spark, sketch_table, SKETCH,
+            bm.write_whole(spark, sketch_table, SKETCH, meta, merged, "sketch"),
+            stream=stream_id, batch_id=int(batch_id),
+        )
 
     (
         stream.writeStream.foreachBatch(process_batch)

@@ -13,16 +13,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-HEADLINE = [
-    "q01_pricing_summary", "q05_regional_revenue", "q10_chunk_fixed",
-    "q11_window_numbering", "q13_log_retention", "q15_exact_dedup",
-    "q16_ngram_jaccard", "q17_simhash", "q18_minhash_lsh",
-    "q19_knn_top1", "q20_ann_lsh", "q21_quality_scores",
-    "q24_tumbling_window", "q31_media_features", "q35_sessionize",
-    "q36_polygon_area", "q38_cost_rollup", "q43_windowed_counts",
-    "q46_embedding_neardup", "q47_ivf_ann", "q50_doc_analysis_pages",
-    "q52_multimodal_chunks",
-]
+from scripts.harness import HEADLINE  # noqa: E402
 
 
 def main() -> None:

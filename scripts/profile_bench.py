@@ -19,6 +19,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from scripts.harness import HEADLINE, materialize  # noqa: E402
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -46,21 +48,7 @@ def main() -> None:
     status = sc.statusTracker()
 
     qs = entry_mod.queries()
-    headline = [
-        "q01_pricing_summary", "q05_regional_revenue", "q10_chunk_fixed",
-        "q11_window_numbering", "q13_log_retention", "q15_exact_dedup",
-        "q16_ngram_jaccard", "q17_simhash", "q18_minhash_lsh",
-        "q19_knn_top1", "q20_ann_lsh", "q21_quality_scores",
-        "q24_tumbling_window", "q31_media_features", "q35_sessionize",
-        "q36_polygon_area", "q38_cost_rollup", "q43_windowed_counts",
-        "q46_embedding_neardup", "q47_ivf_ann", "q50_doc_analysis_pages",
-        "q52_multimodal_chunks",
-    ]
-    if only:
-        headline = [h for h in headline if h in only]
-
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
+    headline = [h for h in HEADLINE if only is None or h in only]
 
     # warm
     materialize(spark.range(1_000_000).selectExpr("sum(id) as s"))

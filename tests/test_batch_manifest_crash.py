@@ -1,7 +1,9 @@
 """One crash suite for the batch-manifest protocol
-(operators/batch_manifest) over the four stores that commit through
-it: the BM25 text index, the dedup sidecar, and the IVF and IVFPQ
-indexes.
+(operators/batch_manifest) over the six stores that commit through
+it: the BM25 text index, the dedup sidecar, the IVF and IVFPQ
+indexes, the dashboard rollup (its staged tick in the ingest job, its
+change-feed tick in the maintenance sweep, and its bootstrap) and the
+streaming sketch table (one micro-batch merge).
 
 Every write op of every store is killed at each of the protocol's
 crash points:
@@ -22,6 +24,8 @@ built once per module and copied per case.
 
 from __future__ import annotations
 
+import datetime as dt
+import json
 import os
 import shutil
 
@@ -29,8 +33,12 @@ import pytest
 
 from gpt_rag_ingestion_spark.operators import batch_manifest as bm
 from gpt_rag_ingestion_spark.operators import dedup as D
+from gpt_rag_ingestion_spark.operators import incremental as I
 from gpt_rag_ingestion_spark.operators import search as X
 from gpt_rag_ingestion_spark.operators import similarity as S
+from gpt_rag_ingestion_spark.operators import snapshot_table as ST
+from gpt_rag_ingestion_spark.plans.ingest_job import run_ingest_job
+from gpt_rag_ingestion_spark.streaming import micro_batch as MB
 
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
@@ -171,11 +179,99 @@ IVFPQ_OPS = {
     "compact": lambda spark, root: S.ivfpq_index_compact(spark, root),
 }
 
+
+# ---------------------------------------------------------------- rollup
+# <root>/table is the chunks table, <root>/rollup its rollup.  The base
+# rollup is level with the table; each op moves the table to ROLL_V2
+# and the rollup after it, so a replay finds no candidates left.
+ROLL_V1 = [("d1", "alpha " * 40, 1), ("d2", "beta " * 40, 1),
+           ("d3", "gamma " * 30, 1)]
+ROLL_V2 = [("d1", "delta " * 70, 2), ("d2", "beta " * 40, 1),
+           ("d3", "gamma " * 30, 1), ("d4", "omega " * 25, 2)]
+
+
+def _ingest(spark, root, rows, rollup=True):
+    docs = spark.createDataFrame(
+        [(k, t, dt.datetime(2024, 1, d)) for k, t, d in rows],
+        "doc_key string, text string, last_modified timestamp",
+    )
+    run_ingest_job(
+        spark, docs, f"{root}/table", "run",
+        rollup_path=f"{root}/rollup" if rollup else None,
+        max_tokens=30, overlap=4, min_tokens=2, embedding_dim=8,
+    )
+
+
+def _roll_setup(spark, root):
+    _ingest(spark, root, ROLL_V1)
+
+
+def _roll_query(spark, root):
+    return sorted(
+        tuple(r) for r in bm.read_store(spark, f"{root}/rollup", I.ROLLUP).collect()
+    )
+
+
+ROLL_OPS = {
+    # the ingest job's staged tick: written before the merge, committed
+    # after it
+    "stage": lambda spark, root: _ingest(spark, root, ROLL_V2),
+    # a run without the rollup, then the maintenance sweep's
+    # change-feed tick
+    "cdf": lambda spark, root: (
+        _ingest(spark, root, ROLL_V2, rollup=False),
+        I.maintain_snapshot_rollup(spark, f"{root}/table", f"{root}/rollup"),
+    ),
+    # a run without the rollup, then a run with it and no candidates:
+    # the rollup is behind and is recomputed from the table
+    "bootstrap": lambda spark, root: (
+        _ingest(spark, root, ROLL_V2, rollup=False),
+        _ingest(spark, root, ROLL_V2),
+    ),
+}
+
+
+# ---------------------------------------------------------------- sketch
+def _land(d, lo, hi):
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, f"b{lo}.json"), "w") as fh:
+        fh.write("\n".join(
+            json.dumps({"event_id": i, "event_type": f"t{i % 2}",
+                        "value": (i * 7) % 500})
+            for i in range(lo, hi)
+        ))
+
+
+def _sketch_setup(spark, root):
+    # each stream's landing zone and checkpoint live under the root, so
+    # a copied root is a consistent stream state
+    _land(f"{root}/land1", 0, 300)
+    MB.run_incremental_sketch(
+        spark, f"{root}/land1", f"{root}/sketch", f"{root}/ck1"
+    )
+    _land(f"{root}/land2", 300, 500)
+
+
+def _sketch_query(spark, root):
+    return sorted(
+        tuple(r) for r in bm.read_store(spark, f"{root}/sketch", MB.SKETCH).collect()
+    )
+
+
+SKETCH_OPS = {
+    "merge": lambda spark, root: MB.run_incremental_sketch(
+        spark, f"{root}/land2", f"{root}/sketch", f"{root}/ck2"
+    ),
+}
+
+# store -> (setup, query, ops, layout, the store's dir under the root)
 STORES = {
-    "text_index": (_text_setup, _text_query, TEXT_OPS),
-    "sidecar": (_side_setup, _side_query, SIDE_OPS),
-    "ivf": (_ivf_setup, _ivf_query, IVF_OPS),
-    "ivfpq": (_ivfpq_setup, _ivfpq_query, IVFPQ_OPS),
+    "text_index": (_text_setup, _text_query, TEXT_OPS, X.TEXT_INDEX, ""),
+    "sidecar": (_side_setup, _side_query, SIDE_OPS, D.SIDECAR, ""),
+    "ivf": (_ivf_setup, _ivf_query, IVF_OPS, S.IVF_INDEX, ""),
+    "ivfpq": (_ivfpq_setup, _ivfpq_query, IVFPQ_OPS, S.IVFPQ_INDEX, ""),
+    "rollup": (_roll_setup, _roll_query, ROLL_OPS, I.ROLLUP, "rollup"),
+    "sketch": (_sketch_setup, _sketch_query, SKETCH_OPS, MB.SKETCH, "sketch"),
 }
 
 CRASH_POINTS = ("before_claim", "after_claim", "meta_rename")
@@ -191,7 +287,7 @@ CASES = [
         marks=() if (store, op, point) in _FAST else pytest.mark.slow,
         id=f"{store}-{op}-{point}",
     )
-    for store, (_s, _q, ops) in STORES.items()
+    for store, (_s, _q, ops, _l, _r) in STORES.items()
     for op in ops
     for point in CRASH_POINTS
 ]
@@ -245,39 +341,40 @@ def test_crash_leaves_committed_state_and_replay_converges(
     spark, tmp_path, monkeypatch, base_stores, store, op, point
 ):
     base, twin = base_stores
-    _setup, query, ops = STORES[store]
+    _setup, query, ops, layout, rel = STORES[store]
     base_root, before = base(store)
     after = twin(store, op)
-    layout = {"text_index": X.TEXT_INDEX, "sidecar": D.SIDECAR,
-              "ivf": S.IVF_INDEX, "ivfpq": S.IVFPQ_INDEX}[store]
 
     root = str(tmp_path / store)
     shutil.copytree(base_root, root)
+    sroot = os.path.join(root, rel) if rel else root
     target = {"before_claim": "claim", "after_claim": "write_meta",
               "meta_rename": "_fs_try_rename"}[point]
     with monkeypatch.context() as m:
         m.setattr(bm, target, _raise)
-        with pytest.raises(_Crash):
+        # a crash inside a micro-batch reaches the caller wrapped in
+        # the streaming query's failure
+        with pytest.raises(Exception, match="injected crash"):
             ops[op](spark, root)
     if point == "meta_rename":
-        assert not os.path.exists(f"{root}/meta")
-        assert os.path.exists(f"{root}/meta__staging")
+        assert not os.path.exists(f"{sroot}/meta")
+        assert os.path.exists(f"{sroot}/meta__staging")
 
     # answers equal the last committed state; the reader (and the
     # existence check) leave every file as it was
-    footprint = _tree(root)
-    assert bm.exists(spark, root, layout)
+    footprint = _tree(sroot)
+    assert bm.exists(spark, sroot, layout)
     assert query(spark, root) == (after if point == "meta_rename" else before)
-    assert _tree(root) == footprint
+    assert _tree(sroot) == footprint
 
     # the replay converges to the uncrashed twin, with no debris left
     ops[op](spark, root)
     assert query(spark, root) == after
-    assert not os.path.exists(f"{root}/meta__staging")
-    meta = bm.read_meta(spark, root, layout)
+    assert not os.path.exists(f"{sroot}/meta__staging")
+    meta = bm.read_meta(spark, sroot, layout)
     for sub in layout.subs:
         on_disk = sorted(
-            n[len("batch="):] for n in os.listdir(f"{root}/{sub}")
+            n[len("batch="):] for n in os.listdir(f"{sroot}/{sub}")
             if n.startswith("batch=")
         )
         assert on_disk == meta["batches"][sub], sub
@@ -347,3 +444,39 @@ def test_old_layout_is_refused_until_rebuilt(spark, tmp_path, store):
         ["claims", "meta", *layout.subs]
     )
     assert all(len(meta["batches"][sub]) == 1 for sub in layout.subs)
+
+
+def test_old_layout_sketch_is_refused_and_rollup_rebuilt(spark, tmp_path):
+    """The former directory swap wrote parquet files at the store's
+    root.  Such a sketch is refused before its stream consumes any
+    input and stays as it was: the checkpoint has already consumed
+    what it counted, so starting over would restart the counts.  Such
+    a rollup is derived data: the bootstrap clears it and commits a
+    recompute from the table."""
+    sketch = str(tmp_path / "sketch")
+    _touch(sketch, "part-00000.parquet", "_SUCCESS")
+    before = _tree(sketch)
+    with pytest.raises(ValueError, match="pre-manifest"):
+        bm.exists(spark, sketch, MB.SKETCH)
+    _land(str(tmp_path / "land"), 0, 10)
+    with pytest.raises(ValueError, match="pre-manifest"):
+        MB.run_incremental_sketch(
+            spark, str(tmp_path / "land"), sketch, str(tmp_path / "ck")
+        )
+    assert _tree(sketch) == before
+    assert not os.path.exists(tmp_path / "ck")
+
+    table, roll = str(tmp_path / "table"), str(tmp_path / "rollup")
+    ST.snapshot_merge_upsert(spark, table, spark.createDataFrame(
+        [("p1", "ab", "c1"), ("p1", "cde", "c2"), ("p2", "f", "c3")],
+        "parent_id string, content string, id string",
+    ), key="id")
+    _touch(roll, "part-00000.parquet", "_applied_gen")
+    out = I.maintain_snapshot_rollup(spark, table, roll)
+    assert out["mode"] == "bootstrap"
+    assert sorted(n for n in os.listdir(roll) if not n.startswith(".")) == [
+        "claims", "meta", "rows",
+    ]
+    assert sorted(
+        tuple(r) for r in bm.read_store(spark, roll, I.ROLLUP).collect()
+    ) == [("p1", 2, 5), ("p2", 1, 1)]

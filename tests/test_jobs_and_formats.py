@@ -18,6 +18,8 @@ from gpt_rag_ingestion_spark.functions.markdown import (
     number_figures,
     restore_tables,
 )
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+from gpt_rag_ingestion_spark.operators.incremental import ROLLUP
 from gpt_rag_ingestion_spark.operators.snapshot_table import read_snapshot_table
 from gpt_rag_ingestion_spark.plans.ingest_job import run_ingest_job
 from gpt_rag_ingestion_spark.sources.binary_docs import (
@@ -332,7 +334,7 @@ def test_ingest_job_incremental_rollup_maintenance(spark, tmp_path):
         )
 
     def maintained():
-        return sorted(map(tuple, spark.read.parquet(rollup).collect()))
+        return sorted(map(tuple, bm.read_store(spark, rollup, ROLLUP).collect()))
 
     run_ingest_job(
         spark, _docs(spark, [("d1", "alpha " * 40, t0), ("d2", "beta " * 40, t0)]),
@@ -362,6 +364,64 @@ def test_ingest_job_incremental_rollup_maintenance(spark, tmp_path):
     run_ingest_job(
         spark, _docs(spark, [("d2", "tiny text here", t2)]), table, "r4", **kw,
     )
+    assert maintained() == recompute()
+
+
+def test_rollup_left_behind_by_a_crash_is_brought_level(
+    spark, tmp_path, monkeypatch
+):
+    """A crash at the rollup's commit, after the chunks merge landed,
+    leaves the rollup one tick behind its table.  The next run, with
+    unchanged documents and so no candidates, finds the rollup's
+    ``applied_gen`` behind the table's generation and rebuilds it by
+    one recompute; a maintenance sweep over the level rollup is then a
+    no-op (both modes keep the same cursor)."""
+    from gpt_rag_ingestion_spark.operators.incremental import (
+        maintain_snapshot_rollup,
+    )
+
+    table = str(tmp_path / "chunks")
+    rollup = str(tmp_path / "rollup")
+    kw = dict(max_tokens=30, overlap=4, min_tokens=2, embedding_dim=8,
+              rollup_path=rollup)
+    t0 = _ts("2024-01-01T00:00:00")
+    t1 = _ts("2024-01-02T00:00:00")
+
+    def recompute():
+        return sorted(
+            tuple(r)
+            for r in read_snapshot_table(spark, table)
+            .groupBy("parent_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_chunks"),
+                F.sum(F.length("content").cast("long")).alias("chars"),
+            )
+            .collect()
+        )
+
+    def maintained():
+        return sorted(map(tuple, bm.read_store(spark, rollup, ROLLUP).collect()))
+
+    run_ingest_job(
+        spark, _docs(spark, [("d1", "alpha " * 40, t0), ("d2", "beta " * 40, t0)]),
+        table, "r1", **kw,
+    )
+    docs2 = _docs(spark, [("d1", "gamma " * 80, t1), ("d2", "beta " * 40, t0),
+                          ("d3", "delta " * 20, t1)])
+
+    def crash(*_a, **_kw):
+        raise RuntimeError("injected crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(bm, "write_meta", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_ingest_job(spark, docs2, table, "r2", **kw)
+    assert maintained() != recompute()  # the merge landed, the rollup did not
+
+    run_ingest_job(spark, docs2, table, "r3", **kw)
+    assert maintained() == recompute()
+    out = maintain_snapshot_rollup(spark, table, rollup)
+    assert out["mode"] == "noop"
     assert maintained() == recompute()
 
 

@@ -8,6 +8,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+from gpt_rag_ingestion_spark.operators.incremental import ROLLUP
 from gpt_rag_ingestion_spark.plans.maintenance_job import run_maintenance_job
 
 
@@ -112,7 +114,7 @@ def test_cdf_rollup_maintenance_equals_recompute(spark, tmp_path):
 
     def rollup():
         return sorted(
-            tuple(r) for r in spark.read.parquet(roll).collect()
+            tuple(r) for r in bm.read_store(spark, roll, ROLLUP).collect()
         )
 
     def sweep():
@@ -217,6 +219,6 @@ def test_cdf_rollup_tracks_dv_deletes(spark, tmp_path):
     out = tick()
     assert out["mode"] == "incremental"
     got = sorted(
-        tuple(r) for r in spark.read.parquet(roll).collect()
+        tuple(r) for r in bm.read_store(spark, roll, ROLLUP).collect()
     )
     assert got == recompute()

@@ -162,10 +162,10 @@ def test_unreadable_chunks_table_raises(spark, tmp_path):
     assert _tree_digest(table) == before
 
 
-def test_unreadable_swap_table_raises(spark, tmp_path):
-    """The streaming sketch table (committed by a directory swap): a
-    corrupt parquet footer fails the micro-batch instead of restarting
-    the counts from that one batch, and the sketch stays as it was."""
+def test_unreadable_sketch_table_raises(spark, tmp_path):
+    """The streaming sketch table (a batch-manifest store): a corrupt
+    parquet footer fails the micro-batch instead of restarting the
+    counts from that one batch, and the sketch stays as it was."""
     from gpt_rag_ingestion_spark.streaming.micro_batch import (
         run_incremental_sketch,
     )

@@ -19,6 +19,17 @@ def test_registry_window_pinned_and_duplicate_free():
     check_registry(entry_mod)
 
 
+def test_bench_headline_is_read_from_bench_py():
+    """The scripts' headline list comes from bench.py's literal: 22
+    distinct registry ids."""
+    import __spark_entry__ as entry_mod
+    from scripts.harness import HEADLINE
+
+    assert len(HEADLINE) == len(set(HEADLINE)) == 22
+    qs = entry_mod.queries()
+    assert [h for h in HEADLINE if h not in qs] == []
+
+
 def test_window_is_oracle_backed():
     """Every driver-window slot must hash-check (constraint (a) of the
     window contract): a rows-only id in the window wastes a slot on a

@@ -7,7 +7,10 @@ import pytest
 
 import json
 
+from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+from gpt_rag_ingestion_spark.operators.incremental import ROLLUP
 from gpt_rag_ingestion_spark.operators.snapshot_table import read_snapshot_table
+from gpt_rag_ingestion_spark.streaming.micro_batch import SKETCH
 from gpt_rag_ingestion_spark.streaming.stateful import streaming_first_seen
 
 
@@ -226,7 +229,7 @@ def test_incremental_sketch_equals_batch_build(spark, tmp_path):
 
     got = {
         (r["event_type"], r["bin"]): r["c"]
-        for r in spark.read.parquet(sketch).collect()
+        for r in bm.read_store(spark, sketch, SKETCH).collect()
     }
     # one-shot batch build over ALL the data
     all_rows = spark.createDataFrame(
@@ -333,7 +336,7 @@ def test_streaming_ingest_maintains_rollup(spark, tmp_path):
         )
 
     def maintained():
-        return sorted(map(tuple, spark.read.parquet(rollup).collect()))
+        return sorted(map(tuple, bm.read_store(spark, rollup, ROLLUP).collect()))
 
     with open(landing / "b1.json", "w") as fh:
         for i in range(3):
@@ -1065,7 +1068,7 @@ def test_streaming_cdf_rollup_mode(spark, tmp_path):
     def rollup():
         return sorted(
             tuple(r)
-            for r in spark.read.parquet(f"{root}/rollup").collect()
+            for r in bm.read_store(spark, f"{root}/rollup", ROLLUP).collect()
         )
 
     _w("b1.json", [(1, "alpha beta " * 30, "web"),
