@@ -19,30 +19,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scripts.harness import HEADLINE, materialize  # noqa: E402
+from scripts.harness import HEADLINE, materialize, session  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     only = sys.argv[1].split(",") if len(sys.argv) > 1 else None
-
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("profile-bench")
     sc = spark.sparkContext
 
     status = sc.statusTracker()

@@ -30,6 +30,26 @@ def test_bench_headline_is_read_from_bench_py():
     assert [h for h in HEADLINE if h not in qs] == []
 
 
+def test_script_session_conf_is_read_from_bench_py():
+    """``scripts.harness.session`` builds bench.py's exact builder conf
+    (pinned here, so a conf edit in bench.py shows up), and
+    profile_bench.py keeps no copy of it."""
+    from scripts.harness import bench_conf
+
+    assert bench_conf("3") == [
+        ("master", ("local[3]",)),
+        ("appName", ("gpt-rag-ingestion-spark-bench",)),
+        ("config", ("spark.sql.shuffle.partitions", "3")),
+        ("config", ("spark.sql.session.timeZone", "UTC")),
+        ("config", ("spark.sql.adaptive.enabled", "true")),
+        ("config", ("spark.sql.execution.arrow.pyspark.enabled", "true")),
+        ("config", ("spark.driver.memory", "16g")),
+        ("config", ("spark.ui.enabled", "false")),
+    ]
+    with open(os.path.join(REPO, "scripts", "profile_bench.py")) as fh:
+        assert "SparkSession.builder" not in fh.read()
+
+
 def test_window_is_oracle_backed():
     """Every driver-window slot must hash-check (constraint (a) of the
     window contract): a rows-only id in the window wastes a slot on a

@@ -228,8 +228,7 @@ def test_rebase_commit_kill_sweep(spark, tmp_path, monkeypatch, hard):
         real_commit = S._commit
         state = {"done": False}
 
-        def wrapped(spark_, path, gen, parts, expected_cur,
-                    extra=None, op="merge"):
+        def wrapped(spark_, path, gen, parts, expected_cur, **kw):
             if not state["done"] and killer.scope in str(path):
                 state["done"] = True
                 was = killer.enabled
@@ -242,9 +241,7 @@ def test_rebase_commit_kill_sweep(spark, tmp_path, monkeypatch, hard):
                 )
                 monkeypatch.setattr(S, "_commit", wrapped)
                 killer.enabled = was
-            return real_commit(
-                spark_, path, gen, parts, expected_cur, extra=extra, op=op
-            )
+            return real_commit(spark_, path, gen, parts, expected_cur, **kw)
 
         monkeypatch.setattr(S, "_commit", wrapped)
         return lambda: monkeypatch.setattr(S, "_commit", real_commit)

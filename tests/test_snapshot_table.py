@@ -28,29 +28,107 @@ def _rows(df):
 
 
 @pytest.mark.parametrize("partitioned", [False, True])
-def test_snapshot_merge_equals_swap_sink(spark, tmp_path, partitioned):
-    """Merges and deletes equal the relation the directory-swap sink
-    used to commit: ``merged_view`` of the collected rows for a merge,
-    the existing rows minus the doomed keys for a delete."""
+def test_snapshot_writes_equal_dataframe_reference(spark, tmp_path, partitioned):
+    """Every snapshot write equals the same operation on a plain
+    DataFrame of the rows before it, on both layouts (the unpartitioned
+    table is the one relation ``""``), and a partitioned write leaves
+    the manifest ref of every partition outside its affected set as it
+    was."""
     pc = ["bucket"] if partitioned else None
     snap = str(tmp_path / "snap")
-    want = _rows(_inc(spark, 0, 0))
-    for lo, hi, mul in ((0, 100, 7), (50, 150, 9), (20, 60, 11)):
+    want: list = []
+
+    def parts():
+        cur = S._current_gen(spark, snap)
+        return {} if cur is None else S._read_manifest(spark, snap, cur)["partitions"]
+
+    def check(write, reference, affected):
+        nonlocal want
+        ref = spark.createDataFrame(want, "parent_id long, bucket long, v long")
+        want = _rows(reference(ref))
+        before = parts()
+        write()
+        assert _rows(S.read_snapshot_table(spark, snap)) == want
+        after = parts()
+        # unpartitioned: the one relation "" is always affected
+        kept = [r for r in before if partitioned and r not in affected]
+        assert {r: after.get(r) for r in kept} == {r: before[r] for r in kept}
+
+    def pid(df):
+        return df.select("parent_id")
+
+    every = {"bucket=0", "bucket=1", "bucket=2"}
+    for lo, hi, mul in ((0, 100, 7), (50, 150, 9)):
         inc = _inc(spark, lo, hi, mul)
-        S.snapshot_merge_upsert(spark, snap, inc, partition_cols=pc)
-        want = _rows(
-            U.merged_view(
-                spark.createDataFrame(want, "parent_id long, bucket long, v long"),
-                inc,
-            )
+        check(
+            lambda: S.snapshot_merge_upsert(spark, snap, inc, partition_cols=pc),
+            lambda ref: ref.join(pid(inc), "parent_id", "left_anti")
+            .unionByName(inc),
+            every,
         )
-    assert _rows(S.read_snapshot_table(spark, snap)) == want
 
     doomed = spark.range(0, 40).select(F.col("id").alias("parent_id"))
-    S.snapshot_delete_keys(spark, snap, doomed, partition_cols=pc)
-    assert _rows(S.read_snapshot_table(spark, snap)) == [
-        r for r in want if r[0] >= 40
-    ]
+    check(
+        lambda: S.snapshot_delete_keys(spark, snap, doomed, partition_cols=pc),
+        lambda ref: ref.join(doomed, "parent_id", "left_anti"),
+        every,
+    )
+
+    # bucket 0 only: matched rows update (s.v > t.v) unless their key
+    # is even (matched delete); unmatched rows insert
+    inc = _inc(spark, 120, 180, 10).filter("bucket = 0")
+    check(
+        lambda: S.snapshot_merge_when(
+            spark, snap, inc, partition_cols=pc,
+            matched_update="s.v > t.v", matched_delete="s.parent_id % 2 = 0",
+        ),
+        lambda ref: ref.join(pid(inc), "parent_id", "left_anti")
+        .unionByName(
+            inc.join(pid(ref), "parent_id", "left_semi")
+            .filter("parent_id % 2 = 1")
+        )
+        .unionByName(inc.join(pid(ref), "parent_id", "left_anti")),
+        {"bucket=0"},
+    )
+
+    where = "bucket = 1 AND v < 400"
+    repl = _inc(spark, 300, 330, 1).filter("bucket = 1")
+    check(
+        lambda: S.snapshot_overwrite_where(
+            spark, snap, repl, where, partition_cols=pc
+        ),
+        lambda ref: ref.filter(f"NOT ({where})").unionByName(repl),
+        {"bucket=1"},
+    )
+
+    cond = "bucket = 2 AND parent_id < 100"
+    check(
+        lambda: S.snapshot_update(
+            spark, snap, cond, {"v": "v + 1"}, partition_cols=pc
+        ),
+        lambda ref: ref.withColumn(
+            "v", F.when(F.expr(cond), F.col("v") + 1).otherwise(F.col("v"))
+        ),
+        {"bucket=2"},
+    )
+
+    if partitioned:
+        repl = _inc(spark, 500, 512, 1).filter("bucket = 1")
+        check(
+            lambda: S.snapshot_insert_overwrite_partitions(
+                spark, snap, repl, pc
+            ),
+            lambda ref: ref.filter("bucket != 1").unionByName(repl),
+            {"bucket=1"},
+        )
+
+    rels = ["bucket=0"] if partitioned else [""]
+    check(
+        lambda: S.snapshot_compact_partitions(spark, snap, pc or [], rels=rels),
+        lambda ref: ref,
+        set(rels),
+    )
+    assert parts()[rels[0]].startswith(f"gen-{S._current_gen(spark, snap):08d}-")
 
 
 def test_snapshot_isolation_across_commits(spark, tmp_path):
@@ -134,6 +212,83 @@ def test_commit_crash_legs_roll_forward_or_invisible(
     got = S.read_snapshot_table(spark, snap)
     assert got.filter("parent_id >= 200").count() == 10
     assert _rows(got.filter("parent_id < 200")) == _rows(upd)
+
+
+def _failing_read(monkeypatch, target, exc):
+    """Make ``S._read_text`` raise ``exc`` for one path (a predicate)."""
+    real = S._read_text
+
+    def read(spark_, path):
+        if target(path):
+            raise exc
+        return real(spark_, path)
+
+    monkeypatch.setattr(S, "_read_text", read)
+
+
+def test_commit_raises_on_unreadable_predecessor_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that cannot read its predecessor's manifest must not
+    land without the carried schema, renames and txn ledger: a read
+    fault raises, and a manifest that is gone means the snapshot
+    moved.  Both abort before the claim, leaving pointer and
+    ``_manifests/`` as they were."""
+    import os
+
+    snap = str(tmp_path / "snap")
+    S.snapshot_merge_upsert(
+        spark, snap, _inc(spark, 0, 10), txn_app_id="app", txn_version=1
+    )
+    cur = S._current_gen(spark, snap)
+    prev = S._manifest_path(snap, cur)
+    gname = S._gen_name(cur + 1)
+    _inc(spark, 10, 20).write.parquet(S._gen_dir(snap, gname))
+    listing = sorted(os.listdir(os.path.join(snap, "_manifests")))
+    for exc, raised in (
+        (RuntimeError("injected manifest read fault"), RuntimeError),
+        (FileNotFoundError(prev), S.SnapshotWriteConflict),
+    ):
+        _failing_read(monkeypatch, lambda p: p == prev, exc)
+        with pytest.raises(raised):
+            S._commit(spark, snap, cur + 1, {"": gname}, expected_cur=cur)
+        monkeypatch.undo()
+        assert S._current_gen(spark, snap) == cur
+        assert sorted(os.listdir(os.path.join(snap, "_manifests"))) == listing
+
+
+def test_pointer_read_fault_raises(spark, tmp_path, monkeypatch):
+    """Only a pointer that vanished between probes, or one partly
+    written, reads as absent: any other read error surfaces instead of
+    "no committed snapshot"."""
+    snap = str(tmp_path / "snap")
+    S.snapshot_merge_upsert(spark, snap, _inc(spark, 0, 10))
+    _failing_read(
+        monkeypatch, lambda p: p.endswith("/_current"),
+        RuntimeError("injected pointer read fault"),
+    )
+    with pytest.raises(RuntimeError, match="injected pointer"):
+        S.read_snapshot_table(spark, snap)
+
+
+def test_as_of_timestamp_read_fault_raises(spark, tmp_path, monkeypatch):
+    """AS OF TIMESTAMP skips only a manifest vacuumed between the
+    listing and the read; any other read error raises instead of
+    falling back to the file's mtime."""
+    import time
+
+    snap = str(tmp_path / "snap")
+    S.snapshot_merge_upsert(spark, snap, _inc(spark, 0, 10))
+    S.snapshot_merge_upsert(spark, snap, _inc(spark, 10, 20))
+    first = S._manifest_path(snap, 1)
+    _failing_read(
+        monkeypatch, lambda p: p == first,
+        RuntimeError("injected manifest read fault"),
+    )
+    with pytest.raises(RuntimeError, match="injected manifest"):
+        S.read_snapshot_table(
+            spark, snap, at_ts_ms=int(time.time() * 1000) + 60_000
+        )
 
 
 def test_optimize_and_vacuum_fold_generations(spark, tmp_path):
