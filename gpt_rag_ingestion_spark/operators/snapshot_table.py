@@ -78,13 +78,16 @@ delete-parent-then-upload index upsert (jobs/blob_storage_indexer.py:
 Delta/Iceberg design (manifest + pointer) over plain parquet, with
 the concurrent-writer arbitration described above.
 
-Every data write (merge, conditional merge, delete, overwrite-where,
-update, optimize, partition compaction) is one ``_WriteAttempt``: the
-same recovery + pinned base generation + ledger gate, then one
-partition-rewrite tail (``_WriteAttempt.rewrite``) that writes the new
-generation, its stats sidecar and its manifest overlay and commits.
-An unpartitioned table is the partitioned case with one relation
-``""``.
+Every commit — each data write (merge, conditional merge, delete,
+overwrite-where, update, optimize, partition compaction), the DV
+delete, restore, column rename/drop, clone and convert — is one
+``_WriteAttempt``: the same writer-start recovery + pinned base
+generation + ledger gate.  Data writes then share one partition-rewrite
+tail (``_WriteAttempt.rewrite``) that writes the new generation and its
+stats sidecar.  Every manifest body comes from one builder
+(``_manifest_body``), which decides which fields a commit states and
+which it inherits; ``_commit`` only claims, verifies and swaps.  An
+unpartitioned table is the partitioned case with one relation ``""``.
 """
 
 from __future__ import annotations
@@ -98,6 +101,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gpt_rag_ingestion_spark.operators.upsert import (
     _fs_delete,
@@ -342,23 +346,17 @@ def _current_gen(spark, table_path: str) -> int | None:
     return _try_read(cur)
 
 
-def _with_schema(
-    extra: dict | None, df: DataFrame,
-    partition_cols: list[str] | None = None,
-    prev: dict | None = None,
-) -> dict:
-    """Attach the committed LOGICAL schema (and partition-column
-    names) to a commit's manifest body.  The stored schema is the fix
-    for partition-column type inference: read-back of a
-    hive-partitioned generation otherwise re-infers partition types
-    from directory NAMES, flipping a string column whose current
-    values look numeric to BIGINT (crashing the next merge union with
-    ANSI CAST_INVALID_INPUT, and silently changing the table's dtype
-    between commits).  ``read_snapshot_table`` pins partition columns
-    to these stored types; DESCRIBE DETAIL surfaces them (Delta's
-    metadata card carries format + columns)."""
-    from pyspark.sql.types import StructType
-
+def _frame_schema(df: DataFrame, prev: dict | None = None) -> dict:
+    """The LOGICAL schema of a frame a commit writes, as stored in its
+    manifest.  The stored schema is the fix for partition-column type
+    inference: read-back of a hive-partitioned generation otherwise
+    re-infers partition types from directory NAMES, flipping a string
+    column whose current values look numeric to BIGINT (crashing the
+    next merge union with ANSI CAST_INVALID_INPUT, and silently
+    changing the table's dtype between commits).
+    ``read_snapshot_table`` pins partition columns to these stored
+    types; DESCRIBE DETAIL surfaces them (Delta's metadata card carries
+    format + columns)."""
     # canonical column ORDER: the predecessor manifest's (Delta keeps
     # the logical order stable across commits — a partitioned
     # read-back otherwise appends partition columns last and the
@@ -371,20 +369,12 @@ def _with_schema(
             if fj["name"] in fields:
                 ordered.append(fields.pop(fj["name"]))
     ordered.extend(fields.values())
-    out = dict(extra or {})
-    out["schema"] = json.loads(StructType(ordered).json())
-    if partition_cols:
-        out["partition_cols"] = list(partition_cols)
-    if prev and prev.get("renames") and "renames" not in out:
-        out["renames"] = prev["renames"]
-    return out
+    return json.loads(StructType(ordered).json())
 
 
 def _manifest_schema(manifest: dict):
     """(StructType, partition_cols) stored in a manifest, or
     (None, []) for manifests written before schema tracking."""
-    from pyspark.sql.types import StructType
-
     raw = manifest.get("schema")
     if not raw:
         return None, []
@@ -509,13 +499,14 @@ def _write_dv(spark, table_path: str, gen: int, files: dict) -> str:
 def _carry_dv_ref(
     spark, table_path: str, old_manifest: dict, new_partitions: dict,
     gen: int,
-) -> dict | None:
+) -> str | None:
     """A rewriting commit must CARRY the deletion vectors of files it
     did not rewrite: entries whose (generation, partition) is still
     live in the new manifest survive; entries for rewritten partitions
     die (their deletes were materialized by the read the rewrite was
     based on).  Reuses the old immutable DV file when nothing was
-    dropped.  Returns the manifest ``extra`` dict or None."""
+    dropped.  Returns the DV file name for the new manifest, or
+    None."""
     dv = _dv_map(spark, table_path, old_manifest)
     if not dv:
         return None
@@ -541,8 +532,8 @@ def _carry_dv_ref(
     if not kept:
         return None
     if kept == dv:
-        return {"dv": old_manifest["dv"]}
-    return {"dv": _write_dv(spark, table_path, gen, kept)}
+        return old_manifest["dv"]
+    return _write_dv(spark, table_path, gen, kept)
 
 
 def _apply_dv(
@@ -703,12 +694,20 @@ def read_snapshot_table(
         spark, table_path, manifest["partitions"],
         dv_map=_dv_map(spark, table_path, manifest), manifest=manifest,
     )
-    if df is None:
+    if df is not None:
+        return df
+    # every row was deleted: zero rows of the stored schema, partition
+    # columns last as a partitioned scan returns them
+    schema, pcols = _manifest_schema(manifest)
+    if schema is None:
         raise ValueError(
-            f"generation {gen} of {table_path} lists no partition "
-            "(every row was deleted)"
+            f"generation {gen} of {table_path} lists no partition and "
+            "stores no schema"
         )
-    return df
+    return spark.createDataFrame([], StructType(
+        [f for f in schema.fields if f.name not in pcols]
+        + [schema[c] for c in pcols]
+    ))
 
 
 def _generations(parts: dict) -> list[tuple[str, list[str]]]:
@@ -732,86 +731,59 @@ def _scan_generation(spark, table_path: str, manifest: dict, g: str, rels):
     )
 
 
-def _commit(
-    spark, table_path: str, gen: int, partitions: dict,
-    expected_cur: int | None,
-    extra: dict | None = None,
-    op: str = "merge",
-    prev_manifest: dict | None = None,
-) -> None:
-    """Fenced commit.  ``prev_manifest`` is the manifest of
-    ``expected_cur`` when the caller already holds it; otherwise it is
-    read here, and a missing one means the snapshot moved
-    (``SnapshotWriteConflict``, raised before claiming).  Leg 1: claim
-    generation ``gen`` by atomic create-exclusive of its manifest —
-    of N writers that based their merge on the same snapshot (and so
-    computed the same ``gen``),
-    exactly one create succeeds; the rest raise
-    ``SnapshotWriteConflict`` before touching the pointer.  Leg 2:
-    re-read the pointer and verify it still names ``expected_cur`` —
-    catches the pathological stale-writer case where vacuum removed
-    the manifest a faster chain of commits had claimed (the
-    create-exclusive would wrongly succeed).  Only then the atomic
-    pointer swap."""
-    body = {"gen": gen, "partitions": partitions, "op": op}
-    if extra:
-        body.update(extra)
-    # schema CARRY: metadata-only commits (delete-by-DV, optimize,
-    # compact, constraint-era ops) inherit the predecessor manifest's
-    # stored schema, so once a data commit records it, every later
-    # snapshot has one without threading it through each call site.
-    # Data commits that change the schema pass it via ``extra``
-    # (``_with_schema``).  Rebase note: a rebased commit re-enters
-    # here with the RIVAL's gen as expected_cur, so the carry picks up
-    # the rival's schema when ours didn't state one — and partition-
-    # column types (the part read-back depends on) never change
-    # across disjoint-partition rebases.
-    # Carrying from a manifest that could not be read would silently
-    # drop the txn ledger (a re-delivered batch then applies twice),
-    # the renames and the clock clamp — so a read fault raises.
-    prev = prev_manifest
-    if prev is None and expected_cur is not None:
-        try:
-            prev = _read_manifest(spark, table_path, expected_cur)
-        except Exception as e:
-            if not _vanished(e):
-                raise
-            raise SnapshotWriteConflict(
-                f"snapshot moved during merge: the manifest of base "
-                f"generation {expected_cur} is gone ({table_path})"
-            ) from None
-    if prev is not None:
-        if "schema" not in body and prev.get("schema"):
-            body["schema"] = prev["schema"]
-            if prev.get("partition_cols"):
-                body["partition_cols"] = prev["partition_cols"]
-        # column-mapping rename history carries like the schema —
-        # a commit that doesn't state it inherits it
-        if "renames" not in body and prev.get("renames"):
-            body["renames"] = prev["renames"]
-        # idempotent-writer ledger (Delta txnAppId/txnVersion):
-        # carries forward so any commit chain preserves every
-        # app's high-water version — minus entries past the
-        # retention horizon (snapshot_set_ledger_retention), so
-        # non-txn commits (optimize, restore, rename) trim the
-        # map too and a long compaction-only tail still converges
-        if "txn" not in body and prev.get("txn"):
-            led = dict(prev["txn"])
-            ages = dict(prev.get("txn_gen") or {})
-            retain = _ledger_retention(spark, table_path)
-            if retain is not None:
-                for a in list(led):
-                    base = ages.get(a)
-                    if base is None:
-                        ages[a] = gen
-                    elif gen - int(base) > retain:
-                        del led[a]
-                        del ages[a]
-            if led:
-                body["txn"] = led
-                body["txn_gen"] = {
-                    a: g for a, g in ages.items() if a in led
-                }
+def _manifest_body(
+    spark, table_path: str, gen: int, partitions: dict, op: str,
+    prev: dict | None, prev_gen: int | None, like: dict | None = None,
+    *, schema: dict | None = None, partition_cols=None,
+    renames: list | None = None, dv: str | None = None,
+    ledger: tuple | None = None, **info,
+) -> dict:
+    """The one manifest builder: which fields a commit STATES and which
+    it INHERITS.  ``prev`` is the manifest of ``prev_gen``, the
+    generation this commit replaces (None for a new table).
+
+    - What describes the listed data — the stored ``schema`` with its
+      ``partition_cols``, the column-mapping ``renames`` and the
+      deletion vectors — is the commit's own where it states it, else
+      inherited from ``like``: the snapshot whose data the commit
+      lists, ``prev`` unless a restore (its target) or a clone (its
+      source) names another.  Once a data commit records a schema,
+      every later snapshot has one without threading it through each
+      call site.  Inherited deletion vectors survive only for files
+      the new map still lists (``_carry_dv_ref``).
+    - The history — the idempotent-writer ledger and the commit
+      clock — always continues ``prev``.  ``ledger`` is the
+      ``(txn, txn_gen)`` pair ``_txn_gate`` stamped; without one the
+      predecessor's ledger carries forward minus the entries past the
+      retention horizon (``snapshot_set_ledger_retention``), so
+      non-txn commits (optimize, restore, rename) trim it too and a
+      long compaction-only tail still converges.  A clone has no
+      ``prev`` and so drops the ledger (Delta's rule).
+
+    ``info`` is the op's own provenance (``restored_from``,
+    ``cloned_from``, ...), written as given."""
+    like = prev if like is None else like
+    body = {"gen": gen, "partitions": partitions, "op": op, **info}
+    if schema is None and like and like.get("schema"):
+        schema, partition_cols = like["schema"], like.get("partition_cols")
+    if schema is not None:
+        body["schema"] = schema
+        if partition_cols:
+            body["partition_cols"] = list(partition_cols)
+    if renames is None and like:
+        renames = like.get("renames") or None
+    if renames is not None:
+        body["renames"] = renames
+    if dv is None and like:
+        dv = _carry_dv_ref(spark, table_path, like, partitions, gen)
+    if dv:
+        body["dv"] = dv
+    if ledger is None and prev and prev.get("txn"):
+        ledger = _aged_ledger(
+            prev, gen, _ledger_retention(spark, table_path)
+        )
+    if ledger and ledger[0]:
+        body["txn"], body["txn_gen"] = ledger
     # DURABLE COMMIT CLOCK (r11 verdict #1): the `AS OF TIMESTAMP`
     # clock is stamped INSIDE the manifest JSON, not left to file
     # mtimes — mtimes don't survive a table copy/rsync/DR restore and
@@ -819,24 +791,40 @@ def _commit(
     # timestamp in the log and adjusts non-monotonic clocks; same rule
     # here: clamp to predecessor + 1 ms (predecessor read from ITS
     # stamp, mtime fallback only for pre-r12 manifests so the chain
-    # stays monotonic across the upgrade boundary).  Always
-    # overwritten, never carried: RESTORE/CLONE re-commits get the
-    # restore's own time, not the target's.
-    _now = _now_ms(spark)
-    _prev_ts = None
-    if prev is not None:
-        _prev_ts = prev.get("committed_at_ms")
-        if _prev_ts is None:
-            try:
-                _pfs, _pmp = _hfs(
-                    spark, _manifest_path(table_path, expected_cur)
-                )
-                _prev_ts = int(_pfs.getFileStatus(_pmp).getModificationTime())
-            except Exception:
-                _prev_ts = None
+    # stays monotonic across the upgrade boundary).  Never inherited:
+    # RESTORE/CLONE commits get their own time, not the target's.
+    now = _now_ms(spark)
+    prev_ts = prev.get("committed_at_ms") if prev else None
+    if prev is not None and prev_ts is None:
+        fs, mp = _hfs(spark, _manifest_path(table_path, prev_gen))
+        try:
+            prev_ts = int(fs.getFileStatus(mp).getModificationTime())
+        except Exception as e:
+            # vacuumed since it was read: no timestamp to clamp to
+            if not _vanished(e):
+                raise
     body["committed_at_ms"] = (
-        _now if _prev_ts is None else max(_now, int(_prev_ts) + 1)
+        now if prev_ts is None else max(now, int(prev_ts) + 1)
     )
+    return body
+
+
+def _commit(
+    spark, table_path: str, gen: int, body: dict,
+    expected_cur: int | None,
+) -> None:
+    """Fenced commit of a finished manifest ``body``
+    (``_manifest_body``) as generation ``gen`` on top of
+    ``expected_cur``.  Leg 1: claim generation ``gen`` by atomic
+    create-exclusive of its manifest — of N writers that based their
+    merge on the same snapshot (and so computed the same ``gen``),
+    exactly one create succeeds; the rest raise
+    ``SnapshotWriteConflict`` before touching the pointer.  Leg 2:
+    re-read the pointer and verify it still names ``expected_cur`` —
+    catches the pathological stale-writer case where vacuum removed
+    the manifest a faster chain of commits had claimed (the
+    create-exclusive would wrongly succeed).  Only then the atomic
+    pointer swap."""
     body_json = json.dumps(body, sort_keys=True)
     claimed = _manifest_path(table_path, gen)
     _write_text_exclusive(spark, claimed, body_json)
@@ -959,10 +947,10 @@ def _commit(
 def _commit_rebasing(
     spark, table_path: str, gen: int, partitions: dict,
     expected_cur: int | None,
-    extra: dict | None = None,
     op: str = "merge",
     max_rebases: int = 0,
     refuse_rebase: str | None = None,
+    **stated,
 ) -> int:
     """``_commit`` with Delta-style CONCURRENCY CONTROL: when the
     pointer moved while this writer was computing (another job
@@ -992,14 +980,15 @@ def _commit_rebasing(
     both insert the same key, the same write-serializable caveat
     Delta documents.
 
-    Returns the committed generation.  A claim race on the same
-    generation (rival claimed but has not committed) waits briefly
-    for the pointer to move and retries; ``max_rebases`` bounds both
-    loops."""
+    Each attempt's manifest is built against the snapshot it commits
+    on (``_manifest_body`` with the ``stated`` fields): a rebased
+    attempt inherits from the rival's manifest what this write did not
+    state.  Returns the committed generation.  A claim race on the
+    same generation (rival claimed but has not committed) waits
+    briefly for the pointer to move and retries; ``max_rebases``
+    bounds both loops."""
     import time
 
-    # the manifest each attempt's commit is based on rides along, so
-    # _commit carries from it without reading it again
     attempt_m = (
         None if expected_cur is None
         else _read_manifest(spark, table_path, expected_cur)
@@ -1020,13 +1009,13 @@ def _commit_rebasing(
             # claim, letting our retry land.  Mid-swap pointer reads
             # (None) are the same transient.
             actual = attempt_cur
+            body = _manifest_body(
+                spark, table_path, attempt_gen, attempt_parts, op,
+                attempt_m, attempt_cur, **stated,
+            )
             for _ in range(75):          # <= ~15 s per rebase attempt
                 try:
-                    _commit(
-                        spark, table_path, attempt_gen, attempt_parts,
-                        attempt_cur, extra=extra, op=op,
-                        prev_manifest=attempt_m,
-                    )
+                    _commit(spark, table_path, attempt_gen, body, attempt_cur)
                     return attempt_gen
                 except SnapshotWriteConflict as e:
                     last = e
@@ -1046,7 +1035,7 @@ def _commit_rebasing(
                 # conflict so _retrying_merge re-runs the whole merge
                 # against the winner's snapshot.
                 raise last
-            if extra and extra.get("dv"):
+            if body.get("dv"):
                 raise last
             actual_m = _read_manifest(spark, table_path, actual)
             if actual_m.get("dv"):
@@ -1170,17 +1159,25 @@ def _txn_gate(spark, table_path: str, txn_app_id, txn_version, cur):
         )
     if txn_app_id is None:
         return None, None, None
-    ledger: dict = {}
-    gens: dict = {}
+    prev = {} if cur is None else _read_manifest(spark, table_path, cur)
+    seen = (prev.get("txn") or {}).get(txn_app_id)
+    if seen is not None and int(txn_version) <= int(seen):
+        return cur, None, None
     gen = (cur or 0) + 1
-    if cur is not None:
-        prev = _read_manifest(spark, table_path, cur)
-        ledger = dict(prev.get("txn") or {})
-        gens = dict(prev.get("txn_gen") or {})
-        seen = ledger.get(txn_app_id)
-        if seen is not None and int(txn_version) <= int(seen):
-            return cur, None, None
-    retain = _ledger_retention(spark, table_path)
+    ledger, gens = _aged_ledger(
+        prev, gen, _ledger_retention(spark, table_path)
+    )
+    ledger[txn_app_id] = int(txn_version)
+    gens[txn_app_id] = gen
+    return None, ledger, gens
+
+
+def _aged_ledger(prev: dict, gen: int, retain: int | None):
+    """``prev``'s (txn, txn_gen) ledger as of generation ``gen``: apps
+    whose last update is more than ``retain`` generations behind are
+    expired (``None``: kept forever)."""
+    ledger = dict(prev.get("txn") or {})
+    gens = dict(prev.get("txn_gen") or {})
     if retain is not None:
         for a in list(ledger):
             # pre-txn_gen manifests lack an age entry: grandfather the
@@ -1191,10 +1188,7 @@ def _txn_gate(spark, table_path: str, txn_app_id, txn_version, cur):
             elif gen - int(age_base) > retain:
                 del ledger[a]
                 del gens[a]
-    ledger[txn_app_id] = int(txn_version)
-    gens[txn_app_id] = gen
-    gens = {a: g for a, g in gens.items() if a in ledger}
-    return None, ledger, gens
+    return ledger, {a: g for a, g in gens.items() if a in ledger}
 
 
 _LEDGER_RETENTION_CONF = "_ledger_retention.json"
@@ -1360,7 +1354,9 @@ class _WriteAttempt:
     the whole attempt against the winner, instead of silently dropping
     the rival's ledger entries or colliding on identity ids.
     ``pinned_cur`` hands in the generation a composed write path
-    (``snapshot_update``) already derived its rows from.
+    (``snapshot_update``) already derived its rows from.  This is the
+    writer-start preamble of every commit, the metadata-only ones and
+    a new table's first (clone, convert) included.
 
     IDEMPOTENT WRITES (Delta txnAppId/txnVersion): each committed
     manifest carries a per-app high-water version ledger; a write
@@ -1384,18 +1380,24 @@ class _WriteAttempt:
             else _current_gen(spark, table_path)
         )
         self.gen = (self.cur or 0) + 1
+        # the base manifest everything inherits from: a read fault
+        # raises (carrying past it would drop the txn ledger, renames
+        # and clock clamp), and a manifest that is gone means the
+        # snapshot moved
+        self.manifest = None
+        if self.cur is not None:
+            try:
+                self.manifest = _read_manifest(spark, table_path, self.cur)
+            except Exception as e:
+                if not _vanished(e):
+                    raise
+                raise SnapshotWriteConflict(
+                    f"snapshot moved during merge: the manifest of base "
+                    f"generation {self.cur} is gone ({table_path})"
+                ) from None
         self.skip_gen, self.ledger, self.ledger_gens = _txn_gate(
             spark, table_path, txn_app_id, txn_version, self.cur
         )
-
-    def stamp(self, extra: dict | None) -> dict | None:
-        """``extra`` with this attempt's ledger stamped in (unchanged
-        without a txn id: the commit then inherits the predecessor's
-        ledger through the manifest carry)."""
-        if self.ledger is None:
-            return extra
-        return {**(extra or {}), "txn": self.ledger,
-                "txn_gen": self.ledger_gens}
 
     def refusal(self, identity: bool) -> str | None:
         """Why this write set must not take the silent disjoint-
@@ -1410,9 +1412,33 @@ class _WriteAttempt:
             return "txn ledger derived from the base snapshot"
         return None
 
+    def commit(
+        self, partitions: dict, op: str, like: dict | None = None, *,
+        max_rebases: int | None = None, refuse_rebase: str | None = None,
+        **stated,
+    ) -> int:
+        """Commit ``partitions`` as generation ``gen`` on top of the
+        pinned base, with the manifest ``_manifest_body`` builds from
+        the ``stated`` fields and this attempt's ledger.  The DML paths
+        commit through ``_commit_rebasing`` (they pass ``max_rebases``),
+        every other commit through ``_commit``.  Returns the committed
+        generation."""
+        spark, table_path, gen = self.spark, self.table_path, self.gen
+        if self.ledger is not None:
+            stated["ledger"] = (self.ledger, self.ledger_gens)
+        if max_rebases is None:
+            _commit(spark, table_path, gen, _manifest_body(
+                spark, table_path, gen, partitions, op, self.manifest,
+                self.cur, like, **stated,
+            ), self.cur)
+            return gen
+        return _commit_rebasing(
+            spark, table_path, gen, partitions, self.cur, op=op,
+            max_rebases=max_rebases, refuse_rebase=refuse_rebase, **stated,
+        )
+
     def rewrite(
-        self, out: DataFrame, partition_cols, op: str,
-        manifest: dict | None = None, rewritten=(), *,
+        self, out: DataFrame, partition_cols, op: str, rewritten=(), *,
         stamp_schema: bool = True,
         max_rebases: int | None = None,
         refuse_rebase: str | None = None,
@@ -1421,13 +1447,10 @@ class _WriteAttempt:
         """The partition-rewrite tail of every data write: ``out``
         becomes the new generation (hive-partitioned by
         ``partition_cols``), its stats sidecar is written, and the
-        partitions it holds overlay ``manifest``'s map minus the
-        ``rewritten`` rels (no ``manifest``: the new generation is the
-        whole table).  The surviving deletion vectors, the schema
-        (``stamp_schema``) and the txn ledger ride in the manifest.
-        The DML paths commit through ``_commit_rebasing`` (they pass
-        ``max_rebases``); optimize and compaction through ``_commit``.
-        Returns the committed generation."""
+        partitions it holds overlay the base manifest's map minus the
+        ``rewritten`` rels.  ``stamp_schema`` states ``out``'s schema;
+        otherwise the commit inherits the base's.  Returns the
+        committed generation."""
         spark, table_path, gen = self.spark, self.table_path, self.gen
         gname = _gen_name(gen)
         new_dir = _gen_dir(table_path, gname)
@@ -1444,26 +1467,14 @@ class _WriteAttempt:
             if partition_cols
             else [""]
         )
-        base = manifest["partitions"] if manifest else {}
+        base = self.manifest["partitions"] if self.manifest else {}
         partitions = {r: g for r, g in base.items() if r not in rewritten}
         partitions.update({r: gname for r in written})
-        extra = (
-            _carry_dv_ref(spark, table_path, manifest, partitions, gen)
-            if manifest else None
-        )
-        if stamp_schema:
-            extra = _with_schema(extra, out, partition_cols, prev=manifest)
-        extra = self.stamp(extra)
-        if max_rebases is None:
-            _commit(
-                spark, table_path, gen, partitions, expected_cur=self.cur,
-                extra=extra, op=op, prev_manifest=manifest,
-            )
-            return gen
-        return _commit_rebasing(
-            spark, table_path, gen, partitions, expected_cur=self.cur,
-            extra=extra, op=op, max_rebases=max_rebases,
+        return self.commit(
+            partitions, op, max_rebases=max_rebases,
             refuse_rebase=refuse_rebase,
+            schema=_frame_schema(out, self.manifest) if stamp_schema else None,
+            partition_cols=partition_cols,
         )
 
 
@@ -1533,18 +1544,17 @@ def _snapshot_merge_upsert_once(
                 "cannot initialize a partitioned snapshot table from "
                 "an empty DataFrame"
             )
-        manifest, rewritten, out = None, (), incoming
+        rewritten, out = (), incoming
     else:
         existing = read_snapshot_table(spark, table_path, at_gen=cur)
         if schema_evolution == "strict":
             _enforce_schema(existing, incoming)
-        manifest = _read_manifest(spark, table_path, cur)
         scope = _affected(
             existing, partition_cols,
             lambda: _touched_by(
                 existing, incoming, key, partition_cols
             ).distinct(),
-            manifest,
+            att.manifest,
         )
         if scope is None:
             return cur  # empty increment: the old snapshot stands
@@ -1553,7 +1563,7 @@ def _snapshot_merge_upsert_once(
     if optimize_write and partition_cols:
         out = out.repartition(*[F.col(c) for c in partition_cols])
     return att.rewrite(
-        out, partition_cols, "merge", manifest, rewritten,
+        out, partition_cols, "merge", rewritten,
         max_rebases=max_conflict_rebases, refuse_rebase=refuse,
     )
 
@@ -1759,7 +1769,7 @@ def snapshot_merge_when(
             )
     # CHECK constraints bind on every write path, conditional or not
     _validate_constraints(spark, table_path, incoming)
-    manifest = _read_manifest(spark, table_path, cur)
+    manifest = att.manifest
     cols = existing.columns
 
     def _arbitrate(target: DataFrame) -> DataFrame:
@@ -1852,8 +1862,8 @@ def snapshot_merge_when(
         return cur
     target, rewritten = scope
     return att.rewrite(
-        _arbitrate(target), partition_cols, "merge_when", manifest,
-        rewritten, max_rebases=max_conflict_rebases,
+        _arbitrate(target), partition_cols, "merge_when", rewritten,
+        max_rebases=max_conflict_rebases,
         refuse_rebase=att.refusal(idc is not None),
     )
 
@@ -1908,7 +1918,7 @@ def snapshot_delete_keys(
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
     existing = read_snapshot_table(spark, table_path, at_gen=cur)
     key_set = keys.select(key).distinct()
-    manifest = _read_manifest(spark, table_path, cur)
+    manifest = att.manifest
 
     if mode == "dv":
         dv = _dv_map(spark, table_path, manifest)
@@ -1977,13 +1987,10 @@ def snapshot_delete_keys(
                 "snapshot_compact_partitions) to fold the DVs into a "
                 "rewrite, or use mode='rewrite' for this delete"
             )
-        name = _write_dv(spark, table_path, att.gen, merged)
-        _commit(
-            spark, table_path, att.gen, dict(manifest["partitions"]),
-            expected_cur=cur, extra=att.stamp({"dv": name}),
-            op="delete_dv", prev_manifest=manifest,
+        return att.commit(
+            dict(manifest["partitions"]), "delete_dv",
+            dv=_write_dv(spark, table_path, att.gen, merged),
         )
-        return att.gen
 
     scope = _affected(
         existing, partition_cols,
@@ -1997,7 +2004,7 @@ def snapshot_delete_keys(
     target, rewritten = scope
     return att.rewrite(
         target.join(F.broadcast(key_set), on=key, how="left_anti"),
-        partition_cols, "delete", manifest, rewritten,
+        partition_cols, "delete", rewritten,
         stamp_schema=False, max_rebases=max_conflict_rebases,
         refuse_rebase=att.refusal(False),
     )
@@ -2049,9 +2056,8 @@ def snapshot_optimize(
         # a recursive table_path listing counts superseded generations
         # awaiting vacuum (overcount → undersized files) and misses a
         # clone's absolute-path generations (undercount)
-        manifest_now = _read_manifest(spark, table_path, cur)
         total_bytes = 0
-        for g, rels in _generations(manifest_now["partitions"]):
+        for g, rels in _generations(att.manifest["partitions"]):
             base = _gen_base(table_path, g)
             roots = [base] if rels == [""] else [
                 f"{base}/{r}" for r in rels
@@ -2119,8 +2125,8 @@ def snapshot_optimize(
                     max(1, -(-total_bytes // target_bytes))
                 )
     return att.rewrite(
-        existing, partition_cols, "optimize", stamp_schema=False,
-        max_records=rows_per_file,
+        existing, partition_cols, "optimize", att.manifest["partitions"],
+        stamp_schema=False, max_records=rows_per_file,
     )
 
 
@@ -3190,7 +3196,7 @@ def snapshot_compact_partitions(
     cur = att.cur
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    manifest = _read_manifest(spark, table_path, cur)
+    manifest = att.manifest
     parts: dict[str, str] = manifest["partitions"]
     if rels is None and max_files_per_partition is None:
         raise ValueError("pass rels or max_files_per_partition")
@@ -3247,7 +3253,7 @@ def snapshot_compact_partitions(
             if partition_cols else subset.repartition(1)
         )
     gen = att.rewrite(
-        subset, partition_cols, "compact", manifest, set(chosen),
+        subset, partition_cols, "compact", set(chosen),
         stamp_schema=False,
     )
     return {
@@ -3537,7 +3543,7 @@ def snapshot_overwrite_where(
             f"table has {sorted(existing.columns)}, replacement "
             f"{sorted(replacement.columns)}"
         )
-    manifest = _read_manifest(spark, table_path, cur)
+    manifest = att.manifest
     pred = F.coalesce(where_col, F.lit(False))
     scope = _affected(
         existing, partition_cols,
@@ -3551,7 +3557,7 @@ def snapshot_overwrite_where(
     target, rewritten = scope
     return att.rewrite(
         target.filter(~pred).unionByName(replacement), partition_cols,
-        "overwrite_where", manifest, rewritten,
+        "overwrite_where", rewritten,
         max_rebases=max_conflict_rebases,
         refuse_rebase=att.refusal(idc is not None),
     )
@@ -3665,9 +3671,8 @@ def snapshot_restore(
         raise ValueError("pass exactly one of to_gen or to_ts_ms")
     if to_ts_ms is not None:
         to_gen = snapshot_gen_at_timestamp(spark, table_path, to_ts_ms)
-    _commit_recover(spark, table_path)
-    _claim_recover(spark, table_path)
-    cur = _current_gen(spark, table_path)
+    att = _WriteAttempt(spark, table_path)
+    cur = att.cur
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
     if not _fs_exists(spark, _manifest_path(table_path, to_gen)):
@@ -3678,23 +3683,13 @@ def snapshot_restore(
     if to_gen == cur:
         return cur
     target = _read_manifest(spark, table_path, to_gen)
-    gen = cur + 1
-    extra = {"restored_from": to_gen}
-    if target.get("dv"):
-        extra["dv"] = target["dv"]
-    # the restored snapshot's schema is the TARGET's, not the current
-    # pointer's (the default carry would take the latter); same for
-    # the rename history — stating it even when empty blocks the carry
-    if target.get("schema"):
-        extra["schema"] = target["schema"]
-        if target.get("partition_cols"):
-            extra["partition_cols"] = target["partition_cols"]
-    extra["renames"] = target.get("renames") or []
-    _commit(
-        spark, table_path, gen, dict(target["partitions"]),
-        expected_cur=cur, extra=extra, op="restore",
+    # the restored snapshot is described by the TARGET (its schema,
+    # deletion vectors and rename history, the latter stated even when
+    # empty); the txn ledger continues the current one
+    return att.commit(
+        dict(target["partitions"]), "restore", like=target,
+        renames=target.get("renames") or [], restored_from=to_gen,
     )
-    return gen
 
 
 def snapshot_rename_column(
@@ -3719,81 +3714,7 @@ def snapshot_rename_column(
     - requires a stored schema (any table committed by this module
       has one).
     """
-    import re as _re
-
-    cur = _current_gen(spark, table_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    manifest = _read_manifest(spark, table_path, cur)
-    schema_json = manifest.get("schema")
-    if not schema_json:
-        raise ValueError(
-            "rename requires a manifest-stored schema (legacy table: "
-            "run one merge first)"
-        )
-    names = [f["name"] for f in schema_json["fields"]]
-    if old not in names:
-        raise ValueError(f"no column {old!r} (have {sorted(names)})")
-    if new in names:
-        raise ValueError(f"column {new!r} already exists")
-    if old in (manifest.get("partition_cols") or []):
-        raise ValueError(
-            f"{old!r} is a partition column — partition-column renames "
-            "need a rewrite (snapshot_overwrite_where), not metadata"
-        )
-    word = _re.compile(rf"\b{_re.escape(old)}\b")
-    for label, exprs in (
-        ("CHECK constraint", list(_constraints(spark, table_path).values())),
-        ("generated column", list(
-            _generated_columns(spark, table_path).values()
-        ) + list(_generated_columns(spark, table_path).keys())),
-    ):
-        if any(word.search(e) for e in exprs):
-            raise ValueError(
-                f"{old!r} is referenced by a {label}; drop/re-declare "
-                "it around the rename"
-            )
-    idc = _identity_conf(spark, table_path)
-    if idc and idc["column"] == old:
-        raise ValueError(
-            f"{old!r} is the identity column; re-declare identity "
-            "around the rename"
-        )
-    sconf = _stats_conf(spark, table_path) or {}
-    if old in (sconf.get("cols") or []) + (sconf.get("bloom_cols") or []):
-        raise ValueError(
-            f"{old!r} is in the stats/bloom config; re-declare stats "
-            "around the rename"
-        )
-    new_schema = json.loads(json.dumps(schema_json))
-    for f in new_schema["fields"]:
-        if f["name"] == old:
-            f["name"] = new
-    entry = {
-        "from": old,
-        "to": new,
-        "gen": cur + 1,
-        "dirs": sorted(
-            {
-                g.rstrip("/").rsplit("/", 1)[-1]
-                for g in manifest["partitions"].values()
-            }
-        ),
-    }
-    extra = {
-        "schema": new_schema,
-        "renames": (manifest.get("renames") or []) + [entry],
-    }
-    if manifest.get("partition_cols"):
-        extra["partition_cols"] = manifest["partition_cols"]
-    if manifest.get("dv"):
-        extra["dv"] = manifest["dv"]
-    gen = cur + 1
-    _commit(
-        spark, table_path, gen, dict(manifest["partitions"]),
-        expected_cur=cur, extra=extra, op="rename_column",
-    )
-    return gen
+    return _map_column(spark, table_path, old, new)
 
 
 def snapshot_drop_column(
@@ -3807,60 +3728,70 @@ def snapshot_drop_column(
     sheds) it.  A later schema-evolution merge may re-introduce a
     FRESH column under the same name without resurrecting old values
     (dir-name matching).  Same guardrails as rename."""
-    import re as _re
+    return _map_column(spark, table_path, col, None)
 
-    cur = _current_gen(spark, table_path)
-    if cur is None:
+
+def _map_column(spark, table_path: str, col: str, to: str | None) -> int:
+    """The column-mapping commit: rename ``col`` to ``to``, or drop it
+    (``to=None``), by recording a ``renames`` entry over the
+    generation dirs live now.  No data file is touched."""
+    verb = "drop" if to is None else "rename"
+    att = _WriteAttempt(spark, table_path)
+    if att.cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    manifest = _read_manifest(spark, table_path, cur)
+    manifest = att.manifest
     schema_json = manifest.get("schema")
     if not schema_json:
         raise ValueError(
-            "drop requires a manifest-stored schema (legacy table: "
+            f"{verb} requires a manifest-stored schema (legacy table: "
             "run one merge first)"
         )
     names = [f["name"] for f in schema_json["fields"]]
     if col not in names:
         raise ValueError(f"no column {col!r} (have {sorted(names)})")
-    if len(names) == 1:
+    if to in names:
+        raise ValueError(f"column {to!r} already exists")
+    if to is None and len(names) == 1:
         raise ValueError("cannot drop the table's only column")
     if col in (manifest.get("partition_cols") or []):
         raise ValueError(
-            f"{col!r} is a partition column — partition-column drops "
+            f"{col!r} is a partition column — partition-column {verb}s "
             "need a rewrite (snapshot_overwrite_where), not metadata"
         )
-    word = _re.compile(rf"\b{_re.escape(col)}\b")
+    word = re.compile(rf"\b{re.escape(col)}\b")
+    generated = _generated_columns(spark, table_path)
     for label, exprs in (
         ("CHECK constraint", list(_constraints(spark, table_path).values())),
-        ("generated column", list(
-            _generated_columns(spark, table_path).values()
-        ) + list(_generated_columns(spark, table_path).keys())),
+        ("generated column", list(generated.values()) + list(generated)),
     ):
         if any(word.search(e) for e in exprs):
             raise ValueError(
                 f"{col!r} is referenced by a {label}; drop/re-declare "
-                "it around the drop"
+                f"it around the {verb}"
             )
     idc = _identity_conf(spark, table_path)
     if idc and idc["column"] == col:
         raise ValueError(
             f"{col!r} is the identity column; re-declare identity "
-            "around the drop"
+            f"around the {verb}"
         )
     sconf = _stats_conf(spark, table_path) or {}
     if col in (sconf.get("cols") or []) + (sconf.get("bloom_cols") or []):
         raise ValueError(
             f"{col!r} is in the stats/bloom config; re-declare stats "
-            "around the drop"
+            f"around the {verb}"
         )
-    new_schema = json.loads(json.dumps(schema_json))
-    new_schema["fields"] = [
-        f for f in new_schema["fields"] if f["name"] != col
+    fields = [
+        dict(f) for f in schema_json["fields"]
+        if to is not None or f["name"] != col
     ]
+    for f in fields:
+        if f["name"] == col:
+            f["name"] = to
     entry = {
         "from": col,
-        "to": None,
-        "gen": cur + 1,
+        "to": to,
+        "gen": att.gen,
         "dirs": sorted(
             {
                 g.rstrip("/").rsplit("/", 1)[-1]
@@ -3868,20 +3799,12 @@ def snapshot_drop_column(
             }
         ),
     }
-    extra = {
-        "schema": new_schema,
-        "renames": (manifest.get("renames") or []) + [entry],
-    }
-    if manifest.get("partition_cols"):
-        extra["partition_cols"] = manifest["partition_cols"]
-    if manifest.get("dv"):
-        extra["dv"] = manifest["dv"]
-    gen = cur + 1
-    _commit(
-        spark, table_path, gen, dict(manifest["partitions"]),
-        expected_cur=cur, extra=extra, op="drop_column",
+    return att.commit(
+        dict(manifest["partitions"]), f"{verb}_column",
+        schema={**schema_json, "fields": fields},
+        partition_cols=manifest.get("partition_cols"),
+        renames=(manifest.get("renames") or []) + [entry],
     )
-    return gen
 
 
 def snapshot_clone(
@@ -3928,7 +3851,8 @@ def snapshot_clone(
     cur = _current_gen(spark, source_path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {source_path}")
-    if _current_gen(spark, clone_path) is not None:
+    att = _WriteAttempt(spark, clone_path)
+    if att.cur is not None:
         raise FileExistsError(f"clone target already exists: {clone_path}")
     manifest = _read_manifest(spark, source_path, cur)
     if manifest.get("dv"):
@@ -3968,23 +3892,14 @@ def snapshot_clone(
         # (and no stray _clones/ dir dropped outside the engine)
         if _fs_exists(spark, f"{ref_root}/_manifests"):
             _register_clone(spark, ref_root, clone_path)
-    clone_extra = {"cloned_from": src_abs, "cloned_gen": cur}
-    # a fresh table has no predecessor manifest to carry from —
-    # inherit the source snapshot's stored schema explicitly
-    if manifest.get("schema"):
-        clone_extra["schema"] = manifest["schema"]
-        if manifest.get("partition_cols"):
-            clone_extra["partition_cols"] = manifest["partition_cols"]
-    # rename history travels with the shared generation dirs it
-    # describes (dir-name matching is path-independent, so entries
-    # keep working against the clone's absolute source refs)
-    if manifest.get("renames"):
-        clone_extra["renames"] = manifest["renames"]
-    _commit(
-        spark, clone_path, 1, partitions, expected_cur=None,
-        extra=clone_extra, op="clone",
+    # the source snapshot describes the clone: its stored schema and
+    # its rename history, which travels with the shared generation
+    # dirs it describes (dir-name matching is path-independent, so
+    # entries keep working against the clone's absolute source refs)
+    return att.commit(
+        partitions, "clone", like=manifest, cloned_from=src_abs,
+        cloned_gen=cur,
     )
-    return 1
 
 
 def snapshot_convert_from_parquet(
@@ -4051,12 +3966,8 @@ def snapshot_convert_from_parquet(
             "double-read) — point table_path at a new location, the "
             "data is referenced in place either way"
         )
-    # writer-start recovery, like every other write path: a convert
-    # that died between its claim and the pointer swap must not block
-    # the retry forever (claims age out by lease)
-    _commit_recover(spark, table_path)
-    _claim_recover(spark, table_path)
-    if _current_gen(spark, table_path) is not None:
+    att = _WriteAttempt(spark, table_path)
+    if att.cur is not None:
         raise FileExistsError(f"table already exists: {table_path}")
     if not _fs_exists(spark, src_abs):
         raise FileNotFoundError(f"no parquet directory at {src_abs}")
@@ -4113,14 +4024,10 @@ def snapshot_convert_from_parquet(
         _maybe_write_stats(
             spark, table_path, src_abs, src_abs, schema=df.schema
         )
-    extra = _with_schema(
-        {"converted_from": src_abs}, df, partition_cols
+    return att.commit(
+        partitions, "convert", schema=_frame_schema(df),
+        partition_cols=partition_cols, converted_from=src_abs,
     )
-    _commit(
-        spark, table_path, 1, partitions, expected_cur=None,
-        extra=extra, op="convert",
-    )
-    return 1
 
 
 def snapshot_table_detail(spark: SparkSession, table_path: str) -> dict:

@@ -16,8 +16,10 @@ def spark():
 
     import tempfile
 
+    # the core count the Tier-1 command exports, read as bench.py does
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     s = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("gpt-rag-ingestion-spark-tests")
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
         .config("spark.sql.shuffle.partitions", "8")

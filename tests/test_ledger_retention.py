@@ -103,7 +103,7 @@ def test_ledger_retention_expired_redelivery_applies_again(spark, tmp_path):
 
 
 def test_ledger_retention_pruned_by_non_txn_commits(spark, tmp_path):
-    """The carry in ``_commit`` prunes too: a compaction-only tail
+    """The manifest builder's carry prunes too: a compaction-only tail
     (OPTIMIZE after the horizon passed) trims expired entries even
     though no ledger-carrying write ever runs again."""
     t = str(tmp_path / "t")
@@ -250,10 +250,11 @@ def test_stale_expected_cur_raises_conflict(spark, tmp_path):
     # rival lands after the pin
     S.snapshot_merge_upsert(spark, t, _df(spark, [(2, 2)]), key="k")
     with pytest.raises(S.SnapshotWriteConflict):
-        S._commit(
-            spark, t, pinned + 1, {"": "gen-000001"},
-            expected_cur=pinned, extra={"txn": ledger, "txn_gen": gens},
-        )
+        S._commit(spark, t, pinned + 1, S._manifest_body(
+            spark, t, pinned + 1, {"": "gen-000001"}, "merge",
+            S._read_manifest(spark, t, pinned), pinned,
+            ledger=(ledger, gens),
+        ), expected_cur=pinned)
 
 
 # -------------------------------------------- merge_when first batch CDC

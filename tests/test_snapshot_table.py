@@ -232,8 +232,8 @@ def test_commit_raises_on_unreadable_predecessor_manifest(
     """A commit that cannot read its predecessor's manifest must not
     land without the carried schema, renames and txn ledger: a read
     fault raises, and a manifest that is gone means the snapshot
-    moved.  Both abort before the claim, leaving pointer and
-    ``_manifests/`` as they were."""
+    moved.  Both abort in the writer-start preamble, before the claim,
+    leaving pointer and ``_manifests/`` as they were."""
     import os
 
     snap = str(tmp_path / "snap")
@@ -242,8 +242,6 @@ def test_commit_raises_on_unreadable_predecessor_manifest(
     )
     cur = S._current_gen(spark, snap)
     prev = S._manifest_path(snap, cur)
-    gname = S._gen_name(cur + 1)
-    _inc(spark, 10, 20).write.parquet(S._gen_dir(snap, gname))
     listing = sorted(os.listdir(os.path.join(snap, "_manifests")))
     for exc, raised in (
         (RuntimeError("injected manifest read fault"), RuntimeError),
@@ -251,10 +249,113 @@ def test_commit_raises_on_unreadable_predecessor_manifest(
     ):
         _failing_read(monkeypatch, lambda p: p == prev, exc)
         with pytest.raises(raised):
-            S._commit(spark, snap, cur + 1, {"": gname}, expected_cur=cur)
+            S._WriteAttempt(spark, snap)
         monkeypatch.undo()
         assert S._current_gen(spark, snap) == cur
         assert sorted(os.listdir(os.path.join(snap, "_manifests"))) == listing
+
+
+def test_clock_clamp_raises_on_predecessor_stat_fault(
+    spark, tmp_path, monkeypatch
+):
+    """A predecessor manifest without a stamped clock (written before
+    the stamp existed) is clamped to by its mtime.  Only a manifest
+    that vanished reads as "no timestamp": any other stat error
+    raises, leaving pointer and ``_manifests/`` as they were."""
+    import json
+    import os
+
+    snap = str(tmp_path / "snap")
+    S.snapshot_merge_upsert(spark, snap, _inc(spark, 0, 10))
+    cur = S._current_gen(spark, snap)
+    prev = S._manifest_path(snap, cur)
+    legacy = S._read_manifest(spark, snap, cur)
+    del legacy["committed_at_ms"]
+    S._write_text(spark, prev, json.dumps(legacy, sort_keys=True))
+    listing = sorted(os.listdir(os.path.join(snap, "_manifests")))
+    real = S._hfs
+
+    class _StatFault:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def getFileStatus(self, p):
+            raise RuntimeError("injected stat fault")
+
+    def hfs(spark_, path):
+        fs, p = real(spark_, path)
+        return (_StatFault(fs), p) if path == prev else (fs, p)
+
+    monkeypatch.setattr(S, "_hfs", hfs)
+    with pytest.raises(RuntimeError, match="injected stat fault"):
+        S.snapshot_merge_upsert(spark, snap, _inc(spark, 10, 20))
+    monkeypatch.undo()
+    assert S._current_gen(spark, snap) == cur
+    assert sorted(os.listdir(os.path.join(snap, "_manifests"))) == listing
+
+
+@pytest.mark.parametrize(
+    "pcols", [None, ["bucket"]], ids=["flat", "partitioned"]
+)
+def test_emptied_table_reads_and_takes_the_next_merge(spark, tmp_path, pcols):
+    """Deleting every key leaves a manifest that may list no partition
+    at all (partitioned layout): it reads back as zero rows of the
+    stored schema, and the next merge lands on it."""
+    snap = str(tmp_path / "snap")
+    S.snapshot_merge_upsert(
+        spark, snap, _inc(spark, 0, 12), partition_cols=pcols
+    )
+    before = S.read_snapshot_table(spark, snap).dtypes
+    S.snapshot_delete_keys(
+        spark, snap, spark.range(0, 12).selectExpr("id AS parent_id"),
+        partition_cols=pcols,
+    )
+    empty = S.read_snapshot_table(spark, snap)
+    assert empty.count() == 0 and empty.dtypes == before
+    S.snapshot_merge_upsert(
+        spark, snap, _inc(spark, 5, 9), partition_cols=pcols
+    )
+    assert _rows(S.read_snapshot_table(spark, snap)) == _rows(_inc(spark, 5, 9))
+
+
+@pytest.mark.parametrize("op", ["rename", "drop", "clone"])
+def test_metadata_commits_recover_a_stale_claim(
+    spark, tmp_path, monkeypatch, op
+):
+    """A writer that died between its claim and the pointer swap
+    leaves a claim manifest behind.  Once its heartbeat is older than
+    the lease, the writer-start preamble of every commit prunes it —
+    the column-mapping commits and a clone onto the dead writer's
+    target included — so the retry commits instead of raising
+    "generation already claimed"."""
+    import os
+
+    monkeypatch.setattr(S, "CLAIM_LEASE_MS", 400)
+    monkeypatch.setattr(S, "CLAIM_HEARTBEAT_MS", 80)
+    snap = str(tmp_path / "snap")
+    S.snapshot_merge_upsert(
+        spark, snap, _inc(spark, 0, 6).withColumn("w", F.col("v") + 1)
+    )
+    target = str(tmp_path / "clone") if op == "clone" else snap
+    gen = (S._current_gen(spark, target) or 0) + 1
+    stale = S._manifest_path(target, gen)
+    S._fs_mkdirs(spark, f"{target}/_manifests")
+    dead = '{"op": "dead"}'
+    S._write_text(spark, stale, dead)
+    old = os.path.getmtime(stale) - 60
+    os.utime(stale, (old, old))
+    if op == "rename":
+        S.snapshot_rename_column(spark, snap, "w", "w2")
+    elif op == "drop":
+        S.snapshot_drop_column(spark, snap, "w")
+    else:
+        S.snapshot_clone(spark, snap, target)
+    assert S._current_gen(spark, target) == gen
+    assert S._read_text(spark, stale) != dead
+    assert S.read_snapshot_table(spark, target).count() == 6
 
 
 def test_pointer_read_fault_raises(spark, tmp_path, monkeypatch):
@@ -2059,7 +2160,11 @@ def test_forced_rollforward_validates_garbage_tmp(spark, tmp_path):
     gen = cur_before + 1
     gname = S._gen_name(gen)
     _inc(spark, 30, 40).write.parquet(S._gen_dir(snap, gname))
-    S._commit(spark, snap, gen, {"": gname}, expected_cur=cur_before)
+    body = S._manifest_body(
+        spark, snap, gen, {"": gname}, "merge",
+        S._read_manifest(spark, snap, cur_before), cur_before,
+    )
+    S._commit(spark, snap, gen, body, expected_cur=cur_before)
     assert S._current_gen(spark, snap) == gen
     assert not S._fs_exists(spark, f"{snap}/_current__tmp")
     assert S.read_snapshot_table(spark, snap).count() == 10
