@@ -20,12 +20,16 @@ update — re-expressed minimally over plain parquet:
 A merge writes ONLY the affected partitions into a NEW generation
 directory, writes a manifest mapping every live partition to the
 generation that holds its current rows, then commits by atomically
-renaming the pointer file.  Readers resolve pointer → manifest → file
-list, so:
+renaming the pointer file.  Every read resolves ONE snapshot
+(``_Snapshot``: pointer, ``at_gen`` or ``at_ts_ms`` → generation →
+manifest and deletion vectors, read once) and turns it into rows
+through its one ``scan``, so:
 
 - **Snapshot isolation**: a reader that resolved the pointer sees one
   consistent generation set forever — commits only ADD files; nothing
-  a manifest references is deleted until `snapshot_vacuum`.
+  a manifest references is deleted until `snapshot_vacuum`.  File
+  selection, renames, partition-type pins and the empty-result schema
+  of one read all come from that snapshot's manifest.
 - **Atomic commit**: the crash window is a single file rename.
   Anything before it (a fully written generation + manifest) is
   simply unreferenced garbage for vacuum.  The only recovery rule is
@@ -372,43 +376,6 @@ def _frame_schema(df: DataFrame, prev: dict | None = None) -> dict:
     return json.loads(StructType(ordered).json())
 
 
-def _manifest_schema(manifest: dict):
-    """(StructType, partition_cols) stored in a manifest, or
-    (None, []) for manifests written before schema tracking."""
-    raw = manifest.get("schema")
-    if not raw:
-        return None, []
-    return StructType.fromJson(raw), list(manifest.get("partition_cols") or [])
-
-
-def _read_parquet_pinned(
-    spark, manifest: dict, base: str, paths: list[str] | None
-) -> DataFrame:
-    """Parquet scan with partition-column types PINNED to the
-    manifest's stored schema instead of inferred from directory
-    names.  ``paths`` None = whole-dir scan.  Manifests without a
-    stored schema (legacy) read exactly as before."""
-    schema, pcols = _manifest_schema(manifest)
-    if schema is None:
-        if paths is None:
-            return spark.read.option("basePath", base).parquet(base)
-        return spark.read.option("basePath", base).parquet(*paths)
-    # thread-safe ref-counted toggle (see upsert._no_partition_inference
-    # — a naive set/restore pair breaks under q219/q223's concurrent
-    # writer threads sharing one SparkSession)
-    with _no_partition_inference(spark):
-        if paths is None:
-            df = spark.read.option("basePath", base).parquet(base)
-        else:
-            df = spark.read.option("basePath", base).parquet(*paths)
-    for c in pcols:
-        if c in df.columns and c in schema.names:
-            want = schema[c].dataType
-            if df.schema[c].dataType != want:
-                df = df.withColumn(c, F.col(c).cast(want))
-    return df
-
-
 def _gen_base(table_path: str, g: str) -> str:
     """Resolve a manifest generation reference to its directory.
     Normally a bare dir name under ``table_path``; a SHALLOW CLONE's
@@ -468,20 +435,6 @@ def _list_partition_rels(spark, gen_dir: str, depth: int) -> list[str]:
 _DV_DIR = "_dvs"
 
 
-def _dv_map(spark, table_path: str, manifest: dict) -> dict:
-    """The accumulated deletion-vector map as of one manifest:
-    {"<gen-dir>/<rel-file>": [row indices]} — empty when the snapshot
-    carries no DVs.  DV files are immutable; the manifest references
-    one by name, so readers of any snapshot see exactly its deletes
-    (same isolation rule as data files)."""
-    name = manifest.get("dv")
-    if not name:
-        return {}
-    return json.loads(
-        _read_text(spark, f"{table_path}/{_DV_DIR}/{name}")
-    )["files"]
-
-
 def _write_dv(spark, table_path: str, gen: int, files: dict) -> str:
     name = f"{gen:08d}-{uuid.uuid4().hex[:8]}.json"
     _fs_mkdirs(spark, f"{table_path}/{_DV_DIR}")
@@ -507,43 +460,39 @@ def _carry_dv_ref(
     based on).  Reuses the old immutable DV file when nothing was
     dropped.  Returns the DV file name for the new manifest, or
     None."""
-    dv = _dv_map(spark, table_path, old_manifest)
-    if not dv:
+    old = _Snapshot(spark, table_path, old_manifest.get("gen"), old_manifest)
+    if not old.dv:
         return None
-    live = {(g, r) for r, g in new_partitions.items()}
-    # DV keys are "<genref>/<relpath>"; genref may itself contain
-    # slashes (a shallow clone's ABSOLUTE source-generation ref), so
-    # parse by longest-prefix match against the known generation refs
-    # rather than split('/', 1).
-    gens = sorted(
-        {g for g in old_manifest["partitions"].values()}
-        | {g for _, g in ((r, g) for r, g in new_partitions.items())},
-        key=len, reverse=True,
-    )
-    kept = {}
-    for k, v in dv.items():
-        gname = next((g for g in gens if k.startswith(g + "/")), None)
-        if gname is None:
-            continue
-        rest = k[len(gname) + 1:]
-        rel = "/".join(rest.split("/")[:-1])
-        if (gname, rel) in live:
-            kept[k] = v
+    kept = {
+        k: v
+        for (g, rel), files in old.dv_files().items()
+        if new_partitions.get(rel) == g
+        for k, v in files.items()
+    }
     if not kept:
         return None
-    if kept == dv:
+    if kept == old.dv:
         return old_manifest["dv"]
     return _write_dv(spark, table_path, gen, kept)
 
 
+def _file_rel(path: str) -> str:
+    """The partition rel of a file path relative to its generation dir
+    (``p=v[/q=w]/part-....parquet`` -> ``p=v[/q=w]``; ``""`` for an
+    unpartitioned file)."""
+    return "/".join(path.split("/")[:-1])
+
+
 def _apply_dv(
-    spark, df: DataFrame, gname: str, dv_map: dict,
-    base: str | None = None,
+    spark, df: DataFrame, gname: str, base: str, dv_map: dict,
+    tag: bool = False,
 ) -> DataFrame:
     """Merge-on-read: anti-join the per-file deleted row positions
     (broadcast — DV size is bounded by the write-path contract) against
     the scan's (file, row_index) metadata.  No DV entries for this
-    generation → the scan is returned untouched (zero overhead).
+    generation and no ``tag`` → the scan is returned untouched (zero
+    overhead).  With ``tag`` the surviving rows keep their DV key
+    ``__f`` (``<gname>/<file>``) and row position ``__p``.
 
     ``gname`` is the manifest's generation REF — a bare dir name, or a
     shallow clone's absolute source path (may contain slashes), so DV
@@ -556,17 +505,20 @@ def _apply_dv(
         if k.startswith(gname + "/")
         for pos in v
     ]
-    if not pairs:
+    if not pairs and not tag:
         return df
-    delim = (base.rstrip("/") if base else f"/{gname}") + "/"
-    doomed = spark.createDataFrame(pairs, "__file string, __pos long")
-    tagged = df.withColumn(
-        "__file",
-        F.substring_index(F.col("_metadata.file_path"), delim, -1),
-    ).withColumn("__pos", F.col("_metadata.row_index"))
-    return tagged.join(
-        F.broadcast(doomed), on=["__file", "__pos"], how="left_anti"
-    ).drop("__file", "__pos")
+    df = df.withColumn(
+        "__f",
+        F.substring_index(
+            F.col("_metadata.file_path"), base.rstrip("/") + "/", -1
+        ),
+    ).withColumn("__p", F.col("_metadata.row_index"))
+    if pairs:
+        doomed = spark.createDataFrame(pairs, "__f string, __p long")
+        df = df.join(F.broadcast(doomed), on=["__f", "__p"], how="left_anti")
+    if not tag:
+        return df.drop("__f", "__p")
+    return df.withColumn("__f", F.concat(F.lit(gname + "/"), F.col("__f")))
 
 
 def snapshot_gen_at_timestamp(
@@ -646,6 +598,179 @@ def _apply_renames(manifest: dict, g: str, df: DataFrame) -> DataFrame:
     return df
 
 
+class _Snapshot:
+    """One committed generation of a table, resolved ONCE: its number,
+    its manifest and (on first use) its deletion-vector map.  Every
+    read of a snapshot table goes through one of these, and ``scan``
+    is the only place a generation becomes rows — so the file
+    selection, the deletion vectors, the column-mapping renames, the
+    partition-type pins and the empty-result schema of one read all
+    come from the same manifest, whatever commits land meanwhile.  A
+    write attempt holds its base generation as one (``_WriteAttempt``)."""
+
+    def __init__(
+        self, spark, table_path: str, gen: int | None, manifest: dict
+    ):
+        self.spark, self.table_path = spark, table_path
+        self.gen, self.manifest = gen, manifest
+        self.parts: dict = manifest["partitions"]
+        # the stored LOGICAL schema and partition columns (None / []
+        # for manifests written before schema tracking)
+        raw = manifest.get("schema")
+        self.schema = StructType.fromJson(raw) if raw else None
+        self.partition_cols = (
+            list(manifest.get("partition_cols") or []) if raw else []
+        )
+
+    @classmethod
+    def resolve(
+        cls, spark, table_path: str, at_gen: int | None = None,
+        at_ts_ms: int | None = None,
+    ) -> "_Snapshot":
+        """Generation ``at_gen`` (`AS OF VERSION`), the newest committed
+        at or before ``at_ts_ms`` (`AS OF TIMESTAMP`), or else the
+        pointer's.  Raises ``FileNotFoundError`` for an empty table or
+        a manifest that is gone (never committed, or vacuumed)."""
+        if at_gen is not None and at_ts_ms is not None:
+            raise ValueError("pass at_gen or at_ts_ms, not both")
+        if at_ts_ms is not None:
+            at_gen = snapshot_gen_at_timestamp(spark, table_path, at_ts_ms)
+        gen = at_gen if at_gen is not None else _current_gen(spark, table_path)
+        if gen is None:
+            raise FileNotFoundError(f"no committed snapshot at {table_path}")
+        try:
+            manifest = _read_manifest(spark, table_path, gen)
+        except Exception as e:
+            if not _vanished(e):
+                raise
+            raise FileNotFoundError(
+                f"no manifest for generation {gen} at {table_path} "
+                "(never committed, or removed by snapshot_vacuum)"
+            ) from None
+        return cls(spark, table_path, gen, manifest)
+
+    @functools.cached_property
+    def dv(self) -> dict:
+        """The accumulated deletion-vector map as of this snapshot:
+        {"<gen-ref>/<rel-file>": [row indices]}, empty when it carries
+        none.  DV files are immutable; the manifest references one by
+        name, so readers of any snapshot see exactly its deletes (same
+        isolation rule as data files)."""
+        name = self.manifest.get("dv")
+        if not name:
+            return {}
+        return json.loads(_read_text(
+            self.spark, f"{self.table_path}/{_DV_DIR}/{name}"
+        ))["files"]
+
+    def dv_files(self) -> dict:
+        """The deletion vectors grouped by the (generation ref,
+        partition rel) holding each file: ``{(g, rel): {key: rows}}``.
+        DV keys are ``<gen-ref>/<rel>/<file>`` and a ref may itself
+        contain slashes (a shallow clone's ABSOLUTE source-generation
+        ref), so a key is matched to its ref by longest prefix, never
+        by split('/', 1)."""
+        refs = sorted(set(self.parts.values()), key=len, reverse=True)
+        out: dict = {}
+        for k, v in self.dv.items():
+            g = next((r for r in refs if k.startswith(r + "/")), None)
+            if g is not None:
+                out.setdefault((g, _file_rel(k[len(g) + 1:])), {})[k] = v
+        return out
+
+    def by_gen(self, rels=None) -> dict:
+        """The live partition rels (all, or those in ``rels``) grouped
+        by generation ref, in ref order: ``{gen_ref: [rel, ...]}``."""
+        out: dict = {}
+        for rel, g in self.parts.items():
+            if rels is None or rel in rels:
+                out.setdefault(g, []).append(rel)
+        return {g: sorted(out[g]) for g in sorted(out)}
+
+    def stats(self, g: str, rels: list[str]) -> dict | None:
+        """Generation ``g``'s stats sidecar (``_find_stats_sidecar``)
+        restricted to the files of ``rels``, the partitions THIS
+        manifest still maps to ``g`` (a generation can hold partitions
+        a later commit superseded), or None when it has none (read
+        unpruned)."""
+        raw = _find_stats_sidecar(self.spark, self.table_path, g)
+        if raw is None:
+            return None
+        live = set(rels)
+        return {
+            **raw,
+            "files": {
+                f: e for f, e in raw["files"].items() if _file_rel(f) in live
+            },
+        }
+
+    def scan(self, select: dict | None = None, *, tag: bool = False):
+        """Rows of the ``select``ed part of this snapshot, or None when
+        it selects nothing.  ``select`` maps generation refs to paths
+        relative to the generation dir — partition rels (``[""]`` is an
+        unpartitioned generation's whole dir) or data files; None
+        selects every live partition.  Per generation: one parquet scan
+        with partition-column types PINNED to the stored schema (never
+        re-inferred from directory names), its deletion vectors
+        anti-joined, its column-mapping renames applied; the scans are
+        unioned by name, so a column one generation lacks reads NULL
+        there (the evolution contract of ``merged_view``).  ``tag``
+        keeps each row's DV key and position (``_apply_dv``)."""
+        spark = self.spark
+        dfs = []
+        for g, paths in sorted(
+            (self.by_gen() if select is None else select).items()
+        ):
+            if not paths:
+                continue
+            base = _gen_base(self.table_path, g)
+            if paths == [""]:
+                df = spark.read.parquet(base)
+            else:
+                files = [f"{base}/{p}" for p in sorted(paths)]
+                if self.schema is None:  # legacy manifest: no pin
+                    df = spark.read.option("basePath", base).parquet(*files)
+                else:
+                    # thread-safe ref-counted toggle (see
+                    # upsert._no_partition_inference — a naive
+                    # set/restore pair breaks under q219/q223's
+                    # concurrent writer threads sharing one SparkSession)
+                    with _no_partition_inference(spark):
+                        df = spark.read.option("basePath", base).parquet(
+                            *files
+                        )
+                    for c in self.partition_cols:
+                        if c in df.columns and c in self.schema.names:
+                            want = self.schema[c].dataType
+                            if df.schema[c].dataType != want:
+                                df = df.withColumn(c, F.col(c).cast(want))
+            df = _apply_dv(spark, df, g, base, self.dv, tag)
+            dfs.append(_apply_renames(self.manifest, g, df))
+        if not dfs:
+            return None
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
+        )
+
+    def read(self) -> DataFrame:
+        """The whole snapshot.  A manifest listing no partition (every
+        row deleted) reads as zero rows of its stored schema, partition
+        columns last as a partitioned scan returns them."""
+        df = self.scan()
+        if df is not None:
+            return df
+        if self.schema is None:
+            raise ValueError(
+                f"generation {self.gen} of {self.table_path} lists no "
+                "partition and stores no schema"
+            )
+        pcols = self.partition_cols
+        return self.spark.createDataFrame([], StructType(
+            [f for f in self.schema.fields if f.name not in pcols]
+            + [self.schema[c] for c in pcols]
+        ))
+
+
 def read_snapshot_table(
     spark: SparkSession, table_path: str, at_gen: int | None = None,
     at_ts_ms: int | None = None,
@@ -677,58 +802,7 @@ def read_snapshot_table(
     ``snapshot_restore``), and tests/test_column_mapping_matrix.py
     pins the full {rename, drop} x {time-travel, clone, restore,
     optimize} grid."""
-    if at_gen is not None and at_ts_ms is not None:
-        raise ValueError("pass at_gen or at_ts_ms, not both")
-    if at_ts_ms is not None:
-        at_gen = snapshot_gen_at_timestamp(spark, table_path, at_ts_ms)
-    gen = at_gen if at_gen is not None else _current_gen(spark, table_path)
-    if gen is None:
-        raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    if not _fs_exists(spark, _manifest_path(table_path, gen)):
-        raise FileNotFoundError(
-            f"no manifest for generation {gen} at {table_path} "
-            "(never committed, or removed by snapshot_vacuum)"
-        )
-    manifest = _read_manifest(spark, table_path, gen)
-    df = _read_partition_subset(
-        spark, table_path, manifest["partitions"],
-        dv_map=_dv_map(spark, table_path, manifest), manifest=manifest,
-    )
-    if df is not None:
-        return df
-    # every row was deleted: zero rows of the stored schema, partition
-    # columns last as a partitioned scan returns them
-    schema, pcols = _manifest_schema(manifest)
-    if schema is None:
-        raise ValueError(
-            f"generation {gen} of {table_path} lists no partition and "
-            "stores no schema"
-        )
-    return spark.createDataFrame([], StructType(
-        [f for f in schema.fields if f.name not in pcols]
-        + [schema[c] for c in pcols]
-    ))
-
-
-def _generations(parts: dict) -> list[tuple[str, list[str]]]:
-    """A {rel: gen-ref} manifest map grouped by generation, in ref
-    order: ``[(gen_ref, [rel, ...]), ...]``."""
-    by_gen: dict[str, list[str]] = {}
-    for rel, g in parts.items():
-        by_gen.setdefault(g, []).append(rel)
-    return sorted(by_gen.items())
-
-
-def _scan_generation(spark, table_path: str, manifest: dict, g: str, rels):
-    """(resolved dir, raw parquet scan) of one generation's live
-    ``rels``.  Partition-column types come PINNED from the manifest's
-    stored schema, never re-inferred from directory names."""
-    base = _gen_base(table_path, g)
-    if rels == [""]:  # unpartitioned
-        return base, spark.read.parquet(base)
-    return base, _read_parquet_pinned(
-        spark, manifest, base, [f"{base}/{r}" for r in sorted(rels)]
-    )
+    return _Snapshot.resolve(spark, table_path, at_gen, at_ts_ms).read()
 
 
 def _manifest_body(
@@ -969,6 +1043,9 @@ def _commit_rebasing(
     - deletion vectors on either side never rebase (our staged DV map
       was computed against the base manifest; the rival's DV ref
       would be silently dropped by our manifest);
+    - a rival column-mapping commit (rename/drop) never rebases: it
+      touches no partition, but our staged files carry the base's
+      column names, which its entries do not map;
     - writes that minted GENERATED ALWAYS AS IDENTITY values never
       rebase (``refuse_rebase``): the ids derive from the BASE
       snapshot's high-water mark, so two disjoint-partition rivals
@@ -1039,6 +1116,13 @@ def _commit_rebasing(
                 raise last
             actual_m = _read_manifest(spark, table_path, actual)
             if actual_m.get("dv"):
+                raise last
+            # a rival RENAME/DROP changes no partition, yet our staged
+            # files carry the base's physical names, which the rival's
+            # rename entries (matched by dir name) never map
+            if (actual_m.get("renames") or []) != (
+                (attempt_m or {}).get("renames") or []
+            ):
                 raise last
             rival_parts = dict(actual_m["partitions"])
             ours = {
@@ -1349,7 +1433,9 @@ class _WriteAttempt:
     """One attempt of a snapshot write, pinned to ONE base generation
     (r10 advisor, medium): the txn ledger, the identity high-water
     mark, the existing relation and the commit's expected_cur all
-    derive from ``cur``, read once here.  A rival landing at any later
+    derive from ``cur``, read once here and held as the ``base``
+    snapshot (``att.base.read()`` is the existing relation; its
+    manifest is ``att.manifest``).  A rival landing at any later
     point surfaces as a commit conflict and ``_retrying_merge`` re-runs
     the whole attempt against the winner, instead of silently dropping
     the rival's ledger entries or colliding on identity ids.
@@ -1380,21 +1466,20 @@ class _WriteAttempt:
             else _current_gen(spark, table_path)
         )
         self.gen = (self.cur or 0) + 1
-        # the base manifest everything inherits from: a read fault
-        # raises (carrying past it would drop the txn ledger, renames
-        # and clock clamp), and a manifest that is gone means the
-        # snapshot moved
-        self.manifest = None
+        # the base snapshot everything reads and inherits from: a
+        # manifest read fault raises (carrying past it would drop the
+        # txn ledger, renames and clock clamp), and a manifest that is
+        # gone means the snapshot moved
+        self.base = self.manifest = None
         if self.cur is not None:
             try:
-                self.manifest = _read_manifest(spark, table_path, self.cur)
-            except Exception as e:
-                if not _vanished(e):
-                    raise
+                self.base = _Snapshot.resolve(spark, table_path, self.cur)
+            except FileNotFoundError:
                 raise SnapshotWriteConflict(
                     f"snapshot moved during merge: the manifest of base "
                     f"generation {self.cur} is gone ({table_path})"
                 ) from None
+            self.manifest = self.base.manifest
         self.skip_gen, self.ledger, self.ledger_gens = _txn_gate(
             spark, table_path, txn_app_id, txn_version, self.cur
         )
@@ -1531,7 +1616,7 @@ def _snapshot_merge_upsert_once(
         return att.skip_gen
     cur = att.cur
     incoming = _apply_generated(spark, table_path, incoming)
-    incoming = _apply_identity(spark, table_path, incoming, key, at_gen=cur)
+    incoming = _apply_identity(spark, table_path, incoming, key, att.base)
     refuse = att.refusal(_identity_conf(spark, table_path) is not None)
     _validate_constraints(spark, table_path, incoming)
     _fs_mkdirs(spark, f"{table_path}/_manifests")
@@ -1546,7 +1631,7 @@ def _snapshot_merge_upsert_once(
             )
         rewritten, out = (), incoming
     else:
-        existing = read_snapshot_table(spark, table_path, at_gen=cur)
+        existing = att.base.read()
         if schema_evolution == "strict":
             _enforce_schema(existing, incoming)
         scope = _affected(
@@ -1718,7 +1803,7 @@ def snapshot_merge_when(
             partition_cols=partition_cols,
             txn_app_id=txn_app_id, txn_version=txn_version,
         )
-    existing = read_snapshot_table(spark, table_path, at_gen=cur)
+    existing = att.base.read()
     # GENERATED ALWAYS AS IDENTITY binds on this write path too (r9
     # advisor, low): the source must not carry the column; matched
     # rows keep the TARGET's identity regardless of the update clause,
@@ -1916,47 +2001,23 @@ def snapshot_delete_keys(
     cur = att.cur
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    existing = read_snapshot_table(spark, table_path, at_gen=cur)
+    existing = att.base.read()
     key_set = keys.select(key).distinct()
     manifest = att.manifest
 
     if mode == "dv":
-        dv = _dv_map(spark, table_path, manifest)
-        hit_parts = []
-        for g, rels in _generations(manifest["partitions"]):
-            base, raw = _scan_generation(spark, table_path, manifest, g, rels)
-            # apply EXISTING DVs first so re-deleting a dead row is a
-            # no-op, then record the survivors that match.  Relativize
-            # against the RESOLVED generation dir so a shallow clone's
-            # absolute generation refs produce keys _apply_dv can
-            # match on read (advisor r7: the old f"/{g}/" delimiter
-            # never matched an absolute ref and the delete was
-            # committed but invisible).
-            live = _apply_dv(
-                spark,
-                raw.withColumn(
-                    "__f",
-                    F.concat(
-                        F.lit(g + "/"),
-                        F.substring_index(
-                            F.col("_metadata.file_path"),
-                            base.rstrip("/") + "/", -1,
-                        ),
-                    ),
-                ).withColumn("__p", F.col("_metadata.row_index")),
-                g,
-                dv,
-                base=base,
-            )
-            # renames apply before the key semi-join: files in
-            # pre-rename generation dirs carry the OLD physical name
-            # for a renamed (logical) key column
-            live = _apply_renames(manifest, g, live)
-            hit_parts.append(
-                live.join(F.broadcast(key_set), on=key, how="left_semi")
-                .select("__f", "__p")
-            )
-        hits = functools.reduce(lambda a, b: a.unionByName(b), hit_parts)
+        # existing DVs apply first so re-deleting a dead row is a
+        # no-op; the survivors that match are recorded by their DV key
+        # (``_apply_dv``'s tag, relative to the RESOLVED generation
+        # dir, so a shallow clone's absolute refs produce keys the
+        # read side matches).  Renames apply before the key semi-join:
+        # files in pre-rename generation dirs carry the OLD physical
+        # name of a renamed (logical) key column.
+        hits = (
+            att.base.scan(tag=True)
+            .join(F.broadcast(key_set), on=key, how="left_semi")
+            .select("__f", "__p")
+        )
         rows = hits.groupBy("__f").agg(F.collect_list("__p").alias("ps")).collect()
         n = sum(len(r["ps"]) for r in rows)
         if n > max_dv_rows:
@@ -1967,7 +2028,7 @@ def snapshot_delete_keys(
             )
         if n == 0:
             return cur  # nothing doomed: the old snapshot stands
-        merged = {k: set(v) for k, v in dv.items()}
+        merged = {k: set(v) for k, v in att.base.dv.items()}
         for r in rows:
             merged.setdefault(r["__f"], set()).update(
                 int(x) for x in r["ps"]
@@ -2043,7 +2104,7 @@ def snapshot_optimize(
     cur = att.cur
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    existing = read_snapshot_table(spark, table_path)
+    existing = att.base.read()
     if zorder_cols:
         existing = _zorder(spark, existing, zorder_cols, zorder_bits)
     rows_per_file = None
@@ -2057,7 +2118,7 @@ def snapshot_optimize(
         # awaiting vacuum (overcount → undersized files) and misses a
         # clone's absolute-path generations (undercount)
         total_bytes = 0
-        for g, rels in _generations(att.manifest["partitions"]):
+        for g, rels in att.base.by_gen().items():
             base = _gen_base(table_path, g)
             roots = [base] if rels == [""] else [
                 f"{base}/{r}" for r in rels
@@ -2147,8 +2208,7 @@ def snapshot_maybe_optimize(
     cur = _current_gen(spark, table_path)
     if cur is None:
         return {"optimized": False, "generations": 0}
-    manifest = _read_manifest(spark, table_path, cur)
-    n = len(set(manifest["partitions"].values()))
+    n = len(_Snapshot.resolve(spark, table_path, cur).by_gen())
     if n <= max_generations:
         # still GC superseded generations (a full-rewrite merge leaves
         # its predecessor unreferenced) — the stream owns this table,
@@ -2509,31 +2569,6 @@ def _changed_partitions(manifest_a: dict, manifest_b: dict) -> list[str]:
     return sorted(r for r in set(pa) | set(pb) if pa.get(r) != pb.get(r))
 
 
-def _read_partition_subset(
-    spark, table_path: str, parts: dict, dv_map: dict | None = None,
-    manifest: dict | None = None,
-):
-    """Read a {rel: gen-dir} subset of one manifest: one parquet scan
-    per generation, its deletion vectors (``dv_map``) and column-mapping
-    renames applied, unioned by name.  ``read_snapshot_table`` is this
-    over the whole manifest.  ``manifest`` pins partition-column types
-    to its stored schema.  Returns None for an empty subset."""
-    if not parts:
-        return None
-    manifest = manifest or {}
-    dfs = []
-    for g, rels in _generations(parts):
-        base, raw = _scan_generation(spark, table_path, manifest, g, rels)
-        dfs.append(
-            _apply_renames(
-                manifest, g, _apply_dv(spark, raw, g, dv_map or {}, base=base)
-            )
-        )
-    return functools.reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
-    )
-
-
 def snapshot_changes(
     spark: SparkSession,
     table_path: str,
@@ -2566,53 +2601,28 @@ def snapshot_changes(
 
     Requires both manifests to still exist (``snapshot_vacuum`` is
     the retention boundary, exactly as for time travel)."""
-    for g in (from_gen, to_gen):
-        if not _fs_exists(spark, _manifest_path(table_path, g)):
-            raise FileNotFoundError(
-                f"no manifest for generation {g} at {table_path} "
-                "(never committed, or removed by snapshot_vacuum)"
-            )
-    ma = _read_manifest(spark, table_path, from_gen)
-    mb = _read_manifest(spark, table_path, to_gen)
-    dva = _dv_map(spark, table_path, ma)
-    dvb = _dv_map(spark, table_path, mb)
-    changed = set(_changed_partitions(ma, mb))
+    return _diff(
+        _Snapshot.resolve(spark, table_path, from_gen),
+        _Snapshot.resolve(spark, table_path, to_gen),
+        key, include_preimages,
+    )
 
+
+def _diff(
+    sa: _Snapshot, sb: _Snapshot, key: str, include_preimages: bool
+) -> DataFrame:
+    """``snapshot_changes`` from snapshot ``sa`` to snapshot ``sb``."""
+    ma, mb = sa.manifest, sb.manifest
+    changed = set(_changed_partitions(ma, mb))
     # a partition whose generation mapping is unchanged can still have
     # CHANGED CONTENT under merge-on-read: its files' deletion vectors
     # differ between the two snapshots
-    gens_ab = sorted(
-        set(ma["partitions"].values()) | set(mb["partitions"].values()),
-        key=len, reverse=True,
-    )
-
-    def _dv_by_rel(dv):
-        # gen refs may contain slashes (clone absolute paths): parse
-        # keys by longest-prefix match, never split('/', 1)
-        out: dict[str, dict] = {}
-        for k, v in dv.items():
-            gname = next(
-                (g for g in gens_ab if k.startswith(g + "/")), None
-            )
-            if gname is None:
-                continue
-            rest = k[len(gname) + 1:]
-            rel = "/".join(rest.split("/")[:-1])
-            out.setdefault(rel, {})[k] = sorted(v)
-        return out
-
-    ra, rb = _dv_by_rel(dva), _dv_by_rel(dvb)
-    changed |= {r for r in set(ra) | set(rb) if ra.get(r) != rb.get(r)}
-    a = _read_partition_subset(
-        spark, table_path,
-        {r: g for r, g in ma["partitions"].items() if r in changed},
-        dv_map=dva, manifest=ma,
-    )
-    b = _read_partition_subset(
-        spark, table_path,
-        {r: g for r, g in mb["partitions"].items() if r in changed},
-        dv_map=dvb, manifest=mb,
-    )
+    da, db = sa.dv_files(), sb.dv_files()
+    changed |= {
+        r for g, r in set(da) | set(db) if da.get((g, r)) != db.get((g, r))
+    }
+    a = sa.scan(sa.by_gen(changed))
+    b = sb.scan(sb.by_gen(changed))
     # a diff SPANNING a column-mapping rename compares the FROM side
     # under its pre-rename LOGICAL names — align name-wise (the dirs
     # machinery already produced a consistent logical frame per side)
@@ -2620,7 +2630,7 @@ def snapshot_changes(
     if a is not None:
         for r in mb.get("renames") or []:
             if (
-                from_gen < r.get("gen", 0) <= to_gen
+                sa.gen < r.get("gen", 0) <= sb.gen
                 and r["from"] in a.columns
             ):
                 if r["to"] is None:
@@ -2813,12 +2823,14 @@ def _find_stats_sidecar(spark, table_path: str, g: str) -> dict | None:
         sp = _gen_stats_path(src_tbl, base)
     else:
         sp = _ext_stats_path(table_path, g)
-    if not _fs_exists(spark, sp):
-        return None
     try:
         return json.loads(_read_text(spark, sp))
-    except Exception:
-        return None
+    except Exception as e:
+        # no sidecar (stats enabled after the generation was written,
+        # or never): read unpruned; every other read error raises
+        if _vanished(e):
+            return None
+        raise
 
 
 def _maybe_write_stats(
@@ -2942,40 +2954,6 @@ def _bound_key(v):
     return _stat_jsonable(v)
 
 
-def _resolve_file_sets(spark, table_path: str, at_gen: int | None):
-    """Manifest → per-generation (gen_ref, base_dir, live_rels,
-    stats|None).  ``gen_ref`` is the manifest's generation reference
-    verbatim (a clone's absolute path included) — DV keys are prefixed
-    by it, so consumers must NOT re-derive it from base_dir.
-    `stats` is the parsed sidecar restricted to files whose partition
-    directory is still referenced by THIS manifest (a generation can
-    hold partitions a later commit superseded)."""
-    gen = at_gen if at_gen is not None else _current_gen(spark, table_path)
-    if gen is None:
-        raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    manifest = _read_manifest(spark, table_path, gen)
-    dv = _dv_map(spark, table_path, manifest)
-    out = []
-    for g, rels in _generations(manifest["partitions"]):
-        # local refs read our sidecar; converted external refs read
-        # the ext-digest sidecar collected at convert; clone refs
-        # borrow the SOURCE table's sidecar (``_find_stats_sidecar``)
-        # — absent any, that generation reads unpruned (never wrong)
-        raw = _find_stats_sidecar(spark, table_path, g)
-        stats = None
-        if raw is not None:
-            live = set(rels)
-            stats = dict(raw)
-            stats["files"] = {
-                f: e
-                for f, e in raw["files"].items()
-                if ("/".join(f.split("/")[:-1]) in live)
-                or (rels == [""] and "/" not in f)
-            }
-        out.append((g, _gen_base(table_path, g), sorted(rels), stats))
-    return out, dv
-
-
 def _range_keeps(ent: dict, ranges: dict) -> bool:
     """File-survives test for a conjunction of closed ranges.  Missing
     stats for a column → keep (never wrong).  All-NULL file for a
@@ -2996,38 +2974,6 @@ def _range_keeps(ent: dict, ranges: dict) -> bool:
     return True
 
 
-def _read_selected(spark, selections, schema_src, dv_map=None, manifest=None):
-    """selections: list of (gen_ref, base, [files]|None) — None =
-    whole-dir read
-    (no stats for that generation).  Empty overall selection returns
-    an empty frame with the snapshot's schema.  ``dv_map``: the
-    snapshot's deletion vectors, anti-joined per generation (stats
-    stay valid upper bounds under DVs — deletes only remove rows, so
-    pruning is conservative, never wrong).  ``manifest`` pins
-    partition-column types to its stored schema."""
-    dfs = []
-    for g, base, files in selections:
-        if files is None:
-            raw = _read_parquet_pinned(spark, manifest or {}, base, None)
-        elif files:
-            raw = _read_parquet_pinned(
-                spark, manifest or {}, base,
-                [f"{base}/{f}" for f in sorted(files)],
-            )
-        else:
-            continue
-        dfs.append(
-            _apply_renames(
-                manifest or {}, g, _apply_dv(spark, raw, g, dv_map or {}, base=base)
-            )
-        )
-    if not dfs:
-        return schema_src.limit(0)
-    return functools.reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
-    )
-
-
 def snapshot_read_where(
     spark: SparkSession,
     table_path: str,
@@ -3043,33 +2989,26 @@ def snapshot_read_where(
     decided from metadata before any task launches.  Pass ``report``
     to receive {files_total, files_read, files_skipped,
     unpruned_gens}."""
-    sets, dv = _resolve_file_sets(spark, table_path, at_gen)
-    selections = []
+    snap = _Snapshot.resolve(spark, table_path, at_gen)
+    select = {}
     total = read_n = unpruned = pruned_parts = 0
-    for g, base, rels, stats in sets:
+    for g, rels in snap.by_gen().items():
         live = [r for r in rels if _rel_survives_ranges(r, ranges)]
         pruned_parts += len(rels) - len(live)
+        stats = snap.stats(g, rels)
         if stats is None:
             # no sidecar: read the SURVIVING partition dirs wholesale
-            # (directory paths flow through the same selected-read as
-            # file paths)
-            if live == rels:
-                selections.append((g, base, None))
-            elif live:
-                selections.append((g, base, list(live)))
+            select[g] = live
             unpruned += 1
             continue
         live_set = set(live)
-        files = {
-            f: e
-            for f, e in stats["files"].items()
-            if ("/".join(f.split("/")[:-1]) in live_set)
-            or (live == [""] and "/" not in f)
-        }
         total += len(stats["files"])
-        keep = [f for f, e in files.items() if _range_keeps(e, ranges)]
+        keep = [
+            f for f, e in stats["files"].items()
+            if _file_rel(f) in live_set and _range_keeps(e, ranges)
+        ]
         read_n += len(keep)
-        selections.append((g, base, keep))
+        select[g] = keep
     if report is not None:
         report.update(
             files_total=total,
@@ -3078,13 +3017,11 @@ def snapshot_read_where(
             unpruned_gens=unpruned,
             pruned_partitions=pruned_parts,
         )
-    mgen = at_gen if at_gen is not None else _current_gen(spark, table_path)
-    df = _read_selected(
-        spark, selections,
-        read_snapshot_table(spark, table_path, at_gen=at_gen),
-        dv_map=dv,
-        manifest=_read_manifest(spark, table_path, mgen),
-    )
+    # an empty selection reads as the full read's schema, zero rows
+    full = snap.read()
+    df = snap.scan(select)
+    if df is None:
+        df = full.limit(0)
     for c, (lo, hi) in ranges.items():
         if lo is not None:
             df = df.filter(F.col(c) >= F.lit(lo))
@@ -3107,13 +3044,13 @@ def snapshot_read_point(
     false negatives are impossible); a file is read iff some value
     lights all its k bloom bits, or min/max stats admit it when the
     sidecar predates bloom config.  Exact IN filter re-applied."""
-    sets, dv = _resolve_file_sets(spark, table_path, at_gen)
+    snap = _Snapshot.resolve(spark, table_path, at_gen)
     conf = _stats_conf(spark, table_path) or {}
     m = int(conf.get("bloom_bits", 4096))
     k = int(conf.get("bloom_hashes", 3))
-    schema_src = read_snapshot_table(spark, table_path, at_gen=at_gen)
+    full = snap.read()
     vdf = spark.createDataFrame(
-        [(v,) for v in values], schema=schema_src.select(col).schema
+        [(v,) for v in values], schema=full.select(col).schema
     )
     pos = vdf.select(
         F.array(
@@ -3121,11 +3058,12 @@ def snapshot_read_point(
         ).alias("p")
     ).collect()
     want = [tuple(int(x) for x in r["p"]) for r in pos]
-    selections = []
+    select = {}
     total = read_n = unpruned = 0
-    for g, base, rels, stats in sets:
+    for g, rels in snap.by_gen().items():
+        stats = snap.stats(g, rels)
         if stats is None:
-            selections.append((g, base, None))
+            select[g] = rels
             unpruned += 1
             continue
         bm = int(stats.get("bloom_bits", m))
@@ -3151,7 +3089,7 @@ def snapshot_read_point(
             if any(all(bits >> p & 1 for p in ps) for ps in want):
                 keep.append(f)
         read_n += len(keep)
-        selections.append((g, base, keep))
+        select[g] = keep
     if report is not None:
         report.update(
             files_total=total,
@@ -3159,11 +3097,9 @@ def snapshot_read_point(
             files_skipped=total - read_n,
             unpruned_gens=unpruned,
         )
-    mgen = at_gen if at_gen is not None else _current_gen(spark, table_path)
-    df = _read_selected(
-        spark, selections, schema_src, dv_map=dv,
-        manifest=_read_manifest(spark, table_path, mgen),
-    )
+    df = snap.scan(select)
+    if df is None:
+        df = full.limit(0)
     return df.filter(F.col(col).isin(values))
 
 
@@ -3196,8 +3132,7 @@ def snapshot_compact_partitions(
     cur = att.cur
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    manifest = att.manifest
-    parts: dict[str, str] = manifest["partitions"]
+    parts: dict[str, str] = att.manifest["partitions"]
     if rels is None and max_files_per_partition is None:
         raise ValueError("pass rels or max_files_per_partition")
     if rels is not None:
@@ -3209,14 +3144,11 @@ def snapshot_compact_partitions(
         # live file count per partition rel: prefer the stats sidecars
         # (pure metadata), fall back to one listing per generation
         counts: dict[str, int] = {r: 0 for r in parts}
-        for g, grels in _generations(parts):
-            raw = _find_stats_sidecar(spark, table_path, g)
-            live = set(grels)
-            if raw is not None:
-                for f in raw["files"]:
-                    rel = "/".join(f.split("/")[:-1])
-                    if rel in live or (grels == [""] and "/" not in f):
-                        counts[rel if rel in live else ""] += 1
+        for g, grels in att.base.by_gen().items():
+            stats = att.base.stats(g, grels)
+            if stats is not None:
+                for f in stats["files"]:
+                    counts[_file_rel(f)] += 1
             else:
                 for r in grels:
                     sub = _gen_base(table_path, g) + (f"/{r}" if r else "")
@@ -3237,11 +3169,7 @@ def snapshot_compact_partitions(
     if not chosen:
         return {"committed_gen": cur, "compacted": [], "files_before": 0}
 
-    subset = _read_partition_subset(
-        spark, table_path, {r: parts[r] for r in chosen},
-        dv_map=_dv_map(spark, table_path, manifest),
-        manifest=manifest,
-    )
+    subset = att.base.scan(att.base.by_gen(chosen))
     if zorder_cols:
         subset = _zorder(spark, subset, zorder_cols, zorder_bits)
     else:
@@ -3272,13 +3200,14 @@ def snapshot_metadata_count(
     files.  Returns None when any live generation lacks a sidecar
     (count would need a scan; callers fall back to
     ``read_snapshot_table(...).count()``)."""
-    sets, dv = _resolve_file_sets(spark, table_path, at_gen)
+    snap = _Snapshot.resolve(spark, table_path, at_gen)
     total = 0
-    for g, base, _rels, stats in sets:
+    for g, rels in snap.by_gen().items():
+        stats = snap.stats(g, rels)
         if stats is None:
             return None
         for f, e in stats["files"].items():
-            total += e["rows"] - len(dv.get(f"{g}/{f}", []))
+            total += e["rows"] - len(snap.dv.get(f"{g}/{f}", []))
     return total
 
 
@@ -3337,8 +3266,9 @@ def snapshot_add_constraint(
             f"constraint {name!r} already defined as "
             f"{existing[name]!r}; drop it first"
         )
-    if _current_gen(spark, table_path) is not None:
-        snap = read_snapshot_table(spark, table_path)
+    cur = _current_gen(spark, table_path)
+    if cur is not None:
+        snap = _Snapshot.resolve(spark, table_path, cur).read()
         n = snap.filter(~F.coalesce(F.expr(expr), F.lit(False))).count()
         if n:
             raise SnapshotConstraintViolation(
@@ -3418,14 +3348,13 @@ def snapshot_update(
         )
 
     def _once() -> int:
-        cur = _WriteAttempt(spark, table_path).cur
+        att = _WriteAttempt(spark, table_path)
+        cur = att.cur
         if cur is None:
             raise FileNotFoundError(
                 f"no committed snapshot at {table_path}"
             )
-        matched = read_snapshot_table(
-            spark, table_path, at_gen=cur
-        ).filter(F.expr(where))
+        matched = att.base.read().filter(F.expr(where))
         upd = matched
         for c, e in sorted(assignments.items()):
             upd = upd.withColumn(c, F.expr(e))
@@ -3525,7 +3454,7 @@ def snapshot_overwrite_where(
             "predicate; overwrite by a data/partition predicate "
             "instead"
         )
-    existing = read_snapshot_table(spark, table_path, at_gen=cur)
+    existing = att.base.read()
     replacement = _mint_identity(spark, table_path, replacement, existing)
     where_col = F.expr(where) if isinstance(where, str) else where
     n_bad = replacement.filter(
@@ -3675,14 +3604,9 @@ def snapshot_restore(
     cur = att.cur
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    if not _fs_exists(spark, _manifest_path(table_path, to_gen)):
-        raise FileNotFoundError(
-            f"no manifest for generation {to_gen} at {table_path} "
-            "(never committed, or removed by snapshot_vacuum)"
-        )
+    target = _Snapshot.resolve(spark, table_path, to_gen).manifest
     if to_gen == cur:
         return cur
-    target = _read_manifest(spark, table_path, to_gen)
     # the restored snapshot is described by the TARGET (its schema,
     # deletion vectors and rename history, the latter stated even when
     # empty); the txn ledger continues the current one
@@ -3848,13 +3772,11 @@ def snapshot_clone(
       re-apply from scratch rather than being silently skipped by a
       ledger that never saw them land HERE).
     """
-    cur = _current_gen(spark, source_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot at {source_path}")
+    src = _Snapshot.resolve(spark, source_path)
     att = _WriteAttempt(spark, clone_path)
     if att.cur is not None:
         raise FileExistsError(f"clone target already exists: {clone_path}")
-    manifest = _read_manifest(spark, source_path, cur)
+    manifest = src.manifest
     if manifest.get("dv"):
         raise ValueError(
             f"source {source_path} has active deletion vectors; run "
@@ -3898,7 +3820,7 @@ def snapshot_clone(
     # entries keep working against the clone's absolute source refs)
     return att.commit(
         partitions, "clone", like=manifest, cloned_from=src_abs,
-        cloned_gen=cur,
+        cloned_gen=src.gen,
     )
 
 
@@ -4020,7 +3942,7 @@ def snapshot_convert_from_parquet(
         # the one read-only stats scan: gname IS the external abs
         # path, so the sidecar lands at _stats/ext-<digest>.json and
         # rel keys are relative to the source dir — exactly what
-        # _find_stats_sidecar/_resolve_file_sets read back
+        # _find_stats_sidecar/_Snapshot.stats read back
         _maybe_write_stats(
             spark, table_path, src_abs, src_abs, schema=df.schema
         )
@@ -4038,12 +3960,9 @@ def snapshot_table_detail(spark: SparkSession, table_path: str) -> dict:
     and the current manifest's op tag — ALL from metadata reads (the
     manifest, sidecars, and a file listing of referenced dirs); no
     Spark job, no data scan."""
-    cur = _current_gen(spark, table_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    manifest = _read_manifest(spark, table_path, cur)
-    parts = manifest["partitions"]
-    gens = sorted(set(parts.values()))
+    snap = _Snapshot.resolve(spark, table_path)
+    manifest, parts = snap.manifest, snap.parts
+    gens = list(snap.by_gen())
     n_files = 0
     n_bytes = 0
     for g in gens:
@@ -4057,11 +3976,10 @@ def snapshot_table_detail(spark: SparkSession, table_path: str) -> dict:
             if st.getPath().getName().endswith(".parquet"):
                 n_files += 1
                 n_bytes += int(st.getLen())
-    dv = _dv_map(spark, table_path, manifest)
-    schema, pcols = _manifest_schema(manifest)
+    schema, pcols = snap.schema, snap.partition_cols
     return {
         "path": table_path,
-        "generation": cur,
+        "generation": snap.gen,
         # the durable commit clock of the CURRENT commit (Delta
         # DESCRIBE DETAIL's lastModified analog; None pre-r12)
         "committed_at_ms": manifest.get("committed_at_ms"),
@@ -4078,7 +3996,7 @@ def snapshot_table_detail(spark: SparkSession, table_path: str) -> dict:
         "num_files": n_files,
         "size_bytes": n_bytes,
         "partitions": sorted(parts.keys()),
-        "dv_rows": sum(len(v) for v in dv.values()),
+        "dv_rows": sum(len(v) for v in snap.dv.values()),
         "op": manifest.get("op"),
         "stats_enabled": _stats_conf(spark, table_path) is not None,
         "has_constraints": _fs_exists(
@@ -4149,9 +4067,8 @@ def snapshot_consume_changes(
     Raises FileNotFoundError when vacuum removed the cursor's
     manifest — the consumer fell behind the retention window and must
     re-bootstrap (delete the cursor)."""
-    cur = _current_gen(spark, table_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot at {table_path}")
+    snap = _Snapshot.resolve(spark, table_path)
+    cur = snap.gen
     acked = None
     if _fs_exists(spark, cursor_path):
         acked = int(_read_text(spark, cursor_path).strip())
@@ -4166,23 +4083,22 @@ def snapshot_consume_changes(
         return {"changes": None, "from_gen": acked, "to_gen": cur,
                 "ack": ack}
     if acked is None:
-        snap = read_snapshot_table(spark, table_path)
-        boot = snap.withColumn("_change_type", F.lit("insert")).select(
+        rows = snap.read()
+        boot = rows.withColumn("_change_type", F.lit("insert")).select(
             key, "_change_type",
-            *[c for c in snap.columns if c != key],
+            *[c for c in rows.columns if c != key],
         )
         return {"changes": boot, "from_gen": None, "to_gen": cur,
                 "ack": ack}
-    if not _fs_exists(spark, _manifest_path(table_path, acked)):
+    try:
+        since = _Snapshot.resolve(spark, table_path, acked)
+    except FileNotFoundError:
         raise FileNotFoundError(
             f"cursor at generation {acked} fell behind the vacuum "
             f"retention window of {table_path}; delete {cursor_path} "
             "to re-bootstrap"
-        )
-    ch = snapshot_changes(
-        spark, table_path, acked, cur, key=key,
-        include_preimages=include_preimages,
-    )
+        ) from None
+    ch = _diff(since, snap, key, include_preimages)
     return {"changes": ch, "from_gen": acked, "to_gen": cur, "ack": ack}
 
 
@@ -4355,10 +4271,10 @@ def _mint_identity(
 
 def _apply_identity(
     spark, table_path: str, incoming: DataFrame, key: str,
-    at_gen: int | None = None,
+    base: _Snapshot | None,
 ) -> DataFrame:
-    """``at_gen`` PINS the base snapshot the high-water mark derives
-    from (r10 advisor, medium): the write path passes the same
+    """``base`` PINS the snapshot the high-water mark derives from (r10
+    advisor, medium): the write path passes its attempt's base, whose
     generation it will hand to the commit as ``expected_cur``, so a
     rival landing after the pin surfaces as a commit conflict instead
     of a silent id collision.  ``None`` means "no committed table"
@@ -4374,8 +4290,7 @@ def _apply_identity(
             f"{c!r} is GENERATED ALWAYS AS IDENTITY — increments must "
             "not supply it"
         )
-    cur = at_gen
-    if cur is None:
+    if base is None:
         ranked = distributed_row_number(
             incoming, [F.asc(key)], rank_col="__identity_rn"
         )
@@ -4384,7 +4299,7 @@ def _apply_identity(
             (F.lit(start - step)
              + F.lit(step) * F.col("__identity_rn")).cast("long"),
         ).drop("__identity_rn")
-    existing = read_snapshot_table(spark, table_path, at_gen=cur)
+    existing = base.read()
     hwm = _identity_hwm(existing, c, start, step)
     # identity is KEPT only where the merge key matches exactly ONE
     # existing row AND exactly ONE incoming row (UPDATE semantics on
@@ -4491,10 +4406,9 @@ def snapshot_analyze(
     reads, table-level NDV/extremes feed join planning and the
     engine's own cost decisions (e.g. neardup_pairs_auto's synopsis
     routing)."""
-    cur = _current_gen(spark, table_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    df = read_snapshot_table(spark, table_path)
+    snap = _Snapshot.resolve(spark, table_path)
+    cur = snap.gen
+    df = snap.read()
     missing = sorted(set(cols) - set(df.columns))
     if missing:
         raise ValueError(f"no such columns: {missing}")

@@ -30,8 +30,10 @@ def _df(spark, items):
 
 def _build(spark, tmp_path, op):
     """Base merges -> {rename v->val | drop tag} -> one post-change
-    merge.  Returns (table, pre_change_gen, expected current rows)."""
+    merge, with stats and a bloom on ``k``.  Returns (table,
+    pre_change_gen, expected current rows)."""
     t = str(tmp_path / "t")
+    S.snapshot_enable_stats(spark, t, ["k"], bloom_cols=["k"])
     S.snapshot_merge_upsert(
         spark, t,
         _df(spark, [(k, k % 2, 10 * k, f"t{k}") for k in range(6)]),
@@ -76,6 +78,33 @@ def test_mapping_current_read(spark, tmp_path, op):
     else:
         assert "tag" not in got.columns
         assert _vals(got, "v") == expect
+
+
+@pytest.mark.parametrize("surface", ["where", "point", "count"])
+@pytest.mark.parametrize("op", ["rename", "drop"])
+def test_mapping_pruned_reads(spark, tmp_path, op, surface):
+    """The stats-pruned reads apply the mapping exactly as the full
+    read does: each equals ``read_snapshot_table(...).filter(...)``,
+    columns and rows, at the current and at the pre-change
+    generation."""
+    t, pre, _ = _build(spark, tmp_path, op)
+    for at in (None, pre):
+        full = S.read_snapshot_table(spark, t, at_gen=at)
+        if surface == "count":
+            assert S.snapshot_metadata_count(spark, t, at_gen=at) == (
+                full.count()
+            )
+            continue
+        if surface == "where":
+            got = S.snapshot_read_where(spark, t, {"k": (2, 6)}, at_gen=at)
+            want = full.filter(F.col("k").between(2, 6))
+        else:
+            got = S.snapshot_read_point(spark, t, "k", [1, 3, 7], at_gen=at)
+            want = full.filter(F.col("k").isin([1, 3, 7]))
+        assert got.columns == want.columns
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        )
 
 
 @pytest.mark.parametrize("op", ["rename", "drop"])

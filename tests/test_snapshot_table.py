@@ -149,6 +149,162 @@ def test_snapshot_isolation_across_commits(spark, tmp_path):
     assert _rows(S.read_snapshot_table(spark, snap)) == _rows(upd)
 
 
+def _rival_after_first_pointer_read(monkeypatch, rival):
+    """Run ``rival()`` right after the next ``_current_gen`` call, once:
+    the caller resolved generation N and then generation N+1 lands."""
+    real = S._current_gen
+    armed = [True]
+
+    def current_gen(spark_, path):
+        got = real(spark_, path)
+        if armed[0]:
+            armed[0] = False
+            rival()
+        return got
+
+    monkeypatch.setattr(S, "_current_gen", current_gen)
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("surface", ["where", "point"])
+def test_pruned_reads_are_not_torn_by_a_rename(
+    spark, tmp_path, monkeypatch, surface
+):
+    """A pruned read resolves one snapshot: a RENAME committed right
+    after its pointer read changes neither its file selection nor its
+    column names — it equals the filtered full read of the generation
+    it resolved."""
+    snap = str(tmp_path / "snap")
+    S.snapshot_enable_stats(spark, snap, ["v"], bloom_cols=["parent_id"])
+    S.snapshot_merge_upsert(
+        spark, snap, spark.range(0, 30).selectExpr(
+            "id AS parent_id", "id * 7 AS v", "CAST(id AS STRING) AS s"
+        ),
+    )
+    n = S._current_gen(spark, snap)
+    if surface == "where":
+        pred = F.col("v").between(14, 70)
+        read = lambda: S.snapshot_read_where(spark, snap, {"v": (14, 70)})
+    else:
+        pred = F.col("parent_id").isin([3, 5, 40])
+        read = lambda: S.snapshot_read_point(
+            spark, snap, "parent_id", [3, 5, 40]
+        )
+    _rival_after_first_pointer_read(
+        monkeypatch, lambda: S.snapshot_rename_column(spark, snap, "s", "s2")
+    )
+    got = read()
+    monkeypatch.undo()
+    assert S._current_gen(spark, snap) == n + 1  # the rival landed
+    want = S.read_snapshot_table(spark, snap, at_gen=n).filter(pred)
+    assert got.columns == want.columns == ["parent_id", "v", "s"]
+    assert _sorted_rows(got) == _sorted_rows(want)
+
+
+@pytest.mark.parametrize("surface", ["analyze", "consume"])
+def test_analyze_and_bootstrap_read_the_generation_they_label(
+    spark, tmp_path, monkeypatch, surface
+):
+    """ANALYZE and the change-feed bootstrap describe the generation
+    they resolved, even when a merge lands right after their pointer
+    read."""
+    snap = str(tmp_path / "snap")
+    S.snapshot_merge_upsert(spark, snap, _inc(spark, 0, 100))
+    _rival_after_first_pointer_read(
+        monkeypatch,
+        lambda: S.snapshot_merge_upsert(spark, snap, _inc(spark, 100, 150)),
+    )
+    if surface == "analyze":
+        out = S.snapshot_analyze(spark, snap, ["v"])
+        gen, rows = out["gen"], out["rows"]
+    else:
+        out = S.snapshot_consume_changes(
+            spark, snap, str(tmp_path / "cursor")
+        )
+        gen, rows = out["to_gen"], out["changes"].count()
+    monkeypatch.undo()
+    assert S._current_gen(spark, snap) == 2  # the rival landed
+    assert (gen, rows) == (1, 100)
+
+
+def test_rebase_refuses_a_rival_rename(spark, tmp_path, monkeypatch):
+    """A RENAME touches no partition, yet a merge must not rebase over
+    it: its staged files carry the base's column names, which the
+    rename entries do not map.  The merge re-runs against the renamed
+    table instead and lands without resurrecting the old name."""
+    snap = str(tmp_path / "snap")
+
+    def rows(lo, hi, col):
+        return spark.range(lo, hi).selectExpr(
+            "id AS parent_id", f"CAST(id AS STRING) AS {col}",
+            "id % 2 AS bucket",
+        )
+
+    S.snapshot_merge_upsert(
+        spark, snap, rows(0, 20, "s"), partition_cols=["bucket"]
+    )
+    real = S._list_partition_rels
+    armed = [True]
+
+    def list_rels(*a, **k):
+        if armed[0]:
+            armed[0] = False
+            S.snapshot_rename_column(spark, snap, "s", "s2")
+        return real(*a, **k)
+
+    monkeypatch.setattr(S, "_list_partition_rels", list_rels)
+    S.snapshot_merge_upsert(
+        spark, snap, rows(1, 30, "s2").filter("bucket = 1"),
+        partition_cols=["bucket"], max_conflict_rebases=2,
+    )
+    monkeypatch.undo()
+    got = S.read_snapshot_table(spark, snap)
+    assert "s" not in got.columns
+    assert got.count() == 25
+    assert got.filter(F.col("s2").isNull()).count() == 0
+
+
+def test_stats_sidecar_read_fault_raises(spark, tmp_path, monkeypatch):
+    """A stats sidecar that is there but cannot be read is a fault, not
+    "no stats": the pruned read raises instead of reading unpruned."""
+    snap = str(tmp_path / "snap")
+    S.snapshot_enable_stats(spark, snap, ["v"])
+    S.snapshot_merge_upsert(spark, snap, _inc(spark, 0, 20))
+    _failing_read(
+        monkeypatch, lambda p: "/_stats/" in p,
+        RuntimeError("java.io.IOException: injected sidecar read fault"),
+    )
+    with pytest.raises(RuntimeError, match="injected sidecar"):
+        S.snapshot_read_where(spark, snap, {"v": (0, 50)})
+
+
+@pytest.mark.parametrize("surface", ["where", "point"])
+def test_unpruned_reads_skip_superseded_partitions(spark, tmp_path, surface):
+    """Without stats sidecars a pruned read scans the partitions the
+    manifest maps to each generation, never a generation's whole
+    directory: a partition a later merge rewrote is read once, from
+    its new generation."""
+    snap = str(tmp_path / "snap")
+    S.snapshot_merge_upsert(
+        spark, snap, _inc(spark, 0, 30), partition_cols=["bucket"]
+    )
+    S.snapshot_merge_upsert(
+        spark, snap, _inc(spark, 0, 30, mul=3).filter("bucket = 0"),
+        partition_cols=["bucket"],
+    )
+    if surface == "where":
+        got = S.snapshot_read_where(spark, snap, {"v": (0, 1000)})
+    else:
+        got = S.snapshot_read_point(spark, snap, "parent_id", [3, 4])
+    want = S.read_snapshot_table(spark, snap)
+    if surface == "point":
+        want = want.filter(F.col("parent_id").isin([3, 4]))
+    assert _rows(got) == _rows(want)
+
+
 def test_commit_crash_legs_roll_forward_or_invisible(
     spark, tmp_path, monkeypatch
 ):
