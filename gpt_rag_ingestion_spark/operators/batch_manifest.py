@@ -334,15 +334,16 @@ def read_batches(spark, root: str, sub: str, names, schema: str) -> DataFrame:
     ``basePath`` is the sub-table root, so batches holding ``cell=``
     partitions read as one table with ``cell`` as a partition column
     (``cell IN (...)`` filters prune directories); the inferred
-    ``batch`` column is dropped.  ``schema`` types the empty table."""
+    ``batch`` column is dropped.  ``schema`` types the read, empty or
+    not (a partition column it names takes its type from it), so no
+    Spark job infers one from the files; None infers it."""
     if not names:
         return spark.createDataFrame([], schema)
     base = f"{root}/{sub}"
-    return (
-        spark.read.option("basePath", base)
-        .parquet(*[f"{base}/batch={n}" for n in names])
-        .drop("batch")
-    )
+    reader = spark.read.option("basePath", base)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*[f"{base}/batch={n}" for n in names]).drop("batch")
 
 
 def read_store(spark, root: str, store: Store, meta: dict | None = None) -> DataFrame:

@@ -379,15 +379,16 @@ def rrf_fuse(
 # doc's latest generation wins; a tombstone at the latest generation
 # removes the doc entirely.  meta.superseded == 0 is the steady state:
 # raw tables ARE the live tables, no liveness work at all.
+#
+# Write path (build, append, delete, apply): the op writes its postings
+# and its doclen (new rows plus tombstones) ONCE into its unlisted
+# batch dirs, then one probe reads the staged doclen back and
+# semi-joins the listed doclen on its keys — O(batch) rows shuffled,
+# one plan whatever meta.superseded is — and one aggregate yields the
+# counters the meta commit carries (n_live, l_live, superseded).  The
+# read path (query, compaction) resolves liveness in _tindex_live.
 
 TEXT_INDEX = bm.Store(subs=("postings", "doclen"), build="text_index_build")
-
-
-def _badid_agg():
-    # built lazily: a Column needs an active SparkContext
-    return F.sum(
-        F.when(F.col("doc").isNull(), F.lit(1)).otherwise(F.lit(0))
-    ).alias("badid")
 
 
 def _raise_badid(n, where):
@@ -475,6 +476,109 @@ def _tindex_live(spark, index_path, meta):
     return live(postings), live(doclen).filter(F.col("dl").isNotNull())
 
 
+def _tindex_stage(
+    index_path, name, gen, batch=None, delete_keys=None,
+    text_col="text", id_col="doc_id",
+):
+    """Write one op's rows ONCE into its unlisted batch dirs ``name``
+    and return the doclen dir: the postings of ``batch`` and a doclen
+    row per batch row (``_tindex_tables``), plus a tombstone (dl NULL)
+    per ``delete_keys`` id.  A deleted id the batch re-uploads gets no
+    tombstone (delete-then-upload: the upload wins; two rows for one
+    doc at one generation would break latest-gen-wins).  Nothing is
+    cached: the probe reads the doclen dir back."""
+    parts = []
+    if batch is not None:
+        _p, doclen = _tindex_tables(
+            batch, text_col, id_col, gen,
+            bm.batch_path(index_path, "postings", name),
+        )
+        parts.append(doclen)
+    if delete_keys is not None:
+        tomb = delete_keys.select(F.col(id_col).try_cast("long").alias("doc"))
+        if batch is not None:
+            tomb = tomb.distinct().join(doclen.select("doc"), "doc", "left_anti")
+        parts.append(tomb.select(
+            "doc",
+            F.lit(None).cast("long").alias("dl"),
+            F.lit(int(gen)).alias("gen"),
+        ))
+    path = bm.batch_path(index_path, "doclen", name)
+    functools.reduce(DataFrame.unionByName, parts).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return path
+
+
+def _tindex_delta(spark, index_path, staged, meta):
+    """(newly_superseded, n_delta, l_delta, badid) of the doclen staged
+    at ``staged`` against the manifest ``meta`` (None for a build,
+    which replaces nothing).  One plan whatever ``meta.superseded`` is:
+    the listed doclen batches are semi-joined on the broadcast staged
+    keys FIRST, so only the batch's keys leave the scan and reach the
+    shuffle; each key keeps its latest listed row (``max_by(dl, gen)``
+    — one row per doc per generation is the layout's invariant), and a
+    tombstone there means the doc is not live.  One aggregate over
+    those replaced rows and the staged rows counts the live docs and
+    lengths leaving (on, ol) and arriving (nn, nl), and the ids that
+    cast to NULL."""
+    new = spark.read.schema(_DOCLEN_SCHEMA).parquet(staged)
+    rows = new.select(F.lit(False).alias("_old"), "doc", "dl")
+    if meta is not None:
+        replaced = (
+            bm.read_batches(
+                spark, index_path, "doclen", meta["batches"]["doclen"],
+                _DOCLEN_SCHEMA,
+            )
+            .join(F.broadcast(new.select("doc")), "doc", "left_semi")
+            .groupBy("doc")
+            .agg(F.max_by("dl", "gen").alias("dl"))
+            .filter(F.col("dl").isNotNull())
+        )
+        rows = replaced.select(F.lit(True).alias("_old"), "doc", "dl").unionByName(
+            rows
+        )
+    old, dl = F.col("_old"), F.col("dl")
+    row = (
+        rows.agg(
+            F.count_if(old).alias("on"),
+            F.sum(F.when(old, dl)).alias("ol"),
+            F.count_if(~old & dl.isNotNull()).alias("nn"),
+            F.sum(F.when(~old, dl)).alias("nl"),
+            F.count_if(~old & F.col("doc").isNull()).alias("badid"),
+        )
+        .first()
+    )
+    return (
+        int(row["on"]),
+        int(row["nn"]) - int(row["on"]),
+        int(row["nl"] or 0) - int(row["ol"] or 0),
+        int(row["badid"]),
+    )
+
+
+def _tindex_commit(spark, index_path, meta, gen, name, staged, where, subs,
+                   rebuild=False):
+    """Probe the staged doclen (``_tindex_delta``), refuse NULL ids,
+    and commit ``name``'s batches of ``subs`` with the maintained
+    counters.  A (re)build counts against an empty index and unlists
+    every old batch.  Returns (newly_superseded, n_delta, l_delta)."""
+    n_super, n_delta, l_delta, badid = _tindex_delta(
+        spark, index_path, staged, None if rebuild else meta
+    )
+    _raise_badid(badid, where)
+    base = {"superseded": 0, "n_live": 0, "l_live": 0} if rebuild else meta
+    bm.commit(
+        spark, index_path, TEXT_INDEX, meta, gen,
+        add={sub: [name] for sub in subs},
+        remove=meta["batches"] if rebuild and meta else None,
+        superseded=int(base["superseded"]) + n_super,
+        n_live=int(base["n_live"]) + n_delta,
+        l_live=int(base["l_live"]) + l_delta,
+    )
+    return n_super, n_delta, l_delta
+
+
 def text_index_build(
     chunks: DataFrame,
     index_path: str,
@@ -484,60 +588,17 @@ def text_index_build(
     """Build the persisted index from the existing corpus (the one
     full-corpus pass; later batches touch O(batch)).  A rebuild over a
     committed index commits the new batch and unlists every old one in
-    one meta rename."""
+    one meta rename.  The counters come from the staged doclen."""
     spark = chunks.sparkSession
     meta, gen, name = bm.begin_build(spark, index_path, TEXT_INDEX, "build")
-    _p, doclen = _tindex_tables(
-        chunks, text_col, id_col, gen,
-        bm.batch_path(index_path, "postings", name),
+    staged = _tindex_stage(
+        index_path, name, gen, chunks, text_col=text_col, id_col=id_col
     )
-    doclen = doclen.persist()
-    try:
-        doclen.write.mode("overwrite").parquet(
-            bm.batch_path(index_path, "doclen", name)
-        )
-        agg = doclen.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("l"), _badid_agg()
-        ).first()
-        _raise_badid(agg["badid"], "build")
-    finally:
-        doclen.unpersist()
-    bm.commit(
-        spark, index_path, TEXT_INDEX, meta, gen,
-        add={"postings": [name], "doclen": [name]},
-        remove=meta["batches"] if meta else None,
-        superseded=0, n_live=int(agg["n"] or 0), l_live=int(agg["l"] or 0),
+    _s, n, l = _tindex_commit(
+        spark, index_path, meta, gen, name, staged, "build",
+        TEXT_INDEX.subs, rebuild=True,
     )
-    return {"n_docs": int(agg["n"] or 0), "total_len": int(agg["l"] or 0)}
-
-
-def _tindex_delta(spark, index_path, batch_doclen, meta):
-    """(newly_superseded, n_delta, l_delta) for a batch about to land:
-    probe the CURRENT live doclen with the batch's doc keys (broadcast
-    — O(batch) rows move) to find replaced docs and their old lengths."""
-    _p, live_dl = _tindex_live(spark, index_path, meta)
-    keys = batch_doclen.select("doc").distinct()
-    replaced = live_dl.join(F.broadcast(keys), "doc", "left_semi")
-    old_agg = replaced.agg(
-        F.count(F.lit(1)).alias("on"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("ol"),
-    )
-    new_agg = batch_doclen.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("dl").isNotNull(), 1).otherwise(0)), F.lit(0)
-        ).alias("nn"),
-        F.coalesce(
-            F.sum(F.when(F.col("dl").isNotNull(), F.col("dl"))), F.lit(0)
-        ).alias("nl"),
-        _badid_agg(),
-    )
-    row = old_agg.crossJoin(new_agg).first()  # both aggs in ONE action
-    _raise_badid(row["badid"], "append")
-    return (
-        int(row["on"]),
-        int(row["nn"]) - int(row["on"]),
-        int(row["nl"]) - int(row["ol"]),
-    )
+    return {"n_docs": n, "total_len": l}
 
 
 def text_index_append(
@@ -554,27 +615,12 @@ def text_index_append(
     leaves unlisted debris that writer recovery collects."""
     spark = batch.sparkSession
     meta, gen, name = bm.begin(spark, index_path, TEXT_INDEX, batch_label)
-    _p, doclen = _tindex_tables(
-        batch, text_col, id_col, gen,
-        bm.batch_path(index_path, "postings", name),
+    staged = _tindex_stage(
+        index_path, name, gen, batch, text_col=text_col, id_col=id_col
     )
-    doclen = doclen.persist()
-    try:
-        n_super, n_delta, l_delta = _tindex_delta(
-            spark, index_path, doclen, meta
-        )
-        doclen.write.mode("overwrite").parquet(
-            bm.batch_path(index_path, "doclen", name)
-        )
-        bm.commit(
-            spark, index_path, TEXT_INDEX, meta, gen,
-            add={"postings": [name], "doclen": [name]},
-            superseded=int(meta["superseded"]) + n_super,
-            n_live=int(meta["n_live"]) + n_delta,
-            l_live=int(meta["l_live"]) + l_delta,
-        )
-    finally:
-        doclen.unpersist()
+    n_super, _n, _l = _tindex_commit(
+        spark, index_path, meta, gen, name, staged, "append", TEXT_INDEX.subs
+    )
     return {"batch": batch_label, "gen": gen, "newly_superseded": n_super}
 
 
@@ -589,35 +635,13 @@ def text_index_delete(
     new generation) — its postings stop matching immediately;
     compaction garbage-collects them."""
     meta, gen, name = bm.begin(spark, index_path, TEXT_INDEX, batch_label)
-    tomb = keys.select(
-        F.col(id_col).try_cast("long").alias("doc"),
-        F.lit(None).cast("long").alias("dl"),
-        F.lit(int(gen)).alias("gen"),
+    staged = _tindex_stage(
+        index_path, name, gen, delete_keys=keys, id_col=id_col
     )
-    _p, live_dl = _tindex_live(spark, index_path, meta)
-    doomed = live_dl.join(
-        F.broadcast(tomb.select("doc").distinct()), "doc", "left_semi"
+    n_super, _n, _l = _tindex_commit(
+        spark, index_path, meta, gen, name, staged, "delete", ("doclen",)
     )
-    old = (
-        doomed.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("l"),
-        )
-        .crossJoin(tomb.agg(_badid_agg()))  # 1-row x 1-row: one action
-        .first()
-    )
-    _raise_badid(old["badid"], "delete")
-    tomb.write.mode("overwrite").parquet(
-        bm.batch_path(index_path, "doclen", name)
-    )
-    bm.commit(
-        spark, index_path, TEXT_INDEX, meta, gen,
-        add={"doclen": [name]},
-        superseded=int(meta["superseded"]) + int(old["n"]),
-        n_live=int(meta["n_live"]) - int(old["n"]),
-        l_live=int(meta["l_live"]) - int(old["l"]),
-    )
-    return {"batch": batch_label, "gen": gen, "tombstoned": int(old["n"])}
+    return {"batch": batch_label, "gen": gen, "tombstoned": n_super}
 
 
 def text_index_apply(
@@ -633,47 +657,18 @@ def text_index_apply(
     is delete-parents-then-upload as one logical transaction, and an
     hourly-cron deployment with many small batches should pay one
     commit per tick, not two.  Semantics = delete-then-upload: a key
-    in BOTH sets is replaced by its batch row (the upload wins); the
-    delta probe, the badid checks, and the dir writes are all folded
-    so the whole tick costs one aggregate action + three writes."""
+    in BOTH sets is replaced by its batch row (the upload wins).  The
+    tick writes its postings and its doclen (new rows plus tombstones)
+    once, then one probe of the batch's keys against the listed doclen
+    (one aggregate action) yields every counter the commit needs."""
     spark = batch.sparkSession
     meta, gen, name = bm.begin(spark, index_path, TEXT_INDEX, batch_label)
-    _p, doclen = _tindex_tables(
-        batch, text_col, id_col, gen,
-        bm.batch_path(index_path, "postings", name),
+    staged = _tindex_stage(
+        index_path, name, gen, batch, delete_keys, text_col, id_col
     )
-    # tombstones for delete keys NOT re-uploaded this tick (two rows
-    # for one doc at the same generation would break latest-gen-wins)
-    tomb = (
-        delete_keys.select(F.col(id_col).try_cast("long").alias("doc"))
-        .distinct()
-        .join(doclen.select("doc"), "doc", "left_anti")
-        .select(
-            "doc",
-            F.lit(None).cast("long").alias("dl"),
-            F.lit(int(gen)).alias("gen"),
-        )
+    n_super, _n, _l = _tindex_commit(
+        spark, index_path, meta, gen, name, staged, "apply", TEXT_INDEX.subs
     )
-    doclen = doclen.unionByName(tomb).persist()
-    try:
-        # one probe against the committed live state covers both legs:
-        # superseded = live docs touched by EITHER set; n/l deltas
-        # come from the same combined aggregate
-        n_super, n_delta, l_delta = _tindex_delta(
-            spark, index_path, doclen, meta
-        )
-        doclen.write.mode("overwrite").parquet(
-            bm.batch_path(index_path, "doclen", name)
-        )
-        bm.commit(
-            spark, index_path, TEXT_INDEX, meta, gen,
-            add={"postings": [name], "doclen": [name]},
-            superseded=int(meta["superseded"]) + n_super,
-            n_live=int(meta["n_live"]) + n_delta,
-            l_live=int(meta["l_live"]) + l_delta,
-        )
-    finally:
-        doclen.unpersist()
     return {"batch": batch_label, "gen": gen, "newly_superseded": n_super}
 
 

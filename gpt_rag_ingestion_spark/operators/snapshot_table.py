@@ -754,14 +754,17 @@ class _Snapshot:
 
     def read(self) -> DataFrame:
         """The whole snapshot.  A manifest listing no partition (every
-        row deleted) reads as zero rows of its stored schema, partition
-        columns last as a partitioned scan returns them."""
+        row deleted) reads as ``empty()``."""
         df = self.scan()
-        if df is not None:
-            return df
+        return self.empty() if df is None else df
+
+    def empty(self) -> DataFrame:
+        """Zero rows of the stored schema, partition columns last as a
+        partitioned scan returns them — built from the manifest alone,
+        with no Spark job."""
         if self.schema is None:
             raise ValueError(
-                f"generation {self.gen} of {self.table_path} lists no "
+                f"generation {self.gen} of {self.table_path} selects no "
                 "partition and stores no schema"
             )
         pcols = self.partition_cols
@@ -2001,7 +2004,6 @@ def snapshot_delete_keys(
     cur = att.cur
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    existing = att.base.read()
     key_set = keys.select(key).distinct()
     manifest = att.manifest
 
@@ -2053,6 +2055,7 @@ def snapshot_delete_keys(
             dv=_write_dv(spark, table_path, att.gen, merged),
         )
 
+    existing = att.base.read()
     scope = _affected(
         existing, partition_cols,
         lambda: existing.join(F.broadcast(key_set), on=key, how="left_semi")
@@ -2834,8 +2837,7 @@ def _find_stats_sidecar(spark, table_path: str, g: str) -> dict | None:
 
 
 def _maybe_write_stats(
-    spark, table_path: str, gname: str, new_dir: str,
-    schema=None,
+    spark, table_path: str, gname: str, new_dir: str, schema: StructType,
 ) -> None:
     """Collect per-file stats and bloom bitmaps for a just-written
     generation (one column-pruned aggregation over the increment) and
@@ -2844,33 +2846,17 @@ def _maybe_write_stats(
     disk; an uncommitted generation's sidecar is garbage vacuum removes
     with the directory.
 
-    ``schema`` (the written frame's logical StructType) pins
-    partition-column types for the read-back — without it, stats
-    declared on a numeric-looking STRING partition column would
-    record min/max as ints in some generations and strings in others,
-    and ``_range_keeps``/``_bound_key`` comparisons across the mixed
-    sidecars would be type-inconsistent."""
+    ``schema`` is the written frame's schema: the read-back applies it,
+    so no Spark job infers one from the files, a generation dir that
+    holds no file (a rewrite that emptied every partition) reads as
+    zero rows, and partition columns keep their logical types instead
+    of whatever their directory names parse as (stats declared on a
+    numeric-looking STRING partition column would otherwise record
+    min/max as ints in some generations and strings in others)."""
     conf = _stats_conf(spark, table_path)
     if not conf:
         return
-    if schema is not None:
-        from pyspark.sql.types import AtomicType
-
-        with _no_partition_inference(spark):
-            df = spark.read.parquet(new_dir)
-        # pin ATOMIC columns only — the only read-back type drift is
-        # partition-directory parsing, and partition columns are
-        # atomic; nested columns can differ in nullability alone and
-        # must not be touched
-        for f in schema.fields:
-            if (
-                isinstance(f.dataType, AtomicType)
-                and f.name in df.columns
-                and df.schema[f.name].dataType != f.dataType
-            ):
-                df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
-    else:
-        df = spark.read.parquet(new_dir)
+    df = spark.read.schema(schema).parquet(new_dir)
     cols = [c for c in conf["cols"] if c in df.columns]
     bcols = [c for c in conf.get("bloom_cols", []) if c in df.columns]
     if not cols and not bcols:
@@ -3017,11 +3003,11 @@ def snapshot_read_where(
             unpruned_gens=unpruned,
             pruned_partitions=pruned_parts,
         )
-    # an empty selection reads as the full read's schema, zero rows
-    full = snap.read()
+    # an empty selection reads as zero rows of the stored schema (a
+    # manifest written before schema tracking: of the full read's)
     df = snap.scan(select)
     if df is None:
-        df = full.limit(0)
+        df = snap.empty() if snap.schema is not None else snap.read().limit(0)
     for c, (lo, hi) in ranges.items():
         if lo is not None:
             df = df.filter(F.col(c) >= F.lit(lo))

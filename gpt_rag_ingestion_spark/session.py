@@ -42,14 +42,17 @@ def _disable_dataframe_debugging(spark: SparkSession) -> None:
     sets directly.  Purely a driver-side (Python client) change: the
     JVM never sees the flag, plans and results are untouched, and
     errors still raise — they just stop carrying the Python call-site
-    origin line."""
-    try:
-        import pyspark.errors.utils as _eu
+    origin line.  A PySpark that no longer has the cache raises here
+    instead of silently keeping the per-call capture on."""
+    import pyspark.errors.utils as _eu
 
-        if hasattr(_eu, "_enable_debugging_cache"):
-            _eu._enable_debugging_cache = False
-    except Exception:
-        pass  # older/newer pyspark without the knob: keep defaults
+    if "_enable_debugging_cache" not in vars(_eu):
+        raise RuntimeError(
+            "pyspark.errors.utils._enable_debugging_cache is gone: this "
+            "PySpark keeps DataFrame call-site capture on for sessions "
+            "not built by get_spark; find its new switch"
+        )
+    _eu._enable_debugging_cache = False
 
 
 def ship_package(spark: SparkSession) -> None:

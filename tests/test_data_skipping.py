@@ -650,3 +650,32 @@ def test_clone_reads_prune_via_source_sidecars(spark, tmp_path):
     got2 = S.snapshot_read_where(spark, clone, {"v": (600, 900)}, report=rep2)
     assert rep2["unpruned_gens"] == 0, rep2
     assert got2.filter(F.col("parent_id") == 100_000).count() == 1
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_empty_selection_runs_no_job(spark, tmp_path, partitioned):
+    """A range every file's stats exclude selects nothing: the read is
+    zero rows of the table's schema, built from the manifest without a
+    Spark job (no per-generation read is built to borrow a schema)."""
+    tbl = str(tmp_path / "t")
+    pc = ["bucket"] if partitioned else None
+    S.snapshot_enable_stats(spark, tbl, cols=["v"])
+    S.snapshot_merge_upsert(spark, tbl, _clustered(spark, 400, 2), partition_cols=pc)
+    S.snapshot_merge_upsert(
+        spark, tbl,
+        _clustered(spark, 800, 2).filter(F.col("parent_id") >= 400),
+        partition_cols=pc,
+    )
+    sc = spark.sparkContext
+    group = "empty-read-where"
+    sc.setJobGroup(group, "empty-selection snapshot_read_where", False)
+    try:
+        rep: dict = {}
+        got = S.snapshot_read_where(spark, tbl, {"v": (10**9, None)}, report=rep)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup("", "", False)
+    assert rep["files_read"] == 0 and rep["files_total"] > 0, rep
+    assert jobs == [], f"an empty selection ran {len(jobs)} Spark job(s)"
+    assert got.count() == 0
+    assert got.dtypes == S.read_snapshot_table(spark, tbl).dtypes

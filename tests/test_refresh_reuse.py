@@ -356,11 +356,11 @@ def test_summary_frame_equals_create_dataframe(spark, tmp_path):
 # -- the private PySpark hook ----------------------------------------------
 
 
-def test_dataframe_debugging_hook_still_exists(spark):
+def test_dataframe_debugging_hook_still_exists(spark, monkeypatch):
     """``session._disable_dataframe_debugging`` turns off call-site
     capture for foreign sessions through a private PySpark module
-    global; if PySpark renames or drops it the switch silently does
-    nothing, so pin both the global and its effect."""
+    global: pin both the global and its effect, and that the switch
+    raises, rather than doing nothing, once PySpark drops the global."""
     import pyspark.errors.utils as eu
 
     from gpt_rag_ingestion_spark.session import _disable_dataframe_debugging
@@ -371,6 +371,11 @@ def test_dataframe_debugging_hook_still_exists(spark):
     )
     _disable_dataframe_debugging(spark)
     assert eu.is_debugging_enabled() is False
+
+    monkeypatch.delattr(eu, "_enable_debugging_cache")
+    with pytest.raises(RuntimeError, match="_enable_debugging_cache is gone"):
+        _disable_dataframe_debugging(spark)
+    assert not hasattr(eu, "_enable_debugging_cache")
 
 
 # -- generated code is reused across ticks --------------------------------

@@ -686,7 +686,7 @@ def test_text_index_two_writer_claim_conflict(spark, tmp_path, monkeypatch):
     # writer B claims the next generation WHILE A is mid-append
     # (after A's recovery — a pre-existing claim would correctly be
     # pruned as crashed — but before A's commit): hook A's delta
-    # probe, the step between its meta read and its dir writes
+    # probe, the step between its dir writes and its claim
     gen = int(bm.read_meta(spark, path, X.TEXT_INDEX)["gen"]) + 1
     real_delta = X._tindex_delta
     state = {"fired": False}
@@ -1123,3 +1123,142 @@ def test_scoring_profile_topk_composed(spark):
         scoring_profile_topk(
             idx, q, functions=[{"type": "geo", "weight_permille": 1}]
         ).collect()
+
+
+# -- the write path's counters against a reference probe -------------------
+
+
+def _reference_live(spark, index_path, meta):
+    """The live (postings, doclen) of a manifest as the index resolved
+    them for every write before the write path probed only the batch's
+    keys: the latest generation of every doc, from a group-by over the
+    whole listed doclen, tombstones dropped.  Kept here as the
+    independent derivation the maintained counters are checked
+    against."""
+    postings = bm.read_batches(
+        spark, index_path, "postings", meta["batches"]["postings"],
+        "token string, doc long, tf long, gen int",
+    )
+    doclen = bm.read_batches(
+        spark, index_path, "doclen", meta["batches"]["doclen"],
+        "doc long, dl long, gen int",
+    )
+    if int(meta["superseded"]) == 0:
+        return postings, doclen.filter(F.col("dl").isNotNull())
+    dead = (
+        doclen.groupBy("doc")
+        .agg(F.max("gen").alias("_max_gen"), F.count(F.lit(1)).alias("_ng"))
+        .filter(F.col("_ng") > 1)
+        .select("doc", "_max_gen")
+    )
+
+    def live(t):
+        return (
+            t.join(F.broadcast(dead), "doc", "left")
+            .filter(
+                F.col("_max_gen").isNull() | (F.col("gen") == F.col("_max_gen"))
+            )
+            .drop("_max_gen")
+        )
+
+    return live(postings), live(doclen).filter(F.col("dl").isNotNull())
+
+
+def _check_against_reference(spark, path):
+    """The committed meta's counters and the query answers equal what
+    the reference derives from the listed batches alone."""
+    from gpt_rag_ingestion_spark.operators import search as X
+
+    meta = bm.read_meta(spark, path, X.TEXT_INDEX)
+    postings, doclen = _reference_live(spark, path, meta)
+    n, l = (lambda r: (int(r[0]), int(r[1] or 0)))(
+        doclen.agg(F.count(F.lit(1)), F.sum("dl")).first()
+    )
+    listed = bm.read_batches(
+        spark, path, "doclen", meta["batches"]["doclen"],
+        "doc long, dl long, gen int",
+    ).filter(F.col("dl").isNotNull()).count()
+    # every non-tombstone row that is not live was superseded once
+    assert (meta["n_live"], meta["l_live"], meta["superseded"]) == (
+        n, l, listed - n
+    )
+    index = {
+        "postings": postings.select("token", "doc", "tf"),
+        "dfreq": postings.groupBy("token").agg(F.count(F.lit(1)).alias("df")),
+        "doclen": doclen.select("doc", "dl"),
+        "n_docs": n,
+        "total_len": l,
+    }
+    q = _persisted_queries(spark)
+    want = sorted(tuple(r) for r in bm25_topk(index, q, k=5).collect())
+    got = sorted(
+        tuple(r) for r in X.text_index_query(spark, path, q, k=5).collect()
+    )
+    assert got == want
+    return meta
+
+
+def test_write_path_counters_equal_reference_probe(spark, tmp_path):
+    """Build, then applies and a delete covering a key in both sets,
+    re-tombstoning a dead doc, a replayed label and an apply after
+    compaction: after every commit ``n_live``, ``l_live``,
+    ``superseded`` and the query answers equal the reference's."""
+    from gpt_rag_ingestion_spark.operators import search as X
+
+    path = str(tmp_path / "tindex")
+
+    def keys(*ids):
+        return spark.createDataFrame([(i,) for i in ids], "doc_id long")
+
+    X.text_index_build(_corpus(spark, BASE_ROWS), path)
+    _check_against_reference(spark, path)
+    # doc 2 is in both sets (its upload wins), doc 1 is tombstoned
+    batch = [(2, "stone stone stone tree"), (6, "dog fish dog")]
+    X.text_index_apply(_corpus(spark, batch), keys(1, 2), path, "b1")
+    meta = _check_against_reference(spark, path)
+    assert meta["superseded"] == 2
+    # doc 1 is already dead: tombstoning it again supersedes nothing;
+    # doc 9 was never indexed
+    out = X.text_index_delete(spark, path, keys(1, 9), "p1")
+    assert out["tombstoned"] == 0
+    _check_against_reference(spark, path)
+    # the replayed label supersedes its own docs; doc 3 goes
+    X.text_index_apply(_corpus(spark, batch), keys(3), path, "b1")
+    meta = _check_against_reference(spark, path)
+    assert meta["superseded"] == 5
+    X.text_index_compact(spark, path)
+    assert _check_against_reference(spark, path)["superseded"] == 0
+    # after compaction: a tombstoned doc comes back, doc 5 goes
+    X.text_index_apply(
+        _corpus(spark, [(1, "cat fish"), (4, "bird")]), keys(5), path, "c1"
+    )
+    meta = _check_against_reference(spark, path)
+    assert (meta["n_live"], meta["superseded"]) == (4, 2)
+
+
+#: Spark jobs of one ``text_index_apply`` call in the test below,
+#: measured at 12: the postings write 2, the doclen write 6, the probe
+#: 4.  A probe that groups the whole listed doclen, or a second plan
+#: shape for it, shows up here first.
+MAX_APPLY_JOBS = 12
+
+
+def test_text_index_apply_job_count(spark, tmp_path):
+    from gpt_rag_ingestion_spark.operators import search as X
+
+    path = str(tmp_path / "tindex")
+    X.text_index_build(_corpus(spark, BASE_ROWS), path)
+    X.text_index_delete(
+        spark, path, spark.createDataFrame([(5,)], "doc_id long"), "p0"
+    )  # superseded > 0: the probe's plan does not change with it
+    batch = _corpus(spark, [(2, "stone stone stone tree"), (6, "dog fish dog")])
+    dead = spark.createDataFrame([(1,), (2,)], "doc_id long")
+    sc = spark.sparkContext
+    group = "text-index-apply-jobs"
+    sc.setJobGroup(group, "one text_index_apply", False)
+    try:
+        X.text_index_apply(batch, dead, path, "b1")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup("", "", False)
+    assert len(jobs) <= MAX_APPLY_JOBS, f"text_index_apply ran {len(jobs)} jobs"

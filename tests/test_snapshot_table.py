@@ -459,22 +459,29 @@ def test_clock_clamp_raises_on_predecessor_stat_fault(
 def test_emptied_table_reads_and_takes_the_next_merge(spark, tmp_path, pcols):
     """Deleting every key leaves a manifest that may list no partition
     at all (partitioned layout): it reads back as zero rows of the
-    stored schema, and the next merge lands on it."""
-    snap = str(tmp_path / "snap")
-    S.snapshot_merge_upsert(
-        spark, snap, _inc(spark, 0, 12), partition_cols=pcols
-    )
-    before = S.read_snapshot_table(spark, snap).dtypes
-    S.snapshot_delete_keys(
-        spark, snap, spark.range(0, 12).selectExpr("id AS parent_id"),
-        partition_cols=pcols,
-    )
-    empty = S.read_snapshot_table(spark, snap)
-    assert empty.count() == 0 and empty.dtypes == before
-    S.snapshot_merge_upsert(
-        spark, snap, _inc(spark, 5, 9), partition_cols=pcols
-    )
-    assert _rows(S.read_snapshot_table(spark, snap)) == _rows(_inc(spark, 5, 9))
+    stored schema, and the next merge lands on it — with write-time
+    stats on too, whose read-back of the emptied generation must not
+    need a file to infer a schema from."""
+    for stats in (False, True):
+        snap = str(tmp_path / f"snap-{stats}")
+        if stats:
+            S.snapshot_enable_stats(spark, snap, ["v"], bloom_cols=["parent_id"])
+        S.snapshot_merge_upsert(
+            spark, snap, _inc(spark, 0, 12), partition_cols=pcols
+        )
+        before = S.read_snapshot_table(spark, snap).dtypes
+        S.snapshot_delete_keys(
+            spark, snap, spark.range(0, 12).selectExpr("id AS parent_id"),
+            partition_cols=pcols,
+        )
+        empty = S.read_snapshot_table(spark, snap)
+        assert empty.count() == 0 and empty.dtypes == before
+        S.snapshot_merge_upsert(
+            spark, snap, _inc(spark, 5, 9), partition_cols=pcols
+        )
+        assert _rows(S.read_snapshot_table(spark, snap)) == _rows(
+            _inc(spark, 5, 9)
+        )
 
 
 @pytest.mark.parametrize("op", ["rename", "drop", "clone"])
