@@ -374,19 +374,23 @@ def rrf_fuse(
 #                            purger's leg)
 #   claims/g<gen>         — generation claims (create-exclusive)
 #
-# Liveness authority: DOCLEN — exactly one row per doc per generation
-# (a tokenless doc still gets dl = 0; postings would drop it).  Every
-# doc's latest generation wins; a tombstone at the latest generation
-# removes the doc entirely.  meta.superseded == 0 is the steady state:
-# raw tables ARE the live tables, no liveness work at all.
+# Liveness authority: DOCLEN — one row per input row per generation,
+# each carrying its doc's dl (a tokenless doc still gets dl = 0;
+# postings would drop it; a doc id indexed from k rows, e.g. a
+# parent-keyed index over chunks, has k rows and counts k times in
+# n_live/l_live).  Every doc's latest generation wins; a tombstone at
+# the latest generation removes the doc entirely.  meta.superseded == 0
+# is the steady state: raw tables ARE the live tables, no liveness work
+# at all.
 #
 # Write path (build, append, delete, apply): the op writes its postings
 # and its doclen (new rows plus tombstones) ONCE into its unlisted
 # batch dirs, then one probe reads the staged doclen back and
 # semi-joins the listed doclen on its keys — O(batch) rows shuffled,
-# one plan whatever meta.superseded is — and one aggregate yields the
-# counters the meta commit carries (n_live, l_live, superseded).  The
-# read path (query, compaction) resolves liveness in _tindex_live.
+# one plan whatever meta.superseded is — and one aggregate over the
+# rows at each key's latest generation yields the counters the meta
+# commit carries (n_live, l_live, superseded).  The read path (query,
+# compaction) resolves liveness in _tindex_live.
 
 TEXT_INDEX = bm.Store(subs=("postings", "doclen"), build="text_index_build")
 
@@ -516,12 +520,15 @@ def _tindex_delta(spark, index_path, staged, meta):
     which replaces nothing).  One plan whatever ``meta.superseded`` is:
     the listed doclen batches are semi-joined on the broadcast staged
     keys FIRST, so only the batch's keys leave the scan and reach the
-    shuffle; each key keeps its latest listed row (``max_by(dl, gen)``
-    — one row per doc per generation is the layout's invariant), and a
-    tombstone there means the doc is not live.  One aggregate over
-    those replaced rows and the staged rows counts the live docs and
+    shuffle; each key keeps EVERY listed row at its latest generation
+    (a doc id has one row per input row, e.g. a parent-keyed index
+    over chunks, so counters count rows as ``_tindex_live`` does), and
+    a tombstone there means the doc is not live.  One aggregate over
+    those replaced rows and the staged rows counts the live rows and
     lengths leaving (on, ol) and arriving (nn, nl), and the ids that
     cast to NULL."""
+    from pyspark.sql import Window
+
     new = spark.read.schema(_DOCLEN_SCHEMA).parquet(staged)
     rows = new.select(F.lit(False).alias("_old"), "doc", "dl")
     if meta is not None:
@@ -531,9 +538,8 @@ def _tindex_delta(spark, index_path, staged, meta):
                 _DOCLEN_SCHEMA,
             )
             .join(F.broadcast(new.select("doc")), "doc", "left_semi")
-            .groupBy("doc")
-            .agg(F.max_by("dl", "gen").alias("dl"))
-            .filter(F.col("dl").isNotNull())
+            .withColumn("_g", F.max("gen").over(Window.partitionBy("doc")))
+            .filter((F.col("gen") == F.col("_g")) & F.col("dl").isNotNull())
         )
         rows = replaced.select(F.lit(True).alias("_old"), "doc", "dl").unionByName(
             rows

@@ -105,7 +105,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from gpt_rag_ingestion_spark.operators.upsert import (
     _fs_delete,
@@ -759,19 +759,34 @@ class _Snapshot:
         return self.empty() if df is None else df
 
     def empty(self) -> DataFrame:
-        """Zero rows of the stored schema, partition columns last as a
-        partitioned scan returns them — built from the manifest alone,
-        with no Spark job."""
+        """Zero rows of the stored schema as a scan returns it: every
+        field nullable, partition columns last — built from the
+        manifest alone, with no Spark job."""
         if self.schema is None:
             raise ValueError(
                 f"generation {self.gen} of {self.table_path} selects no "
                 "partition and stores no schema"
             )
         pcols = self.partition_cols
-        return self.spark.createDataFrame([], StructType(
+        return self.spark.createDataFrame([], _as_nullable(StructType(
             [f for f in self.schema.fields if f.name not in pcols]
             + [self.schema[c] for c in pcols]
-        ))
+        )))
+
+
+def _as_nullable(t):
+    """``t`` with every field, element and value nullable, the schema a
+    parquet scan reports whatever the writer's nullability was."""
+    if isinstance(t, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
 
 
 def read_snapshot_table(

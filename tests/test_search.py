@@ -1199,10 +1199,11 @@ def _check_against_reference(spark, path):
 
 
 def test_write_path_counters_equal_reference_probe(spark, tmp_path):
-    """Build, then applies and a delete covering a key in both sets,
-    re-tombstoning a dead doc, a replayed label and an apply after
-    compaction: after every commit ``n_live``, ``l_live``,
-    ``superseded`` and the query answers equal the reference's."""
+    """Build, then applies and deletes covering a key in both sets,
+    re-tombstoning a dead doc, a replayed label, an apply after
+    compaction and a doc id with two rows (a parent-keyed index over
+    chunks): after every commit ``n_live``, ``l_live``, ``superseded``
+    and the query answers equal the reference's."""
     from gpt_rag_ingestion_spark.operators import search as X
 
     path = str(tmp_path / "tindex")
@@ -1210,8 +1211,10 @@ def test_write_path_counters_equal_reference_probe(spark, tmp_path):
     def keys(*ids):
         return spark.createDataFrame([(i,) for i in ids], "doc_id long")
 
-    X.text_index_build(_corpus(spark, BASE_ROWS), path)
-    _check_against_reference(spark, path)
+    # doc 7 has two rows: every counter counts rows, as the reference does
+    twice = [(7, "owl owl"), (7, "owl cat")]
+    X.text_index_build(_corpus(spark, BASE_ROWS + twice), path)
+    assert _check_against_reference(spark, path)["n_live"] == 7
     # doc 2 is in both sets (its upload wins), doc 1 is tombstoned
     batch = [(2, "stone stone stone tree"), (6, "dog fish dog")]
     X.text_index_apply(_corpus(spark, batch), keys(1, 2), path, "b1")
@@ -1222,18 +1225,29 @@ def test_write_path_counters_equal_reference_probe(spark, tmp_path):
     out = X.text_index_delete(spark, path, keys(1, 9), "p1")
     assert out["tombstoned"] == 0
     _check_against_reference(spark, path)
+    # both of doc 7's rows go, and two rows come back
+    out = X.text_index_delete(spark, path, keys(7), "p2")
+    assert out["tombstoned"] == 2
+    assert _check_against_reference(spark, path)["superseded"] == 4
+    X.text_index_apply(
+        _corpus(spark, [(7, "owl"), (7, "owl fish")]), keys(9), path, "b2"
+    )
+    meta = _check_against_reference(spark, path)
+    assert (meta["n_live"], meta["superseded"]) == (7, 4)
     # the replayed label supersedes its own docs; doc 3 goes
     X.text_index_apply(_corpus(spark, batch), keys(3), path, "b1")
     meta = _check_against_reference(spark, path)
-    assert meta["superseded"] == 5
+    assert meta["superseded"] == 7
     X.text_index_compact(spark, path)
     assert _check_against_reference(spark, path)["superseded"] == 0
-    # after compaction: a tombstoned doc comes back, doc 5 goes
+    # after compaction: a tombstoned doc comes back, doc 5 goes, and
+    # one row replaces doc 7's two
     X.text_index_apply(
-        _corpus(spark, [(1, "cat fish"), (4, "bird")]), keys(5), path, "c1"
+        _corpus(spark, [(1, "cat fish"), (4, "bird"), (7, "owl")]),
+        keys(5), path, "c1",
     )
     meta = _check_against_reference(spark, path)
-    assert (meta["n_live"], meta["superseded"]) == (4, 2)
+    assert (meta["n_live"], meta["superseded"]) == (5, 4)
 
 
 #: Spark jobs of one ``text_index_apply`` call in the test below,
