@@ -31,6 +31,15 @@ from gpt_rag_ingestion_spark.functions.markdown import number_figures
 from gpt_rag_ingestion_spark.operators.figures import filter_significant_figures
 
 
+def _zero_vec(dim: int):
+    """The all-zero ``array<float>`` vector of ``dim`` elements as one
+    SQL parse instead of dim+2 py4j calls of literal building (pinned
+    sameSemantics against the ``F.array(*lits)`` form)."""
+    return F.expr(
+        "CAST(array(" + ", ".join(["0.0D"] * dim) + ") AS ARRAY<FLOAT>)"
+    )
+
+
 def chunk_multimodal_documents(
     docs: DataFrame,
     figures: DataFrame,
@@ -129,11 +138,7 @@ def chunk_multimodal_documents(
             F.lit(""),
         ),
     )
-    # one SQL parse instead of dim+2 py4j calls of literal building
-    # (proven sameSemantics vs the F.array(*lits) form)
-    zero_vec = F.expr(
-        "CAST(array(" + ", ".join(["0.0D"] * embedding_dim) + ") AS ARRAY<FLOAT>)"
-    )
+    zero_vec = _zero_vec(embedding_dim)
     # two withColumns batches instead of six chained withColumn plan
     # rebuilds (guide §5 driver overhead) — the split preserves the
     # dependency chain (length/contentVector/captionVector read the

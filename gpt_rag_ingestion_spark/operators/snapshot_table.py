@@ -46,19 +46,20 @@ ATOMIC CREATE-EXCLUSIVE of its manifest (the optimistic-concurrency
 primitive Delta Lake uses on HDFS), then (c) re-checks the pointer
 still names the snapshot the merge was based on AND that the claim
 file is still byte-identical to its own write.  Exactly one racer
-commits a given generation; the others either REBASE — with
+commits a given generation; a racer that meets a rival's live claim
+waits for it to commit or let go, and the others either REBASE — with
 ``max_conflict_rebases`` set and a write set disjoint from the
 winner's, the loser overlays its partition mappings onto the winner's
 manifest and commits the NEXT generation, reusing its already-written
-data files (``_commit_rebasing``, Delta's conflict-resolution rule;
-staged dirs are vacuum-protected by a lease-aged ``_inflight``
-breadcrumb for the rebase window) — or, with budget remaining, RETRY
-THE WHOLE MERGE against the winner's snapshot (``_retrying_merge``,
-Delta's fallback for non-disjoint ConcurrentAppend: arbitration
-re-reads the new current table, so last-writer-wins holds even on
-overlapping keys) — or raise ``SnapshotWriteConflict`` (retry = re-run
-the merge against the new snapshot); abandoned generation dirs are
-garbage for ``snapshot_vacuum``.  Claims carry a LEASE
+data files (Delta's conflict-resolution rule; staged dirs are
+vacuum-protected by a lease-aged ``_inflight`` breadcrumb for the
+rebase window) — or, with budget remaining, RETRY THE WHOLE WRITE
+against the winner's snapshot (``_retrying``, Delta's fallback for
+non-disjoint ConcurrentAppend: arbitration re-reads the new current
+table, so last-writer-wins holds even on overlapping keys) — or raise
+``SnapshotWriteConflict`` (retry = re-run the merge against the new
+snapshot); abandoned generation dirs are garbage for
+``snapshot_vacuum``.  Claims carry a LEASE
 (``CLAIM_LEASE_MS``) kept alive by a HEARTBEAT: from claim creation
 to pointer swap a daemon thread refreshes the claim file's mtime
 every ``CLAIM_HEARTBEAT_MS`` (lease/5), and crash recovery prunes
@@ -86,12 +87,17 @@ Every commit — each data write (merge, conditional merge, delete,
 overwrite-where, update, optimize, partition compaction), the DV
 delete, restore, column rename/drop, clone and convert — is one
 ``_WriteAttempt``: the same writer-start recovery + pinned base
-generation + ledger gate.  Data writes then share one partition-rewrite
-tail (``_WriteAttempt.rewrite``) that writes the new generation and its
-stats sidecar.  Every manifest body comes from one builder
+generation and manifest (read once) + ledger gate, and it ends in the
+one commit door, ``_WriteAttempt.commit``: claim-race wait, rebase
+within the write's budget (0 for the metadata commits), and
+``_commit``, which only claims, verifies and swaps.  Data writes share
+one partition-rewrite tail (``_WriteAttempt.rewrite``) that writes the
+new generation and its stats sidecar; every public write retries
+through ``_retrying``.  Every manifest body comes from one builder
 (``_manifest_body``), which decides which fields a commit states and
-which it inherits; ``_commit`` only claims, verifies and swaps.  An
-unpartitioned table is the partitioned case with one relation ``""``.
+which it inherits.  The pointer roll-forward is one function
+(``_swap_pointer``).  An unpartitioned table is the partitioned case
+with one relation ``""``.
 """
 
 from __future__ import annotations
@@ -101,6 +107,7 @@ import functools
 import inspect
 import json
 import re
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -176,6 +183,48 @@ def _vanished(e: BaseException) -> bool:
     )
 
 
+def _read_pointer(spark, path: str) -> int | None:
+    """The generation a pointer file names.  None when it is not there
+    (exists() then read() is a TOCTOU under a concurrent swap, so a
+    file vanishing between the probes is absent too) or does not
+    parse (a partly written pointer); every other read error raises."""
+    if not _fs_exists(spark, path):
+        return None
+    try:
+        text = _read_text(spark, path)
+    except Exception as e:
+        if _vanished(e):
+            return None
+        raise
+    try:
+        return int(text.strip())
+    except ValueError:
+        return None
+
+
+def _swap_pointer(spark, table_path: str, gen: int) -> None:
+    """The one pointer roll-forward: rename a written ``_current__tmp``
+    naming ``gen`` over ``_current``.  A committing writer swaps its
+    own pointer with it and ``_commit_recover`` finishes a crashed
+    one's.  Two of them can race the same swap (two writers recovering
+    one mid-swap commit, or a recoverer and the live owner): the loser
+    finds tmp gone.  It must not propagate; it verifies the pointer
+    instead and restores it if the delete-then-rename interleaving left
+    none or an older one (no successor can have committed without first
+    observing ``gen``).  Any failed rename takes that path: a real I/O
+    fault then raises from the pointer read or write."""
+    cur = f"{table_path}/_current"
+    _fs_delete(spark, cur)
+    try:
+        _fs_rename(spark, f"{table_path}/_current__tmp", cur)
+        return
+    except Exception:
+        pass
+    got = _read_pointer(spark, cur)
+    if got is None or got < gen:
+        _write_text(spark, cur, str(gen))
+
+
 def _commit_recover(spark, table_path: str) -> None:
     """Roll FORWARD a half-committed pointer: ``_current__tmp`` exists
     only between 'commit started' and 'commit done', and by then its
@@ -188,37 +237,13 @@ def _commit_recover(spark, table_path: str) -> None:
     is deleted.  (Readers call this read-only-ly via fallback in
     ``_current_gen`` instead.)"""
     tmp = f"{table_path}/_current__tmp"
-    cur = f"{table_path}/_current"
     if not _fs_exists(spark, tmp):
         return
-    try:
-        gen = int(_read_text(spark, tmp).strip())
-        ok = _fs_exists(spark, _manifest_path(table_path, gen))
-    except Exception:  # unreadable / non-int / missing-manifest probe
-        ok = False
-    if ok:
-        # two writers can race this roll-forward (both starting merges
-        # behind the same mid-swap commit) — or the live owner's own
-        # rename lands first.  Whoever loses the rename must not
-        # propagate: verify the pointer instead, and restore it if the
-        # delete-then-rename interleaving left none.
-        try:
-            _fs_delete(spark, cur)
-            _fs_rename(spark, tmp, cur)
-        except Exception:
-            got = None
-            try:
-                if _fs_exists(spark, cur):
-                    got = int(_read_text(spark, cur).strip())
-            except Exception:
-                pass
-            if got is None or got < gen:
-                _write_text(spark, cur, str(gen))
+    gen = _read_pointer(spark, tmp)
+    if gen is not None and _fs_exists(spark, _manifest_path(table_path, gen)):
+        _swap_pointer(spark, table_path, gen)
     else:
-        try:
-            _fs_delete(spark, tmp)
-        except Exception:
-            pass
+        _fs_delete(spark, tmp)
 
 
 #: Claim lease: ``_claim_recover`` never prunes a claim manifest
@@ -257,8 +282,13 @@ def _start_claim_heartbeat(spark, claimed: str):
                 if not fs.exists(p):
                     return
                 fs.setTimes(p, _now_ms(spark), -1)
-            except Exception:
-                return
+            except Exception as e:
+                # released or pruned between the probe and the touch;
+                # any other fault ends the thread loudly, and the
+                # ownership re-verify in _commit covers a lapsed lease
+                if _vanished(e):
+                    return
+                raise
 
     threading.Thread(
         target=_beat, daemon=True, name="snapshot-claim-heartbeat"
@@ -316,30 +346,10 @@ def _current_gen(spark, table_path: str) -> int | None:
     Readers NEVER mutate: a mid-commit pointer is resolved by reading
     the tmp file (the commit is complete but for the rename)."""
     cur = f"{table_path}/_current"
-    tmp = f"{table_path}/_current__tmp"
-
-    def _try_read(path):
-        # exists() then read() is a TOCTOU under a concurrent swap —
-        # treat a vanished-between-probes file as absent, and a
-        # partly written pointer (does not parse) as not yet there;
-        # every other read error raises
-        if not _fs_exists(spark, path):
-            return None
-        try:
-            text = _read_text(spark, path)
-        except Exception as e:
-            if _vanished(e):
-                return None
-            raise
-        try:
-            return int(text.strip())
-        except ValueError:
-            return None
-
-    got = _try_read(cur)
+    got = _read_pointer(spark, cur)
     if got is not None:
         return got
-    got = _try_read(tmp)
+    got = _read_pointer(spark, f"{table_path}/_current__tmp")
     if got is not None:
         return got
     # re-probe the pointer once: a concurrent commit's delete(cur) →
@@ -347,7 +357,7 @@ def _current_gen(spark, table_path: str) -> int | None:
     # missed cur and the second missed tmp (already renamed) — on a
     # committed table one of the two exists at all times, so a second
     # look settles it.  Cost on a genuinely empty table: one exists().
-    return _try_read(cur)
+    return _read_pointer(spark, cur)
 
 
 def _frame_schema(df: DataFrame, prev: dict | None = None) -> dict:
@@ -845,7 +855,8 @@ def _manifest_body(
       the new map still lists (``_carry_dv_ref``).
     - The history — the idempotent-writer ledger and the commit
       clock — always continues ``prev``.  ``ledger`` is the
-      ``(txn, txn_gen)`` pair ``_txn_gate`` stamped; without one the
+      ``(txn, txn_gen)`` pair the write attempt's ledger gate stamped
+      (``_WriteAttempt``); without one the
       predecessor's ledger carries forward minus the entries past the
       retention horizon (``snapshot_set_ledger_retention``), so
       non-txn commits (optimize, restore, rename) trim it too and a
@@ -916,13 +927,13 @@ def _commit(
     catches the pathological stale-writer case where vacuum removed
     the manifest a faster chain of commits had claimed (the
     create-exclusive would wrongly succeed).  Only then the atomic
-    pointer swap."""
+    pointer swap.  ``_WriteAttempt.commit`` is the one caller: it owns
+    the waits and rebases around this step."""
     body_json = json.dumps(body, sort_keys=True)
     claimed = _manifest_path(table_path, gen)
     _write_text_exclusive(spark, claimed, body_json)
     heartbeat_stop = _start_claim_heartbeat(spark, claimed)
     tmp = f"{table_path}/_current__tmp"
-    cur = f"{table_path}/_current"
     try:
         try:
             actual = _current_gen(spark, table_path)
@@ -953,37 +964,16 @@ def _commit(
             # its rename is pending — writing our tmp now would
             # overwrite its pointer and one of the two renames would
             # find tmp gone.  Wait for the swap to clear; if the
-            # writer died mid-swap, roll its rename forward (the same
-            # roll-forward _commit_recover performs).
-            import time as _time
-
+            # writer died mid-swap, recovery rolls its rename forward,
+            # validating tmp first (a writer SIGKILLed mid-_write_text
+            # leaves a garbage tmp, which is deleted, never renamed
+            # over the valid pointer).
             for _ in range(200):
                 if not _fs_exists(spark, tmp):
                     break
-                _time.sleep(0.05)
+                time.sleep(0.05)
             else:
-                # forced roll-forward of a dead predecessor's swap:
-                # validate tmp EXACTLY as _commit_recover does before
-                # renaming it over the pointer (r8 advisor: a writer
-                # SIGKILLed mid-_write_text leaves a truncated/garbage
-                # tmp; renaming that over a valid _current bricks the
-                # table).  Invalid tmp never reached its commit's
-                # atomic point — delete it; and never touch cur until
-                # tmp is known-good.
-                try:
-                    pg = int(_read_text(spark, tmp).strip())
-                    tmp_ok = _fs_exists(spark, _manifest_path(table_path, pg))
-                except Exception:
-                    tmp_ok = False
-                try:
-                    if tmp_ok:
-                        if _fs_exists(spark, cur):
-                            _fs_delete(spark, cur)
-                        _fs_rename(spark, tmp, cur)
-                    else:
-                        _fs_delete(spark, tmp)
-                except Exception:
-                    pass
+                _commit_recover(spark, table_path)
             if _current_gen(spark, table_path) != expected_cur:
                 raise SnapshotWriteConflict(
                     f"snapshot moved during merge: based on "
@@ -1013,187 +1003,11 @@ def _commit(
             except Exception:
                 pass
             raise
-        _fs_delete(spark, cur)
-        try:
-            _fs_rename(spark, tmp, cur)
-        except Exception:
-            # a concurrent writer's _commit_recover may have rolled
-            # THIS swap forward (consuming tmp) between our delete and
-            # rename — the commit is then already visible.  Verify the
-            # pointer; if the roll-forward itself raced our delete and
-            # left NO pointer, rewrite it (we know our generation, and
-            # a successor cannot have committed without first
-            # observing ours).
-            got = None
-            try:
-                if _fs_exists(spark, cur):
-                    got = int(_read_text(spark, cur).strip())
-            except Exception:
-                pass
-            if got is None or got < gen:
-                _write_text(spark, cur, str(gen))
+        # a concurrent writer's recovery may roll THIS swap forward
+        # (consuming tmp) while it runs; _swap_pointer settles that
+        _swap_pointer(spark, table_path, gen)
     finally:
         heartbeat_stop.set()
-
-
-def _commit_rebasing(
-    spark, table_path: str, gen: int, partitions: dict,
-    expected_cur: int | None,
-    op: str = "merge",
-    max_rebases: int = 0,
-    refuse_rebase: str | None = None,
-    **stated,
-) -> int:
-    """``_commit`` with Delta-style CONCURRENCY CONTROL: when the
-    pointer moved while this writer was computing (another job
-    committed first), do not give up — if the two write sets touch
-    DISJOINT partitions, REBASE this commit onto the new snapshot
-    (overlay our changed/removed partition mappings onto the rival's
-    manifest) and retry at the next generation.  This is what lets N
-    ingest jobs land concurrently on one 100 TB table when each owns
-    its partition range, instead of serializing through retry-the-
-    whole-merge.
-
-    Correctness preconditions (refused otherwise, raising the
-    original ``SnapshotWriteConflict``):
-    - overlapping write sets never rebase (the rival may have changed
-      rows this merge's arbitration read);
-    - deletion vectors on either side never rebase (our staged DV map
-      was computed against the base manifest; the rival's DV ref
-      would be silently dropped by our manifest);
-    - a rival column-mapping commit (rename/drop) never rebases: it
-      touches no partition, but our staged files carry the base's
-      column names, which its entries do not map;
-    - writes that minted GENERATED ALWAYS AS IDENTITY values never
-      rebase (``refuse_rebase``): the ids derive from the BASE
-      snapshot's high-water mark, so two disjoint-partition rivals
-      would commit colliding ids — they must re-run the merge against
-      the winner instead (``_retrying_merge``).
-    Callers must also guarantee keys are PARTITION-LOCAL (the engine's
-    partition columns derive from the merge key, e.g. bucket = key %
-    N) — with cross-partition keys, two disjoint-partition merges can
-    both insert the same key, the same write-serializable caveat
-    Delta documents.
-
-    Each attempt's manifest is built against the snapshot it commits
-    on (``_manifest_body`` with the ``stated`` fields): a rebased
-    attempt inherits from the rival's manifest what this write did not
-    state.  Returns the committed generation.  A claim race on the
-    same generation (rival claimed but has not committed) waits
-    briefly for the pointer to move and retries; ``max_rebases``
-    bounds both loops."""
-    import time
-
-    attempt_m = (
-        None if expected_cur is None
-        else _read_manifest(spark, table_path, expected_cur)
-    )
-    base_parts: dict = dict(attempt_m["partitions"]) if attempt_m else {}
-    # dirs THIS writer staged (vs inherited base refs) — what a rebase
-    # must keep alive across a concurrent vacuum (see
-    # _register_inflight) and re-verify before every rebased attempt
-    ours_dirs = set(partitions.values()) - set(base_parts.values())
-    crumb: str | None = None
-    attempt_gen, attempt_parts, attempt_cur = gen, dict(partitions), expected_cur
-    last: SnapshotWriteConflict | None = None
-    try:
-        for _ in range(max(0, int(max_rebases)) + 1):
-            # claim-race patience (separate budget from the rebases): a
-            # rival holding the SAME generation's claim either commits —
-            # the pointer moves and we rebase — or aborts and releases the
-            # claim, letting our retry land.  Mid-swap pointer reads
-            # (None) are the same transient.
-            actual = attempt_cur
-            body = _manifest_body(
-                spark, table_path, attempt_gen, attempt_parts, op,
-                attempt_m, attempt_cur, **stated,
-            )
-            for _ in range(75):          # <= ~15 s per rebase attempt
-                try:
-                    _commit(spark, table_path, attempt_gen, body, attempt_cur)
-                    return attempt_gen
-                except SnapshotWriteConflict as e:
-                    last = e
-                    actual = _current_gen(spark, table_path)
-                    if actual is not None and actual != attempt_cur:
-                        break            # rival committed: rebase below
-                    time.sleep(0.2)
-            else:
-                raise last               # rival never resolved: give up
-            if refuse_rebase:
-                # this write set carries state derived from the BASE
-                # snapshot that a silent rebase would not recompute
-                # (e.g. identity values minted off the base's
-                # high-water mark — two disjoint-partition rivals
-                # would both derive the same mark and commit
-                # colliding ids, r9 advisor medium).  Propagate the
-                # conflict so _retrying_merge re-runs the whole merge
-                # against the winner's snapshot.
-                raise last
-            if body.get("dv"):
-                raise last
-            actual_m = _read_manifest(spark, table_path, actual)
-            if actual_m.get("dv"):
-                raise last
-            # a rival RENAME/DROP changes no partition, yet our staged
-            # files carry the base's physical names, which the rival's
-            # rename entries (matched by dir name) never map
-            if (actual_m.get("renames") or []) != (
-                (attempt_m or {}).get("renames") or []
-            ):
-                raise last
-            rival_parts = dict(actual_m["partitions"])
-            ours = {
-                r
-                for r in set(attempt_parts) | set(base_parts)
-                if attempt_parts.get(r) != base_parts.get(r)
-            }
-            theirs = {
-                r
-                for r in set(rival_parts) | set(base_parts)
-                if rival_parts.get(r) != base_parts.get(r)
-            }
-            if ours & theirs:
-                raise last
-            # about to REBASE: our staged dirs are now named with a
-            # generation <= the rival's committed cur, i.e. inside
-            # vacuum's deletable range (r8 advisor).  Register the
-            # lease-aged _inflight breadcrumb (once), then verify the
-            # dirs still exist — a vacuum that won the race already
-            # claimed them, and committing would reference vanished
-            # files; surface the conflict instead.
-            if crumb is None:
-                try:
-                    crumb = _register_inflight(spark, table_path, ours_dirs)
-                except Exception:
-                    crumb = None     # best-effort; the verify still runs
-            for d in ours_dirs:
-                if d.startswith("gen-") and not _fs_exists(
-                    spark, _gen_dir(table_path, d)
-                ):
-                    raise SnapshotWriteConflict(
-                        f"staged generation dir {d} was removed by a "
-                        f"concurrent snapshot_vacuum during rebase "
-                        f"({table_path}); retry the merge"
-                    )
-            rebased = dict(rival_parts)
-            for r in ours:
-                if r in attempt_parts:
-                    rebased[r] = attempt_parts[r]
-                else:
-                    rebased.pop(r, None)
-            base_parts = rival_parts
-            attempt_parts = rebased
-            attempt_cur, attempt_m = actual, actual_m
-            attempt_gen = actual + 1
-        assert last is not None
-        raise last
-    finally:
-        if crumb is not None:
-            try:
-                _fs_delete(spark, crumb)
-            except Exception:
-                pass
 
 
 class SnapshotSchemaMismatch(ValueError):
@@ -1224,54 +1038,6 @@ def _enforce_schema(existing: DataFrame, incoming: DataFrame) -> None:
             f"column type conflicts (table vs incoming): {clashes}"
         )
 
-
-
-def _txn_gate(spark, table_path: str, txn_app_id, txn_version, cur):
-    """Idempotent-writes ledger gate shared by every write path
-    (Delta txnAppId/txnVersion).  ``cur`` is the PINNED base
-    generation the caller read ONCE at the top of its write attempt
-    and will pass as ``expected_cur`` to the commit — the ledger is
-    derived from that same generation's manifest, never re-read, so a
-    rival committing anywhere after the pin surfaces as a
-    ``SnapshotWriteConflict`` at commit time and the retry re-runs
-    this gate against the winner (r10 advisor, medium: reading the
-    ledger at one generation and expected_cur at a later one let a
-    rival land in between — its ledger entries were silently dropped
-    by our stamped map and its re-delivery double-applied).
-
-    Returns ``(skip_gen, ledger, ledger_gens)``: ``skip_gen`` is the
-    already-committed generation when this (app, version) was applied
-    before — the caller returns it without writing; otherwise
-    ``ledger`` is the updated {app: version} map and ``ledger_gens``
-    the {app: last-updating-generation} age map to stamp into the
-    commit's manifest (both ``None`` when no txn id was passed: the
-    commit inherits the predecessor's ledger via the manifest carry).
-
-    RETENTION (Delta's setTransactionRetentionDuration analog, keyed
-    by generations instead of wall-clock — see
-    ``snapshot_set_ledger_retention``): entries whose last-updating
-    generation is more than the configured horizon behind the
-    committing generation are EXPIRED here, bounding the manifest's
-    ledger to the set of recently-active writers.  An expired app's
-    re-delivery is NOT idempotent anymore (Delta's exact caveat) —
-    the entry is gone, so the write applies again."""
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError(
-            "txn_app_id and txn_version must be passed together"
-        )
-    if txn_app_id is None:
-        return None, None, None
-    prev = {} if cur is None else _read_manifest(spark, table_path, cur)
-    seen = (prev.get("txn") or {}).get(txn_app_id)
-    if seen is not None and int(txn_version) <= int(seen):
-        return cur, None, None
-    gen = (cur or 0) + 1
-    ledger, gens = _aged_ledger(
-        prev, gen, _ledger_retention(spark, table_path)
-    )
-    ledger[txn_app_id] = int(txn_version)
-    gens[txn_app_id] = gen
-    return None, ledger, gens
 
 
 def _aged_ledger(prev: dict, gen: int, retain: int | None):
@@ -1334,42 +1100,30 @@ def _ledger_retention(spark, table_path: str) -> int | None:
     return int(json.loads(_read_text(spark, p))["n_generations"])
 
 
-def _retrying_merge(fn, max_conflict_rebases: int):
-    """OVERLAP FALLBACK (Delta's behavior for non-disjoint
-    ConcurrentAppend, r8 verdict #3): when the cheap disjoint-
-    partition REBASE inside ``_commit_rebasing`` refuses (overlapping
-    write sets, DV on either side) or the claim never resolves, retry
-    the WHOLE merge from scratch against the winner's snapshot —
-    arbitration re-reads the new current table, partitions are
-    recomputed, and last-writer-wins semantics hold.  Bounded by the
-    same ``max_conflict_rebases`` budget as the rebase loop (total
-    work <= (budget+1) merge computations); with a budget of 0 the
-    first conflict propagates exactly as before."""
-    tries = max(0, int(max_conflict_rebases))
-    last: SnapshotWriteConflict | None = None
-    for _ in range(tries + 1):
-        try:
-            return fn()
-        except SnapshotWriteConflict as e:
-            last = e
-    assert last is not None
-    raise last
-
-
 def _retrying(attempt):
-    """The public form of a write attempt: the call re-runs against
-    the winner's snapshot on conflict (``_retrying_merge``), within
-    its own ``max_conflict_rebases`` budget."""
+    """The public form of a write attempt and the one retry form of
+    every write: a ``SnapshotWriteConflict`` that the commit's own
+    rebase could not absorb (overlapping write sets, deletion vectors,
+    a rename, a ledger or minted identity values, a claim that never
+    resolved) re-runs the WHOLE attempt against the winner's snapshot —
+    Delta's fallback for a non-disjoint ConcurrentAppend: arbitration
+    re-reads the new current table, partitions are recomputed, and
+    last-writer-wins holds even on overlapping keys.  Bounded by the
+    call's ``max_conflict_rebases`` (at most budget+1 attempts); with
+    a budget of 0 the first conflict propagates."""
     sig = inspect.signature(attempt)
 
     @functools.wraps(attempt)
     def run(*args, **kwargs):
         call = sig.bind(*args, **kwargs)
         call.apply_defaults()
-        return _retrying_merge(
-            lambda: attempt(*args, **kwargs),
-            call.arguments["max_conflict_rebases"],
-        )
+        budget = max(0, int(call.arguments["max_conflict_rebases"]))
+        for _ in range(budget):
+            try:
+                return attempt(*args, **kwargs)
+            except SnapshotWriteConflict:
+                pass
+        return attempt(*args, **kwargs)
 
     return run
 
@@ -1453,14 +1207,13 @@ class _WriteAttempt:
     mark, the existing relation and the commit's expected_cur all
     derive from ``cur``, read once here and held as the ``base``
     snapshot (``att.base.read()`` is the existing relation; its
-    manifest is ``att.manifest``).  A rival landing at any later
-    point surfaces as a commit conflict and ``_retrying_merge`` re-runs
-    the whole attempt against the winner, instead of silently dropping
-    the rival's ledger entries or colliding on identity ids.
-    ``pinned_cur`` hands in the generation a composed write path
-    (``snapshot_update``) already derived its rows from.  This is the
-    writer-start preamble of every commit, the metadata-only ones and
-    a new table's first (clone, convert) included.
+    manifest is ``att.manifest``, the only base-manifest read of the
+    attempt).  A rival landing at any later point surfaces as a commit
+    conflict and ``_retrying`` re-runs the whole attempt against the
+    winner, instead of silently dropping the rival's ledger entries or
+    colliding on identity ids.  This is the writer-start preamble of
+    every commit, the metadata-only ones and a new table's first
+    (clone, convert) included, and ``commit`` is the one commit door.
 
     IDEMPOTENT WRITES (Delta txnAppId/txnVersion): each committed
     manifest carries a per-app high-water version ledger; a write
@@ -1468,22 +1221,35 @@ class _WriteAttempt:
     restarted streaming micro-batch, a retried orchestrator task) and
     must be a no-op: ``skip_gen`` is then the generation to return
     without writing.  This is what makes foreachBatch into the
-    snapshot sink exactly-once under at-least-once delivery."""
+    snapshot sink exactly-once under at-least-once delivery.
+    Otherwise ``ledger`` is the updated {app: version} map and
+    ``ledger_gens`` the {app: last-updating-generation} age map the
+    commit stamps (both None without a txn id: the commit inherits
+    the predecessor's ledger).  RETENTION (Delta's
+    setTransactionRetentionDuration, keyed by generations —
+    ``snapshot_set_ledger_retention``) expires entries whose last
+    update is more than the horizon behind the committing generation;
+    an expired app's re-delivery applies again (Delta's caveat).
+
+    ``minted`` records that the write assigned GENERATED ALWAYS AS
+    IDENTITY values off the base's high-water mark (``_apply_identity``,
+    ``_mint_identity``, ``snapshot_merge_when``)."""
 
     def __init__(
-        self, spark, table_path: str, txn_app_id=None, txn_version=None,
-        pinned_cur: int | None = None,
+        self, spark, table_path: str, txn_app_id=None, txn_version=None
     ):
+        if (txn_app_id is None) != (txn_version is None):
+            raise ValueError(
+                "txn_app_id and txn_version must be passed together"
+            )
         # every write path recovers first, or a crashed predecessor
         # blocks it forever
         _commit_recover(spark, table_path)
         _claim_recover(spark, table_path)
         self.spark, self.table_path = spark, table_path
-        self.cur = (
-            pinned_cur if pinned_cur is not None
-            else _current_gen(spark, table_path)
-        )
+        self.cur = _current_gen(spark, table_path)
         self.gen = (self.cur or 0) + 1
+        self.minted = False
         # the base snapshot everything reads and inherits from: a
         # manifest read fault raises (carrying past it would drop the
         # txn ledger, renames and clock clamp), and a manifest that is
@@ -1498,53 +1264,146 @@ class _WriteAttempt:
                     f"generation {self.cur} is gone ({table_path})"
                 ) from None
             self.manifest = self.base.manifest
-        self.skip_gen, self.ledger, self.ledger_gens = _txn_gate(
-            spark, table_path, txn_app_id, txn_version, self.cur
+        self.skip_gen = self.ledger = self.ledger_gens = None
+        if txn_app_id is None:
+            return
+        prev = self.manifest or {}
+        seen = (prev.get("txn") or {}).get(txn_app_id)
+        if seen is not None and int(txn_version) <= int(seen):
+            self.skip_gen = self.cur
+            return
+        self.ledger, self.ledger_gens = _aged_ledger(
+            prev, self.gen, _ledger_retention(spark, table_path)
         )
-
-    def refusal(self, identity: bool) -> str | None:
-        """Why this write set must not take the silent disjoint-
-        partition rebase (``_commit_rebasing``'s ``refuse_rebase``):
-        identity values minted off the BASE snapshot's high-water mark
-        would collide with a disjoint rival's, and a rebase would
-        overwrite the rival's ledger entries with our base-derived
-        map.  Both re-run the write against the winner instead."""
-        if identity:
-            return "identity high-water derived from the base snapshot"
-        if self.ledger is not None:
-            return "txn ledger derived from the base snapshot"
-        return None
+        self.ledger[txn_app_id] = int(txn_version)
+        self.ledger_gens[txn_app_id] = self.gen
 
     def commit(
         self, partitions: dict, op: str, like: dict | None = None, *,
-        max_rebases: int | None = None, refuse_rebase: str | None = None,
-        **stated,
+        max_rebases: int = 0, **stated,
     ) -> int:
-        """Commit ``partitions`` as generation ``gen`` on top of the
-        pinned base, with the manifest ``_manifest_body`` builds from
-        the ``stated`` fields and this attempt's ledger.  The DML paths
-        commit through ``_commit_rebasing`` (they pass ``max_rebases``),
-        every other commit through ``_commit``.  Returns the committed
-        generation."""
-        spark, table_path, gen = self.spark, self.table_path, self.gen
+        """The one commit door: ``partitions`` become the next
+        generation on top of the pinned base, with the manifest
+        ``_manifest_body`` builds from the ``stated`` fields and this
+        attempt's ledger; ``_commit`` claims, verifies and swaps.
+        Returns the committed generation.
+
+        A rival holding the SAME generation's claim either commits or
+        aborts and releases it, so a claim conflict waits (up to ~15 s
+        per generation) for the pointer to move or the claim to go.
+        When a rival COMMITS first, the write REBASES within
+        ``max_rebases`` (Delta's conflict-resolution rule): if the two
+        write sets touch DISJOINT partitions, our changed/removed
+        mappings overlay the rival's manifest and the next generation
+        is tried, reusing the data already written — what lets N ingest
+        jobs land concurrently on one table when each owns its
+        partition range.  Refused (the conflict propagates and
+        ``_retrying`` re-runs the whole write) when:
+        - the budget is spent — checked before any rebase work;
+        - the write carries state derived from the base that an overlay
+          would not recompute: a txn ledger (the rival's entries would
+          be dropped) or minted identity values (two disjoint rivals
+          derive the same high-water mark and collide, r9 advisor);
+        - either side carries deletion vectors (ours were computed
+          against the base; the rival's ref would be dropped);
+        - the rival's column mapping differs from the base's (a
+          rename/drop touches no partition, but our files carry the
+          base's physical names, which its entries do not map);
+        - the write sets overlap (the rival may have changed rows our
+          arbitration read).
+        Keys must be PARTITION-LOCAL (the engine's partition columns
+        derive from the merge key): with cross-partition keys two
+        disjoint merges can both insert one key, the write-serializable
+        caveat Delta documents.  Each attempt's manifest is built
+        against the snapshot it commits on, so a rebased one inherits
+        from the rival what this write did not state."""
+        spark, table_path = self.spark, self.table_path
         if self.ledger is not None:
             stated["ledger"] = (self.ledger, self.ledger_gens)
-        if max_rebases is None:
-            _commit(spark, table_path, gen, _manifest_body(
-                spark, table_path, gen, partitions, op, self.manifest,
-                self.cur, like, **stated,
-            ), self.cur)
-            return gen
-        return _commit_rebasing(
-            spark, table_path, gen, partitions, self.cur, op=op,
-            max_rebases=max_rebases, refuse_rebase=refuse_rebase, **stated,
+        gen, cur, base = self.gen, self.cur, self.manifest
+        # dirs THIS writer staged (vs inherited base refs): what a
+        # rebase keeps alive across a concurrent vacuum and re-verifies
+        ours_dirs = set(partitions.values()) - set(
+            base["partitions"].values() if base else ()
         )
+        parts = dict(partitions)
+        budget = max(0, int(max_rebases))
+        crumb: str | None = None
+        try:
+            for rebases in range(budget + 1):
+                body = _manifest_body(
+                    spark, table_path, gen, parts, op, base, cur, like,
+                    **stated,
+                )
+                # a rival holding this generation's claim either commits
+                # (the pointer moves: rebase below) or lets go (the next
+                # try lands); a mid-swap pointer read (None) is the same
+                # transient.  <= ~15 s per generation
+                for _ in range(75):
+                    try:
+                        _commit(spark, table_path, gen, body, cur)
+                        return gen
+                    except SnapshotWriteConflict as e:
+                        last = e
+                    actual = _current_gen(spark, table_path)
+                    if actual is not None and actual != cur:
+                        break
+                    time.sleep(0.2)
+                else:
+                    raise last               # the claim never resolved
+                if (
+                    rebases == budget or self.minted
+                    or self.ledger is not None
+                ):
+                    raise last
+                rival = _read_manifest(spark, table_path, actual)
+                base = base or {"partitions": {}}
+                ours = set(_changed_partitions({"partitions": parts}, base))
+                if (
+                    body.get("dv") or rival.get("dv")
+                    or (rival.get("renames") or [])
+                    != (base.get("renames") or [])
+                    or ours & set(_changed_partitions(rival, base))
+                ):
+                    raise last
+                # our staged dirs are now named with a generation <= the
+                # rival's, inside vacuum's deletable range (r8 advisor):
+                # register the lease-aged _inflight breadcrumb once, then
+                # verify the dirs still exist — a vacuum that won the
+                # race already took them
+                if crumb is None:
+                    crumb = _register_inflight(spark, table_path, ours_dirs)
+                for d in ours_dirs:
+                    if d.startswith("gen-") and not _fs_exists(
+                        spark, _gen_dir(table_path, d)
+                    ):
+                        raise SnapshotWriteConflict(
+                            f"staged generation dir {d} was removed by a "
+                            f"concurrent snapshot_vacuum during rebase "
+                            f"({table_path}); retry the merge"
+                        )
+                base, cur, gen = rival, actual, actual + 1
+                parts = {
+                    **{
+                        r: g for r, g in rival["partitions"].items()
+                        if r not in ours
+                    },
+                    **{r: g for r, g in parts.items() if r in ours},
+                }
+        finally:
+            if crumb is not None:
+                # best-effort: a breadcrumb left behind only protects
+                # its dirs until the lease ages it out, and a cleanup
+                # fault must not mask the commit's own outcome
+                try:
+                    _fs_delete(spark, crumb)
+                except Exception:
+                    pass
 
     def rewrite(
         self, out: DataFrame, partition_cols, op: str, rewritten=(), *,
         stamp_schema: bool = True,
-        max_rebases: int | None = None,
-        refuse_rebase: str | None = None,
+        max_rebases: int = 0,
         max_records: int | None = None,
     ) -> int:
         """The partition-rewrite tail of every data write: ``out``
@@ -1575,67 +1434,24 @@ class _WriteAttempt:
         partitions.update({r: gname for r in written})
         return self.commit(
             partitions, op, max_rebases=max_rebases,
-            refuse_rebase=refuse_rebase,
             schema=_frame_schema(out, self.manifest) if stamp_schema else None,
             partition_cols=partition_cols,
         )
 
 
-def _snapshot_merge_upsert_once(
-    spark: SparkSession,
-    table_path: str,
-    incoming: DataFrame,
-    key: str = "parent_id",
-    partition_cols: list[str] | None = None,
-    schema_evolution: str = "merge",
-    optimize_write: bool = False,
-    max_conflict_rebases: int = 0,
-    txn_app_id: str | None = None,
-    txn_version: int | None = None,
-    pinned_cur: int | None = None,
+def _merge_upsert(
+    att: _WriteAttempt, incoming: DataFrame, key: str,
+    partition_cols: list[str] | None, schema_evolution: str = "merge",
+    optimize_write: bool = False, max_rebases: int = 0,
 ) -> int:
-    """MERGE with a manifest-pointer commit; returns the committed
-    generation number.
-
-    ``pinned_cur`` lets a COMPOSED write path (``snapshot_update``)
-    that already derived its incoming rows from one pinned generation
-    hand that SAME generation in: the merge's ledger/identity/existing
-    reads and expected_cur all use it, so a rival landing between the
-    caller's pin and this commit surfaces as ``SnapshotWriteConflict``
-    instead of silently merging rows computed against a stale base.
-    Keyed delete-then-insert semantics of ``upsert.merged_view``
-    (equality property-tested) with an O(affected-partitions) write
-    set; the commit point is one atomic rename and concurrent readers
-    are never torn.
-
-    ``schema_evolution``: ``"merge"`` (default, ``merged_view``'s
-    contract) aligns by name — incoming may add columns, old rows read
-    them back as NULL; ``"strict"`` is Delta's schema ENFORCEMENT:
-    incoming columns must be a subset of the table's with identical
-    types, or ``SnapshotSchemaMismatch`` is raised before anything is
-    written (missing incoming columns still land as NULL).
-
-    ``optimize_write`` (the Delta optimized-writes knob): repartition
-    the write set by the partition columns before writing, so each
-    partition directory gets ONE right-sized file per commit instead
-    of one sliver per upstream task — the small-file problem fixed at
-    write time rather than by compaction.  Costs one extra shuffle of
-    the increment; leave off when upstream partitioning is already
-    aligned."""
-    if schema_evolution not in ("merge", "strict"):
-        raise ValueError(
-            f"schema_evolution must be 'merge' or 'strict', got "
-            f"{schema_evolution!r}"
-        )
-    att = _WriteAttempt(
-        spark, table_path, txn_app_id, txn_version, pinned_cur
-    )
+    """The keyed merge body of ``snapshot_merge_upsert`` on an open
+    attempt, which ``snapshot_update`` and ``snapshot_merge_when`` (on
+    a new table) hand in from their own pin."""
     if att.skip_gen is not None:
         return att.skip_gen
-    cur = att.cur
+    spark, table_path, cur = att.spark, att.table_path, att.cur
     incoming = _apply_generated(spark, table_path, incoming)
-    incoming = _apply_identity(spark, table_path, incoming, key, att.base)
-    refuse = att.refusal(_identity_conf(spark, table_path) is not None)
+    incoming = _apply_identity(att, incoming, key)
     _validate_constraints(spark, table_path, incoming)
     _fs_mkdirs(spark, f"{table_path}/_manifests")
 
@@ -1666,11 +1482,11 @@ def _snapshot_merge_upsert_once(
     if optimize_write and partition_cols:
         out = out.repartition(*[F.col(c) for c in partition_cols])
     return att.rewrite(
-        out, partition_cols, "merge", rewritten,
-        max_rebases=max_conflict_rebases, refuse_rebase=refuse,
+        out, partition_cols, "merge", rewritten, max_rebases=max_rebases,
     )
 
 
+@_retrying
 def snapshot_merge_upsert(
     spark: SparkSession,
     table_path: str,
@@ -1683,12 +1499,32 @@ def snapshot_merge_upsert(
     txn_app_id: str | None = None,
     txn_version: int | None = None,
 ) -> int:
-    """See ``_snapshot_merge_upsert_once`` for the merge contract.
+    """MERGE with a manifest-pointer commit; returns the committed
+    generation number.  Keyed delete-then-insert semantics of
+    ``upsert.merged_view`` (equality property-tested) with an
+    O(affected-partitions) write set; the commit point is one atomic
+    rename and concurrent readers are never torn.
+
+    ``schema_evolution``: ``"merge"`` (default, ``merged_view``'s
+    contract) aligns by name — incoming may add columns, old rows read
+    them back as NULL; ``"strict"`` is Delta's schema ENFORCEMENT:
+    incoming columns must be a subset of the table's with identical
+    types, or ``SnapshotSchemaMismatch`` is raised before anything is
+    written (missing incoming columns still land as NULL).
+
+    ``optimize_write`` (the Delta optimized-writes knob): repartition
+    the write set by the partition columns before writing, so each
+    partition directory gets ONE right-sized file per commit instead
+    of one sliver per upstream task — the small-file problem fixed at
+    write time rather than by compaction.  Costs one extra shuffle of
+    the increment; leave off when upstream partitioning is already
+    aligned.
+
     ``max_conflict_rebases`` buys BOTH concurrency lanes: disjoint-
-    partition rivals rebase cheaply inside the commit; overlapping
-    rivals fall back to retrying the whole merge against the winner's
-    snapshot (``_retrying_merge``) — Delta's conflict-resolution
-    ladder.
+    partition rivals rebase cheaply inside the commit
+    (``_WriteAttempt.commit``); overlapping rivals fall back to
+    retrying the whole merge against the winner's snapshot
+    (``_retrying``) — Delta's conflict-resolution ladder.
 
     ``txn_app_id``/``txn_version`` are Delta's IDEMPOTENT-WRITES knobs
     (txnAppId/txnVersion): each commit records a per-app high-water
@@ -1702,9 +1538,15 @@ def snapshot_merge_upsert(
     Ledger-carrying merges never take the silent disjoint-partition
     rebase (a rebase would drop the rival's ledger entries); they
     re-run against the winner, which re-reads the merged ledger."""
-    call = dict(locals())
-    return _retrying_merge(
-        lambda: _snapshot_merge_upsert_once(**call), max_conflict_rebases
+    if schema_evolution not in ("merge", "strict"):
+        raise ValueError(
+            f"schema_evolution must be 'merge' or 'strict', got "
+            f"{schema_evolution!r}"
+        )
+    return _merge_upsert(
+        _WriteAttempt(spark, table_path, txn_app_id, txn_version),
+        incoming, key, partition_cols, schema_evolution, optimize_write,
+        max_conflict_rebases,
     )
 
 
@@ -1782,9 +1624,9 @@ def snapshot_merge_when(
     column set (conditional row arbitration has no meaningful NULL
     fill for absent columns — use snapshot_merge_upsert's schema
     evolution first if the schema must move).  ``max_conflict_rebases``
-    enables the disjoint-partition rebase (``_commit_rebasing``);
+    enables the disjoint-partition rebase (``_WriteAttempt.commit``);
     overlap/claim conflicts retry the whole merge against the winner's
-    snapshot (``_retrying_merge``).  ``txn_app_id``/``txn_version``
+    snapshot (``_retrying``).  ``txn_app_id``/``txn_version``
     are the same idempotent-writes ledger as ``snapshot_merge_upsert``
     — the CDC-stream idiom is foreachBatch -> snapshot_merge_when with
     the micro-batch id, making conditional-merge re-deliveries
@@ -1808,19 +1650,15 @@ def snapshot_merge_when(
         # advisor, medium): on an empty table every row is an insert
         # candidate, so insert_condition (evaluated over s.* — the
         # CDC idiom `NOT s.tombstone`) must filter it BEFORE the
-        # delegation to the plain upsert, or first-batch tombstones
-        # would be resurrected as rows.  NULL conditions never fire
-        # the clause (same 3VL rule as the joined path).
+        # plain upsert body takes the attempt, or first-batch
+        # tombstones would be resurrected as rows.  NULL conditions
+        # never fire the clause (same 3VL rule as the joined path).
         inc0 = incoming
         if insert_condition:
             inc0 = incoming.alias("s").filter(
                 F.coalesce(F.expr(insert_condition), F.lit(False))
             )
-        return snapshot_merge_upsert(
-            spark, table_path, inc0, key=key,
-            partition_cols=partition_cols,
-            txn_app_id=txn_app_id, txn_version=txn_version,
-        )
+        return _merge_upsert(att, inc0, key, partition_cols)
     existing = att.base.read()
     # GENERATED ALWAYS AS IDENTITY binds on this write path too (r9
     # advisor, low): the source must not carry the column; matched
@@ -1843,6 +1681,7 @@ def snapshot_merge_when(
             )
         from .ranking import distributed_row_number
 
+        att.minted = True
         hwm = _identity_hwm(existing, id_col, idc["start"], idc["step"])
         ex_keys = existing.select(key).distinct()
         matched_inc = incoming.join(
@@ -1967,7 +1806,6 @@ def snapshot_merge_when(
     return att.rewrite(
         _arbitrate(target), partition_cols, "merge_when", rewritten,
         max_rebases=max_conflict_rebases,
-        refuse_rebase=att.refusal(idc is not None),
     )
 
 
@@ -2004,9 +1842,9 @@ def snapshot_delete_keys(
     changing the protocol).
 
     ``max_conflict_rebases`` applies the disjoint-partition rebase
-    (``_commit_rebasing``) to the REWRITE path only; every conflict
+    (``_WriteAttempt.commit``) to the REWRITE path only; every conflict
     retries the whole delete against the winner's snapshot
-    (``_retrying_merge``) — in DV mode the vectors are recomputed
+    (``_retrying``) — in DV mode the vectors are recomputed
     against the new current manifest, which is why a DV commit never
     rebases in place.  ``txn_app_id``/``txn_version``: the same
     idempotent-writes ledger as the merge paths (a CDC stream's
@@ -2085,7 +1923,6 @@ def snapshot_delete_keys(
         target.join(F.broadcast(key_set), on=key, how="left_anti"),
         partition_cols, "delete", rewritten,
         stamp_schema=False, max_rebases=max_conflict_rebases,
-        refuse_rebase=att.refusal(False),
     )
 
 
@@ -3301,6 +3138,7 @@ def snapshot_drop_constraint(
     return found
 
 
+@_retrying
 def snapshot_update(
     spark: SparkSession,
     table_path: str,
@@ -3325,18 +3163,17 @@ def snapshot_update(
 
     ``txn_app_id``/``txn_version``: the same idempotent-writes ledger
     as every other write path — a retried orchestrator task
-    re-delivering the same UPDATE is a no-op (gated inside the
-    delegated merge).  An update matching ZERO rows commits nothing
-    and stamps no ledger entry; its replay is naturally a no-op.
+    re-delivering the same UPDATE is a no-op (gated in the merge
+    body).  An update matching ZERO rows commits nothing and stamps
+    no ledger entry; its replay is naturally a no-op.
 
-    One-pinned-read-per-attempt (r11 advisor): each attempt pins the
-    base generation ONCE, derives the matched rows from a time-travel
-    read at that generation, and hands the SAME generation to the
-    delegated merge (``pinned_cur``) — a rival committing anywhere
-    between the pin and the commit surfaces as
-    ``SnapshotWriteConflict``, and ``max_conflict_rebases`` re-runs
-    the WHOLE attempt (re-pin, re-match, re-merge) against the
-    winner, like every other write path."""
+    One pinned read per attempt (r11 advisor): the matched rows come
+    from the attempt's base snapshot and the merge body commits on
+    that same attempt — a rival committing anywhere between the pin
+    and the commit surfaces as ``SnapshotWriteConflict``, and
+    ``max_conflict_rebases`` re-runs the WHOLE attempt (re-pin,
+    re-match, re-merge) against the winner, like every other write
+    path."""
     if key in assignments:
         raise ValueError(
             f"cannot assign the merge key {key!r}; delete+insert instead"
@@ -3347,33 +3184,20 @@ def snapshot_update(
             f"{idc['column']!r} is GENERATED ALWAYS AS IDENTITY — "
             "UPDATE must not assign it"
         )
-
-    def _once() -> int:
-        att = _WriteAttempt(spark, table_path)
-        cur = att.cur
-        if cur is None:
-            raise FileNotFoundError(
-                f"no committed snapshot at {table_path}"
-            )
-        matched = att.base.read().filter(F.expr(where))
-        upd = matched
-        for c, e in sorted(assignments.items()):
-            upd = upd.withColumn(c, F.expr(e))
-        if idc:
-            # the merge path mints/keeps identity itself (GENERATED
-            # ALWAYS); updated rows are existing single-key rows, so
-            # the keep-join reattaches their committed ids
-            upd = upd.drop(idc["column"])
-        if upd.isEmpty():
-            return cur
-        return _snapshot_merge_upsert_once(
-            spark, table_path, upd, key=key,
-            partition_cols=partition_cols,
-            txn_app_id=txn_app_id, txn_version=txn_version,
-            pinned_cur=cur,
-        )
-
-    return _retrying_merge(_once, max_conflict_rebases)
+    att = _WriteAttempt(spark, table_path, txn_app_id, txn_version)
+    if att.cur is None:
+        raise FileNotFoundError(f"no committed snapshot at {table_path}")
+    upd = att.base.read().filter(F.expr(where))
+    for c, e in sorted(assignments.items()):
+        upd = upd.withColumn(c, F.expr(e))
+    if idc:
+        # the merge path mints/keeps identity itself (GENERATED
+        # ALWAYS); updated rows are existing single-key rows, so the
+        # keep-join reattaches their committed ids
+        upd = upd.drop(idc["column"])
+    if upd.isEmpty():
+        return att.cur
+    return _merge_upsert(att, upd, key, partition_cols)
 
 
 class SnapshotOverwritePredicateViolation(ValueError):
@@ -3427,7 +3251,7 @@ def snapshot_overwrite_where(
     filtered rewrite of the affected partitions only.
 
     Overlap/claim conflicts retry against the winner's snapshot
-    (``_retrying_merge``).  ``txn_app_id``/``txn_version``: the same
+    (``_retrying``).  ``txn_app_id``/``txn_version``: the same
     idempotent-writes ledger as the merge/delete paths (a retried
     backfill is a re-delivery and must not double-swap the slice)."""
     att = _WriteAttempt(spark, table_path, txn_app_id, txn_version)
@@ -3456,7 +3280,7 @@ def snapshot_overwrite_where(
             "instead"
         )
     existing = att.base.read()
-    replacement = _mint_identity(spark, table_path, replacement, existing)
+    replacement = _mint_identity(att, replacement, existing)
     where_col = F.expr(where) if isinstance(where, str) else where
     n_bad = replacement.filter(
         ~F.coalesce(where_col, F.lit(False))
@@ -3489,7 +3313,6 @@ def snapshot_overwrite_where(
         target.filter(~pred).unionByName(replacement), partition_cols,
         "overwrite_where", rewritten,
         max_rebases=max_conflict_rebases,
-        refuse_rebase=att.refusal(idc is not None),
     )
 
 
@@ -4234,7 +4057,7 @@ def _identity_hwm(existing: DataFrame, c: str, start: int, step: int) -> int:
 
 
 def _mint_identity(
-    spark, table_path: str, df: DataFrame, existing: DataFrame | None
+    att: _WriteAttempt, df: DataFrame, existing: DataFrame
 ) -> DataFrame:
     """GENERATED ALWAYS AS IDENTITY for the pure-insert write paths
     (``snapshot_overwrite_where`` / ``snapshot_insert_overwrite_
@@ -4242,11 +4065,12 @@ def _mint_identity(
     replaces dies wholesale), so there is no keep-join — reject
     caller-supplied values and assign ``high_water + step * rank``
     with rank 1..n over a deterministic all-column sort.  The mark
-    derives from the FULL committed table (not just surviving rows):
-    ids of replaced rows are never reused, matching Delta's
-    identity-never-reassigned behavior.  No-op without an identity
-    config."""
-    conf = _identity_conf(spark, table_path)
+    derives from the FULL committed table ``existing``, the attempt's
+    base (not just surviving rows): ids of replaced rows are never
+    reused, matching Delta's identity-never-reassigned behavior.
+    No-op without an identity config; otherwise the attempt records
+    that it minted."""
+    conf = _identity_conf(att.spark, att.table_path)
     if conf is None:
         return df
     from .ranking import distributed_row_number
@@ -4257,11 +4081,8 @@ def _mint_identity(
             f"{c!r} is GENERATED ALWAYS AS IDENTITY — writes must not "
             "supply it"
         )
-    hwm = (
-        start - step
-        if existing is None
-        else _identity_hwm(existing, c, start, step)
-    )
+    att.minted = True
+    hwm = _identity_hwm(existing, c, start, step)
     order = [F.asc(col) for col in sorted(df.columns)]
     ranked = distributed_row_number(df, order, rank_col="__identity_rn")
     return ranked.withColumn(
@@ -4271,16 +4092,15 @@ def _mint_identity(
 
 
 def _apply_identity(
-    spark, table_path: str, incoming: DataFrame, key: str,
-    base: _Snapshot | None,
+    att: _WriteAttempt, incoming: DataFrame, key: str
 ) -> DataFrame:
-    """``base`` PINS the snapshot the high-water mark derives from (r10
-    advisor, medium): the write path passes its attempt's base, whose
-    generation it will hand to the commit as ``expected_cur``, so a
-    rival landing after the pin surfaces as a commit conflict instead
-    of a silent id collision.  ``None`` means "no committed table"
-    (the caller read the pointer once and found nothing)."""
-    conf = _identity_conf(spark, table_path)
+    """The merge path's identity binding.  The attempt's base PINS the
+    snapshot the high-water mark derives from (r10 advisor, medium):
+    its generation is the commit's ``expected_cur``, so a rival landing
+    after the pin surfaces as a commit conflict instead of a silent id
+    collision; no base means "no committed table".  No-op without an
+    identity config; otherwise the attempt records that it minted."""
+    conf = _identity_conf(att.spark, att.table_path)
     if conf is None:
         return incoming
     from .ranking import distributed_row_number
@@ -4291,6 +4111,8 @@ def _apply_identity(
             f"{c!r} is GENERATED ALWAYS AS IDENTITY — increments must "
             "not supply it"
         )
+    att.minted = True
+    base = att.base
     if base is None:
         ranked = distributed_row_number(
             incoming, [F.asc(key)], rank_col="__identity_rn"

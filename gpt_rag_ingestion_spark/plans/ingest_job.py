@@ -81,7 +81,7 @@ def run_ingest_job(
     (A2 counters); side effect: the chunks table at ``table_path`` is
     merged up to date.  ``max_conflict_rebases`` (snapshot sink):
     lets N ingest jobs land concurrently on one table when their
-    partition sets are disjoint (snapshot_table._commit_rebasing).
+    partition sets are disjoint (snapshot_table._WriteAttempt.commit).
 
     When ``rollup_path`` is set, a per-parent dashboard rollup
     (parent_id, n_chunks, chars) is maintained INCREMENTALLY through

@@ -90,7 +90,7 @@ def run_incremental_ingest(
 
     ``max_conflict_rebases``: passed through to the merge so several
     landing-zone streams can feed ONE table when their partition sets
-    are disjoint (snapshot_table's _commit_rebasing)."""
+    are disjoint (snapshot_table's _WriteAttempt.commit rebase)."""
     if rollup_mode not in ("stage", "cdf"):
         raise ValueError(
             f"rollup_mode must be 'stage' or 'cdf', got {rollup_mode!r}"

@@ -25,7 +25,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def clustered_embeddings(spark, n: int = 2000, dim: int = 64,
@@ -56,8 +57,6 @@ def clustered_embeddings(spark, n: int = 2000, dim: int = 64,
 
 
 def main(sf_dir: str = "/root/testdata/sf0.1", k: int = 10) -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entry_mod
@@ -67,14 +66,9 @@ def main(sf_dir: str = "/root/testdata/sf0.1", k: int = 10) -> None:
         quantized_dot_topk,
     )
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from scripts.harness import session
+
+    spark = session("ann-recall-curve")
 
     corpora = {
         "parquet": entry_mod._t(spark, sf_dir, "embeddings").select(

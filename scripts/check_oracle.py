@@ -7,12 +7,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -126,19 +128,12 @@ def check_oracle_types(con, oracles) -> list[str]:
 
 
 def main(sf_dir: str, only: list[str] | None = None):
-    from pyspark.sql import SparkSession
     import __spark_entry__ as entry_mod
+    from scripts.harness import session
 
     check_registry(entry_mod)
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = session("check-oracle")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -9,10 +9,12 @@ Exit code 1 if a plan property assertion fails — wired into tests.
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 #: (query, list of substrings the physical plan MUST contain,
 #:  list of substrings it must NOT contain)
@@ -605,7 +607,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> int:
         "parquet scan, shuffle-free narrow maps for the chunking hot path)\n"
         "followed by the actual plan.\n\n"
     )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(header + "\n".join(sections))
 
     if failures:

@@ -7,9 +7,11 @@ Run: python3 scripts/gen_query_index.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -54,7 +56,7 @@ def main() -> int:
         f"{len(qs) - n_oracle} rows-only.**",
         "",
     ]
-    with open("/root/repo/QUERIES.md", "w") as fh:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as fh:
         fh.write("\n".join(lines))
     print(f"QUERIES.md written: {len(qs)} queries, {n_oracle} oracle-backed")
     return 0

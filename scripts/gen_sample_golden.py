@@ -11,7 +11,8 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SAMPLE_DIR = os.environ.get("SPARK_GRAFT_SAMPLE_DIR", "/root/reference/samples")
 OUT = os.path.join(
@@ -21,20 +22,13 @@ OUT = os.path.join(
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     from gpt_rag_ingestion_spark.plans.sample_corpus_job import (
         canonical_chunk_rows,
         ingest_sample_corpus,
     )
+    from scripts.harness import session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session("gen-sample-golden")
     with tempfile.TemporaryDirectory() as tmp:
         table = ingest_sample_corpus(spark, SAMPLE_DIR, f"{tmp}/chunks")
         rows = canonical_chunk_rows(table)

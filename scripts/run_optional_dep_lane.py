@@ -14,6 +14,7 @@ lib)."""
 from __future__ import annotations
 
 import importlib.util
+import os
 import re
 import subprocess
 import sys
@@ -39,7 +40,8 @@ def main() -> int:
             sys.executable, "-m", "pytest",
             "tests/test_optional_deps.py", "-v", "-rs",
         ],
-        cwd="/root/repo", capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True,
     )
     out = proc.stdout + proc.stderr
     print(out[-3000:])

@@ -14,10 +14,12 @@ Run: python3 scripts/scaling_probe.py
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -240,7 +242,7 @@ def main() -> int:
             f"{bpe.LAST_TRAIN_ROUNDS} rounds, {bpe_rows[-1][4]:.1f}s"
         )
 
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write(
             "# SCALING — measured wall time vs data size\n\n"
             "Best-of-2 per cell on local[32] after warmup; columns are\n"

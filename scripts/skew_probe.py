@@ -26,24 +26,18 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main(n_rows: int = 400_000) -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from gpt_rag_ingestion_spark.plans.web_corpus_job import run_web_corpus_job
+    from scripts.harness import session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("skew-probe")
 
     def batch(n_domains: int):
         return spark.range(n_rows).selectExpr(

@@ -244,17 +244,12 @@ def test_stale_expected_cur_raises_conflict(spark, tmp_path):
     reach the manifest."""
     t = str(tmp_path / "t")
     S.snapshot_merge_upsert(spark, t, _df(spark, [(1, 1)]), key="k")
-    pinned = S._current_gen(spark, t)
-    skip, ledger, gens = S._txn_gate(spark, t, "appA", 5, pinned)
-    assert skip is None and ledger == {"appA": 5}
+    att = S._WriteAttempt(spark, t, "appA", 5)
+    assert att.skip_gen is None and att.ledger == {"appA": 5}
     # rival lands after the pin
     S.snapshot_merge_upsert(spark, t, _df(spark, [(2, 2)]), key="k")
     with pytest.raises(S.SnapshotWriteConflict):
-        S._commit(spark, t, pinned + 1, S._manifest_body(
-            spark, t, pinned + 1, {"": "gen-000001"}, "merge",
-            S._read_manifest(spark, t, pinned), pinned,
-            ledger=(ledger, gens),
-        ), expected_cur=pinned)
+        att.commit({"": "gen-000001"}, "merge")
 
 
 # -------------------------------------------- merge_when first batch CDC
@@ -555,24 +550,21 @@ def test_update_conflict_surfaces_and_retry_opt_in(spark, tmp_path):
     )
 
     calls = {"n": 0}
-    orig = S._snapshot_merge_upsert_once
+    orig = S._WriteAttempt.commit
 
-    def rival_then_merge(spark_, table_path, incoming, **kw):
+    def rival_then_commit(att, *a, **kw):
         # a rival lands AFTER update pinned its base, BEFORE its merge
         # commits — exactly the advisor's window
         if calls["n"] == 0:
             calls["n"] += 1
-            orig(
-                spark_, table_path,
-                _df(spark_, [(2, 222)]), key="k",
+            S.snapshot_merge_upsert(
+                spark, att.table_path, _df(spark, [(2, 222)]), key="k",
             )
-        return orig(spark_, table_path, incoming, **kw)
+        return orig(att, *a, **kw)
 
     import unittest.mock as mock
 
-    with mock.patch.object(
-        S, "_snapshot_merge_upsert_once", side_effect=rival_then_merge
-    ):
+    with mock.patch.object(S._WriteAttempt, "commit", rival_then_commit):
         with pytest.raises(S.SnapshotWriteConflict):
             S.snapshot_update(spark, t, "k = 1", {"v": "v + 100"}, key="k")
     # rival's write survived; target row unchanged (no torn update)
@@ -580,9 +572,7 @@ def test_update_conflict_surfaces_and_retry_opt_in(spark, tmp_path):
     assert got == {1: 1, 2: 222}, got
 
     calls["n"] = 0
-    with mock.patch.object(
-        S, "_snapshot_merge_upsert_once", side_effect=rival_then_merge
-    ):
+    with mock.patch.object(S._WriteAttempt, "commit", rival_then_commit):
         S.snapshot_update(
             spark, t, "k = 1", {"v": "v + 100"}, key="k",
             max_conflict_rebases=2,

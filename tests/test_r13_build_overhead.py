@@ -1,12 +1,12 @@
 """Equivalence pins for the r13 driver-overhead optimizations
 (OPTIMIZATION_r13.md, second session): the _t scan-plan memo, the
 DataFrame-debugging disable, and the SQL-text expression forms in the
-dedup/multimodal builders (each proven equal to the Column-algebra
-form it replaced)."""
+dedup/multimodal builders: each shipped builder is compared against
+an inline copy written in the Column algebra its SQL text replaced,
+so an edit to the SQL text fails here."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
@@ -51,22 +51,34 @@ def test_dataframe_debugging_disabled_after_ship(spark):
     from gpt_rag_ingestion_spark.session import ship_package
 
     ship_package(spark)
-    if hasattr(eu, "_enable_debugging_cache"):
-        assert eu._enable_debugging_cache is False
+    assert eu._enable_debugging_cache is False
 
 
-def test_minhash_expr_forms_match_column_forms(spark):
-    from gpt_rag_ingestion_spark.operators.dedup import UH_PRIME, uh_a, uh_b
-
-    df = spark.createDataFrame([(1, 5), (2, 9), (3, 12345)], "doc_id long, _x long")
-    num_hashes = 16
-    new = df.groupBy("doc_id").agg(
-        *[
-            F.expr(f"min(({uh_a(i)} * _x + {uh_b(i)}) % {UH_PRIME}) AS mh_{i}")
-            for i in range(num_hashes)
-        ]
+def _docs(spark):
+    return spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over a lazy cat"),
+            (3, "lorem ipsum dolor sit amet consectetur"),
+        ],
+        "doc_id long, text string",
     )
-    old = df.groupBy("doc_id").agg(
+
+
+def _minhash_column_form(spark, docs, num_hashes):
+    """``minhash_signatures(hash_fn="sha256uh")`` with its aggregates in
+    the Column algebra its SQL text replaced."""
+    from gpt_rag_ingestion_spark.operators.dedup import (
+        UH_PRIME, uh_a, uh_b, word_shingles,
+    )
+
+    x = F.conv(
+        F.substring(F.sha2(F.col("shingle"), 256), 1, 8), 16, 10
+    ).cast("long")
+    sh = word_shingles(docs, "text", "doc_id", 3).select(
+        F.col("doc_id"), x.alias("_x")
+    )
+    return sh.groupBy("doc_id").agg(
         *[
             F.min(
                 (F.lit(uh_a(i)) * F.col("_x") + F.lit(uh_b(i))) % F.lit(UH_PRIME)
@@ -74,53 +86,95 @@ def test_minhash_expr_forms_match_column_forms(spark):
             for i in range(num_hashes)
         ]
     )
-    assert new.sameSemantics(old)
-    assert new.schema == old.schema
 
-    # band structs (sha256uh r=2 base-P packing)
-    bands, r = 8, 2
-    bs_new = F.expr(
-        "array("
-        + ", ".join(
-            f"named_struct('band', {b}, 'band_hash',"
-            f" mh_{2 * b} * {UH_PRIME} + mh_{2 * b + 1})"
-            for b in range(bands)
-        )
-        + ")"
+
+def test_minhash_expr_forms_match_column_forms(spark):
+    from gpt_rag_ingestion_spark.operators.dedup import minhash_signatures
+
+    docs = _docs(spark)
+    got = minhash_signatures(docs, num_hashes=16, hash_fn="sha256uh")
+    want = _minhash_column_form(spark, docs, 16)
+    assert got.sameSemantics(want)
+    assert got.schema == want.schema
+
+
+def test_lsh_band_packing_matches_column_form(spark):
+    """The r=2 base-P band packing of ``minhash_lsh_candidates`` (one
+    SQL-text array of structs) against the Column form, through the
+    shipped builder: the candidate plan is rebuilt inline from the
+    Column-form band structs and must be the same plan."""
+    from gpt_rag_ingestion_spark.operators.dedup import (
+        UH_PRIME, minhash_lsh_candidates,
     )
 
-    def band_hash_old(b):
-        cols = [F.col(f"mh_{i}") for i in range(b * r, (b + 1) * r)]
-        return cols[0] * F.lit(UH_PRIME) + cols[1]
-
-    bs_old = F.array(
+    docs = _docs(spark)
+    bands = 8
+    got = minhash_lsh_candidates(
+        docs, num_hashes=2 * bands, bands=bands, hash_fn="sha256uh"
+    )
+    sig = _minhash_column_form(spark, docs, 2 * bands)
+    band_structs = F.array(
         *[
-            F.struct(F.lit(b).alias("band"), band_hash_old(b).alias("band_hash"))
+            F.struct(
+                F.lit(b).alias("band"),
+                (F.col(f"mh_{2 * b}") * F.lit(UH_PRIME)
+                 + F.col(f"mh_{2 * b + 1}")).alias("band_hash"),
+            )
             for b in range(bands)
         ]
     )
-    e_new = new.select("doc_id", F.explode(bs_new).alias("bb"))
-    e_old = new.select("doc_id", F.explode(bs_old).alias("bb"))
-    assert e_new.sameSemantics(e_old)
-    assert e_new.schema == e_old.schema
+    buckets = (
+        sig.select(F.col("doc_id"), F.explode(band_structs).alias("bb"))
+        .select(
+            F.col("doc_id"), F.col("bb.band").alias("band"),
+            F.col("bb.band_hash").alias("band_hash"),
+        )
+        .groupBy("band", "band_hash")
+        .agg(F.sort_array(F.collect_list(F.col("doc_id"))).alias("_ids"))
+        .filter(F.size("_ids") >= 2)
+    )
+    ids = F.col("_ids")
+    pairs = F.flatten(
+        F.transform(
+            F.sequence(F.lit(1), F.size(ids) - 1),
+            lambda i: F.transform(
+                F.slice(ids, i + 1, F.size(ids) - i),
+                lambda x: F.struct(
+                    F.element_at(ids, i).alias("id_a"), x.alias("id_b")
+                ),
+            ),
+        )
+    )
+    want = (
+        buckets.select(F.explode(pairs).alias("p"))
+        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        .distinct()
+    )
+    assert got.sameSemantics(want)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
 
 
 def test_simhash_expr_forms_match_column_forms(spark):
-    tok = spark.createDataFrame(
-        [(1, 0xDEAD), (2, 0xBEEF), (3, 0x1234)], "doc_id long, x0 long"
-    )
+    from gpt_rag_ingestion_spark.operators.dedup import simhash, tokenize
+    from gpt_rag_ingestion_spark.session import spread_small_input
+
+    docs = _docs(spark)
     bits, chunk_lens = 16, [4]
+    got = simhash(docs, bits=bits)
 
     def pos_of(bit):
         n = bit // 4
         c, m = n // 8, n % 8
         return c, 4 * (chunk_lens[c] - 1 - m) + (bit % 4)
 
-    ones_new = [
-        F.expr(f"sum(shiftright(x{pos_of(bit)[0]}, {pos_of(bit)[1]}) & 1) AS o{bit}")
-        for bit in range(bits)
-    ]
-    ones_old = [
+    h = F.md5(F.col("token"))
+    toks = tokenize(
+        spread_small_input(docs, by="doc_id"), "text", "doc_id"
+    ).select(
+        "doc_id", F.conv(F.substring(h, 1, 4), 16, 10).cast("long").alias("x0")
+    )
+    ones = [
         F.sum(
             F.shiftright(F.col(f"x{pos_of(bit)[0]}"), pos_of(bit)[1]).bitwiseAND(
                 F.lit(1)
@@ -128,30 +182,17 @@ def test_simhash_expr_forms_match_column_forms(spark):
         ).alias(f"o{bit}")
         for bit in range(bits)
     ]
-    va = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_nt"), *ones_new)
-    vb = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_nt"), *ones_old)
-    assert va.sameSemantics(vb)
-    assert va.schema == vb.schema
-
-    sim_new = F.expr(
-        " | ".join(
-            f"(CASE WHEN o{bit} * 2 > _nt"
-            f" THEN shiftleft(CAST(1 AS BIGINT), {bit})"
-            f" ELSE CAST(0 AS BIGINT) END)"
-            for bit in range(bits)
-        )
-    )
-    sim_old = None
+    votes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_nt"), *ones)
+    sim = None
     for bit in range(bits):
         term = F.when(
             F.col(f"o{bit}") * 2 > F.col("_nt"),
             F.shiftleft(F.lit(1).cast("long"), bit),
         ).otherwise(F.lit(0).cast("long"))
-        sim_old = term if sim_old is None else sim_old.bitwiseOR(term)
-    s1 = va.select("doc_id", sim_new.alias("simhash"))
-    s2 = va.select("doc_id", sim_old.alias("simhash"))
-    assert s1.sameSemantics(s2)
-    assert s1.schema == s2.schema
+        sim = term if sim is None else sim.bitwiseOR(term)
+    want = votes.select(F.col("doc_id"), sim.alias("simhash"))
+    assert got.sameSemantics(want)
+    assert got.schema == want.schema
 
 
 def test_multimodal_withcolumns_batch_matches_chain(spark):
@@ -180,13 +221,12 @@ def test_multimodal_withcolumns_batch_matches_chain(spark):
 
 
 def test_zero_vec_expr_matches_literal_array(spark):
+    from gpt_rag_ingestion_spark.chunking.multimodal_chunker import _zero_vec
+
     dim = 16
     zv_old = F.array(*[F.lit(0.0) for _ in range(dim)]).cast("array<float>")
-    zv_new = F.expr(
-        "CAST(array(" + ", ".join(["0.0D"] * dim) + ") AS ARRAY<FLOAT>)"
-    )
     df = spark.range(1)
     a = df.select(zv_old.alias("z"))
-    b = df.select(zv_new.alias("z"))
+    b = df.select(_zero_vec(dim).alias("z"))
     assert a.sameSemantics(b)
     assert a.schema == b.schema

@@ -18,7 +18,7 @@ the round-9 verdict:
   (b) a retried merge (after lease expiry in hard mode) converges to
       the exact uncrashed result.
 
-The rebase leg (_commit_rebasing: conflict -> _inflight breadcrumb ->
+The rebase leg (_WriteAttempt.commit: conflict -> _inflight breadcrumb ->
 rebased commit) is swept by deterministically landing a rival commit
 from inside the first _commit attempt, so the loser's full rebase
 machinery executes under the same kill schedule.
@@ -214,7 +214,7 @@ def test_merge_commit_kill_sweep(spark, tmp_path, monkeypatch, when, hard):
 
 @pytest.mark.parametrize("hard", [False, True], ids=["soft", "hard"])
 def test_rebase_commit_kill_sweep(spark, tmp_path, monkeypatch, hard):
-    """The _commit_rebasing leg: a rival lands between our merge's
+    """The commit-rebase leg: a rival lands between our merge's
     read and its commit, forcing the conflict -> _inflight breadcrumb
     -> staged-dir re-verify -> rebased commit chain.  Kill every
     mutation of that chain; reader must see (base+rival) or

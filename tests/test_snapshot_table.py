@@ -1399,7 +1399,9 @@ def test_commit_rebase_disjoint_partitions(spark, tmp_path):
     S.snapshot_merge_upsert(
         spark, snap, _inc(spark, 0, 40), partition_cols=["bucket"]
     )
-    m1 = S._read_manifest(spark, snap, 1)
+    # the stale writer's attempt pins gen 1 before the rival lands
+    att = S._WriteAttempt(spark, snap)
+    m1 = att.manifest
 
     # rival commits bucket-0 changes -> gen 2
     b0 = _inc(spark, 0, 40, mul=3).filter("bucket = 0")
@@ -1417,9 +1419,7 @@ def test_commit_rebase_disjoint_partitions(spark, tmp_path):
     upd.write.mode("overwrite").partitionBy("bucket").parquet(new_dir)
     stale_parts = dict(m1["partitions"])
     stale_parts["bucket=1"] = gname
-    got_gen = S._commit_rebasing(
-        spark, snap, 2, stale_parts, expected_cur=1, max_rebases=2
-    )
+    got_gen = att.commit(stale_parts, "merge", max_rebases=2)
     assert got_gen == 3
     t = S.read_snapshot_table(spark, snap)
     # both the rival's bucket-0 change and ours survived
@@ -1430,9 +1430,7 @@ def test_commit_rebase_disjoint_partitions(spark, tmp_path):
     clash = dict(m1["partitions"])
     clash["bucket=0"] = gname
     with pytest.raises(S.SnapshotWriteConflict):
-        S._commit_rebasing(
-            spark, snap, 2, clash, expected_cur=1, max_rebases=2
-        )
+        att.commit(clash, "merge", max_rebases=2)
 
     # DV on the winning chain: refused (a rebase would drop the ref)
     S.snapshot_delete_keys(
@@ -1442,9 +1440,7 @@ def test_commit_rebase_disjoint_partitions(spark, tmp_path):
     stale2 = dict(m1["partitions"])
     stale2["bucket=1"] = gname
     with pytest.raises(S.SnapshotWriteConflict):
-        S._commit_rebasing(
-            spark, snap, 2, stale2, expected_cur=1, max_rebases=2
-        )
+        att.commit(stale2, "merge", max_rebases=2)
 
 
 def test_concurrent_disjoint_writers_both_land(spark, tmp_path):
@@ -2363,19 +2359,26 @@ def test_rebase_detects_vacuumed_staging_dir(spark, tmp_path):
     rebased commit must surface SnapshotWriteConflict instead of
     committing a manifest that references vanished files."""
     snap = str(tmp_path / "snap")
-    S.snapshot_merge_upsert(spark, snap, _inc(spark, 0, 30))
-    base_cur = S._current_gen(spark, snap)
-    # this writer stages gen 2 ...
-    gname = S._gen_name(base_cur + 1)
-    _inc(spark, 30, 40).write.parquet(S._gen_dir(snap, gname))
-    # ... but a rival commits gen 2 first
-    S.snapshot_merge_upsert(spark, snap, _inc(spark, 50, 60, mul=9))
+    S.snapshot_merge_upsert(
+        spark, snap, _inc(spark, 0, 30), partition_cols=["bucket"]
+    )
+    att = S._WriteAttempt(spark, snap)
+    # this writer stages gen 2 for bucket 1 ...
+    gname = S._gen_name(att.gen)
+    _inc(spark, 30, 40, mul=3).filter("bucket = 1").write.partitionBy(
+        "bucket"
+    ).parquet(S._gen_dir(snap, gname))
+    # ... but a rival commits gen 2 first, on the disjoint bucket 0
+    S.snapshot_merge_upsert(
+        spark, snap, _inc(spark, 50, 60, mul=9).filter("bucket = 0"),
+        partition_cols=["bucket"],
+    )
     # ... and vacuum reclaims the loser's staged dir
     S._fs_delete(spark, S._gen_dir(snap, gname))
-    with pytest.raises(S.SnapshotWriteConflict):
-        S._commit_rebasing(
-            spark, snap, base_cur + 1, {"": gname},
-            expected_cur=base_cur, max_rebases=3,
+    with pytest.raises(S.SnapshotWriteConflict, match="removed by a"):
+        att.commit(
+            {**att.manifest["partitions"], "bucket=1": gname}, "merge",
+            max_rebases=3,
         )
 
 
@@ -2461,26 +2464,26 @@ def test_overlap_retry_last_writer_wins_same_keys(spark, tmp_path):
 
     # B computes against gen 1; the rival lands BETWEEN B's read and
     # B's commit (hooked at the commit door, so the conflict is real)
-    orig_cr = S._commit_rebasing
+    orig_commit = S._WriteAttempt.commit
     state = {"fired": False}
 
-    def cr_with_rival(*a, **k):
+    def commit_with_rival(att, *a, **k):
         if not state["fired"]:
             state["fired"] = True
             S.snapshot_merge_upsert(
                 spark, snap, _inc(spark, 0, 40, mul=5),
                 partition_cols=["bucket"],
             )
-        return orig_cr(*a, **k)
+        return orig_commit(att, *a, **k)
 
-    S._commit_rebasing = cr_with_rival
+    S._WriteAttempt.commit = commit_with_rival
     try:
         S.snapshot_merge_upsert(
             spark, snap, _inc(spark, 0, 20, mul=9),
             partition_cols=["bucket"], max_conflict_rebases=3,
         )
     finally:
-        S._commit_rebasing = orig_cr
+        S._WriteAttempt.commit = orig_commit
 
     t = S.read_snapshot_table(spark, snap)
     assert t.count() == 40
@@ -2495,19 +2498,19 @@ def test_overlap_conflict_still_raises_without_budget(spark, tmp_path):
     S.snapshot_merge_upsert(
         spark, snap, _inc(spark, 0, 30), partition_cols=["bucket"]
     )
-    orig_cr = S._commit_rebasing
+    orig_commit = S._WriteAttempt.commit
     state = {"fired": False}
 
-    def cr_with_rival(*a, **k):
+    def commit_with_rival(att, *a, **k):
         if not state["fired"]:
             state["fired"] = True
             S.snapshot_merge_upsert(
                 spark, snap, _inc(spark, 0, 40, mul=5),
                 partition_cols=["bucket"],
             )
-        return orig_cr(*a, **k)
+        return orig_commit(att, *a, **k)
 
-    S._commit_rebasing = cr_with_rival
+    S._WriteAttempt.commit = commit_with_rival
     try:
         with pytest.raises(S.SnapshotWriteConflict):
             S.snapshot_merge_upsert(
@@ -2515,7 +2518,7 @@ def test_overlap_conflict_still_raises_without_budget(spark, tmp_path):
                 partition_cols=["bucket"], max_conflict_rebases=0,
             )
     finally:
-        S._commit_rebasing = orig_cr
+        S._WriteAttempt.commit = orig_commit
 
 
 def test_stats_sidecar_pins_partition_column_type(spark, tmp_path):
