@@ -65,17 +65,6 @@ PYTHON_SEPARATORS: list = [
 # then word breaks (langchain_chunker.py:129-131)
 SENTENCE_SEPARATORS: list = [". ", "! ", "? ", " ", "\n", "\t"]
 
-_FORMAT_SEPARATORS = {
-    "md": MARKDOWN_SEPARATORS,
-    "py": PYTHON_SEPARATORS,
-    "txt": SENTENCE_SEPARATORS,
-    "html": SENTENCE_SEPARATORS,
-    "shtml": SENTENCE_SEPARATORS,
-    "htm": SENTENCE_SEPARATORS,
-    "csv": SENTENCE_SEPARATORS,
-    "xml": SENTENCE_SEPARATORS,
-}
-
 _TOKEN_RE = re.compile(r"\w+|[^\w\s]")
 _WORD_RE = re.compile(r"\w")
 
@@ -164,12 +153,6 @@ def token_spans_batch(texts) -> list:
         next(ascii_spans) if a else _token_spans_regex(t)
         for t, a in zip(norm, is_ascii)
     ]
-
-
-def separators_for_extension(ext: str) -> list:
-    """C4 dispatch: extension -> separator set (default recursive set
-    for unknown extensions)."""
-    return _FORMAT_SEPARATORS.get((ext or "").lower(), _SEPARATORS)
 
 
 def _ntokens(s: str) -> int:

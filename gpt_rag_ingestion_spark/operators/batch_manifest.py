@@ -1,54 +1,53 @@
-"""The batch manifest: one commit protocol for the engine's appendable
-indexes and derived tables.
+"""The batch manifest: the snapshot table's commit protocol for the
+engine's appendable indexes and derived tables.
 
 The persisted BM25 text index (operators/search), the dedup sidecar
 (operators/dedup), the IVF/IVFPQ ANN indexes (operators/similarity),
 the dashboard rollup and the streaming sketch table (one listed batch
 holds the whole table) are each a set of SUB-TABLES whose rows arrive
-in batches.  The
-reference keeps each index as one logical store and upserts into it
-as one transaction (delete a parent's chunks, upload the new ones —
-jobs/blob_storage_indexer.py:1242-1334); this module gives every such
-store that shape.  Layout under ``<root>/``:
+in batches.  The reference keeps each index as one logical store and
+upserts into it as one transaction (delete a parent's chunks, upload
+the new ones — jobs/blob_storage_indexer.py:1242-1334); this module
+gives every such store that shape.  Layout under ``<root>/``:
 
-  meta                          — one-line JSON {gen, <store fields>,
-                                  batches: {<sub>: [names]}}.  The
-                                  manifest IS the snapshot: readers
+  _manifests/<gen:08d>.json     — one generation's manifest, written
+                                  once: JSON {gen, <store fields>,
+                                  batches: {<sub>: [names]}}.  Readers
                                   read only the listed batch dirs.
+  _current                      — the pointer naming the committed gen
   <sub>/batch=<label>__g<gen>/  — one batch of one sub-table (it may
                                   hold ``cell=`` partitions)
-  claims/g<gen>                 — generation claims (create-exclusive)
+  meta                          — a copy of the committed manifest for
+                                  tools that read it as a file; once
+                                  ``_current`` exists nothing here
+                                  reads it
 
-Every write op — build, append/apply, delete, compact — runs the same
-steps:
+A write op (build, append/apply, delete, compact) recovers
+(``recover``: the snapshot table's ``_commit_recover`` and
+``_claim_recover``, then collection), writes its batch dirs at gen =
+committed + 1, unlisted and so invisible, and commits through
+``snapshot_table._commit``: a create-exclusive claim of its manifest,
+kept alive by a heartbeat, then a fenced swap of ``_current``.  Of N
+writers that read one manifest exactly one commits; the others delete
+their dirs and raise ``ManifestWriteConflict``.
 
-1. writer-start recovery (``recover``): roll a half-committed meta
-   forward, delete batch dirs the manifest does not list whose gen is
-   <= the committed gen (conflict losers' and crashed writers'
-   debris, and dirs a commit unlisted), and drop claims above the
-   committed gen (a crashed claim would block its generation forever).
-   Dirs above the committed gen belong to an in-flight writer and are
-   left alone;
-2. write the op's batch dirs at gen = committed + 1 — unlisted, so
-   invisible to readers;
-3. claim the generation (``claim``): of N writers that read the same
-   manifest, exactly one creates ``claims/g<gen>``; the rest delete
-   their own dirs and raise ``ManifestWriteConflict``;
-4. commit (``write_meta``): write ``meta__staging``, delete ``meta``,
-   rename.  Once ``meta`` is deleted the staging file IS the committed
-   manifest — ``exists`` and ``read_meta`` read it, and the next
-   writer's recovery finishes the rename.  Readers never rename;
-5. delete the dirs the commit unlisted (a rebuild or compaction
-   unlists every old batch; an append may replace a batch of the same
-   label).
+Nothing is deleted at commit time.  Superseded manifests are collected
+in generation order, each once its successor has been committed
+(manifest mtime) for longer than ``CLAIM_LEASE_MS``, with the dirs it
+lists that its successor does not; the dirs of a generation that its
+manifest never listed (conflict losers', crashed writers') go once that
+manifest is as old.  A reader holding a manifest younger than the lease
+never loses a file, and recovery reads only the manifests inside that
+window.  Dirs above the committed gen belong to an in-flight writer.
 
-There are no directory swaps: a crash anywhere leaves either the old
-manifest or the new one, each naming intact batch dirs.  This and the
-snapshot table are the engine's two commit protocols.  A store written under an older
-layout (a parquet ``meta`` directory, sub-tables without any manifest,
-or parquet files at the root, where the former directory swap wrote
-them) is refused with a ``ValueError`` naming the build function to
-re-run; only that build clears it.
+A store in the earlier single-file layout (a JSON ``meta``, or only
+``meta__staging`` after a commit cut between its delete and rename,
+next to its claims dir) reads as its generation, and the first writer's
+recovery commits that body as its manifest: no rebuild.  A store from
+before any JSON manifest (a parquet ``meta`` directory, sub-tables
+without a manifest, or parquet files at the root, where the former
+directory swap wrote them) is refused with a ``ValueError`` naming the
+build function to re-run; only that build clears it.
 """
 
 from __future__ import annotations
@@ -60,12 +59,20 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from gpt_rag_ingestion_spark.operators.upsert import (
-    _fs_delete,
-    _fs_exists,
-    _fs_try_rename,
-    _hfs,
+from gpt_rag_ingestion_spark.operators.snapshot_table import (
+    CLAIM_LEASE_MS,
+    SnapshotWriteConflict,
+    _claim_recover,
+    _commit,
+    _commit_recover,
+    _current_gen,
+    _now_ms,
+    _read_manifest,
+    _read_text,
+    _vanished,
+    _write_text,
 )
+from gpt_rag_ingestion_spark.operators.upsert import _fs_delete, _hfs
 
 _BATCH_DIR = re.compile(r"batch=.+__g\d+")
 
@@ -107,8 +114,8 @@ def _refuse(root: str, store: Store):
 def _old_layout(spark, root: str, store: Store) -> bool:
     """Parquet files at the root, or a sub-table child that is not a
     manifest batch dir, mark the pre-manifest layout.  The debris of a
-    crashed FIRST build (``batch=<label>__g<n>`` dirs, no meta) does
-    not."""
+    crashed FIRST build (``batch=<label>__g<n>`` dirs, no manifest)
+    does not."""
     fs, p = _hfs(spark, root)
     if fs.exists(p) and any(
         st.getPath().getName().endswith(".parquet") for st in fs.listStatus(p)
@@ -126,14 +133,11 @@ def _old_layout(spark, root: str, store: Store) -> bool:
     return False
 
 
-def _committed_file(spark, root: str, store: Store) -> str | None:
-    """Path of the committed manifest: ``meta``, or ``meta__staging``
-    when a commit stopped between its meta delete and its rename.
-    None when the store has none (absent, or a first build that never
-    committed: a staging file that does not parse was cut mid-write
-    before any meta existed).  An old-layout directory raises."""
-    from gpt_rag_ingestion_spark.operators.snapshot_table import _read_text
-
+def _single_file(spark, root: str, store: Store) -> str | None:
+    """Path of the committed manifest of a store without ``_current``
+    (the single-file layout), or None: absent, or a first build cut
+    mid-write (a staging file that does not parse).  A pre-manifest
+    layout raises."""
     for name in ("meta", "meta__staging"):
         fs, p = _hfs(spark, f"{root}/{name}")
         if not fs.exists(p):
@@ -153,19 +157,21 @@ def _committed_file(spark, root: str, store: Store) -> str | None:
 
 
 def exists(spark, root: str, store: Store) -> bool:
-    """Has the store a committed manifest?  The one existence check of
-    every job that builds a store on its first run and appends after:
-    a commit cut between its meta delete and rename still counts (its
-    staging file is the committed manifest), so the job appends
-    instead of rebuilding.  Raises ``ValueError`` on an old layout."""
-    return _committed_file(spark, root, store) is not None
+    """Has the store a committed manifest (in either layout)?  The one
+    existence check of every job that builds a store on its first run
+    and appends after.  Raises ``ValueError`` on a pre-manifest layout."""
+    return (
+        _current_gen(spark, root) is not None
+        or _single_file(spark, root, store) is not None
+    )
 
 
 def read_meta(spark, root: str, store: Store) -> dict:
     """The committed manifest (a reader's snapshot).  Read-only."""
-    from gpt_rag_ingestion_spark.operators.snapshot_table import _read_text
-
-    path = _committed_file(spark, root, store)
+    gen = _current_gen(spark, root)
+    if gen is not None:
+        return _read_manifest(spark, root, gen)
+    path = _single_file(spark, root, store)
     if path is None:
         raise FileNotFoundError(
             f"no committed batch manifest under {root}; build it with "
@@ -175,33 +181,64 @@ def read_meta(spark, root: str, store: Store) -> dict:
 
 
 def recover(spark, root: str, store: Store) -> dict:
-    """Writer-start recovery (step 1 of the protocol); returns the
-    committed manifest.  Same slow-writer caveat as the snapshot
-    table's _claim_recover: a writer stalled longer than a whole later
-    commit can lose its dirs to this collection."""
-    meta = read_meta(spark, root, store)
-    if not _fs_exists(spark, f"{root}/meta"):
-        _fs_try_rename(spark, f"{root}/meta__staging", f"{root}/meta")
-    committed = int(meta["gen"])
+    """Writer-start recovery; returns the committed manifest.  A store
+    in the single-file layout is first committed as its generation."""
+    _commit_recover(spark, root)
+    _claim_recover(spark, root)
+    cur = _current_gen(spark, root)
+    if cur is None:
+        old = read_meta(spark, root, store)
+        cur = int(old["gen"])
+        try:
+            _commit(spark, root, cur, old, None)
+        except SnapshotWriteConflict:
+            raise ManifestWriteConflict(
+                f"a concurrent writer is moving {root}; retry"
+            ) from None
+        _fs_delete(spark, f"{root}/meta__staging")
+        _fs_delete(spark, f"{root}/claims")
+    _collect(spark, root, store, cur)
+    return _read_manifest(spark, root, cur)
+
+
+def _collect(spark, root: str, store: Store, cur: int) -> None:
+    """The collection rule.  A batch dir that no surviving manifest
+    lists goes when its gen is at or below the newest survivor older
+    than the lease: whichever manifest unlisted it is that old too."""
+    fs, mdir = _hfs(spark, f"{root}/_manifests")
+    now, ages = _now_ms(spark), {}
+    for st in fs.listStatus(mdir):
+        g = st.getPath().getName()[:-5]
+        if g.isdigit() and int(g) <= cur:
+            ages[int(g)] = now - st.getModificationTime()
+    gens = sorted(ages)
+    n = 0  # gens[:n] are superseded by a successor older than the lease
+    while n + 1 < len(gens) and ages[gens[n + 1]] > CLAIM_LEASE_MS:
+        n += 1
+    aged = [g for g in gens[n:] if ages[g] > CLAIM_LEASE_MS]
+    if not aged:
+        return
+    listed = set()
+    for g in gens[n:]:
+        try:
+            batches = _read_manifest(spark, root, g)["batches"]
+        except Exception as e:
+            if not _vanished(e):
+                raise
+            continue  # a concurrent collector deleted it
+        listed |= {(sub, b) for sub, names in batches.items() for b in names}
     for sub in store.subs:
-        listed = {f"batch={n}" for n in meta["batches"].get(sub, [])}
-        fs, p = _hfs(spark, f"{root}/{sub}")
-        if not fs.exists(p):
-            continue
-        for st in fs.listStatus(p):
+        sfs, p = _hfs(spark, f"{root}/{sub}")
+        for st in sfs.listStatus(p) if sfs.exists(p) else ():
             name = st.getPath().getName()
-            if name in listed or not _BATCH_DIR.fullmatch(name):
-                continue
-            if int(name.rsplit("__g", 1)[1]) <= committed:
-                fs.delete(st.getPath(), True)
-    fs, p = _hfs(spark, f"{root}/claims")
-    if fs.exists(p):
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("g") and name[1:].isdigit():
-                if int(name[1:]) > committed:
-                    fs.delete(st.getPath(), False)
-    return meta
+            if (
+                _BATCH_DIR.fullmatch(name)
+                and (sub, name[len("batch="):]) not in listed
+                and int(name.rsplit("__g", 1)[1]) <= aged[-1]
+            ):
+                sfs.delete(st.getPath(), True)
+    for g in gens[:n]:
+        fs.delete(_hfs(spark, f"{root}/_manifests/{g:08d}.json")[1], False)
 
 
 def begin(spark, root: str, store: Store, label: str):
@@ -214,13 +251,13 @@ def begin(spark, root: str, store: Store, label: str):
 
 def begin_build(spark, root: str, store: Store, label: str):
     """``begin`` for a (re)build.  Over a committed store the rebuild
-    commits at its gen + 1 and unlists every old batch in one rename.
-    A fresh store — absent, the debris of a first build that never
-    committed, or an old layout — is cleared first (its sub-tables and
-    every file at its root) and the manifest returned is None
-    (generation 0)."""
+    commits at its gen + 1 and unlists every old batch.  A fresh store
+    — absent, the debris of a first build that never committed, or a
+    pre-manifest layout — is cleared first (its sub-tables, its
+    manifests and every file at its root) and the manifest returned is
+    None (generation 0)."""
     try:
-        committed = _committed_file(spark, root, store) is not None
+        committed = exists(spark, root, store)
     except ValueError:  # old layout: the build is what replaces it
         committed = False
     if committed:
@@ -229,76 +266,41 @@ def begin_build(spark, root: str, store: Store, label: str):
     for st in fs.listStatus(p) if fs.exists(p) else ():
         if st.isFile():
             fs.delete(st.getPath(), False)
-    for d in (*store.subs, *store.retired, "claims", "meta"):
+    for d in (*store.subs, *store.retired, "_manifests", "claims", "meta"):
         _fs_delete(spark, f"{root}/{d}")
     return None, 0, f"{label}__g0"
-
-
-def claim(spark, root: str, gen: int) -> None:
-    """Generation claim by atomic create-exclusive (the snapshot
-    table's arbitration primitive), taken at COMMIT time — after the
-    writer's batch dirs are written, before its meta rename."""
-    from gpt_rag_ingestion_spark.operators.snapshot_table import (
-        SnapshotWriteConflict,
-        _write_text_exclusive,
-    )
-
-    try:
-        _write_text_exclusive(
-            spark, f"{root}/claims/g{int(gen):08d}", str(int(gen))
-        )
-    except SnapshotWriteConflict:
-        raise ManifestWriteConflict(
-            f"generation {gen} already claimed by a concurrent writer "
-            f"({root})"
-        ) from None
-
-
-def write_meta(spark, root: str, meta: dict) -> None:
-    """The commit point: staging file, delete, rename (driver-side, no
-    Spark job)."""
-    from gpt_rag_ingestion_spark.operators.snapshot_table import _write_text
-
-    _write_text(spark, f"{root}/meta__staging", json.dumps(meta))
-    _fs_delete(spark, f"{root}/meta")
-    _fs_try_rename(spark, f"{root}/meta__staging", f"{root}/meta")
 
 
 def commit(
     spark, root: str, store: Store, meta: dict | None, gen: int,
     add: dict, remove: dict | None = None, **fields,
 ) -> dict:
-    """Claim ``gen`` and commit the manifest that lists ``meta``'s
-    batches minus ``remove`` plus ``add`` (both {sub: [names]}).
-    ``fields`` update the store's own meta fields; the others carry
-    over from ``meta`` (None for a fresh build).  After the rename the
-    dirs in ``remove`` are deleted.  On a lost claim the writer deletes
-    the dirs in ``add`` and raises ``ManifestWriteConflict``."""
+    """Commit ``gen``'s manifest through ``snapshot_table._commit``: it
+    lists ``meta``'s batches minus ``remove`` plus ``add`` (both {sub:
+    [names]}); ``fields`` update the store's own fields, the others
+    carry over from ``meta`` (None for a fresh build).  On a lost claim
+    the writer deletes the dirs in ``add`` and raises
+    ``ManifestWriteConflict``."""
     remove = remove or {}
+    prior = meta or {"batches": {}}
+    batches = {}
+    for sub in store.subs:
+        kept = set(prior["batches"].get(sub, [])) - set(remove.get(sub, ()))
+        batches[sub] = sorted(kept | set(add.get(sub, [])))
+    carried = {k: v for k, v in prior.items() if k not in ("gen", "batches")}
+    new = {"gen": int(gen), **carried, **fields, "batches": batches}
+    base = None if meta is None else int(meta["gen"])
     try:
-        claim(spark, root, gen)
-    except ManifestWriteConflict:
+        _commit(spark, root, int(gen), new, base)
+    except SnapshotWriteConflict:
         for sub, names in add.items():
             for n in names:
                 _fs_delete(spark, batch_path(root, sub, n))
-        raise
-    prior = meta or {"batches": {}}
-    batches = {
-        sub: sorted(
-            [
-                n for n in prior["batches"].get(sub, [])
-                if n not in remove.get(sub, ())
-            ]
-            + list(add.get(sub, []))
-        )
-        for sub in store.subs
-    }
-    carried = {k: v for k, v in prior.items() if k not in ("gen", "batches")}
-    new = {"gen": int(gen), **carried, **fields, "batches": batches}
-    write_meta(spark, root, new)
-    for sub, names in remove.items():
-        for n in names:
-            _fs_delete(spark, batch_path(root, sub, n))
+        raise ManifestWriteConflict(
+            f"generation {gen} already claimed by a concurrent writer "
+            f"({root})"
+        ) from None
+    _write_text(spark, f"{root}/meta", json.dumps(new))
     return new
 
 
@@ -316,17 +318,13 @@ def write_whole(spark, root: str, store: Store, meta, df: DataFrame, label: str)
 
 
 def commit_whole(spark, root: str, store: Store, staged, **fields) -> dict:
-    """Commit a ``write_whole`` batch in place of every listed one,
-    then collect the unlisted batches of its generation (a crashed
-    writer's: its replay wrote under a new token)."""
+    """Commit a ``write_whole`` batch in place of every listed one."""
     (sub,) = store.subs
     meta, gen, name = staged
-    new = commit(
+    return commit(
         spark, root, store, meta, gen, add={sub: [name]},
         remove={sub: meta["batches"][sub] if meta else []}, **fields,
     )
-    recover(spark, root, store)
-    return new
 
 
 def read_batches(spark, root: str, sub: str, names, schema: str) -> DataFrame:

@@ -1214,9 +1214,9 @@ def neardup_pairs_auto(
 # O(batch + matched keys), never O(corpus).  It is a batch-manifest
 # store (operators/batch_manifest, shared with the text index and the
 # IVF/IVFPQ indexes): an append writes its three sub-table batches
-# unlisted and commits them TOGETHER with the counters in one meta
-# rename, so readers never see a half-admitted batch and the counters
-# never disagree with the rows they count.
+# unlisted and commits them TOGETHER with the counters in one
+# manifest commit, so readers never see a half-admitted batch and the
+# counters never disagree with the rows they count.
 #
 # Rows carry a GENERATION: an appended doc_id SUPERSEDES its earlier
 # rows (the merge is delete-then-insert, so a re-admitted id replaced
@@ -1236,15 +1236,15 @@ def neardup_pairs_auto(
 # liveness-filtered by a broadcast join — the postings are never
 # shuffled by doc_id in either state.
 #
-# Layout under <sidecar_path>/:
-#   meta                              — JSON {gen, n, superseded,
-#                                       n_live, batches}: last committed
+# Layout under <sidecar_path>/ (plus the batch manifest's _current
+# pointer and its ``meta`` copy of the committed manifest):
+#   _manifests/<gen>.json             — JSON {gen, n, superseded,
+#                                       n_live, batches}: the
 #                                       generation, shingle width, docs
 #                                       with dead generations, live docs
 #   digests/batch=<label>__g<gen>/    — (digest string, doc_id long, gen int)
 #   shingles/batch=<label>__g<gen>/   — (sh long, doc_id long, gen int)  xxhash64
 #   sizes/batch=<label>__g<gen>/      — (doc_id long, n_shingles long, gen int)
-#   claims/g<gen>                     — generation claims
 
 SIDECAR = bm.Store(
     subs=("digests", "shingles", "sizes"), build="dedup_sidecar_build"
@@ -1323,7 +1323,7 @@ def dedup_sidecar_append(
 ) -> dict:
     """Admit a batch into the sidecar: one batch-text pass writing the
     batch's own dirs under the next generation, committed with the
-    counters in one meta rename.  A replayed admission (same label)
+    counters in one manifest commit.  A replayed admission (same label)
     unlists the label's earlier batch in that commit — it replaces
     itself.  A doc_id that already exists in the sidecar is SUPERSEDED:
     its older generations stop participating in classification,

@@ -23,7 +23,7 @@ maintained one.
 
 A persisted rollup is a batch-manifest store (``ROLLUP``): one listed
 batch holds the whole rollup, and the meta field ``applied_gen`` the
-snapshot-table generation it reflects; both commit in one rename.
+snapshot-table generation it reflects; both commit in one manifest.
 """
 
 from __future__ import annotations
@@ -169,8 +169,8 @@ def maintain_snapshot_rollup(
 
     EXACTLY-ONCE without a separate cursor ack: the generation the
     rollup reflects is the manifest field ``applied_gen``, committed in
-    the same meta rename as the rollup's batch — a crash before the
-    rename leaves the old pair, a crash after it the new pair;
+    the same manifest as the rollup's batch — a crash before the
+    pointer swap leaves the old pair, a crash after it the new pair;
     re-running is always safe.  The ingest jobs' staged rollups keep
     the same cursor, so a sweep over a rollup they keep level is a
     no-op.  If the applied generation's manifest has been vacuumed

@@ -357,22 +357,23 @@ def rrf_fuse(
 # Search and its purger DELETES vanished parents — the text index is a
 # long-lived, incrementally-maintained artifact, not a per-query
 # build.  It is a batch-manifest store (operators/batch_manifest, the
-# one commit protocol it shares with the dedup sidecar and the
-# IVF/IVFPQ indexes): every op — build, append, delete, apply,
-# COMPACT — writes unlisted batch dirs, claims a generation and
-# commits by one meta rename, and readers read only the listed dirs
-# (snapshot isolation, no directory swaps anywhere).
+# snapshot table's commit protocol, shared with the dedup sidecar and
+# the IVF/IVFPQ indexes): every op — build, append, delete, apply,
+# COMPACT — writes unlisted batch dirs and commits one generation's
+# manifest by a claim and a pointer swap, and readers read only the
+# listed dirs (snapshot isolation, no directory swaps anywhere).
 #
 # Layout under <index_path>/:
-#   meta                  — one-line JSON {gen, superseded, n_live,
-#                            l_live, batches: {postings: [names],
-#                            doclen: [names]}}
+#   _manifests/<gen>.json — one JSON manifest per generation {gen,
+#                            superseded, n_live, l_live, batches:
+#                            {postings: [names], doclen: [names]}}
+#   _current              — pointer naming the committed generation
 #   postings/batch=<label>__g<gen>/ — (token string, doc long,
 #                            tf long, gen int)
 #   doclen/batch=<label>__g<gen>/   — (doc long, dl long, gen int);
 #                            dl NULL is a DELETE tombstone (the
 #                            purger's leg)
-#   claims/g<gen>         — generation claims (create-exclusive)
+#   meta                  — a copy of the committed manifest
 #
 # Liveness authority: DOCLEN — one row per input row per generation,
 # each carrying its doc's dl (a tokenless doc still gets dl = 0;
@@ -594,7 +595,7 @@ def text_index_build(
     """Build the persisted index from the existing corpus (the one
     full-corpus pass; later batches touch O(batch)).  A rebuild over a
     committed index commits the new batch and unlists every old one in
-    one meta rename.  The counters come from the staged doclen."""
+    one commit.  The counters come from the staged doclen."""
     spark = chunks.sparkSession
     meta, gen, name = bm.begin_build(spark, index_path, TEXT_INDEX, "build")
     staged = _tindex_stage(
@@ -745,11 +746,13 @@ def text_index_compact(spark, index_path: str) -> dict:
     meta, gen, name = bm.begin(spark, index_path, TEXT_INDEX, "compacted")
     postings, doclen = _tindex_live(spark, index_path, meta)
     out = {}
-    for sub, df in (("postings", postings), ("doclen", doclen)):
-        df.write.mode("overwrite").parquet(bm.batch_path(index_path, sub, name))
-        out[sub] = int(
-            spark.read.parquet(bm.batch_path(index_path, sub, name)).count()
-        )
+    for sub, df, schema in (
+        ("postings", postings, _POSTINGS_SCHEMA),
+        ("doclen", doclen, _DOCLEN_SCHEMA),
+    ):
+        path = bm.batch_path(index_path, sub, name)
+        df.write.mode("overwrite").parquet(path)
+        out[sub] = int(spark.read.schema(schema).parquet(path).count())
     bm.commit(
         spark, index_path, TEXT_INDEX, meta, gen,
         add={"postings": [name], "doclen": [name]},

@@ -961,7 +961,7 @@ def ivfpq_ann(
 # stores (operators/batch_manifest): the model tables (centroids, and
 # IVFPQ's codebooks) and the cell-partitioned postings
 # (``postings/batch=<label>__g<gen>/cell=<c>/``) are listed sub-tables,
-# so a rebuild and a compaction are each ONE meta commit.  The IVF meta
+# so a rebuild and a compaction are each ONE manifest commit.  The IVF meta
 # also carries the drift signal: per-batch ``stats`` ({label:
 # {n_vectors, mean_assign_sim}}) and the build ``baseline``.
 
@@ -993,7 +993,7 @@ def ivf_index_build(
     partition PRUNING, no index-wide scan, no shuffle at query time
     beyond the cogroup.  A REBUILD at the same path (the
     ``ivf_needs_refit`` remedy) commits the new centroids, postings,
-    stats and baseline and unlists every old batch in one meta rename
+    stats and baseline and unlists every old batch in one commit
     — stale cells assigned under the old centroids never survive, and
     a crash leaves the old index whole.  The build batch's mean top-1
     centroid similarity is the ``baseline`` drift reference.

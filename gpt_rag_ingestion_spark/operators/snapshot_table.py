@@ -2189,7 +2189,11 @@ def _clone_protected_gens(
                 _read_text(spark, f"{root}/{_CLONES_DIR}/{name}")
             )
             cpath = str(reg["clone_path"])
-        except Exception:
+        except Exception as e:
+            # only a vanished or unparseable registration is stale; a
+            # read fault must not drop a live clone's protection
+            if not (_vanished(e) or isinstance(e, (ValueError, KeyError))):
+                raise
             if prune:
                 fs.delete(st.getPath(), False)
             continue
@@ -2207,7 +2211,9 @@ def _clone_protected_gens(
                     m = json.loads(
                         _read_text(spark, f"{cpath}/_manifests/{mn}")
                     )
-                except Exception:
+                except Exception as e:
+                    if not (_vanished(e) or isinstance(e, ValueError)):
+                        raise
                     continue
                 for g in m.get("partitions", {}).values():
                     if not isinstance(g, str) or g.startswith("gen-"):

@@ -414,7 +414,7 @@ def run_incremental_sketch(
     (histogram, KMV, count-min): shard-local sketch + cell merge,
     state bounded by bins x groups regardless of stream length.
 
-    The sketch commits with its (stream, batch id) in one rename, so a
+    The sketch commits with its (stream, batch id) in one manifest, so a
     batch replayed after that commit is a no-op.  A sketch in the
     former swap layout raises ``ValueError`` and stays as it was: the
     checkpoint has consumed its input, so a rebuild would lose it."""

@@ -34,3 +34,23 @@ def spark():
 
 
 SF0001 = "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def collect_aged(spark):
+    """``collect_aged(root, store)``: age a batch-manifest store's
+    manifests past ``CLAIM_LEASE_MS`` and run writer-start recovery.
+    No commit deletes a batch dir; after this the dirs on disk are
+    exactly the ones the current manifest lists."""
+    import time
+
+    from gpt_rag_ingestion_spark.operators import batch_manifest as bm
+    from gpt_rag_ingestion_spark.operators.snapshot_table import CLAIM_LEASE_MS
+
+    def run(root, store):
+        old = time.time() - CLAIM_LEASE_MS / 1000 - 60
+        for f in os.listdir(f"{root}/_manifests"):
+            os.utime(f"{root}/_manifests/{f}", (old, old))
+        bm.recover(spark, root, store)
+
+    return run

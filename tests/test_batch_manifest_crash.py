@@ -1,25 +1,29 @@
 """One crash suite for the batch-manifest protocol
-(operators/batch_manifest) over the six stores that commit through
-it: the BM25 text index, the dedup sidecar, the IVF and IVFPQ
-indexes, the dashboard rollup (its staged tick in the ingest job, its
-change-feed tick in the maintenance sweep, and its bootstrap) and the
-streaming sketch table (one micro-batch merge).
+(operators/batch_manifest, which commits through the snapshot table's
+``_commit``) over the six stores that use it: the BM25 text index, the
+dedup sidecar, the IVF and IVFPQ indexes, the dashboard rollup (its
+staged tick in the ingest job, its change-feed tick in the maintenance
+sweep, and its bootstrap) and the streaming sketch table (one
+micro-batch merge).
 
-Every write op of every store is killed at each of the protocol's
-crash points:
+Every write op of every store is killed at each of the commit's
+crash legs:
 
 - ``before_claim``: the op's batch dirs are written, no claim taken;
-- ``after_claim``: the generation is claimed, the meta commit never
-  starts;
-- ``meta_rename``: the new manifest is staged and ``meta`` deleted,
-  the rename never happens — the staging file is then the committed
-  manifest.
+- ``after_claim``: the generation is claimed, then the commit aborts
+  by a raise before its pointer write — the claim is released at once;
+- ``orphan_claim``: a hard crash right after the claim, so no cleanup
+  runs; the orphan claim is aged past ``CLAIM_LEASE_MS`` (``os.utime``)
+  before the replay, as recovery prunes only a stale claim;
+- ``pointer_tmp``: the pointer tmp is written and ``_current``
+  deleted, the rename never happens — the op counts as committed.
 
 Each case asserts that (1) answers equal the last committed state
-(the old one for the first two points, the op's result for the
-third), (2) a reader mutates nothing on disk, and (3) replaying the op
-converges to an uncrashed twin.  Base stores and uncrashed twins are
-built once per module and copied per case.
+(the old one for the first three legs, the op's result for the
+fourth), (2) a reader mutates nothing on disk, and (3) replaying the
+op converges to an uncrashed twin and, once the lease has aged, the
+batch dirs on disk are exactly the current manifest's.  Base stores
+and uncrashed twins are built once per module and copied per case.
 """
 
 from __future__ import annotations
@@ -274,13 +278,15 @@ STORES = {
     "sketch": (_sketch_setup, _sketch_query, SKETCH_OPS, MB.SKETCH, "sketch"),
 }
 
-CRASH_POINTS = ("before_claim", "after_claim", "meta_rename")
+CRASH_POINTS = ("before_claim", "after_claim", "orphan_claim", "pointer_tmp")
 
-# The default lane runs the text index's apply at the two crash points
-# with different outcomes (old state kept, staged state committed);
-# every other case runs in the slow lane (about 15 s each).
+# The default lane runs the text index's apply at three legs (old state
+# kept with the claim released, old state kept behind an orphan claim,
+# staged state committed); every other case runs in the slow lane
+# (about 15 s each).
 _FAST = {("text_index", "apply", "after_claim"),
-         ("text_index", "apply", "meta_rename")}
+         ("text_index", "apply", "orphan_claim"),
+         ("text_index", "apply", "pointer_tmp")}
 CASES = [
     pytest.param(
         store, op, point,
@@ -297,8 +303,59 @@ class _Crash(RuntimeError):
     pass
 
 
-def _raise(*_a, **_kw):
-    raise _Crash("injected crash")
+def _inject(m, point, sroot):
+    """Patch the snapshot table's commit primitives so that the commit
+    of the store at ``sroot`` dies at ``point``; every other path (the
+    rollup's chunks table commits through the same code) is untouched."""
+    claims = f"{sroot}/_manifests/"
+
+    def hook(name, fires, before=None):
+        real = getattr(ST, name)
+
+        def wrapped(spark, path, *a, **kw):
+            if fires(path):
+                if before:
+                    before()
+                raise _Crash("injected crash")
+            return real(spark, path, *a, **kw)
+
+        m.setattr(ST, name, wrapped)
+
+    if point == "before_claim":
+        hook("_write_text_exclusive", lambda p: p.startswith(claims))
+    elif point == "after_claim":
+        hook("_write_text", lambda p: p == f"{sroot}/_current__tmp")
+    elif point == "orphan_claim":  # outside _commit's abort cleanup
+        hook("_start_claim_heartbeat", lambda p: p.startswith(claims))
+    else:  # the process dies between the pointer delete and rename
+        hook("_swap_pointer", lambda p: p == sroot,
+             lambda: os.remove(f"{sroot}/_current"))
+
+
+def _claims_above(sroot, gen):
+    return [
+        f for f in os.listdir(f"{sroot}/_manifests")
+        if f.endswith(".json") and int(f[:-5]) > gen
+    ]
+
+
+def _age(sroot, names):
+    """Age the manifests ``names`` past ``CLAIM_LEASE_MS``."""
+    old = dt.datetime.now().timestamp() - ST.CLAIM_LEASE_MS / 1000 - 60
+    for f in names:
+        os.utime(f"{sroot}/_manifests/{f}", (old, old))
+
+
+def _listed_on_disk(spark, sroot, layout):
+    """(batch dirs on disk, batches the current manifest lists) per sub."""
+    meta = bm.read_meta(spark, sroot, layout)
+    return [
+        (sub, sorted(
+            n[len("batch="):] for n in os.listdir(f"{sroot}/{sub}")
+            if n.startswith("batch=")
+        ), meta["batches"][sub])
+        for sub in layout.subs
+    ]
 
 
 def _tree(root):
@@ -338,7 +395,7 @@ def base_stores(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("store,op,point", CASES)
 def test_crash_leaves_committed_state_and_replay_converges(
-    spark, tmp_path, monkeypatch, base_stores, store, op, point
+    spark, tmp_path, monkeypatch, base_stores, collect_aged, store, op, point
 ):
     base, twin = base_stores
     _setup, query, ops, layout, rel = STORES[store]
@@ -348,36 +405,39 @@ def test_crash_leaves_committed_state_and_replay_converges(
     root = str(tmp_path / store)
     shutil.copytree(base_root, root)
     sroot = os.path.join(root, rel) if rel else root
-    target = {"before_claim": "claim", "after_claim": "write_meta",
-              "meta_rename": "_fs_try_rename"}[point]
+    committed = bm.read_meta(spark, sroot, layout)["gen"]
     with monkeypatch.context() as m:
-        m.setattr(bm, target, _raise)
+        _inject(m, point, sroot)
         # a crash inside a micro-batch reaches the caller wrapped in
         # the streaming query's failure
         with pytest.raises(Exception, match="injected crash"):
             ops[op](spark, root)
-    if point == "meta_rename":
-        assert not os.path.exists(f"{sroot}/meta")
-        assert os.path.exists(f"{sroot}/meta__staging")
+    orphans = _claims_above(sroot, committed)
+    if point == "pointer_tmp":
+        assert not os.path.exists(f"{sroot}/_current")
+        assert os.path.exists(f"{sroot}/_current__tmp")
+    else:
+        assert orphans == ([f"{committed + 1:08d}.json"]
+                           if point == "orphan_claim" else [])
 
     # answers equal the last committed state; the reader (and the
     # existence check) leave every file as it was
     footprint = _tree(sroot)
     assert bm.exists(spark, sroot, layout)
-    assert query(spark, root) == (after if point == "meta_rename" else before)
+    assert query(spark, root) == (after if point == "pointer_tmp" else before)
     assert _tree(sroot) == footprint
 
-    # the replay converges to the uncrashed twin, with no debris left
+    # the replay converges to the uncrashed twin; once the lease has
+    # aged, recovery leaves exactly the listed batch dirs
+    if point == "orphan_claim":
+        _age(sroot, orphans)
     ops[op](spark, root)
     assert query(spark, root) == after
-    assert not os.path.exists(f"{sroot}/meta__staging")
-    meta = bm.read_meta(spark, sroot, layout)
-    for sub in layout.subs:
-        on_disk = sorted(
-            n[len("batch="):] for n in os.listdir(f"{sroot}/{sub}")
-            if n.startswith("batch=")
-        )
-        assert on_disk == meta["batches"][sub], sub
+    assert not os.path.exists(f"{sroot}/_current__tmp")
+    collect_aged(sroot, layout)
+    for sub, on_disk, listed in _listed_on_disk(spark, sroot, layout):
+        assert on_disk == listed, sub
+    assert query(spark, root) == after
 
 
 def _touch(root, *rels):
@@ -441,7 +501,7 @@ def test_old_layout_is_refused_until_rebuilt(spark, tmp_path, store):
     assert bm.exists(spark, root, layout)
     meta = bm.read_meta(spark, root, layout)
     assert sorted(n for n in os.listdir(root) if not n.startswith(".")) == sorted(
-        ["claims", "meta", *layout.subs]
+        ["_current", "_manifests", "meta", *layout.subs]
     )
     assert all(len(meta["batches"][sub]) == 1 for sub in layout.subs)
 
@@ -475,8 +535,134 @@ def test_old_layout_sketch_is_refused_and_rollup_rebuilt(spark, tmp_path):
     out = I.maintain_snapshot_rollup(spark, table, roll)
     assert out["mode"] == "bootstrap"
     assert sorted(n for n in os.listdir(roll) if not n.startswith(".")) == [
-        "claims", "meta", "rows",
+        "_current", "_manifests", "meta", "rows",
     ]
     assert sorted(
         tuple(r) for r in bm.read_store(spark, roll, I.ROLLUP).collect()
     ) == [("p1", 2, 5), ("p2", 1, 1)]
+
+
+def _text_frame(spark, root):
+    q = spark.createDataFrame(
+        [("q1", ["apple", "cherry"]), ("q2", ["banana", "stone"])],
+        "query_id string, terms array<string>",
+    )
+    return X.text_index_query(spark, root, q, k=5)
+
+
+#: store -> (the op that commits next, a reader frame over the store)
+_READERS = {
+    "text_index": ("compact", _text_frame),
+    "rollup": ("stage", lambda spark, root: bm.read_store(
+        spark, f"{root}/rollup", I.ROLLUP
+    )),
+}
+
+
+@pytest.mark.parametrize("store", sorted(_READERS))
+def test_reader_frame_survives_the_next_commit(
+    spark, tmp_path, base_stores, store
+):
+    """A reader's frame lists files when it is built and reads them when
+    it runs.  No commit deletes a file: a ``text_index_query`` frame
+    built before a compaction, and a rollup ``read_store`` frame built
+    before the next ``commit_whole``, each collect the answer of the
+    manifest they resolved after that commit."""
+    base, _twin = base_stores
+    op, frame = _READERS[store]
+    root = str(tmp_path / store)
+    shutil.copytree(base(store)[0], root)
+    df = frame(spark, root)
+    want = sorted(tuple(r) for r in frame(spark, root).collect())
+    STORES[store][2][op](spark, root)
+    assert sorted(tuple(r) for r in df.collect()) == want
+
+
+#: the store op whose write a single-file store takes next
+_NEXT = {"text_index": "apply", "sidecar": "append", "ivf": "append",
+         "ivfpq": "append", "rollup": "stage", "sketch": "merge"}
+
+
+@pytest.mark.parametrize("store,variant", [
+    pytest.param(
+        store, variant,
+        marks=() if store == "text_index" else pytest.mark.slow,
+        id=f"{store}-{variant}",
+    )
+    for store in STORES for variant in ("meta", "meta__staging")
+])
+def test_single_file_layout_reads_and_takes_next_write(
+    spark, tmp_path, base_stores, store, variant
+):
+    """A store in the earlier single-file layout (its committed manifest
+    as ``meta``, or only ``meta__staging`` after a commit cut between
+    the meta delete and rename, next to ``claims/``; no ``_current``,
+    no ``_manifests``) reads as its generation without any file
+    changing, and its next write commits at gen + 1 — no rebuild."""
+    base, twin = base_stores
+    _setup, query, ops, layout, rel = STORES[store]
+    base_root, before = base(store)
+    after = twin(store, _NEXT[store])
+    root = str(tmp_path / store)
+    shutil.copytree(base_root, root)
+    sroot = os.path.join(root, rel) if rel else root
+    body = bm.read_meta(spark, sroot, layout)
+    shutil.rmtree(f"{sroot}/_manifests")
+    for f in ("_current", "meta", "._current.crc", ".meta.crc"):
+        os.remove(f"{sroot}/{f}")
+    with open(f"{sroot}/{variant}", "w") as fh:
+        json.dump(body, fh)
+    _touch(sroot, f"claims/g{body['gen']:08d}")
+
+    footprint = _tree(sroot)
+    assert bm.exists(spark, sroot, layout)
+    assert bm.read_meta(spark, sroot, layout) == body
+    assert query(spark, root) == before
+    assert _tree(sroot) == footprint
+
+    ops[_NEXT[store]](spark, root)
+    assert query(spark, root) == after
+    assert bm.read_meta(spark, sroot, layout)["gen"] == body["gen"] + 1
+    assert not os.path.exists(f"{sroot}/claims")
+    assert not os.path.exists(f"{sroot}/meta__staging")
+
+
+#: Spark jobs each write op runs, as measured under the former
+#: single-file commit: the commit itself is driver-side file calls, so
+#: the protocol adds none.  Compaction of the text index reads its two
+#: written batches back with known schemas (2 fewer than the 12 then).
+WRITE_JOBS = {
+    ("text_index", "build"): 7, ("text_index", "apply"): 12,
+    ("text_index", "delete"): 5, ("text_index", "compact"): 10,
+    ("sidecar", "build"): 7, ("sidecar", "append"): 15,
+    ("sidecar", "compact"): 18,
+    ("ivf", "build"): 7, ("ivf", "append"): 8, ("ivf", "compact"): 4,
+    ("ivfpq", "build"): 9, ("ivfpq", "append"): 7, ("ivfpq", "compact"): 4,
+    ("rollup", "stage"): 24, ("rollup", "cdf"): 28,
+    ("rollup", "bootstrap"): 28,
+    ("sketch", "merge"): 5,
+}
+
+
+@pytest.mark.parametrize("store,op", [
+    pytest.param(
+        store, op,
+        marks=() if (store, op) == ("text_index", "apply") else pytest.mark.slow,
+        id=f"{store}-{op}",
+    )
+    for store, op in WRITE_JOBS
+])
+def test_write_op_job_count(spark, tmp_path, base_stores, store, op):
+    """Every job an op starts, the micro-batch's included (a stream
+    runs its jobs under its own job group, so they are counted by job
+    id, not by group)."""
+    base, _twin = base_stores
+    root = str(tmp_path / store)
+    shutil.copytree(base(store)[0], root)
+
+    def last_job():
+        return spark._jsc.sc().statusStore().jobsList(None).head().jobId()
+
+    first = last_job()
+    STORES[store][2][op](spark, root)
+    assert last_job() - first == WRITE_JOBS[(store, op)]

@@ -676,7 +676,7 @@ def test_neardup_auto_routes_both_ways(spark):
 
 # ------------------------------------------------- persisted IVF index
 
-def test_ivf_index_lifecycle(spark, tmp_path):
+def test_ivf_index_lifecycle(spark, tmp_path, collect_aged):
     from gpt_rag_ingestion_spark.operators import batch_manifest as bm
     from gpt_rag_ingestion_spark.operators.similarity import (
         IVF_INDEX,
@@ -730,12 +730,14 @@ def test_ivf_index_lifecycle(spark, tmp_path):
     # at-least-once retry: re-running the same batch label overwrites
     # its own directory instead of double-appending
     ivf_index_append(shifted, idx, batch_label="b1")
+    collect_aged(idx, IVF_INDEX)
     assert spark.read.parquet(f"{idx}/postings").count() == emb.count() + 10
 
     # a rebuild at the same path replaces postings/stats wholesale —
     # no stale old-centroid cells, exactly one build baseline
     built2 = ivf_index_build(emb, idx, n_centroids=8)
     assert built2["n_vectors"] == emb.count()
+    collect_aged(idx, IVF_INDEX)
     assert spark.read.parquet(f"{idx}/postings").count() == emb.count()
     meta = bm.read_meta(spark, idx, IVF_INDEX)
     assert list(meta["stats"]) == ["build"]
@@ -743,8 +745,9 @@ def test_ivf_index_lifecycle(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_ivf_index_compact(spark, tmp_path):
+def test_ivf_index_compact(spark, tmp_path, collect_aged):
     from gpt_rag_ingestion_spark.operators.similarity import (
+        IVF_INDEX,
         ivf_index_append,
         ivf_index_build,
         ivf_index_compact,
@@ -770,6 +773,7 @@ def test_ivf_index_compact(spark, tmp_path):
     # one consolidated generation, fewer files, same answers
     import os
 
+    collect_aged(idx, IVF_INDEX)
     batches = os.listdir(f"{idx}/postings")
     assert batches == ["batch=compacted__g3"]
     after = {
@@ -780,11 +784,12 @@ def test_ivf_index_compact(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_ivfpq_index_lifecycle(spark, tmp_path):
+def test_ivfpq_index_lifecycle(spark, tmp_path, collect_aged):
     """Persisted IVFPQ: codes-only postings (the 16-32x smaller index),
     refit-free append, pruned+refined query matching the per-call
     operator, retry idempotence."""
     from gpt_rag_ingestion_spark.operators.similarity import (
+        IVFPQ_INDEX,
         ivfpq_ann,
         ivfpq_index_append,
         ivfpq_index_build,
@@ -845,6 +850,7 @@ def test_ivfpq_index_lifecycle(spark, tmp_path):
 
     # at-least-once retry replaces the batch directory, not doubles it
     ivfpq_index_append(twins, idx, batch_label="b1")
+    collect_aged(idx, IVFPQ_INDEX)
     assert (
         spark.read.parquet(f"{idx}/postings").count() == emb.count() + 10
     )
@@ -923,8 +929,9 @@ def test_dedup_sidecar_lifecycle(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_ivfpq_index_compact(spark, tmp_path):
+def test_ivfpq_index_compact(spark, tmp_path, collect_aged):
     from gpt_rag_ingestion_spark.operators.similarity import (
+        IVFPQ_INDEX,
         ivfpq_index_append,
         ivfpq_index_build,
         ivfpq_index_compact,
@@ -945,6 +952,7 @@ def test_ivfpq_index_compact(spark, tmp_path):
     assert out["n_vectors"] == emb.count()
     import os
 
+    collect_aged(idx, IVFPQ_INDEX)
     assert os.listdir(f"{idx}/postings") == ["batch=compacted__g3"]
     after = {
         (r["query_id"], r["corpus_id"], r["rank"])
@@ -954,13 +962,14 @@ def test_ivfpq_index_compact(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_ivf_index_maybe_compact_trigger(spark, tmp_path):
+def test_ivf_index_maybe_compact_trigger(spark, tmp_path, collect_aged):
     """The fragment-count trigger: under the threshold it is a pure
     listing (no compact); over it, postings fold to one generation and
     query results are unchanged."""
     import os
 
     from gpt_rag_ingestion_spark.operators.similarity import (
+        IVF_INDEX,
         ivf_index_append,
         ivf_index_build,
         ivf_index_maybe_compact,
@@ -983,6 +992,7 @@ def test_ivf_index_maybe_compact_trigger(spark, tmp_path):
     }
     out = ivf_index_maybe_compact(spark, idx, max_fragments=2)
     assert out["compacted"] is True and out["fragments_before"] == 3
+    collect_aged(idx, IVF_INDEX)
     assert os.listdir(f"{idx}/postings") == ["batch=compacted__g3"]
     after = {
         (r["query_id"], r["corpus_id"], r["rank"])
@@ -1000,8 +1010,9 @@ def test_ivf_index_maybe_compact_trigger(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_dedup_sidecar_compact(spark, tmp_path):
+def test_dedup_sidecar_compact(spark, tmp_path, collect_aged):
     from gpt_rag_ingestion_spark.operators.dedup import (
+        SIDECAR,
         dedup_sidecar_append,
         dedup_sidecar_build,
         dedup_sidecar_compact,
@@ -1023,6 +1034,7 @@ def test_dedup_sidecar_compact(spark, tmp_path):
     assert counts["digests"] == base.count() + 30
     import os
 
+    collect_aged(side, SIDECAR)
     for sub in ("digests", "shingles", "sizes"):
         assert os.listdir(f"{side}/{sub}") == ["batch=compacted__g2"]
     after = sorted(

@@ -376,6 +376,7 @@ def test_rollup_left_behind_by_a_crash_is_brought_level(
     ``applied_gen`` behind the table's generation and rebuilds it by
     one recompute; a maintenance sweep over the level rollup is then a
     no-op (both modes keep the same cursor)."""
+    from gpt_rag_ingestion_spark.operators import snapshot_table as S
     from gpt_rag_ingestion_spark.operators.incremental import (
         maintain_snapshot_rollup,
     )
@@ -409,11 +410,15 @@ def test_rollup_left_behind_by_a_crash_is_brought_level(
     docs2 = _docs(spark, [("d1", "gamma " * 80, t1), ("d2", "beta " * 40, t0),
                           ("d3", "delta " * 20, t1)])
 
-    def crash(*_a, **_kw):
-        raise RuntimeError("injected crash")
+    real = S._write_text
+
+    def crash(spark_, path, text):
+        if path == f"{rollup}/_current__tmp":
+            raise RuntimeError("injected crash")
+        return real(spark_, path, text)
 
     with monkeypatch.context() as m:
-        m.setattr(bm, "write_meta", crash)
+        m.setattr(S, "_write_text", crash)
         with pytest.raises(RuntimeError, match="injected crash"):
             run_ingest_job(spark, docs2, table, "r2", **kw)
     assert maintained() != recompute()  # the merge landed, the rollup did not

@@ -87,30 +87,37 @@ class _Crash(RuntimeError):
 def test_half_committed_text_index_is_applied_not_rebuilt(
     spark, tmp_path, monkeypatch
 ):
-    """A text-index commit cut between its meta delete and its rename
-    leaves only ``meta__staging``.  That staging file IS the committed
-    index: a query in the window answers from it without touching the
-    directory, and the next run applies at gen + 1 with the earlier
-    batches still listed — it does not rebuild the index from the
-    table."""
+    """A text-index commit cut between its pointer delete and its
+    rename leaves only ``_current__tmp``.  The manifest it names IS the
+    committed index: a query in the window answers from it without
+    touching the directory, and the next run applies at gen + 1 with
+    the earlier batches still listed — it does not rebuild the index
+    from the table."""
     from gpt_rag_ingestion_spark.operators import batch_manifest as bm
     from gpt_rag_ingestion_spark.operators import search as X
+    from gpt_rag_ingestion_spark.operators import snapshot_table as ST
 
     table, index = str(tmp_path / "t"), str(tmp_path / "i")
     kw = dict(text_index_path=index, **_KW)
     run_ingest_job(spark, _docs(spark, 6), table, "base", **kw)
+    real = ST._swap_pointer
 
-    def crash(*_a, **_kw):
-        raise _Crash("injected crash at the meta rename")
+    def crash(spark_, path, gen):
+        if path != index:
+            return real(spark_, path, gen)
+        os.remove(os.path.join(index, "_current"))
+        raise _Crash("injected crash at the pointer rename")
 
     with monkeypatch.context() as m:
-        m.setattr(bm, "_fs_try_rename", crash)
+        m.setattr(ST, "_swap_pointer", crash)
         with pytest.raises(_Crash):
             run_ingest_job(
                 spark, _docs(spark, 6, changed={1}), table, "t1", **kw
             )
-    assert not os.path.exists(os.path.join(index, "meta"))
-    with open(os.path.join(index, "meta__staging")) as fh:
+    assert not os.path.exists(os.path.join(index, "_current"))
+    with open(os.path.join(index, "_current__tmp")) as fh:
+        gen = int(fh.read())
+    with open(os.path.join(index, "_manifests", f"{gen:08d}.json")) as fh:
         staged = json.load(fh)
 
     before = _tree_digest(index)

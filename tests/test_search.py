@@ -179,12 +179,14 @@ def test_persisted_text_index_lifecycle(spark, tmp_path):
 def test_persisted_text_index_append_crash_replay(
     spark, tmp_path, monkeypatch
 ):
-    """Crash BEFORE the meta commit: the gen-stamped orphan dirs are
-    pruned at the next entry, queries see the pre-crash state, and the
-    replayed append converges to the uncrashed twin byte-for-byte."""
+    """Crash after the claim, before the pointer write: the claim is
+    released, the gen-stamped orphan dirs stay unlisted, queries see
+    the pre-crash state, and the replayed append converges to the
+    uncrashed twin byte-for-byte."""
     import pytest as _pytest
 
     from gpt_rag_ingestion_spark.operators import search as X
+    from gpt_rag_ingestion_spark.operators import snapshot_table as ST
 
     path = str(tmp_path / "tindex")
     twin = str(tmp_path / "twin")
@@ -192,17 +194,19 @@ def test_persisted_text_index_append_crash_replay(
     X.text_index_build(_corpus(spark, BASE_ROWS), twin)
     batch = _corpus(spark, [(2, "stone stone stone tree")])
 
-    real = bm.write_meta
+    real = ST._write_text
 
-    def crash(*a, **kw):
-        raise RuntimeError("injected crash before meta commit")
+    def crash(spark_, p, text):
+        if p == f"{path}/_current__tmp":
+            raise RuntimeError("injected crash before meta commit")
+        return real(spark_, p, text)
 
-    monkeypatch.setattr(bm, "write_meta", crash)
+    monkeypatch.setattr(ST, "_write_text", crash)
     with _pytest.raises(RuntimeError, match="injected"):
         X.text_index_append(batch, path, "b1")
-    monkeypatch.setattr(bm, "write_meta", real)
+    monkeypatch.setattr(ST, "_write_text", real)
 
-    # pre-crash state visible (orphan pruned on entry)
+    # pre-crash state visible (the orphan dirs are unlisted)
     got = sorted(
         tuple(r)
         for r in X.text_index_query(
@@ -410,6 +414,7 @@ def test_compact_crash_leaves_manifest_intact(
     import pytest as _pytest
 
     from gpt_rag_ingestion_spark.operators import search as X
+    from gpt_rag_ingestion_spark.operators import snapshot_table as ST
 
     path = str(tmp_path / "tindex")
     X.text_index_build(_corpus(spark, BASE_ROWS), path)
@@ -418,15 +423,17 @@ def test_compact_crash_leaves_manifest_intact(
     after = {r[0]: r for r in BASE_ROWS} | {r[0]: r for r in changed}
     want = _want(spark, list(after.values()))
 
-    real = bm.write_meta
+    real = ST._write_text
 
-    def crash(*a, **kw):
-        raise RuntimeError("injected crash at compact commit")
+    def crash(spark_, p, text):
+        if p == f"{path}/_current__tmp":
+            raise RuntimeError("injected crash at compact commit")
+        return real(spark_, p, text)
 
-    monkeypatch.setattr(bm, "write_meta", crash)
+    monkeypatch.setattr(ST, "_write_text", crash)
     with _pytest.raises(RuntimeError, match="injected"):
         X.text_index_compact(spark, path)
-    monkeypatch.setattr(bm, "write_meta", real)
+    monkeypatch.setattr(ST, "_write_text", real)
 
     # the old manifest still stands: queries equal the pre-crash
     # answers, superseded counters unchanged
@@ -485,8 +492,8 @@ def test_query_path_never_prunes_inflight_writer_dirs(spark, tmp_path):
     assert got == want  # committed snapshot only (gen filter)
     assert _fs_exists(spark, pdir) and _fs_exists(spark, ddir)
 
-    # the writer retries its append (writer-side recovery prunes the
-    # staged dirs and replays) — converges to the post-append state
+    # the writer retries its append (the replay rewrites the same
+    # staged dirs and commits them) — converges to the post-append state
     X.text_index_append(
         _corpus(spark, [(2, "stone stone stone tree")]), path, "b1"
     )
@@ -673,11 +680,15 @@ def test_text_index_two_writer_claim_conflict(spark, tmp_path, monkeypatch):
     claims (create-exclusive, the snapshot table's fence): a second
     writer racing for the same generation raises
     TextIndexWriteConflict before touching any batch directory, and a
-    claim whose writer died (never committed meta) is pruned by the
-    next writer's recovery instead of blocking the gen forever."""
+    claim whose writer died (never swapped the pointer) is pruned by
+    the next writer's recovery once its lease is stale instead of
+    blocking the gen forever."""
+    import os
+
     import pytest as _pytest
 
     from gpt_rag_ingestion_spark.operators import search as X
+    from gpt_rag_ingestion_spark.operators import snapshot_table as ST
 
     path = str(tmp_path / "tindex")
     X.text_index_build(_corpus(spark, BASE_ROWS), path)
@@ -694,7 +705,10 @@ def test_text_index_two_writer_claim_conflict(spark, tmp_path, monkeypatch):
     def delta_with_racer(spark_, idx_path, batch_doclen, meta):
         if not state["fired"]:
             state["fired"] = True
-            bm.claim(spark_, idx_path, gen)  # writer B wins
+            # writer B wins
+            ST._write_text_exclusive(
+                spark_, ST._manifest_path(idx_path, gen), "{}"
+            )
         return real_delta(spark_, idx_path, batch_doclen, meta)
 
     monkeypatch.setattr(X, "_tindex_delta", delta_with_racer)
@@ -711,8 +725,11 @@ def test_text_index_two_writer_claim_conflict(spark, tmp_path, monkeypatch):
     )
     assert got == want
 
-    # B crashed without committing: the next writer's recovery prunes
-    # the orphan claim and the append goes through
+    # B crashed without committing: once its claim is older than the
+    # lease, the next writer's recovery prunes it and the append goes
+    # through
+    old = (ST._now_ms(spark) - ST.CLAIM_LEASE_MS - 60_000) / 1000.0
+    os.utime(ST._manifest_path(path, gen), (old, old))
     X.text_index_append(batch, path, "a1")
     after = {r[0]: r for r in BASE_ROWS} | {2: (2, "stone stone stone tree")}
     got = sorted(
@@ -1276,3 +1293,29 @@ def test_text_index_apply_job_count(spark, tmp_path):
     finally:
         sc.setJobGroup("", "", False)
     assert len(jobs) <= MAX_APPLY_JOBS, f"text_index_apply ran {len(jobs)} jobs"
+
+
+#: Spark jobs of one ``text_index_compact`` in the test below: 12 when
+#: the two written batches were read back with an inferred schema (one
+#: inference job each), 10 with their known schemas.
+COMPACT_JOBS = 10
+
+
+def test_text_index_compact_job_count(spark, tmp_path):
+    from gpt_rag_ingestion_spark.operators import search as X
+
+    path = str(tmp_path / "tindex")
+    X.text_index_build(_corpus(spark, BASE_ROWS), path)
+    X.text_index_apply(
+        _corpus(spark, [(2, "stone stone stone tree")]),
+        spark.createDataFrame([(5,)], "doc_id long"), path, "b1",
+    )  # superseded > 0: compaction resolves liveness
+    sc = spark.sparkContext
+    group = "text-index-compact-jobs"
+    sc.setJobGroup(group, "one text_index_compact", False)
+    try:
+        X.text_index_compact(spark, path)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup("", "", False)
+    assert len(jobs) == COMPACT_JOBS, f"text_index_compact ran {len(jobs)} jobs"

@@ -2079,6 +2079,48 @@ def test_vacuum_is_clone_aware(spark, tmp_path):
     )
 
 
+def test_vacuum_raises_on_clone_read_fault(spark, tmp_path, monkeypatch):
+    """A clone registration or clone manifest that fails to read with
+    an I/O fault (neither vanished nor unparseable) makes vacuum raise
+    and delete nothing: a transient fault must not drop a live clone's
+    protection of the shared generations."""
+    import os
+
+    src = str(tmp_path / "src")
+    cln = str(tmp_path / "cln")
+    S.snapshot_merge_upsert(
+        spark, src, _inc(spark, 0, 40), partition_cols=["bucket"]
+    )
+    S.snapshot_clone(spark, src, cln)
+    S.snapshot_optimize(spark, src, partition_cols=["bucket"])
+    S.snapshot_merge_upsert(
+        spark, src, _inc(spark, 0, 40, mul=5), partition_cols=["bucket"]
+    )
+
+    def tree():
+        return sorted(
+            os.path.join(d, f) for d, _ds, fs in os.walk(src) for f in fs
+        )
+
+    before = tree()
+    real = S._read_text
+    for part in ("/_clones/", f"{cln}/_manifests/"):
+
+        def faulty(spark_, path, part=part):
+            if part in path:
+                raise OSError("injected I/O fault")
+            return real(spark_, path)
+
+        with monkeypatch.context() as m:
+            m.setattr(S, "_read_text", faulty)
+            with pytest.raises(OSError, match="injected"):
+                S.snapshot_vacuum(spark, src, keep_snapshots=1)
+        assert tree() == before, part
+    assert S.snapshot_vacuum(spark, src, keep_snapshots=1)[
+        "protected_for_clones"
+    ] > 0
+
+
 def test_dv_delete_on_clone_shared_generations(spark, tmp_path):
     """DV-mode delete on a SHALLOW CLONE whose generations are still
     shared absolute refs: the recorded keys must match what _apply_dv

@@ -397,13 +397,18 @@ def test_incremental_ivf_stream_maintains_index(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_incremental_ivf_stream_triggered_compaction(spark, tmp_path):
+def test_incremental_ivf_stream_triggered_compaction(
+    spark, tmp_path, collect_aged
+):
     """Round-3 brief #6 (index side): with a low max_fragments the
     wired trigger compacts the postings INSIDE the stream loop, and
     queries against the maintained index are unchanged."""
     import os
 
-    from gpt_rag_ingestion_spark.operators.similarity import ivf_index_query
+    from gpt_rag_ingestion_spark.operators.similarity import (
+        IVF_INDEX,
+        ivf_index_query,
+    )
     from gpt_rag_ingestion_spark.streaming.micro_batch import (
         run_incremental_ivf,
     )
@@ -424,6 +429,7 @@ def test_incremental_ivf_stream_triggered_compaction(spark, tmp_path):
             max_fragments=1,
         )
     # every drain beyond the first exceeded 1 fragment -> compacted
+    collect_aged(idx, IVF_INDEX)
     (only,) = os.listdir(f"{idx}/postings")
     assert only.startswith("batch=compacted__g")
     assert spark.read.parquet(f"{idx}/postings").count() == 200
@@ -616,7 +622,7 @@ def test_streaming_corpus_table_optimize_trigger(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_streaming_sidecar_triggered_compaction(spark, tmp_path):
+def test_streaming_sidecar_triggered_compaction(spark, tmp_path, collect_aged):
     """Round-3 brief #6: the counter-driven sidecar compaction trigger
     fires INSIDE the streamed admission loop (a batch re-admits a doc
     with new text -> dead generation ratio crosses the default
@@ -662,6 +668,7 @@ def test_streaming_sidecar_triggered_compaction(spark, tmp_path):
             # trigger compacted: counters reset, dirs folded
             meta = bm.read_meta(spark, side, SIDECAR)
             assert meta["superseded"] == 0 and meta["n_live"] == 2
+            collect_aged(side, SIDECAR)
             assert os.listdir(f"{side}/digests") == ["batch=compacted__g2"]
     disp = {
         r["doc_id"]: r["disposition"]
